@@ -95,9 +95,13 @@ object Bench {
         // CacheManager, so run k's rebuild of an identical plan would
         // silently read run k-1's cached blocks — the median would
         // measure cached-state READS, not the state build (r16 verdict
-        // item 1). Clear between RUNS (outside the timed region) so
-        // every run computes from parquet, and between queries so
-        // storage pressure can't distort later measurements.
+        // item 1). Clear between RUNS (outside the timed region) so no
+        // run reads an entry registered with the CacheManager by an
+        // earlier one, and between queries so those entries' storage
+        // can't distort later measurements. Checkpoint blocks
+        // (gcPersist / localCheckpoint) are not CacheManager entries:
+        // only the ContextCleaner frees them, once their RDDs are
+        // garbage-collected.
         spark.sharedState.cacheManager.clearCache()
         dt
       }

@@ -15,25 +15,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  */
 final case class Catalog(spark: SparkSession, location: String, catname: String) {
 
-  private lazy val meta: Map[String, String] = {
-    val raw = HipsCatalog.readString(spark, s"$location/$catname/${catname}_meta.json")
-    // flat string/number fields of the metadata JSON (hips map handled elsewhere)
-    """"(\w+)":\s*(?:"([^"]*)"|([-\d.]+))""".r.findAllMatchIn(raw).map { m =>
-      m.group(1) -> Option(m.group(2)).getOrElse(m.group(3))
-    }.toMap
-  }
+  private val layout = CatalogLayout(location, catname)
+  private lazy val meta: CatalogMeta = layout.readMeta(spark)
 
-  def raKw: String = meta("ra_kw")
-  def decKw: String = meta("dec_kw")
-  def idKw: String = meta("id_kw")
-  def orderK: Int = meta("order_k").toInt
+  def raKw: String = meta.raKw
+  def decKw: String = meta.decKw
+  def idKw: String = meta.idKw
+  def orderK: Int = meta.orderK
 
   /** The order-k density histogram persisted at import ((pix, cnt),
    *  sparse — nonzero pixels only): the artifact behind the
    *  reference's visualize_sources view ({cat}_order10_hpmap.fits,
    *  lsd2_io.py:12). Read back, never recomputed. */
-  def densityMap(): DataFrame =
-    spark.read.parquet(s"$location/$catname/point_map.parquet")
+  def densityMap(): DataFrame = CatalogLayout.loadHist(spark, layout.pointMap)
 
   /**
    * Persist the density map as the reference's healpy-ecosystem FITS
@@ -47,29 +41,26 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    */
   def exportFitsMap(order: Int = -1, ordering: String = "NESTED"): String = {
     val ord = if (order < 0) math.min(orderK, 10) else order
-    require(ord <= orderK,
-      s"exportFitsMap: cannot upsample the order-$orderK map to order $ord")
-    import org.apache.spark.sql.functions.{col, shiftright, sum}
-    val dm =
-      if (ord == orderK) densityMap()
-      else densityMap().groupBy(shiftright(col("pix"), 2 * (orderK - ord)).as("pix"))
-        .agg(sum("cnt").as("cnt"))
-    val rows = dm.collect()
+    val (pix, cnt) = densityAt(ord)
     // ordering = "RING" writes the healpy-DEFAULT layout, so a plain
     // hp.read_map(path) (no nest=True) reads the map correctly; the
     // suffix keeps the two layouts from clobbering each other
     val suffix = if (ordering == "RING") "_ring" else ""
     val path = s"$location/$catname/${catname}_order${ord}_hpmap$suffix.fits"
-    graft.sources.Fits.writeHealpixMap(spark, path, ord,
-      rows.map(_.getLong(0)), rows.map(_.getLong(1)), ordering)
+    graft.sources.Fits.writeHealpixMap(spark, path, ord, pix, cnt, ordering)
     path
+  }
+
+  /** The density map child-sum downsampled to `order` in Spark, then collected. */
+  private def densityAt(order: Int): (Array[Long], Array[Long]) = {
+    require(order <= orderK, s"cannot upsample the order-$orderK density map to order $order")
+    CatalogLayout.collectHist(CatalogLayout.rebin(densityMap(), orderK - order))
   }
 
   /** Load the catalog, optionally column-pruned (ra/dec/id always kept — catalog.py validate_user_input_cols). */
   def load(columns: Seq[String] = Nil): DataFrame = {
     val df = HipsCatalog.load(spark, location, catname)
-    if (columns.isEmpty) df
-    else df.select((columns ++ Seq(raKw, decKw, idKw)).distinct.map(org.apache.spark.sql.functions.col): _*)
+    if (columns.isEmpty) df else df.select(withContractCols(columns).map(org.apache.spark.sql.functions.col): _*)
   }
 
   /** The reference column contract (util.py:276 validate_user_input_cols):
@@ -99,46 +90,30 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
       columns = withContractCols(columns))
 
   /**
-   * Incremental append: add rows to this catalog without
-   * re-importing — frozen partition map, `_ID` ranks continued,
-   * margins and density map folded in (see [[HipsPartitioner.append]]).
-   * Columns must carry the catalog's ra/dec/id keywords.
-   */
-  /**
    * Compact every partition leaf of the catalog (and its margin
    * cache): incremental [[append]]s leave one file per append per
    * pixel — the small-file tail that turns 100 TB scans into footer
-   * parsing. Walks the `Norder=K/Dir=D/Npix=P` leaves and applies
-   * [[graft.operators.Layout.compact]]'s staged-swap rewrite to any
-   * leaf with more than one file (sorted by `_ID` within files, the
+   * parsing. Walks the `Norder=K/Dir=D/Npix=P` leaves of both trees and
+   * applies [[graft.operators.Layout.compact]]'s staged-swap rewrite to
+   * any leaf with more than one file (sorted by `_ID` within files, the
    * import-time order). The leaf walk is driver-side but bounded by
    * the partition map (the same cardinality every catalog operation
    * already lists); each leaf rewrite is its own small Spark job.
    * Returns (leaves compacted, files before, files after).
    */
   def compact(targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(location)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def leaves(root: String): Seq[org.apache.hadoop.fs.Path] = {
-      val p = new org.apache.hadoop.fs.Path(root)
-      if (!fs.exists(p)) Nil
-      else {
-        val it = fs.listFiles(p, true)
-        val dirs = scala.collection.mutable.Set.empty[org.apache.hadoop.fs.Path]
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getPath.getName.endsWith(".parquet")) dirs += f.getPath.getParent
-        }
-        dirs.toSeq
-      }
-    }
+    val fs = CatalogLayout.fs(spark, location)
     var (done, before, after) = (0, 0, 0)
-    for (leaf <- leaves(s"$location/$catname") ++ leaves(s"$location/${catname}_neighbor")) {
-      val n = fs.listStatus(leaf).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    for {
+      tree <- Seq(layout.catalogTree, layout.neighborTree)
+      (o, p) <- CatalogLayout.listTiles(spark, tree)
+    } {
+      val leaf = CatalogLayout.tilePath(tree, o, p)
+      val n = fs.listStatus(new org.apache.hadoop.fs.Path(leaf))
+        .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       before += n
       if (n > 1) {
-        val (_, a) = graft.operators.Layout.compact(
-          spark, leaf.toString, targetFileBytes, sortCols = Seq("_ID"))
+        val (_, a) = graft.operators.Layout.compact(spark, leaf, targetFileBytes, sortCols = Seq("_ID"))
         done += 1
         after += a
       } else after += n
@@ -146,9 +121,27 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
     (done, before, after)
   }
 
+  /**
+   * Incremental append: add rows to this catalog without
+   * re-importing — frozen partition map, `_ID` ranks continued,
+   * margins (under the import's margin policy) and density map
+   * folded in (see [[HipsPartitioner.append]]).
+   * Columns must carry the catalog's ra/dec/id keywords.
+   */
   def append(df: DataFrame): Catalog = {
     HipsPartitioner.append(df, raKw, decKw, idKw, location, catname)
     this
+  }
+
+  /** Re-split pixels that outgrew the import threshold through
+   *  appends ([[HipsPartitioner.repartition]] — rewrites only the
+   *  over-threshold tiles, `_ID`s preserved, margins rebuilt under the
+   *  import's margin policy, meta + frozen layout basis refreshed).
+   *  Returns a fresh handle (this one's cached meta is stale after the
+   *  rewrite). */
+  def repartition(): Catalog = {
+    HipsPartitioner.repartition(spark, location, catname)
+    Catalog(spark, location, catname)
   }
 
   /**
@@ -160,16 +153,6 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    * `c1Cols`/`c2Cols` prune each side's scan before the join —
    * ra/dec/id are always kept (util.py:276).
    */
-  /** Re-split pixels that outgrew the import threshold through
-   *  appends ([[HipsPartitioner.repartition]] — rewrites only the
-   *  over-threshold tiles, `_ID`s preserved, margins rebuilt, meta +
-   *  frozen layout basis refreshed). Returns a fresh handle (this
-   *  one's cached meta is stale after the rewrite). */
-  def repartition(summaryFiles: Boolean = true, exactMargin: Boolean = false): Catalog = {
-    HipsPartitioner.repartition(spark, location, catname, summaryFiles, exactMargin)
-    Catalog(spark, location, catname)
-  }
-
   def crossMatch(other: Catalog, nNeighbors: Int = 1, dthreshDeg: Double = 0.01,
                  c1Cols: Seq[String] = Nil, c2Cols: Seq[String] = Nil,
                  delim: String = "."): DataFrame = {
@@ -184,20 +167,13 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
   /** Density views render at most this order — the reference's own
    *  map order ({cat}_order10_hpmap.fits): a DENSE sky at order 10 is
    *  already a 12.6M-entry driver pull, and one order higher
-   *  quadruples it, all for pixels far below image resolution. Above
-   *  it the sparse map is downsampled (child-sum) in Spark BEFORE
-   *  the collect. */
+   *  quadruples it, all for pixels far below image resolution. */
   private val maxVizOrder = 10
 
   private def densityArrays(): (Int, Array[Long], Array[Long]) = {
-    import org.apache.spark.sql.functions.{col, shiftright, sum}
-    val (ord, dm) =
-      if (orderK <= maxVizOrder) (orderK, densityMap())
-      else (maxVizOrder, densityMap()
-        .groupBy(shiftright(col("pix"), 2 * (orderK - maxVizOrder)).as("pix"))
-        .agg(sum("cnt").as("cnt")))
-    val rows = dm.collect()
-    (ord, rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+    val ord = math.min(orderK, maxVizOrder)
+    val (pix, cnt) = densityAt(ord)
+    (ord, pix, cnt)
   }
 
   /** Log-density Mollweide view of the persisted point map — the
@@ -212,9 +188,8 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    *  the FROZEN import histogram, matching the directories on disk
    *  even after appends. */
   def visualizePartitions(width: Int = 800, height: Int = 400): java.awt.image.BufferedImage = {
-    val rows = spark.read.parquet(s"$location/$catname/import_hist.parquet").collect()
-    val pm = HipsPartitioner.partitionMapFromSparseHist(
-      rows.map(_.getLong(0)), rows.map(_.getLong(1)), orderK, meta("pix_threshold").toLong)
+    val (pix, cnt) = CatalogLayout.readHist(spark, layout.importHist)
+    val pm = HipsPartitioner.partitionMapFromSparseHist(pix, cnt, orderK, meta.pixThreshold)
     graft.viz.Mollweide.partitions(pm, width, height)
   }
 
@@ -268,7 +243,7 @@ object Catalog {
    * session-scoped — the standard Spark model), so one `open` covers
    * every subsequent read of that store. Every graft filesystem
    * access (metadata JSON, histograms, hive trees) already goes
-   * through the Hadoop FileSystem API (see HipsCatalog.fs), so cloud
+   * through the Hadoop FileSystem API (see [[CatalogLayout]]), so cloud
    * and local catalogs take the identical code path; the cloud
    * schemes themselves are untestable in this zero-egress sandbox.
    */

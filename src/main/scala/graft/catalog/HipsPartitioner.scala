@@ -2,6 +2,7 @@ package graft.catalog
 
 import graft.functions.{sphere, PartitionGrid}
 import graft.healpix.Healpix
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,16 +43,8 @@ object HipsPartitioner {
     def partitionPixel(pixK: Long): Long = pixK >> (2 * (orderK - grid.order(pixK)))
     def nSources: Long = histCnt.sum
     /** (order, pixel) pairs that actually hold data (empty sky excluded). */
-    def pixelsAtOrders: Map[Int, Array[Long]] = {
-      val m = scala.collection.mutable.Map.empty[Int, scala.collection.mutable.Set[Long]]
-      var i = 0
-      while (i < histPix.length) {
-        val o = grid.order(histPix(i))
-        m.getOrElseUpdate(o, scala.collection.mutable.Set.empty) += (histPix(i) >> (2 * (orderK - o)))
-        i += 1
-      }
-      m.map { case (o, s) => o -> s.toArray.sorted }.toMap
-    }
+    def pixelsAtOrders: Map[Int, Array[Long]] =
+      histPix.groupBy(grid.order).map { case (o, ps) => o -> ps.map(_ >> (2 * (orderK - o))).distinct.sorted }
   }
 
   /** The reference caps its gather at order 10 (partitioner.py:94,
@@ -70,23 +63,15 @@ object HipsPartitioner {
   def computePartitionMap(df: DataFrame, raCol: String, decCol: String,
                           orderK: Int, threshold: Long): PartitionMap = {
     requireOrderK(orderK)
-    val rows = df.groupBy(sphere.hpix(col(raCol), col(decCol), orderK).as("pix"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect()
-    val pix = new Array[Long](rows.length)
-    val cnt = new Array[Long](rows.length)
-    var i = 0
-    while (i < rows.length) { pix(i) = rows(i).getLong(0); cnt(i) = rows(i).getLong(1); i += 1 }
+    val (pix, cnt) = CatalogLayout.collectHist(CatalogLayout.histogram(df, raCol, decCol, orderK))
     partitionMapFromSparseHist(pix, cnt, orderK, threshold)
   }
 
-  /** Dense-histogram adapter (small orders / tests). */
-  def partitionMapFromHist(hist: Array[Long], orderK: Int, threshold: Long): PartitionMap = {
-    val pix = new scala.collection.mutable.ArrayBuffer[Long]
-    val cnt = new scala.collection.mutable.ArrayBuffer[Long]
-    var i = 0
-    while (i < hist.length) { if (hist(i) > 0) { pix += i.toLong; cnt += hist(i) }; i += 1 }
-    partitionMapFromSparseHist(pix.toArray, cnt.toArray, orderK, threshold)
+  /** Sorted-array lower bound (first index with a(i) >= x). */
+  private def lowerBound(a: Array[Long], x: Long): Int = {
+    var lo = 0; var hi = a.length
+    while (lo < hi) { val m = (lo + hi) >>> 1; if (a(m) < x) lo = m + 1 else hi = m }
+    lo
   }
 
   /**
@@ -109,12 +94,7 @@ object HipsPartitioner {
     val prefix = new Array[Long](pix.length + 1)
     var i = 0
     while (i < pix.length) { prefix(i + 1) = prefix(i) + cnt(i); i += 1 }
-    def lowerBound(x: Long): Int = {
-      var lo = 0; var hi = pix.length
-      while (lo < hi) { val m = (lo + hi) >>> 1; if (pix(m) < x) lo = m + 1 else hi = m }
-      lo
-    }
-    def rangeCount(lo: Long, hi: Long): Long = prefix(lowerBound(hi)) - prefix(lowerBound(lo))
+    def rangeCount(lo: Long, hi: Long): Long = prefix(lowerBound(pix, hi)) - prefix(lowerBound(pix, lo))
     val starts = new scala.collection.mutable.ArrayBuffer[Long]
     val ords = new scala.collection.mutable.ArrayBuffer[Int]
     def walk(o: Int, p: Long): Unit = {
@@ -129,24 +109,18 @@ object HipsPartitioner {
   }
 
   /**
-   * Columns (Norder, Dir, Npix) for each row given a partition map.
-   * The map is broadcast via the closure (bounded by occupied tiles).
-   *
-   * Dir = floor(Npix / 10000) * 10000 — the hipscat layout intent.
-   * (The reference's float expression `(pix / 10_000) * 10_000`
-   * evaluates to pix itself, dask_utils.py:123; we implement the
-   * intended integer bucketing.)
+   * Columns (Norder, Dir, Npix) for each row given a partition map
+   * (Dir: [[CatalogLayout.dirOf]]). The map is broadcast via the
+   * closure (bounded by occupied tiles).
    */
   def withPartitionColumns(df: DataFrame, raCol: String, decCol: String, pm: PartitionMap): DataFrame = {
     val bc = df.sparkSession.sparkContext.broadcast(pm.grid)
     // codegen kernel (PackedPartitionPixelExpr), NOT a Scala UDF: this
     // is the one expression every ingested row crosses, so it must
     // stay inside WholeStageCodegen (asserted in CatalogSpec)
-    df.withColumn("__pp", graft.functions.native.packedPartitionPixel(col(raCol), col(decCol), pm.orderK, bc))
-      .withColumn("Norder", shiftright(col("__pp"), 48).cast("int"))
-      .withColumn("Dir", (col("__pp").bitwiseAND(lit(0xffffffffffffL)) / 10000L).cast("long") * 10000L)
-      .withColumn("Npix", col("__pp").bitwiseAND(lit(0xffffffffffffL)))
-      .drop("__pp")
+    CatalogLayout.withTileColumns(
+      df.withColumn("__pp", graft.functions.native.packedPartitionPixel(col(raCol), col(decCol), pm.orderK, bc)),
+      "__pp")
   }
 
   /**
@@ -167,78 +141,27 @@ object HipsPartitioner {
     // bounded explode of a codegen kernel (MarginPixelsExpr): packed
     // foreign partition pixels overlapping the margin disc, minus the
     // row's own pixel — no Scala UDF on the ingest path
-    df.withColumn("__m", explode(graft.functions.native.marginPixels(
-        col(raCol), col(decCol), pm.orderK, marginDeg, bc, exactMargin)))
-      .withColumn("Norder", shiftright(col("__m"), 48).cast("int"))
-      .withColumn("Npix", col("__m").bitwiseAND(lit(0xffffffffffffL)))
-      .withColumn("Dir", (col("Npix") / 10000L).cast("long") * 10000L)
-      .drop("__m")
+    CatalogLayout.withTileColumns(
+      df.withColumn("__m", explode(graft.functions.native.marginPixels(
+        col(raCol), col(decCol), pm.orderK, marginDeg, bc, exactMargin))),
+      "__m")
   }
 
   /**
-   * Full partitioned-catalog write: catalog/ + neighbor/ hive trees,
+   * Full partitioned-catalog write (layout: [[CatalogLayout]]):
+   * catalog/ + neighbor/ hive trees with their parquet summary
+   * sidecars (partitioner.py:373, consumed by the reference reader's
+   * read_parquet_metadata, lsd2_io.py:324), the density histograms and
    * a `{cat}_meta.json` (reference: write_structure_metadata,
-   * partitioner.py:350), and parquet `_metadata`/`_common_metadata`
-   * summary sidecars per tree (partitioner.py:373, consumed by the
-   * reference reader's read_parquet_metadata, lsd2_io.py:324).
-   *
-   * Scale note on the sidecars: they serialize every footer through
-   * one writer — the reason Spark dropped summary-file support — so
-   * graft itself NEVER reads them (the JSON partition map + hive
-   * layout + footer stats carry the same information); they exist so
-   * a reference-side reader pointed at a graft-written catalog finds
-   * the files it expects. Emission cost is one recursive listing +
-   * a pooled parallel footer read; at a file count where that is the
-   * import's long pole, drop them with `summaryFiles = false`.
+   * partitioner.py:350) that also records `exactMargin`, so appends
+   * and repartitions keep the import's margin policy.
    */
-  /**
-   * The reference's order-14 spatial index `[pix@14 | rank]`
-   * (dask_utils.py:167 compute_index) added WITHOUT a shuffle: after
-   * the repartition by partition pixel, every order-14 pixel's rows
-   * are complete within one partition (orderK <= 10 < 14), so the
-   * per-pixel rank is a partition-local running counter over rows
-   * sorted by (pix14, ra, dec, id). Rows come out sorted by `_ID`,
-   * so written files carry monotonic `_ID` (and clustered ra/dec) —
-   * parquet row-group min/max stats then prune stored-catalog cone
-   * searches at the ROW-GROUP level, not just the file level.
-   */
-  private def withSpatialId(df: DataFrame, raCol: String, decCol: String, idCol: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField}
-    val order = 14
-    // NOTE: the reference computes this as uint64 (dask_utils.py:167);
-    // Spark has no unsigned long, so `_ID` is the same 64-bit pattern
-    // REINTERPRETED as signed — pixels >= 2^31 (~1/3 of the sky, the
-    // south) produce negative `_ID`s. Per-file monotonicity and
-    // row-group min/max pruning are unaffected (2^31 is 4^(14-o)
-    // aligned, so no partition straddles the sign flip), but GLOBAL
-    // comparisons/sorts across the sign boundary must use
-    // `_ID` unsigned (e.g. compare `_ID - Long.MinValue`, or
-    // shiftrightunsigned to recover pix14). Asserted in CatalogSpec.
-    val shift = 64 - (4 + 2 * order)
-    val sorted = df
-      .withColumn("__pix14", sphere.hpix(col(raCol).cast("double"), col(decCol).cast("double"), order))
-      .sortWithinPartitions(col("__pix14"), col(raCol), col(decCol), col(idCol))
-    val pixIdx = sorted.schema.fieldIndex("__pix14")
-    val schema = sorted.schema.add(StructField("_ID", LongType, nullable = false))
-    sorted.mapPartitions { rows =>
-      var cur = Long.MinValue
-      var rank = -1L
-      rows.map { r =>
-        val p = r.getLong(pixIdx)
-        if (p != cur) { cur = p; rank = 0L } else rank += 1
-        Row.fromSeq(r.toSeq :+ ((p << shift) + rank))
-      }
-    }(org.apache.spark.sql.Encoders.row(schema)).drop("__pix14")
-  }
-
   def write(df: DataFrame, raCol: String, decCol: String, idCol: String,
             outputDir: String, catname: String,
             orderK: Int = 6, threshold: Long = 1000000L, marginDeg: Double = 0.1,
-            summaryFiles: Boolean = true, exactMargin: Boolean = false): PartitionMap =
+            exactMargin: Boolean = false): PartitionMap =
     writeWithMap(df, computePartitionMap(df, raCol, decCol, orderK, threshold),
-      raCol, decCol, idCol, outputDir, catname, orderK, threshold, marginDeg, summaryFiles,
-      exactMargin)
+      raCol, decCol, idCol, outputDir, catname, threshold, marginDeg, exactMargin)
 
   /** The write phases after the partition map is known — shared by
    *  [[write]] (map from a direct scan) and [[writeResumable]] (map
@@ -246,27 +169,15 @@ object HipsPartitioner {
   private[catalog] def writeWithMap(df: DataFrame, pm: PartitionMap,
                                     raCol: String, decCol: String, idCol: String,
                                     outputDir: String, catname: String,
-                                    orderK: Int, threshold: Long, marginDeg: Double,
-                                    summaryFiles: Boolean = true,
-                                    exactMargin: Boolean = false): PartitionMap = {
-    // the trailing sortWithinPartitions puts the hive partition
-    // columns FIRST so FileFormatWriter's required ordering is already
-    // satisfied (no writer-inserted, stability-unspecified sort) and
-    // each written file stays _ID-ascending
-    withSpatialId(withPartitionColumns(df, raCol, decCol, pm)
-        .repartition(col("Norder"), col("Npix")), raCol, decCol, idCol)
-      .sortWithinPartitions(col("Norder"), col("Dir"), col("Npix"), col("_ID"))
-      .write.mode("overwrite").partitionBy("Norder", "Dir", "Npix")
-      .parquet(s"$outputDir/$catname/catalog")
-    withSpatialId(marginRows(df, raCol, decCol, pm, marginDeg, exactMargin)
-        .repartition(col("Norder"), col("Npix")), raCol, decCol, idCol)
-      .sortWithinPartitions(col("Norder"), col("Dir"), col("Npix"), col("_ID"))
-      .write.mode("overwrite").partitionBy("Norder", "Dir", "Npix")
-      .parquet(s"$outputDir/$catname/neighbor")
-    if (summaryFiles) {
-      writeSummaryFiles(df.sparkSession, s"$outputDir/$catname/catalog")
-      writeSummaryFiles(df.sparkSession, s"$outputDir/$catname/neighbor")
-    }
+                                    threshold: Long, marginDeg: Double,
+                                    exactMargin: Boolean): PartitionMap = {
+    val spark = df.sparkSession
+    val layout = CatalogLayout(outputDir, catname)
+    val ids = Some(CatalogLayout.SpatialIds(raCol, decCol, idCol))
+    CatalogLayout.writeTree(withPartitionColumns(df, raCol, decCol, pm), layout.catalogTree, "overwrite", ids)
+    CatalogLayout.writeTree(marginRows(df, raCol, decCol, pm, marginDeg, exactMargin),
+      layout.neighborTree, "overwrite", ids)
+    layout.finishTrees(spark)
 
     // persist the order-k density histogram as a small parquet — the
     // data product behind the reference's visualize_* views
@@ -278,93 +189,13 @@ object HipsPartitioner {
     // [[append]] deterministically rebuilds the partition map (the
     // map must never be recomputed from grown counts, or the layout
     // would drift from the directories already on disk).
-    {
-      val sess = df.sparkSession
-      import sess.implicits._
-      val sparse = pm.histPix.zip(pm.histCnt).toSeq.toDF("pix", "cnt").coalesce(1)
-      sparse.write.mode("overwrite").parquet(s"$outputDir/$catname/point_map.parquet")
-      sparse.write.mode("overwrite").parquet(s"$outputDir/$catname/import_hist.parquet")
-    }
+    val hist = CatalogLayout.histFrame(spark, pm.histPix, pm.histCnt)
+    CatalogLayout.writeHist(hist, layout.pointMap)
+    CatalogLayout.writeHist(hist, layout.importHist)
 
-    writeMeta(df.sparkSession, pm, raCol, decCol, idCol, outputDir, catname, threshold, marginDeg)
+    layout.writeMeta(spark,
+      CatalogMeta(catname, raCol, decCol, idCol, threshold, pm.orderK, marginDeg, exactMargin).withMap(pm))
     pm
-  }
-
-  /** Metadata JSON with the reference's key set ({cat}_meta.json,
-   *  partitioner.py:350 write_structure_metadata) so downstream
-   *  hipscat tooling can read the layout; counts come from the
-   *  already-computed histogram (no extra scan), hips lists only
-   *  pixels that actually hold data. */
-  private def writeMeta(spark: SparkSession, pm: PartitionMap,
-                        raCol: String, decCol: String, idCol: String,
-                        outputDir: String, catname: String,
-                        threshold: Long, marginDeg: Double): Unit = {
-    val hips = pm.pixelsAtOrders.toSeq.sortBy(_._1)
-      .map { case (o, ps) => s""""$o": [${ps.mkString(",")}]""" }.mkString("{", ",", "}")
-    val meta =
-      s"""{"cat_name": "$catname", "ra_kw": "$raCol", "dec_kw": "$decCol", "id_kw": "$idCol",
-         | "n_sources": ${pm.nSources}, "pix_threshold": $threshold, "order_k": ${pm.orderK},
-         | "margin_deg": $marginDeg, "hips": $hips}""".stripMargin
-    HipsCatalog.writeString(spark, s"$outputDir/$catname/${catname}_meta.json", meta)
-  }
-
-  /**
-   * Parquet `_metadata` (all row groups) + `_common_metadata` (schema
-   * only) summary sidecars for one written tree — the byte-level
-   * layout the reference emits (partitioner.py:373) and its reader
-   * consumes (lsd2_io.py:324 read_parquet_metadata). Footers are read
-   * through parquet-hadoop's pooled parallel reader and merged by its
-   * own summary writer, so the sidecar is exactly what a
-   * pyarrow/parquet-mr consumer expects. Graft never reads these
-   * back — see the scale note on [[write]].
-   */
-  private[catalog] def writeSummaryFiles(spark: SparkSession, dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) files += f
-    }
-    if (files.nonEmpty) {
-      val footers = org.apache.parquet.hadoop.ParquetFileReader
-        .readAllFootersInParallel(conf, files.toList.asJava)
-      org.apache.parquet.hadoop.ParquetFileWriter.writeMetadataFile(
-        conf, root, footers,
-        org.apache.parquet.hadoop.ParquetOutputFormat.JobSummaryLevel.ALL)
-    }
-  }
-
-  /** Sparse (pix, cnt) parquet -> sparse (pix -> cnt) map. */
-  private def readHistSparse(spark: SparkSession, path: String): scala.collection.mutable.LongMap[Long] = {
-    val m = scala.collection.mutable.LongMap.empty[Long]
-    spark.read.parquet(path).collect().foreach(r => m(r.getLong(0)) = r.getLong(1))
-    m
-  }
-
-  private def sparseToArrays(m: scala.collection.Map[Long, Long]): (Array[Long], Array[Long]) = {
-    val pix = m.keysIterator.toArray.sorted
-    (pix, pix.map(m))
-  }
-
-  /** Per-order-14-pixel `_ID` rank continuation: joins each new row's
-   *  pix14 against the tree's current max rank so appended ranks
-   *  start where the existing ones stop. A standard shuffle join on
-   *  the pixel — the offsets frame is one row per occupied pix14,
-   *  never collected. */
-  private def withRankOffsets(ids: DataFrame, existingTree: DataFrame): DataFrame = {
-    val base = existingTree
-      .select(shiftrightunsigned(col("_ID"), 32).as("__pix14"),
-        col("_ID").bitwiseAND(lit(0xffffffffL)).as("__rk"))
-      .groupBy("__pix14").agg((max("__rk") + 1).as("__base"))
-    ids.withColumn("__pix14", shiftrightunsigned(col("_ID"), 32))
-      .join(base, Seq("__pix14"), "left")
-      .withColumn("_ID", col("_ID") + coalesce(col("__base"), lit(0L)))
-      .drop("__pix14", "__base")
   }
 
   /**
@@ -402,9 +233,9 @@ object HipsPartitioner {
    * stage). Don't run them concurrently.
    */
   def append(df: DataFrame, raCol: String, decCol: String, idCol: String,
-             outputDir: String, catname: String,
-             summaryFiles: Boolean = true): PartitionMap = {
+             outputDir: String, catname: String): PartitionMap = {
     val spark = df.sparkSession
+    val layout = CatalogLayout(outputDir, catname)
     // complete any crashed repartition commit FIRST (writers
     // serialize, so a pending journal here means the writer died):
     // without this, rows appended under the stale import_hist land in
@@ -414,72 +245,30 @@ object HipsPartitioner {
     // drop any stale cached listing BEFORE reading rank offsets — a
     // listing cached before an external writer's files landed would
     // mint colliding _IDs
-    spark.catalog.refreshByPath(s"$outputDir/$catname/catalog")
-    spark.catalog.refreshByPath(s"$outputDir/$catname/neighbor")
-    val metaRaw = HipsCatalog.readString(spark, s"$outputDir/$catname/${catname}_meta.json")
-    // exponent-aware: a small marginDeg (e.g. 1 arcsec) stringifies as
-    // 2.77...E-4 — a digits-only pattern would silently read 2.77 deg
-    def metaNum(key: String): String =
-      s""""$key":\\s*([-+\\d.eE]+)""".r.findFirstMatchIn(metaRaw)
-        .getOrElse(throw new IllegalArgumentException(s"$key missing from ${catname}_meta.json"))
-        .group(1)
-    val orderK = metaNum("order_k").toInt
-    val threshold = metaNum("pix_threshold").toLong
-    val marginDeg = metaNum("margin_deg").toDouble
+    layout.invalidateTrees(spark)
+    val meta = layout.readMeta(spark)
 
-    val (ihPix, ihCnt) = sparseToArrays(readHistSparse(spark, s"$outputDir/$catname/import_hist.parquet"))
-    val frozen = partitionMapFromSparseHist(ihPix, ihCnt, orderK, threshold)
-    val merged = readHistSparse(spark, s"$outputDir/$catname/point_map.parquet")
-    df.groupBy(sphere.hpix(col(raCol), col(decCol), orderK).as("pix"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect().foreach(r => merged(r.getLong(0)) = merged.getOrElse(r.getLong(0), 0L) + r.getLong(1))
+    val (ihPix, ihCnt) = CatalogLayout.readHist(spark, layout.importHist)
+    val frozen = partitionMapFromSparseHist(ihPix, ihCnt, meta.orderK, meta.pixThreshold)
+    val (mPix, mCnt) = CatalogLayout.collectHist(CatalogLayout.loadHist(spark, layout.pointMap)
+      .unionByName(CatalogLayout.histogram(df, raCol, decCol, meta.orderK)))
 
-    def appendTree(rows: DataFrame, existing: DataFrame, tree: String): Unit =
-      withRankOffsets(
-        withSpatialId(rows.repartition(col("Norder"), col("Npix")), raCol, decCol, idCol),
-        existing)
-        .repartition(col("Norder"), col("Npix"))
-        .sortWithinPartitions(col("Norder"), col("Dir"), col("Npix"), col("_ID"))
-        .write.mode("append").partitionBy("Norder", "Dir", "Npix")
-        .parquet(s"$outputDir/$catname/$tree")
-
-    appendTree(withPartitionColumns(df, raCol, decCol, frozen),
-      HipsCatalog.load(spark, outputDir, catname), "catalog")
-    appendTree(marginRows(df, raCol, decCol, frozen, marginDeg),
-      HipsCatalog.loadNeighbors(spark, outputDir, catname), "neighbor")
+    def ids(existing: DataFrame) = Some(CatalogLayout.SpatialIds(raCol, decCol, idCol, Some(existing)))
+    CatalogLayout.writeTree(withPartitionColumns(df, raCol, decCol, frozen), layout.catalogTree, "append",
+      ids(HipsCatalog.load(spark, outputDir, catname)))
+    CatalogLayout.writeTree(marginRows(df, raCol, decCol, frozen, meta.marginDeg, meta.exactMargin),
+      layout.neighborTree, "append", ids(HipsCatalog.loadNeighbors(spark, outputDir, catname)))
     // the session FileStatusCache still holds the PRE-append listings
     // of partition dirs that already existed — without invalidation a
     // same-session reader sees only the old files of old dirs (new
-    // dirs list fresh), silently dropping appended rows
-    spark.catalog.refreshByPath(s"$outputDir/$catname/catalog")
-    spark.catalog.refreshByPath(s"$outputDir/$catname/neighbor")
-    // refresh the sidecars so the reference reader's footer view
-    // includes the appended files
-    if (summaryFiles) {
-      writeSummaryFiles(spark, s"$outputDir/$catname/catalog")
-      writeSummaryFiles(spark, s"$outputDir/$catname/neighbor")
-    }
+    // dirs list fresh), silently dropping appended rows; the sidecars
+    // must cover the appended files too
+    layout.finishTrees(spark)
 
-    val (mPix, mCnt) = sparseToArrays(merged)
-    val out = PartitionMap(orderK, frozen.grid, mPix, mCnt)
-    locally {
-      val sess = spark
-      import sess.implicits._
-      mPix.zip(mCnt).toSeq.toDF("pix", "cnt")
-        .coalesce(1).write.mode("overwrite").parquet(s"$outputDir/$catname/point_map.parquet")
-    }
-    // the overwrite DELETED the old part file — a cached listing would
-    // make a same-session densityMap() read a missing file
-    spark.catalog.refreshByPath(s"$outputDir/$catname/point_map.parquet")
-    writeMeta(spark, out, raCol, decCol, idCol, outputDir, catname, threshold, marginDeg)
+    val out = PartitionMap(meta.orderK, frozen.grid, mPix, mCnt)
+    CatalogLayout.writeHist(CatalogLayout.histFrame(spark, mPix, mCnt), layout.pointMap)
+    layout.writeMeta(spark, meta.withMap(out))
     out
-  }
-
-  /** Sorted-array lower bound (first index with a(i) >= x). */
-  private def lowerBoundIn(a: Array[Long], x: Long): Int = {
-    var lo = 0; var hi = a.length
-    while (lo < hi) { val m = (lo + hi) >>> 1; if (a(m) < x) lo = m + 1 else hi = m }
-    lo
   }
 
   /**
@@ -498,7 +287,8 @@ object HipsPartitioner {
    *  - split tiles' catalog rows are re-bucketed under the new grid
    *    with `_ID`s PRESERVED (`_ID` depends only on the order-14
    *    pixel and the import-time rank — partitioning never enters it);
-   *  - split tiles' neighbor files are rebuilt: sources are each
+   *  - split tiles' neighbor files are rebuilt under the catalog's
+   *    recorded margin policy (`exact_margin` in the meta): sources are each
    *    tile's own rows (new INTERNAL borders between sibling
    *    sub-tiles) plus its previous neighbor rows (any external row
    *    within marginDeg of a sub-tile was within marginDeg of the
@@ -530,33 +320,19 @@ object HipsPartitioner {
    *    when a journal is present so a crashed writer's lingering
    *    duplicates are detected rather than silently double-counted.
    */
-  def repartition(spark: SparkSession, outputDir: String, catname: String,
-                  summaryFiles: Boolean = true, exactMargin: Boolean = false): PartitionMap = {
-    import org.apache.hadoop.fs.Path
-    val base = s"$outputDir/$catname"
-    val fsys = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def repartition(spark: SparkSession, outputDir: String, catname: String): PartitionMap = {
+    val layout = CatalogLayout(outputDir, catname)
     // complete any crashed prior commit / discard pre-commit debris
     // BEFORE reading layout state — the repaired tree is the basis
     recoverRepartition(spark, outputDir, catname)
-    val metaRaw = HipsCatalog.readString(spark, s"$base/${catname}_meta.json")
-    def metaNum(key: String): String =
-      s""""$key":\\s*([-+\\d.eE]+)""".r.findFirstMatchIn(metaRaw)
-        .getOrElse(throw new IllegalArgumentException(s"$key missing from ${catname}_meta.json"))
-        .group(1)
-    def metaStr(key: String): String =
-      s""""$key":\\s*"([^"]*)"""".r.findFirstMatchIn(metaRaw)
-        .getOrElse(throw new IllegalArgumentException(s"$key missing from ${catname}_meta.json"))
-        .group(1)
-    val orderK = metaNum("order_k").toInt
-    val threshold = metaNum("pix_threshold").toLong
-    val marginDeg = metaNum("margin_deg").toDouble
-    val (raCol, decCol, idCol) = (metaStr("ra_kw"), metaStr("dec_kw"), metaStr("id_kw"))
+    val meta = layout.readMeta(spark)
+    import meta.{orderK, raKw => raCol, decKw => decCol, idKw => idCol}
 
-    spark.catalog.refreshByPath(s"$base/catalog")
-    val (phPix, phCnt) = sparseToArrays(readHistSparse(spark, s"$base/point_map.parquet"))
-    val newMap = partitionMapFromSparseHist(phPix, phCnt, orderK, threshold)
-    val (ihPix, ihCnt) = sparseToArrays(readHistSparse(spark, s"$base/import_hist.parquet"))
-    val oldMap = partitionMapFromSparseHist(ihPix, ihCnt, orderK, threshold)
+    spark.catalog.refreshByPath(layout.catalogTree)
+    val (phPix, phCnt) = CatalogLayout.readHist(spark, layout.pointMap)
+    val newMap = partitionMapFromSparseHist(phPix, phCnt, orderK, meta.pixThreshold)
+    val (ihPix, ihCnt) = CatalogLayout.readHist(spark, layout.importHist)
+    val oldMap = partitionMapFromSparseHist(ihPix, ihCnt, orderK, meta.pixThreshold)
 
     // occupied frozen tiles whose region the new walk subdivides
     val split = oldMap.pixelsAtOrders.toSeq
@@ -564,7 +340,7 @@ object HipsPartitioner {
       .filter { case (o, p) =>
         val span = 1L << (2 * (orderK - o))
         val lo = p * span
-        var i = lowerBoundIn(phPix, lo)
+        var i = lowerBound(phPix, lo)
         var changed = false
         while (i < phPix.length && phPix(i) < lo + span) {
           val no = newMap.grid.order(phPix(i))
@@ -577,82 +353,57 @@ object HipsPartitioner {
       }
     if (split.isEmpty) return PartitionMap(orderK, oldMap.grid, phPix, phCnt)
 
-    def dirOf(p: Long) = p / 10000L * 10000L
-    def tilePath(tree: String, o: Int, p: Long) = s"$base/$tree/Norder=$o/Dir=${dirOf(p)}/Npix=$p"
     def existing(tree: String): Seq[String] =
-      split.map { case (o, p) => tilePath(tree, o, p) }.filter(p => fsys.exists(new Path(p)))
+      split.map { case (o, p) => CatalogLayout.tilePath(tree, o, p) }.filter(CatalogLayout.exists(spark, _))
 
-    val catPaths = existing("catalog")
+    val catPaths = existing(layout.catalogTree)
     require(catPaths.nonEmpty,
       s"repartition: none of the ${split.length} split tiles have catalog dirs — " +
-        s"split=${split.take(5)}, probe=${split.headOption.map { case (o, p) => tilePath("catalog", o, p) }}")
+        s"split=${split.take(5)}, probe=${split.headOption.map { case (o, p) =>
+          CatalogLayout.tilePath(layout.catalogTree, o, p) }}")
     // parquet re-reads surface every column nullable, but `_ID` was
-    // written non-nullable (withSpatialId) — restore that in the
-    // rewrite's schema (coalesce against a literal is non-nullable by
-    // construction and never fires: _ID has no nulls) or the summary
-    // sidecar's footer merge rejects the mixed row metadata
+    // written non-nullable — restore that in the rewrite's schema
+    // (coalesce against a literal is non-nullable by construction and
+    // never fires: _ID has no nulls) or the summary sidecar's footer
+    // merge rejects the mixed row metadata
     val oldCat = spark.read.parquet(catPaths: _*)
       .withColumn("_ID", coalesce(col("_ID"), lit(Long.MinValue)))
-    val nbrPaths = existing("neighbor")
+    val nbrPaths = existing(layout.neighborTree)
     val oldNbr =
       if (nbrPaths.nonEmpty) spark.read.parquet(nbrPaths: _*) else oldCat.limit(0)
 
     // 1) STAGE the re-bucketed split-tile catalog rows, _ID preserved
     //    (invisible to readers until the journal commits)
-    val stage = s"$base/_repartition_stage"
-    withPartitionColumns(oldCat, raCol, decCol, newMap)
-      .repartition(col("Norder"), col("Npix"))
-      .sortWithinPartitions(col("Norder"), col("Dir"), col("Npix"), col("_ID"))
-      .write.mode("overwrite").partitionBy("Norder", "Dir", "Npix")
-      .parquet(s"$stage/catalog")
+    CatalogLayout.writeTree(withPartitionColumns(oldCat, raCol, decCol, newMap),
+      layout.stagedTree("catalog"), "overwrite", ids = None)
 
     // 2) STAGE rebuilt margin entries TARGETING the split regions only;
     //    a source row appearing both as a home row and as a replica in
     //    another split tile's old neighbor file collapses in distinct
     val sources = oldCat.drop("_ID").unionByName(oldNbr.drop("_ID")).distinct()
-    val sess = spark
-    import sess.implicits._
-    val splitDf = split.toDF("o_s", "p_s")
-    val restricted = marginRows(sources, raCol, decCol, newMap, marginDeg, exactMargin)
+    val splitDf = spark.createDataFrame(split).toDF("o_s", "p_s")
+    val restricted = marginRows(sources, raCol, decCol, newMap, meta.marginDeg, meta.exactMargin)
       .join(broadcast(splitDf),
         expr("Norder >= o_s AND shiftright(Npix, 2 * (Norder - o_s)) = p_s"), "left_semi")
     // rank offsets read the CURRENT tree (doomed dirs included — the
     // resulting rank gaps are harmless; uniqueness is the contract)
-    withRankOffsets(
-      withSpatialId(restricted.repartition(col("Norder"), col("Npix")), raCol, decCol, idCol),
-      HipsCatalog.loadNeighbors(spark, outputDir, catname))
-      .repartition(col("Norder"), col("Npix"))
-      .sortWithinPartitions(col("Norder"), col("Dir"), col("Npix"), col("_ID"))
-      .write.mode("overwrite").partitionBy("Norder", "Dir", "Npix")
-      .parquet(s"$stage/neighbor")
+    CatalogLayout.writeTree(restricted, layout.stagedTree("neighbor"), "overwrite",
+      Some(CatalogLayout.SpatialIds(raCol, decCol, idCol,
+        Some(HipsCatalog.loadNeighbors(spark, outputDir, catname)))))
 
-    // COMMIT POINT: journal the staged sub-tile dirs + doomed old dirs,
-    // made visible atomically via temp-write + rename. Before this
-    // rename a crash leaves the old layout authoritative; after it the
-    // rewrite always completes (here or in recoverRepartition).
-    def stagedTiles(tree: String): Seq[(String, Int, Long)] = {
-      val g = fsys.globStatus(new Path(s"$stage/$tree/Norder=*/Dir=*/Npix=*"))
-      if (g == null) Nil
-      else g.toSeq.map { st =>
-        val p = st.getPath
-        (tree, p.getParent.getParent.getName.stripPrefix("Norder=").toInt,
-          p.getName.stripPrefix("Npix=").toLong)
-      }
-    }
-    val staged = stagedTiles("catalog") ++ stagedTiles("neighbor")
-    val journal =
-      s"""{"summary_files": $summaryFiles,
-         | "split": [${split.map { case (o, p) => s"[$o,$p]" }.mkString(",")}],
-         | "staged": [${staged.map { case (t, o, p) => s"""["$t",$o,$p]""" }.mkString(",")}]}""".stripMargin
-    HipsCatalog.writeString(spark, s"${journalPath(base)}.tmp", journal)
-    require(fsys.rename(new Path(s"${journalPath(base)}.tmp"), new Path(journalPath(base))),
-      s"repartition: journal rename failed at ${journalPath(base)}")
+    // COMMIT POINT: journal the staged sub-tile dirs + doomed old dirs.
+    // Before the journal lands a crash leaves the old layout
+    // authoritative; after it the rewrite always completes (here or in
+    // recoverRepartition).
+    val staged = for {
+      tree <- CatalogLayout.TreeNames
+      (o, p) <- CatalogLayout.listTiles(spark, layout.stagedTree(tree))
+    } yield (tree, o, p)
+    layout.commitJournal(spark, split, staged)
 
     // 3+4) rename staged dirs in, drop old dirs, re-freeze, drop journal
     commitRepartition(spark, outputDir, catname)
   }
-
-  private def journalPath(base: String): String = s"$base/_repartition_journal.json"
 
   /**
    * Detect-and-repair for a crashed [[repartition]]. If the commit
@@ -666,13 +417,12 @@ object HipsPartitioner {
    * warning should invoke this directly.
    */
   def recoverRepartition(spark: SparkSession, outputDir: String, catname: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val base = s"$outputDir/$catname"
-    val fsys = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pending = fsys.exists(new Path(journalPath(base)))
+    val layout = CatalogLayout(outputDir, catname)
+    val fsys = CatalogLayout.fs(spark, layout.root)
+    val pending = fsys.exists(new Path(layout.journal))
     if (pending) commitRepartition(spark, outputDir, catname)
-    fsys.delete(new Path(s"$base/_repartition_stage"), true)
-    fsys.delete(new Path(s"${journalPath(base)}.tmp"), false)
+    fsys.delete(new Path(layout.stage), true)
+    fsys.delete(new Path(s"${layout.journal}.tmp"), false)
     pending
   }
 
@@ -689,69 +439,30 @@ object HipsPartitioner {
    */
   private def commitRepartition(spark: SparkSession, outputDir: String,
                                 catname: String): PartitionMap = {
-    import org.apache.hadoop.fs.Path
-    val base = s"$outputDir/$catname"
-    val fsys = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val j = HipsCatalog.readString(spark, journalPath(base))
-    val summaryFiles = """"summary_files":\s*(true|false)""".r.findFirstMatchIn(j)
-      .map(_.group(1).toBoolean).getOrElse(true)
-    // each section is one line; greedy .* + final \] captures the whole
-    // array body (inner ]s included) up to the outer closing bracket
-    def section(key: String): String =
-      s""""$key":\\s*\\[(.*)\\]""".r.findFirstMatchIn(j)
-        .getOrElse(throw new IllegalStateException(s"repartition journal missing $key"))
-        .group(1)
-    val split = """\[(\d+),(\d+)\]""".r.findAllMatchIn(section("split"))
-      .map(m => (m.group(1).toInt, m.group(2).toLong)).toSeq
-    val staged = """\["(\w+)",(\d+),(\d+)\]""".r.findAllMatchIn(section("staged"))
-      .map(m => (m.group(1), m.group(2).toInt, m.group(3).toLong)).toSeq
-
-    def dirOf(p: Long) = p / 10000L * 10000L
-    def tilePath(tree: String, o: Int, p: Long) = s"$base/$tree/Norder=$o/Dir=${dirOf(p)}/Npix=$p"
+    val layout = CatalogLayout(outputDir, catname)
+    val fsys = CatalogLayout.fs(spark, layout.root)
+    val (split, staged) = layout.readJournal(spark)
     staged.foreach { case (tree, o, p) =>
-      val src = new Path(s"$base/_repartition_stage/$tree/Norder=$o/Dir=${dirOf(p)}/Npix=$p")
-      val dst = new Path(tilePath(tree, o, p))
+      val src = new Path(CatalogLayout.tilePath(layout.stagedTree(tree), o, p))
+      val dst = new Path(CatalogLayout.tilePath(layout.tree(tree), o, p))
       if (fsys.exists(src)) {
         if (fsys.exists(dst)) fsys.delete(dst, true)
         fsys.mkdirs(dst.getParent)
         require(fsys.rename(src, dst), s"repartition commit: rename $src -> $dst failed")
       }
     }
-    split.foreach { case (o, p) =>
-      fsys.delete(new Path(tilePath("catalog", o, p)), true)
-      fsys.delete(new Path(tilePath("neighbor", o, p)), true)
-    }
-    spark.catalog.refreshByPath(s"$base/catalog")
-    spark.catalog.refreshByPath(s"$base/neighbor")
-    if (summaryFiles) {
-      writeSummaryFiles(spark, s"$base/catalog")
-      writeSummaryFiles(spark, s"$base/neighbor")
-    }
+    for ((o, p) <- split; tree <- CatalogLayout.TreeNames)
+      fsys.delete(new Path(CatalogLayout.tilePath(layout.tree(tree), o, p)), true)
+    layout.finishTrees(spark)
 
-    val metaRaw = HipsCatalog.readString(spark, s"$base/${catname}_meta.json")
-    def metaNum(key: String): String =
-      s""""$key":\\s*([-+\\d.eE]+)""".r.findFirstMatchIn(metaRaw)
-        .getOrElse(throw new IllegalStateException(s"$key missing from ${catname}_meta.json"))
-        .group(1)
-    def metaStr(key: String): String =
-      s""""$key":\\s*"([^"]*)"""".r.findFirstMatchIn(metaRaw)
-        .getOrElse(throw new IllegalStateException(s"$key missing from ${catname}_meta.json"))
-        .group(1)
-    val orderK = metaNum("order_k").toInt
-    val threshold = metaNum("pix_threshold").toLong
-    spark.catalog.refreshByPath(s"$base/point_map.parquet")
-    val (phPix, phCnt) = sparseToArrays(readHistSparse(spark, s"$base/point_map.parquet"))
-    val newMap = partitionMapFromSparseHist(phPix, phCnt, orderK, threshold)
-    val sess = spark
-    import sess.implicits._
-    phPix.zip(phCnt).toSeq.toDF("pix", "cnt")
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/import_hist.parquet")
-    spark.catalog.refreshByPath(s"$base/import_hist.parquet")
-    val out = PartitionMap(orderK, newMap.grid, phPix, phCnt)
-    writeMeta(spark, out, metaStr("ra_kw"), metaStr("dec_kw"), metaStr("id_kw"),
-      outputDir, catname, threshold, metaNum("margin_deg").toDouble)
-    fsys.delete(new Path(journalPath(base)), false)
-    fsys.delete(new Path(s"$base/_repartition_stage"), true)
+    val meta = layout.readMeta(spark)
+    val (phPix, phCnt) = CatalogLayout.readHist(spark, layout.pointMap)
+    val newMap = partitionMapFromSparseHist(phPix, phCnt, meta.orderK, meta.pixThreshold)
+    CatalogLayout.writeHist(CatalogLayout.histFrame(spark, phPix, phCnt), layout.importHist)
+    val out = PartitionMap(meta.orderK, newMap.grid, phPix, phCnt)
+    layout.writeMeta(spark, meta.withMap(out))
+    fsys.delete(new Path(layout.journal), false)
+    fsys.delete(new Path(layout.stage), true)
     out
   }
 
@@ -780,16 +491,14 @@ object HipsPartitioner {
                      raCol: String, decCol: String, idCol: String,
                      outputDir: String, catname: String,
                      orderK: Int = 6, threshold: Long = 1000000L, marginDeg: Double = 0.1,
-                     cleanStaging: Boolean = false, summaryFiles: Boolean = true): PartitionMap = {
-    import org.apache.hadoop.fs.Path
+                     cleanStaging: Boolean = false): PartitionMap = {
     requireOrderK(orderK)
-    val importDir = s"$outputDir/$catname/_import"
+    val importDir = CatalogLayout(outputDir, catname).importDir
     val fs = new Path(importDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def done(dir: String) = fs.exists(new Path(s"$dir/_SUCCESS"))
 
     def stageDir(i: Int) = s"$importDir/stage/batch=$i"
     def histDir(i: Int) = s"$importDir/hist/batch=$i"
-    def batchDone(i: Int) = done(stageDir(i)) && done(histDir(i))
 
     // a resume with a DIFFERENT batch list — or sources regenerated
     // under the same paths — would silently mix stale staged data into
@@ -811,7 +520,7 @@ object HipsPartitioner {
     val current = batches.map(_.map(fileSig))
     val manifestPath = s"$importDir/manifest.txt"
     if (fs.exists(new Path(manifestPath))) {
-      val prev = HipsCatalog.readString(spark, manifestPath)
+      val prev = CatalogLayout.readString(spark, manifestPath)
         .split("\n", -1).toSeq.map(_.split("\u0000", -1).toSeq)
       require(prev.length == current.length &&
         prev.zip(current).forall { case (pv, cu) => pv.map(sigPath) == cu.map(sigPath) },
@@ -827,32 +536,26 @@ object HipsPartitioner {
             s"resumable import: sources of UNSTAGED batch $i changed (sizes or mtimes) since " +
               s"staging began — re-run with the original files, or delete $importDir to start over")
       }
-    } else HipsCatalog.writeString(spark, manifestPath,
+    } else CatalogLayout.writeString(spark, manifestPath,
       current.map(_.mkString("\u0000")).mkString("\n"))
 
     batches.indices.foreach { i =>
       val stage = stageDir(i)
       val hist = histDir(i)
       if (!done(stage)) readBatch(batches(i)).write.mode("overwrite").parquet(stage)
-      if (!done(hist)) {
-        // histogram from the STAGED bytes (not the source) so the map
-        // always matches what phase 2 will actually read
-        spark.read.parquet(stage)
-          .groupBy(sphere.hpix(col(raCol), col(decCol), orderK).as("pix"))
-          .agg(count(lit(1)).as("cnt"))
-          .coalesce(1).write.mode("overwrite").parquet(hist)
-      }
+      // histogram from the STAGED bytes (not the source) so the map
+      // always matches what phase 2 will actually read
+      if (!done(hist))
+        CatalogLayout.writeHist(CatalogLayout.histogram(spark.read.parquet(stage), raCol, decCol, orderK), hist)
     }
 
-    val histRows = spark.read.parquet(batches.indices.map(i => s"$importDir/hist/batch=$i"): _*)
-      .groupBy("pix").agg(sum("cnt").as("cnt"))
-      .collect()
-    val pm = partitionMapFromSparseHist(
-      histRows.map(_.getLong(0)), histRows.map(_.getLong(1)), orderK, threshold)
+    val (pix, cnt) = CatalogLayout.collectHist(
+      CatalogLayout.rebin(CatalogLayout.loadHist(spark, batches.indices.map(histDir): _*), 0))
+    val pm = partitionMapFromSparseHist(pix, cnt, orderK, threshold)
 
-    val staged = spark.read.parquet(batches.indices.map(i => s"$importDir/stage/batch=$i"): _*)
-    writeWithMap(staged, pm, raCol, decCol, idCol, outputDir, catname, orderK, threshold,
-      marginDeg, summaryFiles)
+    val staged = spark.read.parquet(batches.indices.map(stageDir): _*)
+    writeWithMap(staged, pm, raCol, decCol, idCol, outputDir, catname, threshold, marginDeg,
+      exactMargin = false)
     if (cleanStaging) fs.delete(new Path(importDir), true)
     pm
   }
@@ -863,23 +566,6 @@ object HipsPartitioner {
  * (reference: hipscat/catalog.py Catalog.load + cone_search pruning).
  */
 object HipsCatalog {
-  import org.apache.hadoop.fs.Path
-
-  // all filesystem access goes through the Hadoop FileSystem API so
-  // catalogs on HDFS/S3 behave identically to local ones
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private[catalog] def writeString(spark: SparkSession, path: String, content: String): Unit = {
-    val p = new Path(path)
-    val out = fs(spark, path).create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private[catalog] def readString(spark: SparkSession, path: String): String = {
-    val in = fs(spark, path).open(new Path(path))
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
 
   /** Load the full catalog dataframe (hive partition columns included).
    *  A lingering repartition journal means a writer crashed mid-commit
@@ -889,19 +575,19 @@ object HipsCatalog {
    *  the same warning, which is the documented transient-duplicates
    *  read behavior. */
   def load(spark: SparkSession, outputDir: String, catname: String): DataFrame = {
-    val jp = s"$outputDir/$catname/_repartition_journal.json"
-    if (fs(spark, jp).exists(new Path(jp)))
+    val layout = CatalogLayout(outputDir, catname)
+    if (CatalogLayout.exists(spark, layout.journal))
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"catalog $catname has a pending repartition commit ($jp): rows in split tiles " +
+        s"catalog $catname has a pending repartition commit (${layout.journal}): rows in split tiles " +
           "may appear twice until the commit finishes — if no repartition is running, " +
           "a writer crashed; run HipsPartitioner.recoverRepartition to roll it forward")
-    spark.read.parquet(s"$outputDir/$catname/catalog")
+    spark.read.parquet(layout.catalogTree)
   }
 
   /** Load the neighbor (margin) tree; empty DF with catalog schema if absent. */
   def loadNeighbors(spark: SparkSession, outputDir: String, catname: String): DataFrame = {
-    val p = s"$outputDir/$catname/neighbor"
-    if (fs(spark, p).exists(new Path(p))) spark.read.parquet(p)
+    val p = CatalogLayout(outputDir, catname).neighborTree
+    if (CatalogLayout.exists(spark, p)) spark.read.parquet(p)
     else load(spark, outputDir, catname).limit(0)
   }
 
@@ -914,23 +600,12 @@ object HipsCatalog {
    * become -1 gap tiles (no partition). Bounded by directory count.
    */
   def partitionGrid(spark: SparkSession, outputDir: String, catname: String, orderK: Int): PartitionGrid = {
-    val tiles = scala.collection.mutable.Set.empty[(Long, Int)]
-    for (tree <- Seq("catalog", "neighbor")) {
-      val root = new Path(s"$outputDir/$catname/$tree")
-      val f = fs(spark, root.toString)
-      if (f.exists(root)) {
-        for {
-          od <- f.listStatus(root)
-          if od.getPath.getName.startsWith("Norder=")
-          o = od.getPath.getName.stripPrefix("Norder=").toInt
-          dd <- f.listStatus(od.getPath)
-          pd <- f.listStatus(dd.getPath)
-          if pd.getPath.getName.startsWith("Npix=")
-          p = pd.getPath.getName.stripPrefix("Npix=").toLong
-        } tiles += ((p << (2 * (orderK - o)), o))
-      }
-    }
-    PartitionGrid.fromTiles(orderK, tiles.toSeq)
+    val layout = CatalogLayout(outputDir, catname)
+    val tiles = for {
+      tree <- Seq(layout.catalogTree, layout.neighborTree)
+      (o, p) <- CatalogLayout.listTiles(spark, tree)
+    } yield (p << (2 * (orderK - o)), o)
+    PartitionGrid.fromTiles(orderK, tiles)
   }
 
   /**
@@ -954,7 +629,6 @@ object HipsCatalog {
                        rightPrefix: String = "r_", leftPrefix: String = "",
                        leftCols: Seq[String] = Nil, rightCols: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.functions.{sphere, PartitionGrid}
 
     // assign each left row to the RIGHT catalog's partition pixel —
     // codegen kernel over the broadcast grid (was a Scala UDF in r1).
@@ -968,7 +642,7 @@ object HipsCatalog {
     // left hive partition columns (Norder/Dir/Npix) are dropped before
     // prefixing, mirroring prep() on the right — otherwise an unpruned
     // call leaks `{cat}.Norder` etc. asymmetrically into the output
-    val l0 = load(spark, outputDir, leftCat).drop("Norder", "Dir", "Npix")
+    val l0 = load(spark, outputDir, leftCat).drop(CatalogLayout.TileCols: _*)
     val lSel =
       if (leftCols.isEmpty) l0
       else l0.select((leftCols ++ Seq(leftRa, leftDec, leftId)).distinct.map(col): _*)
@@ -980,9 +654,9 @@ object HipsCatalog {
     def prep(df: DataFrame): DataFrame = {
       val sel =
         if (rightCols.isEmpty) df
-        else df.select((rightCols ++ Seq(rightRa, rightDec, rightId, "Norder", "Dir", "Npix"))
+        else df.select((rightCols ++ Seq(rightRa, rightDec, rightId) ++ CatalogLayout.TileCols)
           .distinct.map(col): _*)
-      val cols = sel.columns.filterNot(Seq("Norder", "Dir", "Npix").contains)
+      val cols = sel.columns.filterNot(CatalogLayout.TileCols.contains)
       sel.select((cols.map(col) :+
         shiftleft(col("Norder").cast("long"), 48).bitwiseOR(col("Npix")).as("__jpix")): _*)
     }
@@ -1008,11 +682,6 @@ object HipsCatalog {
       .drop("__jpix")
   }
 
-  /**
-   * Cone search with *file-level* pruning: the hive partition filter
-   * on (Norder, Npix) restricts the scan to overlapping partitions
-   * before any row is read (catalog.py:65 semantics).
-   */
   /** The pruning machinery shared by every stored-catalog search:
    *  column-pruned scan restricted to partitions overlapping the
    *  bounding cone.
@@ -1031,7 +700,6 @@ object HipsCatalog {
   private def prunedScan(spark: SparkSession, outputDir: String, catname: String,
                          raDeg: Double, decDeg: Double, radiusDeg: Double, orderK: Int,
                          columns: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
     val discFrac = (1 - math.cos(math.toRadians(math.min(radiusDeg, 180.0)))) / 2
     val coverOrder = (0 to orderK).reverse
       .find(o => discFrac * Healpix.npix(o) <= 8192 || o == 0).getOrElse(0)
@@ -1059,11 +727,15 @@ object HipsCatalog {
     Seq("Norder", "Npix").filterNot(c => columns.isEmpty || columns.contains(c))
       .foldLeft(df)(_.drop(_))
 
+  /**
+   * Cone search with *file-level* pruning: the hive partition filter
+   * on (Norder, Npix) restricts the scan to overlapping partitions
+   * before any row is read (catalog.py:65 semantics).
+   */
   def coneSearch(spark: SparkSession, outputDir: String, catname: String,
                  raCol: String, decCol: String,
                  raDeg: Double, decDeg: Double, radiusDeg: Double, orderK: Int,
                  columns: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
     val filtered = prunedScan(spark, outputDir, catname, raDeg, decDeg, radiusDeg, orderK, columns)
       .withColumn("_DIST", graft.functions.sphere.gcDist(col(raCol), col(decCol), lit(raDeg), lit(decDeg)))
       .filter(col("_DIST") < radiusDeg)

@@ -632,8 +632,11 @@ object Dedup {
     // against a state THEY persist and release).
     val st = nearDupState(history, idCol, textCol, numPerms, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    incrementalNearDedupWithState(newBatch, st,
+    // the WithState guards (batch size, id type) throw eagerly; the
+    // state cache they leave behind would never be released
+    try incrementalNearDedupWithState(newBatch, st,
       idCol, textCol, minJaccard, numPerms, bands, shingleN, maxBatchRows)
+    catch { case e: Throwable => st.unpersist(); throw e }
   }
 
   /** As [[incrementalNearDedup]] against a PRE-BUILT (and ideally

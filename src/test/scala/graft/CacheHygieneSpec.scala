@@ -94,4 +94,14 @@ class CacheHygieneSpec extends SparkSpecBase {
     assert((persisted -- before).isEmpty,
       s"gcPersist blocks must drain once the caller drops the result; leaked: ${persisted -- before}")
   }
+
+  test("incrementalNearDedup releases its history state when the batch guard throws") {
+    spark.sharedState.cacheManager.clearCache()
+    intercept[IllegalArgumentException] {
+      graft.operators.Dedup.incrementalNearDedup(docs.limit(10), docs.limit(20), "doc_id", "text",
+        maxBatchRows = 5L)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "an oversized batch must not leave the history state registered with the CacheManager")
+  }
 }

@@ -751,6 +751,63 @@ class CatalogSpec extends SparkSpecBase {
       if (tightSet(t)) assert(d <= margin + 1e-3, s"kept row at dist $d > $margin: $t")
       else assert(d > margin - 1e-3, s"dropped row at dist $d <= $margin: $t")
     }
+
+    // append and repartition keep the import's margin policy (recorded
+    // in the meta): the stored neighbor tree of an exactMargin import
+    // grown 4x by an append is exactly the trimmed band of every row
+    // under the frozen map, and stays inside the band after the re-split
+    val out = java.nio.file.Files.createTempDirectory("graft_exactappend").toString
+    val first = li.filter(col("k") % 4 === 0)
+    HipsPartitioner.write(first, "cra", "cdec", "k", out, "band", orderK = 4, threshold = 500,
+      marginDeg = margin, exactMargin = true)
+    HipsPartitioner.append(li.filter(col("k") % 4 =!= 0), "cra", "cdec", "k", out, "band")
+    // hive partition inference reads small Npix back as int
+    def stored() = HipsCatalog.loadNeighbors(spark, out, "band")
+      .select(col("k"), col("cra"), col("cdec"), col("Norder"), col("Npix").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getInt(3), r.getLong(4)))
+    val frozen = HipsPartitioner.computePartitionMap(first, "cra", "cdec", orderK = 4, threshold = 500)
+    val expected = HipsPartitioner.marginRows(li, "cra", "cdec", frozen, margin, exactMargin = true)
+      .select("k", "cra", "cdec", "Norder", "Npix")
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getInt(3), r.getLong(4)))
+    assert(stored().sorted.toSeq == expected.sorted.toSeq,
+      "appended neighbor rows must be trimmed like the import's")
+    HipsPartitioner.repartition(spark, out, "band")
+    stored().foreach { case t @ (_, ra, dec, o, pix) =>
+      val d = graft.healpix.Healpix.distToPixelDeg(o, pix, ra, dec)
+      assert(d <= margin + 1e-3, s"repartitioned neighbor row at dist $d > $margin: $t")
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("CatalogMeta: exponent-aware round trip; older metas read exact_margin as false; a missing key is named") {
+    import graft.catalog.{CatalogLayout, CatalogMeta}
+    import java.nio.file.{Files, Paths}
+    val out = Files.createTempDirectory("graft_meta").toString
+    val layout = CatalogLayout(out, "m")
+    val m = CatalogMeta("m", "ra", "dec", "id", pixThreshold = 500L, orderK = 7, marginDeg = 1.0 / 3600,
+      exactMargin = true, nSources = 1234L, hips = Map(0 -> Seq(3L, 5L), 6 -> Seq(40000L)))
+    layout.writeMeta(spark, m)
+    assert(Files.readString(Paths.get(layout.metaPath)).contains("\"margin_deg\": 2.777777777777778E-4"))
+    assert(layout.readMeta(spark) == m)
+
+    // the format written before `exact_margin` was recorded (fresh
+    // files: rewriting m's meta behind the Hadoop checksum would not read)
+    def hand(cat: String, json: String): CatalogLayout = {
+      val l = CatalogLayout(out, cat)
+      Files.createDirectories(Paths.get(l.root))
+      Files.writeString(Paths.get(l.metaPath), json)
+      l
+    }
+    val older =
+      """{"cat_name": "m", "ra_kw": "ra", "dec_kw": "dec", "id_kw": "id",
+        | "n_sources": 1234, "pix_threshold": 500, "order_k": 7,
+        | "margin_deg": 2.777777777777778E-4, "hips": {"0": [3,5],"6": [40000]}}""".stripMargin
+    assert(hand("older", older).readMeta(spark) == m.copy(exactMargin = false))
+
+    val e = intercept[IllegalArgumentException](
+      hand("noorder", older.replace(""" "order_k": 7,""", "")).readMeta(spark))
+    assert(e.getMessage.contains("order_k"), e.getMessage)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
   test("exactMargin: polar stored cross-match still equals brute force with trimming on") {
