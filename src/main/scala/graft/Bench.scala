@@ -38,31 +38,12 @@ object Bench {
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     require(new java.io.File(sfDir).isDirectory, s"sf dir does not exist: $sfDir")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // n >= 3 so the reported number is a median, not a draw from
     // JIT/environment noise (r2 showed ~15% run-to-run drift on
     // queries whose code had not changed)
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     require(nRuns >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1 (got $nRuns)")
-    val spark = SparkSession.builder()
-      .withExtensions(graft.plans.GraftExtensions.install)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NTZ events timestamps resolve through the session zone — an
-      // unpinned JVM-default zone would make Bench time a DIFFERENT
-      // workload than the UTC-pinned Verify measures
-      .config("spark.sql.session.timeZone", "UTC")
-      // size the scan split to the SF (the default 128 MB makes every
-      // sf0.1 table a ONE-TASK scan — a 15 MB multi-row-group file
-      // decodes serially on one core while DuckDB parallelizes its row
-      // groups; measured 2-2.5x on the fixture's scan-bound tail).
-      // At cluster scale the default is right because files are many;
-      // override via SPARK_GRAFT_MAX_PARTITION_BYTES.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", (2L * 1024 * 1024).toString))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // warm up session: parquet footers, codegen, shuffle machinery
     spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().count()
     def median(xs: Seq[Double]): Double = {

@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 
 /**
  * Minimal command-line entry point — the reference ships a vestigial
@@ -15,6 +17,7 @@ import org.apache.spark.sql.SparkSession
  * graft.Cli polygon <location> <catname> <ra1> <dec1> <ra2> <dec2> <ra3> <dec3> [...]
  * graft.Cli xmatch <location> <cat1> <cat2> [k] [dthreshDeg]
  * graft.Cli query <name> <sfDir>       // any SparkEntry.queries entry
+ * graft.Cli plan <query[,query...]> <sfDir> <outDir> <suffix>
  * graft.Cli list                       // query names
  * graft.Cli profile <table.parquet> <col1,col2,...>
  * graft.Cli validate <table.parquet> <not_null:c,range:c:0:10,fk:c:ref.parquet:rc,...>
@@ -23,9 +26,14 @@ import org.apache.spark.sql.SparkSession
  * graft.Cli viz xmatch <location> <cat1> <cat2> <out.png> [k] [dthreshDeg]
  * }}}
  *
- * `SPARK_GRAFT_CPUS` sizes local parallelism (same contract as
- * Verify/Bench); on a real cluster run the jar through spark-submit
- * and the master/conf come from the submit environment instead.
+ * `plan` writes `<outDir>/<query>_<suffix>.txt` per query: the
+ * formatted initial plan (scans, exchanges, join strategies, pushed
+ * filters) and the executed plan after an action (AQE's final shape)
+ * — the committed plan evidence under `plans/`.
+ *
+ * The session is [[GraftSession]]'s, as in Verify and Bench:
+ * `SPARK_GRAFT_CPUS` sizes local parallelism. Run through
+ * spark-submit, the submitted master is kept instead of `local[n]`.
  */
 object Cli {
 
@@ -37,6 +45,7 @@ object Cli {
       |  polygon <location> <catname> <ra1> <dec1> <ra2> <dec2> <ra3> <dec3> [...]
       |  xmatch <location> <cat1> <cat2> [k] [dthreshDeg]
       |  query <name> <sfDir>
+      |  plan <query[,query...]> <sfDir> <outDir> <suffix>
       |  list
       |  compact <dir> [targetFileMB]
       |  profile <table.parquet> <col1,col2,...>
@@ -46,19 +55,6 @@ object Cli {
       |  viz sources|partitions <location> <catname> <out.png>
       |  viz cone <location> <catname> <out.png> <ra> <dec> <radiusDeg>
       |  viz xmatch <location> <cat1> <cat2> <out.png> [k] [dthreshDeg]""".stripMargin
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .withExtensions(graft.plans.GraftExtensions.install)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** Pure dispatch (unit-testable): returns the action to run, or an
    *  error message when the arguments don't parse. */
@@ -114,6 +110,26 @@ object Cli {
             val res = fn(spark, sfDir)
             res.show(20, truncate = false)
             println(s"${res.count()} rows")
+          }
+        }
+      case "plan" :: names :: sfDir :: outDir :: suffix :: Nil =>
+        val (qs, all) = (names.split(",").toSeq.map(_.trim), SparkEntry.queries)
+        qs.find(n => !all.contains(n)) match {
+          case Some(n) => Left(s"unknown query '$n' — see `list`")
+          case None => Right { spark =>
+            val out = Files.createDirectories(Paths.get(outDir))
+            qs.foreach { n =>
+              val df = all(n)(spark, sfDir)
+              val formatted = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+              // collect runs the frame's OWN QueryExecution, so its
+              // executedPlan ends final (a write plans a separate one)
+              df.collect()
+              val file = out.resolve(s"${n}_$suffix.txt")
+              Files.writeString(file, s"===== $n (explain formatted) =====\n$formatted\n" +
+                s"===== $n (executed plan after action, AQE final) =====\n" +
+                s"${df.queryExecution.executedPlan}\n")
+              println(s"wrote $file")
+            }
           }
         }
       case "list" :: Nil =>
@@ -203,7 +219,7 @@ object Cli {
         System.err.println(msg)
         sys.exit(2)
       case Right(action) =>
-        val spark = session()
+        val spark = GraftSession()
         try action(spark) finally spark.stop()
     }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /**
  * Multi-row-group bench fixture generator (r14 verdict item 10): the
@@ -22,17 +21,10 @@ object FixtureGen {
     require(args.length >= 2, "usage: graft.FixtureGen <srcSfDir> <dstDir> [blockBytes]")
     val (src, dst) = (args(0), args(1))
     val blockBytes = if (args.length > 2) args(2).toLong else 2L * 1024 * 1024
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // write NS timestamps as-is: events.ts is TIMESTAMP_NTZ/micros
-      // since r7 and INT96 coercion would change the physical type
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // write timestamps as-is: events.ts is TIMESTAMP_NTZ/micros since
+    // r7 and INT96 coercion would change the physical type
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
                   "lineitem", "events", "documents", "embeddings")) {
       val in = s"$src/$t.parquet"

@@ -2854,27 +2854,20 @@ object QueryRegistry {
       FROM r5 WHERE node % 2 = 1 ORDER BY rank_e9 DESC, s_suppkey"""
     })
 
-  /** Pin the graph operators to their DISTRIBUTED rounds for the
-   *  duration of `body` (`spark.graft.cc.localMaxEdges = 0`; the
-   *  local-vs-distributed decision is taken eagerly inside each
-   *  operator call, so the pin covers exactly the plan being built).
-   *  Restores the caller's setting afterwards. */
-  private def forceDistributedGraph(s: SparkSession)(body: => DataFrame): DataFrame = {
-    val key = "spark.graft.cc.localMaxEdges"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "0")
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
-
   /** Distributed-path WITNESS for the connected-components star
    *  rounds (the machinery behind 10 CC-consumer queries, all of
    *  which run the bounded driver union-find at bench SFs): q_fof's
-   *  exact computation and oracle with the local path disabled. */
+   *  exact computation and oracle with the local path disabled
+   *  (`spark.graft.cc.localMaxEdges = 0`). The key is set on a child
+   *  session (shared SparkContext and CacheManager, own conf), so the
+   *  caller's session conf is never touched and the pin also holds
+   *  for the returned frame's later actions. */
   private val q_fof_dist = QueryDef(
-    (s, dir) => forceDistributedGraph(s)(q_fof.run(s, dir)),
+    (s, dir) => {
+      val pinned = s.newSession()
+      pinned.conf.set("spark.graft.cc.localMaxEdges", "0")
+      q_fof.run(pinned, dir)
+    },
     q_fof.oracle)
 
   /** Exact triangle counting over the supplier co-supply kNN graph:

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -12,26 +11,19 @@ import org.apache.spark.sql.functions._
  * Evidence for SURVEY §4/§6 that the shapes hold beyond bench size;
  * not part of the driver contract.
  *
- * Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.ScaleProbe"
+ * Run: SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=<sf0.1 dir> sbt "runMain graft.ScaleProbe"
  */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPLICAS", "32").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(graft.plans.GraftExtensions.install)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // NTZ events resolve through the session zone
-      .config("spark.ui.enabled", "false")
-      // the probe EXISTS to exercise the distributed graph rounds
-      // (diameter/plan-size/stats stress); the driver-side
-      // small-graph degenerates would otherwise absorb the sub-1M
-      // probes and measure the wrong path
-      .config("spark.graft.cc.localMaxEdges", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession(cpus)
+    // the probe EXISTS to exercise the distributed graph rounds
+    // (diameter/plan-size/stats stress); the driver-side small-graph
+    // degenerates would otherwise absorb the sub-1M probes and
+    // measure the wrong path
+    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
 
     // optional comma-separated section filter for targeted iteration
     // (docs, sketch, graph, temporal, embeddings, ann, multimodal,
@@ -52,7 +44,7 @@ object ScaleProbe {
           concat_ws(" ", (0 until 18).map(j => concat(lit(s"s"), col("id"), lit(s"x$j"))): _*)).as("text"))
       // base is one small parquet file = ONE input partition; without
       // an explicit repartition the whole probe would run single-task
-      .repartition(cpus.toInt * 4)
+      .repartition(cpus * 4)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val total = big.count()
     println(s"[probe] corpus: $total docs (${n} x $replicas)")
@@ -346,7 +338,7 @@ object ScaleProbe {
     val bigEv = spark.range(replicas).crossJoin(ev)
       .select((col("event_id") + col("id") * 100000000L).as("event_id"),
         col("user_id"), col("ts"), col("event_type"), col("value"))
-      .repartition(cpus.toInt * 4)
+      .repartition(cpus * 4)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     println(s"[probe] events: ${bigEv.count()} rows")
     val purch = bigEv.filter(col("event_type") === "purchase")
@@ -448,7 +440,7 @@ object ScaleProbe {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val bigEmb = spark.range(replicas).crossJoin(emb)
       .select((col("vec_id") + col("id") * 10000000L).as("vec_id"), col("embedding"))
-      .repartition(cpus.toInt * 4)
+      .repartition(cpus * 4)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     println(s"[probe] embeddings: ${bigEmb.count()} vectors")
     time(s"ivfAssign over ${replicas}x embeddings", "embeddings")(
@@ -504,7 +496,7 @@ object ScaleProbe {
           expr("transform(q_vec, (x, i) -> " +
             "CAST(x + ((id * 29 + i * 11) % 9 - 4) / 512.0 AS FLOAT))").as("embedding"))
       val hugeEmb = distract.unionByName(planted)
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       println(s"[probe] ann corpus: ${hugeEmb.count()} vectors (planted neighbors + distractors)")
       time(s"bruteForceTopK (cosine) 16 queries over ${annReplicas}x corpus (1M+)", "ann")(
@@ -620,7 +612,7 @@ object ScaleProbe {
       def skyCat(mra: Long, mdec: Long) = spark.range(npts).select(col("id"),
         ((col("id") * mra % 3600000L).cast("double") / 10000.0).as("ra"),
         (((col("id") * mdec % 1600000L).cast("double") / 10000.0) - 80.0).as("dec"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val cat = skyCat(137, 211).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       println(s"[probe] sky catalog: ${cat.count()} points")
       val links = graft.operators.Spatial.selfPairsDist(cat, "ra", "dec", "id", 0.05)
@@ -652,7 +644,7 @@ object ScaleProbe {
         val pix10 = spark.range(12L << 20)
           .filter(expr("(id div 1024) % 7 != 0 AND id % 64 != 63"))
           .select(col("id").as("pix"))
-          .repartition(cpus.toInt * 4)
+          .repartition(cpus * 4)
         val moc = graft.operators.Spatial.mocNormalize(pix10, "pix", 10)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val perOrder = moc.groupBy("norder").count().collect()
@@ -685,7 +677,7 @@ object ScaleProbe {
             .otherwise(concat(lit("s"), col("id") % 100000)).as("city"),
           concat(lit("r"), col("id") % 97).as("reg"),
           (col("id") % 13).as("sens"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       rows.count()
       val rel = graft.operators.Privacy.kAnonymize(rows, "id", k = 1000, levels = Seq(
@@ -739,7 +731,7 @@ object ScaleProbe {
       val ref = spark.range(nRef).select(col("id").as("rid"),
           ((col("id") * 137 % 3600000L).cast("double") / 10000.0).as("ra"),
           (((col("id") * 211 % 1600000L).cast("double") / 10000.0) - 80.0).as("dec"))
-        .repartition(cpus.toInt * 4)
+        .repartition(cpus * 4)
       val prep = graft.streaming.AlertStream.prepareReference(ref, "ra", "dec", dth)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       time("alert reference prep (1M refs, cover explode, cached)", "alerts")(prep.count())

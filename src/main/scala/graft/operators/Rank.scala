@@ -16,9 +16,12 @@ import org.apache.spark.sql.functions._
  */
 object Rank {
 
+  /** Target bytes per range partition for [[adaptiveParts]]. */
+  private val BytesPerPartition = 64L << 20
+
   /** Range-partition count sized to the DATA, not to the session
-   *  constant: ceil(estimated bytes / `spark.graft.rank.bytesPerPartition`,
-   *  default 64 MB), clamped to [1, spark.sql.shuffle.partitions].
+   *  constant: ceil(estimated bytes / `target` (64 MB)), clamped to
+   *  [1, spark.sql.shuffle.partitions].
    *  The estimate is Catalyst's free sizeInBytes (no job); partition
    *  count never affects the rank values (the global order is the
    *  same under any partitioning), only parallelism, so a misestimate
@@ -29,11 +32,8 @@ object Rank {
    *  RangePartitioner's sampling job (a whole scheduling round trip
    *  on every ranking of a small frame). Explicit `numPartitions`
    *  callers are untouched. */
-  private def adaptiveParts(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val maxParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val target = BigInt(spark.conf.getOption("spark.graft.rank.bytesPerPartition")
-      .map(_.toLong).getOrElse(64L << 20)).max(BigInt(1))
+  private[graft] def adaptiveParts(df: DataFrame, target: Long = BytesPerPartition): Int = {
+    val maxParts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= 0) maxParts
     else ((est + target - 1) / target).min(BigInt(maxParts)).max(BigInt(1)).toInt

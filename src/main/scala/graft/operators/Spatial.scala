@@ -542,29 +542,17 @@ object Spatial {
    *  150 B/tile), capped at 4M so order-≤9 MOCs (npix(9) = 3.1M)
    *  run local on any driver with ≥ ~2 GB heap; genuinely huge MOCs
    *  (the ScaleProbe order-10 10.6M-pixel footprint) keep the
-   *  distributed rounds. Override via `spark.graft.moc.localMaxTiles`
+   *  distributed rounds. Every MOC op takes an explicit `localMax`
    *  (0 disables the local path entirely). */
   def MocLocalMaxTiles: Int = {
-    val conf = org.apache.spark.SparkEnv.get match {
-      case null => None
-      case env  => env.conf.getOption("spark.graft.moc.localMaxTiles")
-    }
-    conf.map { v =>
-      try v.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.moc.localMaxTiles must be an integer tile count (0 disables " +
-            s"the driver-side MOC path): got '$v'")
-      }
-    }.getOrElse {
-      val byHeap = Runtime.getRuntime.maxMemory() / 4 / 150
-      if (byHeap < 4000000L && !loggedHeapCeiling.getAndSet(true))
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"MOC local-vs-distributed cutover is HEAP-derived on this driver: " +
-            s"$byHeap tiles (maxMemory/4/150B) < the 4M cap — the same dataset can " +
-            s"take a different plan on a larger driver; pin spark.graft.moc.localMaxTiles " +
-            s"for plan stability")
-      math.min(4000000L, byHeap).toInt
-    }
+    val byHeap = Runtime.getRuntime.maxMemory() / 4 / 150
+    if (byHeap < 4000000L && !loggedHeapCeiling.getAndSet(true))
+      org.slf4j.LoggerFactory.getLogger(getClass).info(
+        s"MOC local-vs-distributed cutover is HEAP-derived on this driver: " +
+          s"$byHeap tiles (maxMemory/4/150B) < the 4M cap — the same dataset can " +
+          s"take a different plan on a larger driver; pass an explicit localMax " +
+          s"for plan stability")
+    math.min(4000000L, byHeap).toInt
   }
 
   /** One-shot latch for the heap-derived-ceiling log line above. */

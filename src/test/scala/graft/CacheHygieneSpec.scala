@@ -51,7 +51,10 @@ class CacheHygieneSpec extends SparkSpecBase {
 
   test("gcPersist blocks drain via the ContextCleaner after the result is dropped") {
     val sc = spark.sparkContext
-    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    // ids copied out of the map: `keySet` is a view over the map's
+    // strong RDD values (and `--` may return it unchanged), so holding
+    // it would itself keep the operator's RDD reachable
+    def persisted: Set[Int] = sc.getPersistentRDDs.keysIterator.toSet
     val before = persisted
     // scope the result so the reference is droppable
     locally {

@@ -47,6 +47,7 @@ class CatalogReaderSpec extends SparkSpecBase {
     val content = "# meta line 1\n# meta line 2\n" +
       (1 to n).map(i => s"$i.5,${-i}.25,$i").mkString("\n") + "\n"
     val p = writeTemp("big.csv", content)
+    val split = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "16384") // ~25 splits
     try {
       val df = CatalogReader.read(spark, Seq(p),
@@ -56,7 +57,7 @@ class CatalogReaderSpec extends SparkSpecBase {
       val ids = df.select("id").collect().map(_.getInt(0)).sorted
       assert(ids.head == 1 && ids.last == n && ids.length == n,
         "exactly the two meta lines must be dropped, nothing else")
-    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", split)
   }
 
   test("parquet ingest keeps native columns") {

@@ -30,6 +30,19 @@ class GraphSpec extends SparkSpecBase {
     assert(comps(Seq.empty) == Map.empty)
   }
 
+  test("q_fof_dist pins the distributed rounds on a child session, not the caller's conf") {
+    val key = "spark.graft.cc.localMaxEdges"
+    val qs = QueryRegistry.all.toMap
+    spark.conf.set(key, "123")
+    try {
+      val dist = qs("q_fof_dist").run(spark, sf("sf0.01"))
+      val rows = dist.collect().map(_.toString).toSeq
+      assert(spark.conf.get(key) == "123", "the caller's setting must be left as it was")
+      assert((dist.sparkSession ne spark) && dist.sparkSession.conf.get(key) == "0")
+      assert(rows.nonEmpty && rows == qs("q_fof").run(spark, sf("sf0.01")).collect().map(_.toString).toSeq)
+    } finally spark.conf.unset(key)
+  }
+
   test("connected components: refuses to return partial labels when maxIter is too low") {
     // star rounds are O(log n): a 2000-node chain at maxIter = 1
     // cannot have contracted fully (one large+small round only

@@ -26,15 +26,12 @@ class OptR17Spec extends SparkSpecBase {
     assert(one.select("id", "rank").as[(Long, Long)].collect().toMap == expect)
     // tiny per-partition target -> clamped to the session parallelism,
     // ranks STILL identical (partitioning never changes the order)
-    spark.conf.set("spark.graft.rank.bytesPerPartition", "1024")
-    try {
-      val many = Rank.globalRowNumber(df, Seq(col("score"), col("id")))
-      assert(many.rdd.getNumPartitions ==
-        spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        s"a frame far above target bytes clamps to shuffle.partitions, " +
-          s"got ${many.rdd.getNumPartitions}")
-      assert(many.select("id", "rank").as[(Long, Long)].collect().toMap == expect)
-    } finally spark.conf.unset("spark.graft.rank.bytesPerPartition")
+    val parts = Rank.adaptiveParts(df, target = 1024)
+    assert(parts == spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      s"a frame far above target bytes clamps to shuffle.partitions, got $parts")
+    val many = Rank.globalRowNumber(df, Seq(col("score"), col("id")), numPartitions = parts)
+    assert(many.rdd.getNumPartitions == parts)
+    assert(many.select("id", "rank").as[(Long, Long)].collect().toMap == expect)
   }
 
   test("prefixSums with numPartitions=0 is exact under adaptive partitioning") {

@@ -11,16 +11,5 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(graft.plans.GraftExtensions.install)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(cores = 4)
 }

@@ -145,11 +145,27 @@ class VizSpec extends SparkSpecBase {
     assert(decoded.getWidth == 800 && decoded.getHeight == 400)
   }
 
+  test("CLI plan writes the formatted initial plan and the AQE-final executed plan") {
+    val out = java.nio.file.Files.createTempDirectory("cli_plan")
+    Cli.parse(Array("plan", "q1_agg,q_fof", sf("sf0.001"), out.toString, "t")) match {
+      case Right(action) => action(spark)
+      case Left(msg) => fail(msg)
+    }
+    for (q <- Seq("q1_agg", "q_fof")) {
+      val text = java.nio.file.Files.readString(out.resolve(s"${q}_t.txt"))
+      assert(text.contains(s"===== $q (explain formatted) =====") &&
+        text.contains(s"===== $q (executed plan after action, AQE final) ====="), text)
+      assert(text.contains("AdaptiveSparkPlan isFinalPlan=true"), s"$q: the executed plan must be AQE's final")
+    }
+  }
+
   test("CLI parse: dispatch table and error surface") {
     assert(Cli.parse(Array.empty).isLeft)
     assert(Cli.parse(Array("bogus")).isLeft)
     assert(Cli.parse(Array("query", "no_such_query", "/tmp")).isLeft)
     assert(Cli.parse(Array("query", "q1_agg", "/tmp")).isRight)
+    assert(Cli.parse(Array("plan", "q1_agg", "/tmp", "/tmp/plans", "x")).isRight)
+    assert(Cli.parse(Array("plan", "q1_agg,no_such_query", "/tmp", "/tmp/plans", "x")).isLeft)
     assert(Cli.parse(Array("list")).isRight)
     assert(Cli.parse(Array("cone", "/tmp", "c", "1.0", "2.0", "3.0")).isRight)
     assert(Cli.parse(Array("import", "a.parquet", "/tmp", "c", "ra", "dec", "id")).isRight)
