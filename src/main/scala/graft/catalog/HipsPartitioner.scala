@@ -619,7 +619,9 @@ object HipsCatalog {
    * No per-row disc cover at query time — that work was done once
    * at write time. Like the reference, matches beyond the stored
    * margin radius are not found: choose marginDeg >= dthresh at
-   * write time for exactness (asserted in ScalaTest).
+   * write time for exactness (asserted in ScalaTest). Only the keying
+   * is the stored path's own; the ranking is the in-flight match's
+   * ([[graft.operators.Spatial.nearestK]]).
    */
   def crossMatchStored(spark: SparkSession, outputDir: String,
                        leftCat: String, rightCat: String,
@@ -628,8 +630,6 @@ object HipsCatalog {
                        k: Int, dthreshDeg: Double, orderK: Int,
                        rightPrefix: String = "r_", leftPrefix: String = "",
                        leftCols: Seq[String] = Nil, rightCols: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-
     // assign each left row to the RIGHT catalog's partition pixel —
     // codegen kernel over the broadcast grid (was a Scala UDF in r1).
     // The join key is the PACKED (order << 48 | pix) value: a bare
@@ -672,9 +672,7 @@ object HipsCatalog {
       .withColumn("_DIST", sphere.gcDist(qc(leftPrefix + leftRa), qc(leftPrefix + leftDec),
         qc(rightPrefix + rightRa), qc(rightPrefix + rightDec)))
       .filter(col("_DIST") < dthreshDeg)
-    val w = Window.partitionBy(qc(leftPrefix + leftId))
-      .orderBy(round(col("_DIST"), 9).asc, qc(rightPrefix + rightId).asc)
-    joined.withColumn("_RANK", row_number().over(w)).filter(col("_RANK") <= k)
+    graft.operators.Spatial.nearestK(joined, leftPrefix + leftId, rightPrefix + rightId, k)
       // match-partition provenance, as in the in-flight crossMatchKnn
       // and the reference output (catalog.py:232 hips_k/hips_pix)
       .withColumn("hips_k", shiftright(col("__jpix"), 48).cast("int"))

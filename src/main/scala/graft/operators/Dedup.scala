@@ -613,6 +613,12 @@ object Dedup {
    * Recall is the banding curve: with the default 128 perms x 32
    * bands a true pair at J >= 0.8 is missed with p ~ 5e-8 (see
    * [[nearDuplicates]]); at lower thresholds widen bands accordingly.
+   *
+   * Batch-size limit: `maxBatchRows` defaults to 100000. A batch with
+   * more rows throws `IllegalArgumentException` (checked by a bounded
+   * row-count job before any broadcast is built) instead of building
+   * a driver-OOM-sized broadcast; callers with larger batches and a
+   * driver sized for them raise `maxBatchRows` explicitly.
    */
   def incrementalNearDedup(newBatch: DataFrame, history: DataFrame,
                            idCol: String, textCol: String,
@@ -642,7 +648,9 @@ object Dedup {
   /** As [[incrementalNearDedup]] against a PRE-BUILT (and ideally
    *  persisted/stored) [[nearDupState]] — the entry point for real
    *  recurring ingest. `state` is consumed twice (band join + exact
-   *  verify); materialize it or the state recomputes per consumer. */
+   *  verify); materialize it or the state recomputes per consumer.
+   *  Same batch-size limit: `maxBatchRows` defaults to 100000, and a
+   *  larger batch throws `IllegalArgumentException`. */
   def incrementalNearDedupWithState(newBatch: DataFrame, state: DataFrame,
                                     idCol: String, textCol: String,
                                     minJaccard: Double = 0.8, numPerms: Int = 128,

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
  * that AQE can re-plan / skew-split), with the margin problem solved
  * by a bounded explode of the right side over a conservative disc
  * cover of radius dthresh — no cartesian products, no driver loops,
- * no KDTree: per-left-row ranking is a window over the already
- * pixel-partitioned shuffle output.
+ * no KDTree: every angular match runs one candidate join
+ * ([[Spatial.pixelJoin]]), and the kNN matches rank it with one
+ * ranker ([[Spatial.nearestK]]).
  */
 object Spatial {
 
@@ -180,109 +181,105 @@ object Spatial {
                     k: Int, dthreshDeg: Double,
                     order: Int = -1,
                     leftPrefix: String = "l_", rightPrefix: String = "r_",
-                    saltBuckets: Int = -1, rankShuffle: Boolean = true): DataFrame = {
+                    saltBuckets: Int = -1): DataFrame = {
     val o = if (order >= 0) order else autoOrder(dthreshDeg)
-    // wide thresholds force coarse orders: npix(order) can drop below
-    // the cluster parallelism (48 pixels = 48 join keys). Auto-salt
-    // to restore it; right-side replication stays bounded (x salt).
-    val salt =
-      if (saltBuckets > 0) saltBuckets
-      else {
-        val parallelism = left.sparkSession.sparkContext.defaultParallelism
-        math.max(1, math.ceil(2.0 * parallelism / graft.healpix.Healpix.npix(o)).toInt)
-      }
-
     val lp = left.columns.foldLeft(left)((d, c) => d.withColumnRenamed(c, leftPrefix + c))
     val rp = right.columns.foldLeft(right)((d, c) => d.withColumnRenamed(c, rightPrefix + c))
+    val joined = pixelJoin(lp, leftPrefix + leftRa, leftPrefix + leftDec,
+      discCover(rp, rightPrefix + rightRa, rightPrefix + rightDec, o, dthreshDeg),
+      rightPrefix + rightRa, rightPrefix + rightDec,
+      dthreshDeg, o, Some(leftPrefix + leftId), saltBuckets)
+    nearestK(joined, leftPrefix + leftId, rightPrefix + rightId, k)
+      .withColumn("hips_k", lit(o))
+      .withColumnRenamed("__pix", "hips_pix")
+  }
 
-    var l = lp.withColumn("__pix", sphere.hpix(col(leftPrefix + leftRa), col(leftPrefix + leftDec), o))
-    // bounded margin explode: every pixel possibly within dthresh of the right point
-    var r = rp.withColumn("__pix",
-      explode(sphere.hpixCover(col(rightPrefix + rightRa), col(rightPrefix + rightDec), o, lit(dthreshDeg))))
+  /** The cover side of [[pixelJoin]]: every row exploded to each
+   *  order-`o` pixel (`__pix`) that can hold a point within
+   *  `dthreshDeg` of it — a bounded, conservative disc cover. */
+  private[graft] def discCover(df: DataFrame, raCol: String, decCol: String,
+                               o: Int, dthreshDeg: Double): DataFrame =
+    df.withColumn("__pix", explode(sphere.hpixCover(col(raCol), col(decCol), o, lit(dthreshDeg))))
 
-    // optional skew salting (galactic-plane-style hot pixels): left
-    // rows spread over S sub-keys, right candidates replicated S x —
-    // same join result, S x the parallelism on the hottest pixel
-    val joinKeys = if (salt > 1) {
-      l = l.withColumn("__salt", pmod(xxhash64(col(leftPrefix + leftId)), lit(salt)))
-      r = r.withColumn("__salt", explode(sequence(lit(0L), lit(salt - 1L))))
-      Seq("__pix", "__salt")
-    } else Seq("__pix")
-
-    val joined = l.join(r, joinKeys)
-      .withColumn("_DIST", sphere.gcDist(
-        col(leftPrefix + leftRa), col(leftPrefix + leftDec),
-        col(rightPrefix + rightRa), col(rightPrefix + rightDec)))
-      .filter(col("_DIST") < dthreshDeg)
-
-    // deterministic ranking: rounded distance, then right id (stable
-    // across JVM-vs-libm last-ulp trig differences).
-    //
-    // With rankShuffle = false, a partition-local bounded-heap top-k
-    // runs FIRST as a combiner: any globally top-k candidate is
-    // top-k within its partition, so pre-filtering to k rows per
-    // (left id, partition) is lossless regardless of how the join
-    // partitioned the data (broadcast builds and AQE skew splits
-    // included) — the exact window then ranks a shuffle that carries
-    // at most k rows per left id per partition instead of every
-    // candidate pair. Measured on local[32] at 6M x 150k (30M
-    // candidates) the plain window is still faster (27-30s vs
-    // 36-38s) because a local shuffle is an in-memory copy; the
-    // combiner pays off on network-bound clusters.
-    if (k == 1) {
-      // k = 1 (the nearest-neighbor case every pipeline composition
-      // uses): a min(struct(rounded dist, right id, payload)) aggregate
-      // replaces the window entirely. The aggregate gets PARTIAL
-      // (map-side) combination, so the exchange carries at most one
-      // row per (left id, upstream partition) instead of EVERY
-      // candidate pair, and the per-partition window sort disappears.
-      // Semantics are identical: struct comparison is lexicographic on
-      // (round(_DIST, 9), right id) — exactly the window's ORDER BY —
-      // and the (left, right) candidate pair is unique in `joined`
-      // (the left row carries ONE pixel and one salt), so the payload
-      // field is never reached by the comparator.
-      val leftIdC = leftPrefix + leftId
-      val restoredOrder = joined.columns.filterNot(_ == "__salt")
-      val payloadCols = restoredOrder.filterNot(_ == leftIdC)
-      val best = joined.groupBy(col(leftIdC)).agg(
-        min(struct(
-          round(col("_DIST"), 9).as("__rd"),
-          col(rightPrefix + rightId).as("__rid"),
-          struct(payloadCols.map(col): _*).as("__p"))).as("__best"))
-      best.select(restoredOrder.map { c =>
-          if (c == leftIdC) col(c) else col("__best").getField("__p").getField(c).as(c)
-        }: _*)
-        .withColumn("_RANK", lit(1))
-        .withColumn("hips_k", lit(o))
-        .withColumnRenamed("__pix", "hips_pix")
-    } else {
-      val preFiltered =
-        if (rankShuffle) joined
-        else partitionTopK(joined, leftPrefix + leftId, rightPrefix + rightId, k)
-      val w = Window.partitionBy(col(leftPrefix + leftId))
-        .orderBy(round(col("_DIST"), 9).asc, col(rightPrefix + rightId).asc)
-      preFiltered
-        .withColumn("_RANK", row_number().over(w)).filter(col("_RANK") <= k)
-        .withColumn("hips_k", lit(o))
-        .withColumnRenamed("__pix", "hips_pix")
-        .drop("__salt")
+  /**
+   * The candidate join under every angular match ([[crossMatchKnn]],
+   * the pair joins, the streaming alert match): `own` is keyed by its
+   * OWN order-`o` pixel, `covered` comes keyed by [[discCover]], so
+   * each (own, covered) pair with gc < dthresh meets exactly once — a
+   * plain pixel equi-join whose fan-out is local density x cover size,
+   * never an all-pairs comparison. Keeps `_DIST < dthreshDeg`.
+   *
+   * Salting: wide thresholds force coarse orders, where npix(o) can
+   * drop below the cluster parallelism (48 pixels = 48 join keys).
+   * With a `saltKey` (unique per own row) own rows spread over S
+   * sub-keys and covered rows are replicated S x — same join result,
+   * S x the parallelism on the hottest pixel. S is `saltBuckets`, or
+   * derived from the parallelism when that is <= 0. `saltKey = None`
+   * never salts (a stream-static join keeps its static side as
+   * prepared).
+   *
+   * Output: `__pix`, `__salt` (when salted), own's columns, covered's
+   * columns, `_DIST`.
+   */
+  private[graft] def pixelJoin(own: DataFrame, ownRa: String, ownDec: String,
+                               covered: DataFrame, coveredRa: String, coveredDec: String,
+                               dthreshDeg: Double, o: Int,
+                               saltKey: Option[String], saltBuckets: Int = -1): DataFrame = {
+    val salt = saltKey.fold(1) { _ =>
+      if (saltBuckets > 0) saltBuckets
+      else math.max(1, math.ceil(2.0 * own.sparkSession.sparkContext.defaultParallelism / Healpix.npix(o)).toInt)
     }
+    val a = own.withColumn("__pix", sphere.hpix(col(ownRa), col(ownDec), o))
+    val (l, r, keys) =
+      if (salt > 1)
+        (a.withColumn("__salt", pmod(xxhash64(col(saltKey.get)), lit(salt))),
+          covered.withColumn("__salt", explode(sequence(lit(0L), lit(salt - 1L)))),
+          Seq("__pix", "__salt"))
+      else (a, covered, Seq("__pix"))
+    l.join(r, keys)
+      .withColumn("_DIST", sphere.gcDist(col(ownRa), col(ownDec), col(coveredRa), col(coveredDec)))
+      .filter(col("_DIST") < dthreshDeg)
   }
 
   /**
-   * Lossless combiner for kNN ranking: per-partition bounded
-   * max-heaps keep at most k candidates per left id per partition
-   * (a globally top-k row is necessarily partition-locally top-k).
-   * Ids must be LongType (validated).
+   * The nearest-k ranker of every kNN match (in-flight
+   * [[crossMatchKnn]] and the stored-margin
+   * `HipsCatalog.crossMatchStored`): per `leftId`, the `k` candidates
+   * of least (round(_DIST, 9), rightId) — the rounding keeps the order
+   * stable across JVM-vs-libm last-ulp trig differences. Keeps the
+   * input's column order, drops `__salt`, appends `_RANK`.
+   *
+   * k = 1 (the nearest-neighbor case every pipeline composition uses)
+   * is a min(struct(rounded dist, right id, payload)) aggregate, not
+   * a window: the aggregate gets PARTIAL (map-side) combination, so
+   * the exchange carries at most one row per (left id, upstream
+   * partition) instead of every candidate pair, and no sort runs.
+   * Struct comparison is lexicographic on (round(_DIST, 9), right id)
+   * — exactly the window's ORDER BY — and a (left, right) candidate
+   * pair is unique in `joined`, so the payload is never compared.
+   *
+   * Names are backtick-quoted: prefixed names may contain '.'
+   * (`Catalog.crossMatch`'s delimiter), which col() would parse as
+   * struct access.
    */
-  private[graft] def partitionTopK(joined: DataFrame, leftIdCol: String, rightIdCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val inSchema = joined.schema
-    require(inSchema(leftIdCol).dataType == LongType && inSchema(rightIdCol).dataType == LongType,
-      s"partition top-k requires LongType ids; got ${inSchema(leftIdCol).dataType}/${inSchema(rightIdCol).dataType}" +
-        " — use rankShuffle = true for other id types")
-    // shared bounded-heap combiner (TopK.scala) — also the ANN paths'
-    TopK.partitionTopK(joined, leftIdCol, rightIdCol, "_DIST", k, ascending = true)
+  private[graft] def nearestK(joined: DataFrame, leftId: String, rightId: String, k: Int): DataFrame = {
+    def qc(name: String) = col("`" + name + "`")
+    val cols = joined.columns.filterNot(_ == "__salt")
+    if (k == 1) {
+      val best = joined.groupBy(qc(leftId)).agg(
+        min(struct(
+          round(col("_DIST"), 9).as("__rd"),
+          qc(rightId).as("__rid"),
+          struct(cols.filterNot(_ == leftId).map(qc): _*).as("__p"))).as("__best"))
+      best.select(cols.map { c =>
+          if (c == leftId) qc(c) else col("__best").getField("__p").getField(c).as(c)
+        }: _*)
+        .withColumn("_RANK", lit(1))
+    } else {
+      val w = Window.partitionBy(qc(leftId)).orderBy(round(col("_DIST"), 9).asc, qc(rightId).asc)
+      joined.withColumn("_RANK", row_number().over(w)).filter(col("_RANK") <= k)
+        .drop("__salt")
+    }
   }
 
   /**
@@ -397,13 +394,10 @@ object Spatial {
    * the [[crossMatchKnn]] machinery turned inward, minus the top-k
    * ranking: FoF wants EVERY link, not the k nearest).
    *
-   * Exactly-once by construction, no distinct: side A is keyed by
-   * its OWN pixel (unique per row), side B explodes the bounded disc
-   * cover — whenever gc(a,b) < d, a's pixel intersects disc(b, d) so
-   * it appears in cover(b) exactly once; the a < b filter halves
-   * ordered to unordered. The join is a plain pixel equi-join whose
-   * fan-out is bounded by local density x cover size — never an
-   * all-pairs comparison. Skew salting as in [[crossMatchKnn]]
+   * Exactly-once by construction, no distinct: the [[pixelJoin]]
+   * meets each ordered pair within d once (side A keyed by its OWN
+   * pixel, side B by its disc cover), and the a < b filter halves
+   * ordered to unordered. Skew salting as in [[pixelJoin]]
    * (galactic-plane hot pixels spread over `salt` sub-keys).
    */
   def selfPairs(df: DataFrame, raCol: String, decCol: String, idCol: String,
@@ -416,51 +410,25 @@ object Spatial {
    *  it; FoF only thresholds it). */
   def selfPairsDist(df: DataFrame, raCol: String, decCol: String, idCol: String,
                     dthreshDeg: Double, order: Int = -1, saltBuckets: Int = -1): DataFrame =
-    pairJoin(df.select(col(idCol).as("id_a"), col(raCol).as("__ra_a"), col(decCol).as("__dec_a")),
-      df.select(col(idCol).as("id_b"), col(raCol).as("__ra_b"), col(decCol).as("__dec_b")),
-      dthreshDeg, order, saltBuckets)
+    crossPairsDist(df, df, raCol, decCol, idCol, raCol, decCol, idCol, dthreshDeg, order, saltBuckets)
       .filter(col("id_a") < col("id_b"))
 
   /**
    * Every (left, right) pair within `dthreshDeg`, with `_DIST` — the
    * cross-catalog twin of [[selfPairsDist]] (a correlation function's
    * DR term; no a < b halving because the catalogs are distinct).
-   * Exactly-once per ordered pair by the same own-pixel-vs-cover
-   * construction.
+   * Exactly-once per ordered pair by the [[pixelJoin]]'s
+   * own-pixel-vs-cover construction. Emits (id_a, id_b, _DIST).
    */
   def crossPairsDist(left: DataFrame, right: DataFrame,
                      leftRa: String, leftDec: String, leftId: String,
                      rightRa: String, rightDec: String, rightId: String,
-                     dthreshDeg: Double, order: Int = -1, saltBuckets: Int = -1): DataFrame =
-    pairJoin(
-      left.select(col(leftId).as("id_a"), col(leftRa).as("__ra_a"), col(leftDec).as("__dec_a")),
-      right.select(col(rightId).as("id_b"), col(rightRa).as("__ra_b"), col(rightDec).as("__dec_b")),
-      dthreshDeg, order, saltBuckets)
-
-  /** Shared pixel-bucketed pair join: side A keyed by its OWN pixel,
-   *  side B exploding the bounded disc cover — each ordered (a, b)
-   *  with gc(a, b) < d meets exactly once. Emits (id_a, id_b, _DIST). */
-  private def pairJoin(a0: DataFrame, b0: DataFrame, dthreshDeg: Double,
-                       order: Int, saltBuckets: Int): DataFrame = {
+                     dthreshDeg: Double, order: Int = -1, saltBuckets: Int = -1): DataFrame = {
     val o = if (order >= 0) order else autoOrder(dthreshDeg)
-    val salt =
-      if (saltBuckets > 0) saltBuckets
-      else {
-        val parallelism = a0.sparkSession.sparkContext.defaultParallelism
-        math.max(1, math.ceil(2.0 * parallelism / graft.healpix.Healpix.npix(o)).toInt)
-      }
-    var a = a0.withColumn("__pix", sphere.hpix(col("__ra_a"), col("__dec_a"), o))
-    var b = b0.withColumn("__pix",
-      explode(sphere.hpixCover(col("__ra_b"), col("__dec_b"), o, lit(dthreshDeg))))
-    val joinKeys = if (salt > 1) {
-      a = a.withColumn("__salt", pmod(xxhash64(col("id_a")), lit(salt)))
-      b = b.withColumn("__salt", explode(sequence(lit(0L), lit(salt - 1L))))
-      Seq("__pix", "__salt")
-    } else Seq("__pix")
-    a.join(b, joinKeys)
-      .withColumn("_DIST", sphere.gcDist(col("__ra_a"), col("__dec_a"),
-        col("__ra_b"), col("__dec_b")))
-      .filter(col("_DIST") < dthreshDeg)
+    val a = left.select(col(leftId).as("id_a"), col(leftRa).as("__ra_a"), col(leftDec).as("__dec_a"))
+    val b = right.select(col(rightId).as("id_b"), col(rightRa).as("__ra_b"), col(rightDec).as("__dec_b"))
+    pixelJoin(a, "__ra_a", "__dec_a", discCover(b, "__ra_b", "__dec_b", o, dthreshDeg), "__ra_b", "__dec_b",
+      dthreshDeg, o, Some("id_a"), saltBuckets)
       .select("id_a", "id_b", "_DIST")
   }
 

@@ -179,27 +179,30 @@ class CatalogSpec extends SparkSpecBase {
     HipsPartitioner.write(cust, "cra", "cdec", "c_custkey", out, "c1", orderK = 2, threshold = 100, marginDeg = 12.0)
     HipsPartitioner.write(supp, "sra", "sdec", "s_suppkey", out, "c2", orderK = 2, threshold = 100, marginDeg = 12.0)
 
-    val storedDf = HipsCatalog.crossMatchStored(spark, out, "c1", "c2",
-      "cra", "cdec", "c_custkey", "sra", "sdec", "s_suppkey", k = 2, dthreshDeg = 10.0, orderK = 2)
-    val stored = storedDf.select("c_custkey", "r_s_suppkey")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-
-    val inflight = graft.operators.Spatial.crossMatchKnn(cust, supp,
-      "cra", "cdec", "c_custkey", "sra", "sdec", "s_suppkey",
-      k = 2, dthreshDeg = 10.0, leftPrefix = "", rightPrefix = "x_")
-      .select("c_custkey", "x_s_suppkey")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-
-    assert(stored.toSeq == inflight.toSeq)
-
-    // hips_k/hips_pix carry the match partition (the right catalog's
-    // adaptive pixel containing the left row) — reference catalog.py:232
+    // k = 1 ranks through the aggregate path, k = 2 through the window
     val grid = HipsCatalog.partitionGrid(spark, out, "c2", 2)
-    storedDf.select("cra", "cdec", "hips_k", "hips_pix").collect().foreach { r =>
-      val pixK = graft.healpix.Healpix.ang2pixNest(2, r.getDouble(0), r.getDouble(1))
-      val o = grid.order(pixK)
-      assert(r.getInt(2) == o, s"hips_k mismatch at $r")
-      assert(r.getLong(3) == (pixK >> (2 * (2 - o))), s"hips_pix mismatch at $r")
+    for (k <- Seq(1, 2)) {
+      val storedDf = HipsCatalog.crossMatchStored(spark, out, "c1", "c2",
+        "cra", "cdec", "c_custkey", "sra", "sdec", "s_suppkey", k = k, dthreshDeg = 10.0, orderK = 2)
+      val stored = storedDf.select("c_custkey", "r_s_suppkey")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+
+      val inflight = graft.operators.Spatial.crossMatchKnn(cust, supp,
+        "cra", "cdec", "c_custkey", "sra", "sdec", "s_suppkey",
+        k = k, dthreshDeg = 10.0, leftPrefix = "", rightPrefix = "x_")
+        .select("c_custkey", "x_s_suppkey")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+
+      assert(stored.nonEmpty && stored.toSeq == inflight.toSeq, s"k=$k")
+
+      // hips_k/hips_pix carry the match partition (the right catalog's
+      // adaptive pixel containing the left row) — reference catalog.py:232
+      storedDf.select("cra", "cdec", "hips_k", "hips_pix").collect().foreach { r =>
+        val pixK = graft.healpix.Healpix.ang2pixNest(2, r.getDouble(0), r.getDouble(1))
+        val o = grid.order(pixK)
+        assert(r.getInt(2) == o, s"hips_k mismatch at $r (k=$k)")
+        assert(r.getLong(3) == (pixK >> (2 * (2 - o))), s"hips_pix mismatch at $r (k=$k)")
+      }
     }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
@@ -305,6 +308,16 @@ class CatalogSpec extends SparkSpecBase {
     val xmAll = c1.crossMatch(c2, nNeighbors = 2, dthreshDeg = 10.0)
     assert(xmAll.columns.contains("cust.c_acctbal") && xmAll.columns.contains("supp.s_acctbal"),
       "no selection means all columns, prefixed")
+
+    // the k = 1 aggregate path over '.'-delimited prefixed names: the
+    // same columns, in the same order, and the same rows as the k = 2
+    // window path's rank-1 rows
+    val nearest = Catalog(spark, out, "cust").crossMatch(c2, 1, 10.0)
+    val rank1 = c1.crossMatch(c2, 2, 10.0).filter(col("_RANK") === 1)
+    assert(nearest.columns.toSeq == rank1.columns.toSeq,
+      s"k=1 column order drifted: ${nearest.columns.toSeq} vs ${rank1.columns.toSeq}")
+    val nRows = nearest.collect().map(_.toSeq).sortBy(_.toString)
+    assert(nRows.nonEmpty && nRows.toSeq == rank1.collect().map(_.toSeq).sortBy(_.toString).toSeq)
 
     // density map persisted at import == an independent recompute
     val dm = c1.densityMap().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -22,29 +22,6 @@ class R14PlanSpec extends SparkSpecBase {
     assert(df.count() > 0)
   }
 
-  test("propagateEpoch: known motion gives the expected offset; -dt round-trips") {
-    import spark.implicits._
-    import graft.operators.Spatial
-    // 1000 mas/yr for 36 years = 36 arcsec = 0.01 deg, at the equator
-    val src = Seq((1L, 100.0, 0.0, 1000.0, -1000.0)).toDF("id", "ra", "dec", "pmra", "pmdec")
-    val p = Spatial.propagateEpoch(src, "ra", "dec", "pmra", "pmdec", 36.0).collect()(0)
-    assert(math.abs(p.getDouble(1) - 100.01) < 1e-9, s"ra: ${p.getDouble(1)}")
-    assert(math.abs(p.getDouble(2) - (-0.01)) < 1e-9, s"dec: ${p.getDouble(2)}")
-    // at dec=60 the same mu_alpha* moves ra by 0.01/cos(60) = 0.02 deg
-    val hi = Seq((2L, 100.0, 60.0, 1000.0, 0.0)).toDF("id", "ra", "dec", "pmra", "pmdec")
-    val q = Spatial.propagateEpoch(hi, "ra", "dec", "pmra", "pmdec", 36.0).collect()(0)
-    assert(math.abs(q.getDouble(1) - (100.0 + 0.01 / math.cos(math.toRadians(60)))) < 1e-9)
-    // inverse propagation restores the original position to flat-sky accuracy
-    val back = Spatial.propagateEpoch(
-      Spatial.propagateEpoch(src, "ra", "dec", "pmra", "pmdec", 36.0),
-      "ra", "dec", "pmra", "pmdec", -36.0).collect()(0)
-    assert(math.abs(back.getDouble(1) - 100.0) < 1e-7 && math.abs(back.getDouble(2) - 0.0) < 1e-12)
-    // map-only: no exchange of any kind in the propagation itself
-    val plan = Spatial.propagateEpoch(src, "ra", "dec", "pmra", "pmdec", 36.0)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"epoch propagation must not shuffle:\n$plan")
-  }
-
   test("q_lcfeatures: white noise gives eta near 2, a smooth ramp near 0") {
     import spark.implicits._
     import org.apache.spark.sql.functions.timestamp_micros

@@ -1,107 +1,12 @@
 package graft
 
-import graft.operators.{Merge, Spatial, TextAnalysis}
+import graft.operators.{Merge, TextAnalysis}
 import org.apache.spark.sql.functions._
 
-/** Round-10 additions: friends-of-friends group finding, delete-aware
-  * CDC changelog apply, trigram-index substring search. */
+/** Round-10 additions: delete-aware CDC changelog apply,
+  * trigram-index substring search. */
 class R16OpsSpec extends SparkSpecBase {
   import spark.implicits._
-
-  // ------------------------------------------------------------- FoF
-
-  test("selfPairs matches brute force and emits each pair exactly once") {
-    // deterministic scatter incl. a dense knot near (10, 0)
-    val pts = (1L to 60L).map { k =>
-      (k, (k * 37 % 360).toDouble + (k % 7) * 0.01, ((k * 53 % 120) - 60).toDouble * 0.7)
-    }.toDF("id", "ra", "dec")
-    val got = Spatial.selfPairs(pts, "ra", "dec", "id", dthreshDeg = 8.0)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.length == got.toSet.size, "no duplicate pairs without a distinct()")
-    val rows = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val want = (for {
-      (a, ra1, d1) <- rows; (b, ra2, d2) <- rows
-      if a < b && graft.healpix.Healpix.gcDistDeg(ra1, d1, ra2, d2) < 8.0
-    } yield (a, b)).toSet
-    assert(got.toSet == want, s"pixel-pruned pairs must equal brute force " +
-      s"(missing ${want -- got.toSet}, extra ${got.toSet -- want})")
-  }
-
-  test("fofGroups percolates chains: a-b-c linked pairwise-partially is ONE group") {
-    // b within 2.5 of both a and c, but a-c > 2.5: percolation joins all three
-    val pts = Seq((1L, 100.0, 0.0), (2L, 102.0, 0.0), (3L, 104.0, 0.0),
-      (4L, 200.0, 40.0)).toDF("id", "ra", "dec")
-    val g = Spatial.fofGroups(pts, "ra", "dec", "id", dthreshDeg = 2.5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(g == Map(1L -> 1L, 2L -> 1L, 3L -> 1L),
-      s"chain must percolate into one group labeled by its min id; isolated point absent: $g")
-  }
-
-  test("pair joins stay pixel-bucketed equi-joins — never a cartesian/nested-loop product") {
-    val pts = (1L to 200L).map(k => (k, (k * 37 % 360).toDouble, ((k * 53 % 160) - 80).toDouble))
-      .toDF("id", "ra", "dec")
-    for (df <- Seq(
-      Spatial.selfPairsDist(pts, "ra", "dec", "id", 2.5),
-      Spatial.crossPairsDist(pts, pts, "ra", "dec", "id", "ra", "dec", "id", 2.5))) {
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-        s"pair generation must be the pixel equi-join:\n$plan")
-      assert(plan.contains("hpix"), s"join key must be the healpix pixel:\n$plan")
-    }
-  }
-
-  test("crossPairsDist matches brute force between two catalogs (no a<b halving)") {
-    val left = (1L to 25L).map(k => (k, (k * 41 % 360).toDouble, ((k * 29 % 100) - 50).toDouble))
-      .toDF("id", "ra", "dec")
-    val right = (1L to 25L).map(k => (k, (k * 59 % 360).toDouble, ((k * 31 % 100) - 50).toDouble))
-      .toDF("id", "ra", "dec")
-    val got = Spatial.crossPairsDist(left, right, "ra", "dec", "id", "ra", "dec", "id", 10.0)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.length == got.toSet.size, "each ordered cross pair exactly once")
-    val l = left.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val rr = right.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val want = (for {
-      (a, ra1, d1) <- l; (b, ra2, d2) <- rr
-      if graft.healpix.Healpix.gcDistDeg(ra1, d1, ra2, d2) < 10.0
-    } yield (a, b)).toSet
-    assert(got.toSet == want, s"missing ${want -- got.toSet}, extra ${got.toSet -- want}")
-  }
-
-  test("two-point binning: hand-placed pairs land in the expected separation bins") {
-    // pairs at known equatorial separations: 1.0 deg -> bin 0, 2.0 -> bin 1 (edges 0.5+1.5k)
-    val pts = Seq((1L, 100.0, 0.0), (2L, 101.0, 0.0), (3L, 103.0, 0.0)).toDF("id", "ra", "dec")
-    val bins = Spatial.selfPairsDist(pts, "ra", "dec", "id", 8.0)
-      .withColumn("sep9", round(col("_DIST"), 9))
-      .filter(col("sep9") >= 0.5 && col("sep9") < 8.0)
-      .withColumn("bin", floor((col("sep9") - 0.5) / 1.5).cast("long"))
-      .groupBy("bin").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // separations: (1,2)=1.0 bin0, (2,3)=2.0 bin1, (1,3)=3.0 bin1
-    assert(bins == Map(0L -> 1L, 1L -> 2L), s"got $bins")
-  }
-
-  test("hpixCenter expressions match pix2angNest; smoothing conserves mass at full-sky radius") {
-    import graft.functions.sphere
-    val pix = spark.range(0, 192).select(col("id").as("pix"),
-      sphere.hpixCenterRa(col("id"), 2).as("ra"), sphere.hpixCenterDec(col("id"), 2).as("dec"))
-      .collect()
-    pix.foreach { r =>
-      val (era, edec) = graft.healpix.Healpix.pix2angNest(2, r.getLong(0))
-      assert(r.getDouble(1) == era && r.getDouble(2) == edec, s"center mismatch at ${r.getLong(0)}")
-    }
-    // tophat at radius 181 deg sums the WHOLE map into every pixel;
-    // at ~0 radius each pixel keeps only itself
-    import spark.implicits._
-    val hist = Seq((0L, 5L), (100L, 7L), (191L, 11L)).toDF("pix", "cnt")
-      .select(col("pix"), col("cnt"),
-        sphere.hpixCenterRa(col("pix"), 2).as("pra"), sphere.hpixCenterDec(col("pix"), 2).as("pdec"))
-    def smooth(r: Double) = Spatial.crossPairsDist(hist, hist,
-        "pra", "pdec", "pix", "pra", "pdec", "pix", r)
-      .join(hist.select(col("pix").as("id_b"), col("cnt").as("cnt_b")), "id_b")
-      .groupBy("id_a").agg(sum("cnt_b").as("s"))
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    assert(smooth(181.0) == Map(0L -> 23L, 100L -> 23L, 191L -> 23L), "full-sky beam = total mass")
-    assert(smooth(1e-9) == Map(0L -> 5L, 100L -> 7L, 191L -> 11L), "zero beam = identity")
-  }
 
   test("hpix_transients: every emitted row satisfies the exact flag rule; zero-years flaggable") {
     val rows = QueryRegistry.all.toMap.apply("hpix_transients").run(spark, sf("sf0.001")).collect()

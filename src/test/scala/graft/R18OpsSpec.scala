@@ -1,67 +1,9 @@
 package graft
 
-import graft.operators.Spatial
 import org.apache.spark.sql.functions._
 
-/** Round-11 late additions: mutual-nearest cross-match and friends. */
+/** Round-11 late additions: Theil-Sen, pipeline plan shapes, attribution. */
 class R18OpsSpec extends SparkSpecBase {
-
-  test("mutualNearest keeps only reciprocal pairs; one-directional best matches are cut") {
-    import spark.implicits._
-    // Planted on one parallel (dec = 0) so distances are plain RA
-    // gaps. Left points L1, L2; right points R1, R2, R3:
-    //   L1 @ 10.0, L2 @ 20.0 ; R1 @ 10.4, R2 @ 19.0, R3 @ 19.2
-    // L1's nearest right is R1 (0.4°) and R1's nearest left is L1
-    // (0.4° vs 9.6°) -> mutual. L2's nearest right is R3 (0.8° vs
-    // R2's 1.0°), and R3's nearest left is L2 -> mutual. But R2's
-    // nearest left is ALSO L2 (1.0°) — one-directional only, since
-    // L2 prefers R3: R2 must appear in no surviving pair.
-    val left = Seq((1L, 10.0, 0.0), (2L, 20.0, 0.0)).toDF("lid", "ra", "dec")
-    val right = Seq((101L, 10.4, 0.0), (102L, 19.0, 0.0), (103L, 19.2, 0.0))
-      .toDF("rid", "ra", "dec")
-    val m = Spatial.mutualNearest(left, right,
-        leftRa = "ra", leftDec = "dec", leftId = "lid",
-        rightRa = "ra", rightDec = "dec", rightId = "rid", dthreshDeg = 5.0)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(m == Set((1L, 101L), (2L, 103L)))
-  }
-
-  test("mutualNearest: a right point beyond the radius matches nothing") {
-    import spark.implicits._
-    val left = Seq((1L, 10.0, 0.0)).toDF("lid", "ra", "dec")
-    val right = Seq((101L, 40.0, 0.0)).toDF("rid", "ra", "dec")
-    val m = Spatial.mutualNearest(left, right,
-      leftRa = "ra", leftDec = "dec", leftId = "lid",
-      rightRa = "ra", rightDec = "dec", rightId = "rid", dthreshDeg = 5.0)
-    assert(m.count() == 0L)
-  }
-
-  test("mutualNearest result is a subset of the forward k=1 match and carries its distance") {
-    import spark.implicits._
-    val left = (1L to 40L).map(i => (i, (i * 7 % 360).toDouble, ((i * 11 % 120) - 60).toDouble))
-      .toDF("lid", "ra", "dec")
-    val right = (1L to 30L).map(i => (1000 + i, (i * 13 % 360).toDouble, ((i * 5 % 120) - 60).toDouble))
-      .toDF("rid", "ra", "dec")
-    val fwd = Spatial.crossMatchKnn(left, right,
-        leftRa = "ra", leftDec = "dec", leftId = "lid",
-        rightRa = "ra", rightDec = "dec", rightId = "rid",
-        k = 1, dthreshDeg = 20.0, leftPrefix = "", rightPrefix = "r_")
-      .select(col("lid"), col("r_rid").as("rid"), round(col("_DIST"), 9).as("d"))
-      .as[(Long, Long, Double)].collect().toMap2
-    val m = Spatial.mutualNearest(left, right,
-        leftRa = "ra", leftDec = "dec", leftId = "lid",
-        rightRa = "ra", rightDec = "dec", rightId = "rid", dthreshDeg = 20.0)
-      .select(col("lid"), col("rid"), round(col("_DIST"), 9).as("d"))
-      .as[(Long, Long, Double)].collect()
-    assert(m.nonEmpty, "planted grid must produce at least one mutual pair")
-    m.foreach { case (l, r, d) =>
-      assert(fwd.get(l).contains((r, d)), s"($l,$r,$d) not the forward nearest")
-    }
-  }
-
-  private implicit class Tup3Ops(rows: Array[(Long, Long, Double)]) {
-    def toMap2: Map[Long, (Long, Double)] = rows.map { case (a, b, c) => a -> (b, c) }.toMap
-  }
 
   test("theilSen: hand-computed lower median of pairwise slopes") {
     import spark.implicits._

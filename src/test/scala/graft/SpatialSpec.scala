@@ -5,6 +5,7 @@ import graft.operators.Spatial
 import org.apache.spark.sql.functions._
 
 class SpatialSpec extends SparkSpecBase {
+  import spark.implicits._
 
   private def cust = {
     val df = spark.read.parquet(sf("sf0.001") + "/customer.parquet")
@@ -36,11 +37,11 @@ class SpatialSpec extends SparkSpecBase {
       .withColumn("sra", sphere.raOf(col("s_suppkey")))
       .withColumn("sdec", sphere.decOf(col("s_suppkey")))
 
-    for (order <- Seq(0, 1, 2); k <- Seq(1, 3); dthresh <- Seq(10.0, 30.0); shuffleRank <- Seq(true, false)) {
+    // k = 1 takes the ranker's aggregate path, k = 3 its window path
+    for (order <- Seq(0, 1, 2); k <- Seq(1, 3); dthresh <- Seq(10.0, 30.0)) {
       val fast = Spatial.crossMatchKnn(cust, supp,
         "cra", "cdec", "c_custkey", "sra", "sdec", "s_suppkey",
-        k = k, dthreshDeg = dthresh, order = order, leftPrefix = "", rightPrefix = "x_",
-        rankShuffle = shuffleRank)
+        k = k, dthreshDeg = dthresh, order = order, leftPrefix = "", rightPrefix = "x_")
         .select(col("c_custkey"), col("x_s_suppkey"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
 
@@ -82,8 +83,61 @@ class SpatialSpec extends SparkSpecBase {
     assert(a.toSeq == w.toSeq)
   }
 
+  test("mutualNearest keeps only reciprocal pairs; one-directional best matches are cut") {
+    // Planted on one parallel (dec = 0) so distances are plain RA
+    // gaps. Left points L1, L2; right points R1, R2, R3:
+    //   L1 @ 10.0, L2 @ 20.0 ; R1 @ 10.4, R2 @ 19.0, R3 @ 19.2
+    // L1's nearest right is R1 (0.4°) and R1's nearest left is L1
+    // (0.4° vs 9.6°) -> mutual. L2's nearest right is R3 (0.8° vs
+    // R2's 1.0°), and R3's nearest left is L2 -> mutual. But R2's
+    // nearest left is ALSO L2 (1.0°) — one-directional only, since
+    // L2 prefers R3: R2 must appear in no surviving pair.
+    val left = Seq((1L, 10.0, 0.0), (2L, 20.0, 0.0)).toDF("lid", "ra", "dec")
+    val right = Seq((101L, 10.4, 0.0), (102L, 19.0, 0.0), (103L, 19.2, 0.0))
+      .toDF("rid", "ra", "dec")
+    val m = Spatial.mutualNearest(left, right,
+        leftRa = "ra", leftDec = "dec", leftId = "lid",
+        rightRa = "ra", rightDec = "dec", rightId = "rid", dthreshDeg = 5.0)
+      .select("lid", "rid").as[(Long, Long)].collect().toSet
+    assert(m == Set((1L, 101L), (2L, 103L)))
+  }
+
+  test("mutualNearest: a right point beyond the radius matches nothing") {
+    val left = Seq((1L, 10.0, 0.0)).toDF("lid", "ra", "dec")
+    val right = Seq((101L, 40.0, 0.0)).toDF("rid", "ra", "dec")
+    val m = Spatial.mutualNearest(left, right,
+      leftRa = "ra", leftDec = "dec", leftId = "lid",
+      rightRa = "ra", rightDec = "dec", rightId = "rid", dthreshDeg = 5.0)
+    assert(m.count() == 0L)
+  }
+
+  test("mutualNearest result is a subset of the forward k=1 match and carries its distance") {
+    val left = (1L to 40L).map(i => (i, (i * 7 % 360).toDouble, ((i * 11 % 120) - 60).toDouble))
+      .toDF("lid", "ra", "dec")
+    val right = (1L to 30L).map(i => (1000 + i, (i * 13 % 360).toDouble, ((i * 5 % 120) - 60).toDouble))
+      .toDF("rid", "ra", "dec")
+    val fwd = Spatial.crossMatchKnn(left, right,
+        leftRa = "ra", leftDec = "dec", leftId = "lid",
+        rightRa = "ra", rightDec = "dec", rightId = "rid",
+        k = 1, dthreshDeg = 20.0, leftPrefix = "", rightPrefix = "r_")
+      .select(col("lid"), col("r_rid").as("rid"), round(col("_DIST"), 9).as("d"))
+      .as[(Long, Long, Double)].collect().toMap2
+    val m = Spatial.mutualNearest(left, right,
+        leftRa = "ra", leftDec = "dec", leftId = "lid",
+        rightRa = "ra", rightDec = "dec", rightId = "rid", dthreshDeg = 20.0)
+      .select(col("lid"), col("rid"), round(col("_DIST"), 9).as("d"))
+      .as[(Long, Long, Double)].collect()
+    assert(m.nonEmpty, "planted grid must produce at least one mutual pair")
+    m.foreach { case (l, r, d) =>
+      assert(fwd.get(l).contains((r, d)), s"($l,$r,$d) not the forward nearest")
+    }
+  }
+
+  private implicit class Tup3Ops(rows: Array[(Long, Long, Double)]) {
+    def toMap2: Map[Long, (Long, Double)] = rows.map { case (a, b, c) => a -> (b, c) }.toMap
+  }
+
   test("box search honors the ra wrap; polygon search contains/excludes known points") {
-    import spark.implicits._
     val pts = Seq(
       (1L, 355.0, 0.0), (2L, 10.0, 0.0), (3L, 180.0, 0.0), // box: 1,2 in (wrap), 3 out
       (4L, 180.0, -20.0), (5L, 180.0, 33.0), (6L, 100.0, 0.0) // triangle: 3,4,5 in, 6 out
@@ -122,6 +176,120 @@ class SpatialSpec extends SparkSpecBase {
     assert(run(1) == run(4))
   }
 
+  test("propagateEpoch: known motion gives the expected offset; -dt round-trips") {
+    // 1000 mas/yr for 36 years = 36 arcsec = 0.01 deg, at the equator
+    val src = Seq((1L, 100.0, 0.0, 1000.0, -1000.0)).toDF("id", "ra", "dec", "pmra", "pmdec")
+    val p = Spatial.propagateEpoch(src, "ra", "dec", "pmra", "pmdec", 36.0).collect()(0)
+    assert(math.abs(p.getDouble(1) - 100.01) < 1e-9, s"ra: ${p.getDouble(1)}")
+    assert(math.abs(p.getDouble(2) - (-0.01)) < 1e-9, s"dec: ${p.getDouble(2)}")
+    // at dec=60 the same mu_alpha* moves ra by 0.01/cos(60) = 0.02 deg
+    val hi = Seq((2L, 100.0, 60.0, 1000.0, 0.0)).toDF("id", "ra", "dec", "pmra", "pmdec")
+    val q = Spatial.propagateEpoch(hi, "ra", "dec", "pmra", "pmdec", 36.0).collect()(0)
+    assert(math.abs(q.getDouble(1) - (100.0 + 0.01 / math.cos(math.toRadians(60)))) < 1e-9)
+    // inverse propagation restores the original position to flat-sky accuracy
+    val back = Spatial.propagateEpoch(
+      Spatial.propagateEpoch(src, "ra", "dec", "pmra", "pmdec", 36.0),
+      "ra", "dec", "pmra", "pmdec", -36.0).collect()(0)
+    assert(math.abs(back.getDouble(1) - 100.0) < 1e-7 && math.abs(back.getDouble(2) - 0.0) < 1e-12)
+    // map-only: no exchange of any kind in the propagation itself
+    val plan = Spatial.propagateEpoch(src, "ra", "dec", "pmra", "pmdec", 36.0)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"epoch propagation must not shuffle:\n$plan")
+  }
+
+  // ------------------------------------------- pair joins and FoF
+
+  test("selfPairs matches brute force and emits each pair exactly once") {
+    // deterministic scatter incl. a dense knot near (10, 0)
+    val pts = (1L to 60L).map { k =>
+      (k, (k * 37 % 360).toDouble + (k % 7) * 0.01, ((k * 53 % 120) - 60).toDouble * 0.7)
+    }.toDF("id", "ra", "dec")
+    val got = Spatial.selfPairs(pts, "ra", "dec", "id", dthreshDeg = 8.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length == got.toSet.size, "no duplicate pairs without a distinct()")
+    val rows = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    val want = (for {
+      (a, ra1, d1) <- rows; (b, ra2, d2) <- rows
+      if a < b && graft.healpix.Healpix.gcDistDeg(ra1, d1, ra2, d2) < 8.0
+    } yield (a, b)).toSet
+    assert(got.toSet == want, s"pixel-pruned pairs must equal brute force " +
+      s"(missing ${want -- got.toSet}, extra ${got.toSet -- want})")
+  }
+
+  test("fofGroups percolates chains: a-b-c linked pairwise-partially is ONE group") {
+    // b within 2.5 of both a and c, but a-c > 2.5: percolation joins all three
+    val pts = Seq((1L, 100.0, 0.0), (2L, 102.0, 0.0), (3L, 104.0, 0.0),
+      (4L, 200.0, 40.0)).toDF("id", "ra", "dec")
+    val g = Spatial.fofGroups(pts, "ra", "dec", "id", dthreshDeg = 2.5)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(g == Map(1L -> 1L, 2L -> 1L, 3L -> 1L),
+      s"chain must percolate into one group labeled by its min id; isolated point absent: $g")
+  }
+
+  test("pair joins stay pixel-bucketed equi-joins — never a cartesian/nested-loop product") {
+    val pts = (1L to 200L).map(k => (k, (k * 37 % 360).toDouble, ((k * 53 % 160) - 80).toDouble))
+      .toDF("id", "ra", "dec")
+    for (df <- Seq(
+      Spatial.selfPairsDist(pts, "ra", "dec", "id", 2.5),
+      Spatial.crossPairsDist(pts, pts, "ra", "dec", "id", "ra", "dec", "id", 2.5))) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+        s"pair generation must be the pixel equi-join:\n$plan")
+      assert(plan.contains("hpix"), s"join key must be the healpix pixel:\n$plan")
+    }
+  }
+
+  test("crossPairsDist matches brute force between two catalogs (no a<b halving)") {
+    val left = (1L to 25L).map(k => (k, (k * 41 % 360).toDouble, ((k * 29 % 100) - 50).toDouble))
+      .toDF("id", "ra", "dec")
+    val right = (1L to 25L).map(k => (k, (k * 59 % 360).toDouble, ((k * 31 % 100) - 50).toDouble))
+      .toDF("id", "ra", "dec")
+    val got = Spatial.crossPairsDist(left, right, "ra", "dec", "id", "ra", "dec", "id", 10.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length == got.toSet.size, "each ordered cross pair exactly once")
+    val l = left.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    val rr = right.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    val want = (for {
+      (a, ra1, d1) <- l; (b, ra2, d2) <- rr
+      if graft.healpix.Healpix.gcDistDeg(ra1, d1, ra2, d2) < 10.0
+    } yield (a, b)).toSet
+    assert(got.toSet == want, s"missing ${want -- got.toSet}, extra ${got.toSet -- want}")
+  }
+
+  test("two-point binning: hand-placed pairs land in the expected separation bins") {
+    // pairs at known equatorial separations: 1.0 deg -> bin 0, 2.0 -> bin 1 (edges 0.5+1.5k)
+    val pts = Seq((1L, 100.0, 0.0), (2L, 101.0, 0.0), (3L, 103.0, 0.0)).toDF("id", "ra", "dec")
+    val bins = Spatial.selfPairsDist(pts, "ra", "dec", "id", 8.0)
+      .withColumn("sep9", round(col("_DIST"), 9))
+      .filter(col("sep9") >= 0.5 && col("sep9") < 8.0)
+      .withColumn("bin", floor((col("sep9") - 0.5) / 1.5).cast("long"))
+      .groupBy("bin").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // separations: (1,2)=1.0 bin0, (2,3)=2.0 bin1, (1,3)=3.0 bin1
+    assert(bins == Map(0L -> 1L, 1L -> 2L), s"got $bins")
+  }
+
+  test("hpixCenter expressions match pix2angNest; smoothing conserves mass at full-sky radius") {
+    val pix = spark.range(0, 192).select(col("id").as("pix"),
+      sphere.hpixCenterRa(col("id"), 2).as("ra"), sphere.hpixCenterDec(col("id"), 2).as("dec"))
+      .collect()
+    pix.foreach { r =>
+      val (era, edec) = graft.healpix.Healpix.pix2angNest(2, r.getLong(0))
+      assert(r.getDouble(1) == era && r.getDouble(2) == edec, s"center mismatch at ${r.getLong(0)}")
+    }
+    // tophat at radius 181 deg sums the WHOLE map into every pixel;
+    // at ~0 radius each pixel keeps only itself
+    val hist = Seq((0L, 5L), (100L, 7L), (191L, 11L)).toDF("pix", "cnt")
+      .select(col("pix"), col("cnt"),
+        sphere.hpixCenterRa(col("pix"), 2).as("pra"), sphere.hpixCenterDec(col("pix"), 2).as("pdec"))
+    def smooth(r: Double) = Spatial.crossPairsDist(hist, hist,
+        "pra", "pdec", "pix", "pra", "pdec", "pix", r)
+      .join(hist.select(col("pix").as("id_b"), col("cnt").as("cnt_b")), "id_b")
+      .groupBy("id_a").agg(sum("cnt_b").as("s"))
+      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    assert(smooth(181.0) == Map(0L -> 23L, 100L -> 23L, 191L -> 23L), "full-sky beam = total mass")
+    assert(smooth(1e-9) == Map(0L -> 5L, 100L -> 7L, 191L -> 11L), "zero beam = identity")
+  }
+
   test("spatialIndex: high bits hold the order-20 pixel, ranks dense per pixel") {
     val idx = Spatial.spatialIndex(cust, "cra", "cdec", 20)
       .select(col("cra"), col("cdec"), col("_ID")).collect()
@@ -138,7 +306,6 @@ class SpatialSpec extends SparkSpecBase {
   }
 
   test("mocNormalize: exact coverage round-trip, minimality, canonical NUNIQ") {
-    import spark.implicits._
     // pixels 0..3 (a complete quad -> merges to parent 0@o2 -> its
     // siblings incomplete), a lone pixel, and a 16-run (two complete
     // quads + their complete parent quad? no: 16..31 = parents 4..7 =
@@ -175,7 +342,6 @@ class SpatialSpec extends SparkSpecBase {
     df.select("norder", "npix").collect().map(r => (r.getInt(0), r.getLong(1)))
 
   private def mocOf(pixels: Seq[Long], order: Int): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
     Spatial.mocNormalize(pixels.toDF("p"), "p", order)
   }
 
@@ -229,7 +395,6 @@ class SpatialSpec extends SparkSpecBase {
   }
 
   test("MOC local vs distributed path parity (normalize + all set ops)") {
-    import spark.implicits._
     // merge-rich pseudo-random but deterministic footprints at order 4
     val aPix = (0L until graft.healpix.Healpix.npix(4)).filter(p => p % 3 != 0 || p < 40)
     val bPix = (0L until graft.healpix.Healpix.npix(4)).filter(p => p % 5 < 2 && p > 20)
