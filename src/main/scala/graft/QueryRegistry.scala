@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.sphere
-import graft.operators.Spatial
+import graft.operators.{DriverLocal, Spatial}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -966,12 +966,13 @@ object QueryRegistry {
    * centroid numerators — mergeable and engine-exact where a mean
    * would not be). Oracle replays the pairs brute-force and the
    * closure as a recursive CTE — a structurally different derivation
-   * that must hash-match.
+   * that must hash-match. `localMaxEdges` is the closure's cutover
+   * ([[Spatial.fofGroups]]); q_fof takes the default, q_fof_dist 0.
    */
-  private val q_fof = QueryDef(
+  private def fof(localMaxEdges: Long) = QueryDef(
     (s, dir) => {
       val sup = withSky(t(s, dir, "supplier"), "s_suppkey")
-      Spatial.fofGroups(sup, "cra", "cdec", "s_suppkey", dthreshDeg = 2.5)
+      Spatial.fofGroups(sup, "cra", "cdec", "s_suppkey", dthreshDeg = 2.5, localMaxEdges)
         .groupBy("group_id")
         .agg(count(lit(1)).as("n_members"),
           sum(col("s_suppkey") * 137 % 36000).as("sum_cra_e2"),
@@ -996,6 +997,7 @@ object QueryRegistry {
         CAST(sum(id * 211 % 16000 - 8000) AS BIGINT) AS sum_cdec_e2
       FROM lab GROUP BY comp ORDER BY group_id"""
     })
+  private val q_fof = fof(DriverLocal.maxEdges)
 
   /**
    * Angular two-point correlation function, Landy & Szalay 1993
@@ -2857,18 +2859,9 @@ object QueryRegistry {
   /** Distributed-path WITNESS for the connected-components star
    *  rounds (the machinery behind 10 CC-consumer queries, all of
    *  which run the bounded driver union-find at bench SFs): q_fof's
-   *  exact computation and oracle with the local path disabled
-   *  (`spark.graft.cc.localMaxEdges = 0`). The key is set on a child
-   *  session (shared SparkContext and CacheManager, own conf), so the
-   *  caller's session conf is never touched and the pin also holds
-   *  for the returned frame's later actions. */
-  private val q_fof_dist = QueryDef(
-    (s, dir) => {
-      val pinned = s.newSession()
-      pinned.conf.set("spark.graft.cc.localMaxEdges", "0")
-      q_fof.run(pinned, dir)
-    },
-    q_fof.oracle)
+   *  exact computation and oracle with the closure's cutover at 0,
+   *  on the caller's session. */
+  private val q_fof_dist = fof(localMaxEdges = 0)
 
   /** Exact triangle counting over the supplier co-supply kNN graph:
    *  the bipartite (part, supplier) projection is sparsified to each

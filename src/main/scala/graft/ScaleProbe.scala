@@ -9,7 +9,11 @@ import org.apache.spark.sql.functions._
  * near-dup threshold — and the output stays bounded while candidate
  * volume scales realistically), then times the corpus-scale paths.
  * Evidence for SURVEY §4/§6 that the shapes hold beyond bench size;
- * not part of the driver contract.
+ * not part of the Bench or Verify sweep. The probe exists to exercise the
+ * distributed graph rounds (diameter, plan-size and stats stress), so
+ * every graph call passes `localMaxEdges = 0`: the driver-side
+ * replays would otherwise absorb its sub-1M graphs and time the
+ * wrong path.
  *
  * Run: SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=<sf0.1 dir> sbt "runMain graft.ScaleProbe"
  */
@@ -19,11 +23,6 @@ object ScaleProbe {
     val replicas = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPLICAS", "32").toInt
     val cpus = GraftSession.defaultCores
     val spark = GraftSession(cpus)
-    // the probe EXISTS to exercise the distributed graph rounds
-    // (diameter/plan-size/stats stress); the driver-side small-graph
-    // degenerates would otherwise absorb the sub-1M probes and
-    // measure the wrong path
-    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
 
     // optional comma-separated section filter for targeted iteration
     // (docs, sketch, graph, temporal, embeddings, ann, multimodal,
@@ -273,7 +272,7 @@ object ScaleProbe {
         (col("c.id") * 1000L + col("s.id") + 1).as("id_b"))
     time("connectedComponents (100k pair + 200x50 chain edges)", "graph")(
       graft.operators.Graph.connectedComponents(
-        pairEdges.unionByName(chainEdges), "id_a", "id_b", maxIter = 60).count())
+        pairEdges.unionByName(chainEdges), "id_a", "id_b", maxIter = 60, localMaxEdges = 0).count())
     // diameter stress: 200 chains x 5000 hops (1M nodes). Min-label
     // propagation needs one round PER HOP (5000 full-edge shuffles —
     // would just throw at any sane maxIter); star contraction closes
@@ -282,7 +281,8 @@ object ScaleProbe {
       .select((col("c.id") * 10000L + col("s.id")).as("id_a"),
         (col("c.id") * 10000L + col("s.id") + 1).as("id_b"))
     time("connectedComponents (200 chains x 5000 hops, diameter 5000)", "graph")(
-      graft.operators.Graph.connectedComponents(deepChains, "id_a", "id_b", maxIter = 60).count())
+      graft.operators.Graph.connectedComponents(deepChains, "id_a", "id_b", maxIter = 60,
+        localMaxEdges = 0).count())
     // triangle counting at 1M edges: circulant graph (i -> i+1, i+2)
     // has exactly n triangles; compact-forward must get the exact
     // count with degeneracy-bounded wedge fan-out (degree 4 here)
@@ -298,14 +298,16 @@ object ScaleProbe {
     }
     time("bfsHops (200 chains x 5000 hops, 20 frontier rounds)", "graph")(
       graft.operators.Graph.bfsHops(deepChains, "id_a", "id_b",
-        spark.range(200).select((col("id") * 10000L).as("s")), "s", maxHops = 20).count())
+        spark.range(200).select((col("id") * 10000L).as("s")), "s", maxHops = 20,
+        localMaxEdges = 0).count())
     // weighted SSSP over the same 1M-node chains, weights 1..7 from
     // node arithmetic: 30 relaxation rounds from 200 seeds — frontier
     // stays 200 nodes/round (chain tips), distances exact integers
     time("sssp (200 chains x 5000 hops, weighted, 30 rounds)", "graph")(
       graft.operators.Graph.sssp(
         deepChains.withColumn("w", col("id_a") % 7 + 1), "id_a", "id_b", "w",
-        spark.range(200).select((col("id") * 10000L).as("s")), "s", maxRounds = 30).count())
+        spark.range(200).select((col("id") * 10000L).as("s")), "s", maxRounds = 30,
+        localMaxEdges = 0).count())
     // ancestor closure by pointer doubling: a 1M-node ternary tree is
     // ~13 deep -> ceil(log2(13)) = 4 doubling rounds and ~12M closure
     // pairs (the output IS Sum(depth) — the caller's data model
@@ -322,7 +324,7 @@ object ScaleProbe {
     time("labelPropagation (1000 chains x 1000 nodes, 4 rounds)", "graph") {
       val chainE = spark.range(1000000L).filter(col("id") % 1000 =!= 999)
         .select(col("id").as("a"), (col("id") + 1).as("b"))
-      val lp = graft.operators.Graph.labelPropagation(chainE, "a", "b", rounds = 4)
+      val lp = graft.operators.Graph.labelPropagation(chainE, "a", "b", rounds = 4, localMaxEdges = 0)
       val nNodes = lp.count()
       require(nNodes == 1000000L, s"every chain node must be labeled: $nNodes")
       val crossers = lp.filter(expr("community div 1000") =!= expr("node div 1000")).count()
@@ -619,7 +621,7 @@ object ScaleProbe {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       time("selfPairsDist (1M points, 0.05 deg linking)", "spatial")(links.count())
       time("fof components over the linking pairs", "spatial")(
-        graft.operators.Graph.connectedComponents(links, "id_a", "id_b").count())
+        graft.operators.Graph.connectedComponents(links, "id_a", "id_b", localMaxEdges = 0).count())
       links.unpersist()
       val rand = skyCat(149, 223)
       time("two-point DD+DR binned counts (1M x 1M, <= 0.5 deg)", "spatial") {

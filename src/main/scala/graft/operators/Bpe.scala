@@ -56,25 +56,6 @@ object Bpe {
     out.toArray
   }
 
-  /** Distinct-word ceiling for the driver-side merge-loop replay
-   *  (the connectedComponents/labelPropagation degenerate precedent):
-   *  below it the per-merge (pair-count aggregate + argmax collect +
-   *  re-encode materialization) job pairs are replayed locally over
-   *  the collected word table in exact integer arithmetic with the
-   *  identical UTF-8-binary tie order. Heap-derived (a quarter of
-   *  maxMemory at ~200 B/word all-in), capped at 1M distinct words;
-   *  web-scale vocabularies (10^6-10^7) keep the distributed loop.
-   *  Override via `spark.graft.bpe.localMaxWords` (0 disables). */
-  def bpeLocalMaxWords(spark: org.apache.spark.sql.SparkSession): Long = {
-    spark.conf.getOption("spark.graft.bpe.localMaxWords").map { v =>
-      try v.trim.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.bpe.localMaxWords must be an integer word count (0 disables " +
-            s"the driver-side merge loop): got '$v'")
-      }
-    }.getOrElse(math.min(1000000L, Runtime.getRuntime.maxMemory() / 4 / 200))
-  }
-
   /** Unsigned UTF-8 byte order — the order Spark's UTF8String binary
    *  comparison (and DuckDB's binary collation) sorts strings in; the
    *  driver replay must break frequency ties in exactly this order,
@@ -94,15 +75,17 @@ object Bpe {
 
   /**
    * Train `nMerges` byte-pair merges over the text column. One
-   * corpus pass builds the word-frequency table; vocabularies under
-   * [[bpeLocalMaxWords]] then replay the merge loop on the driver
-   * (bit-identical: exact integer pair counts, UTF-8-binary tie
-   * order), while larger ones run each iteration as one aggregation
-   * over the distinct-word table (pair counts, map-side combined)
-   * plus a bounded argmax collect. Stops early if no pair remains.
+   * corpus pass builds the word-frequency table; vocabularies of at
+   * most `localMaxWords` distinct words then replay the merge loop on
+   * the driver (bit-identical: exact integer pair counts, UTF-8-binary
+   * tie order), while larger ones run each iteration as one
+   * aggregation over the distinct-word table (pair counts, map-side
+   * combined) plus a bounded argmax collect. The default is
+   * [[DriverLocal.maxWords]]; 0 forces the distributed loop. Stops
+   * early if no pair remains.
    */
   def train(docs: DataFrame, textCol: String, nMerges: Int,
-            maxWordLen: Int = 64): Seq[Merge] = {
+            maxWordLen: Int = 64, localMaxWords: Long = DriverLocal.maxWords): Seq[Merge] = {
     require(nMerges >= 1, s"nMerges must be >= 1: $nMerges")
     require(maxWordLen >= 2, s"maxWordLen must be >= 2: $maxWordLen")
     val spark = docs.sparkSession
@@ -115,7 +98,7 @@ object Bpe {
       .map { case (w, f) => (w.map(_.toString).toArray, f) }
     var words = words0.persist(StorageLevel.MEMORY_AND_DISK)
     val nWords = words.count()
-    if (nWords <= bpeLocalMaxWords(spark)) {
+    if (localMaxWords > 0 && nWords <= localMaxWords) {
       val local = words.collect()
       words.unpersist(blocking = false)
       return trainLocal(local, nMerges)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import scala.jdk.CollectionConverters._
+
 /**
  * Distributed graph operators for training-data pipelines — the stage
  * AFTER near-duplicate pair generation: pairs are edges, duplicate
@@ -38,56 +40,16 @@ object Graph {
    *
    * Returns (id, comp) for every node incident to an edge
    * (self-loop-only nodes label themselves).
+   *
+   * Canonical edge sets of at most `localMaxEdges` edges skip the
+   * rounds: a driver-side union-find gives the same labels (its
+   * min-id root per component IS the star fixed point). The default
+   * is [[DriverLocal.maxEdges]]; 0 forces the star rounds.
    */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 30): DataFrame =
-    connectedComponentsWithCache(pairs, aCol, bCol, maxIter)._1
-
-  /** Edge-count ceiling for the driver-side graph degenerates
-   *  (connected components, labelPropagation, louvainMerge, bfsHops,
-   *  sssp — all exact-integer replays of their distributed rounds).
-   *
-   *  Sizing mirrors [[Spatial.MocLocalMaxTiles]]: the transient cost
-   *  is boxed collected `Row`s plus the label array (~100 B/edge
-   *  all-in), so the ceiling is heap-derived (a quarter of
-   *  `Runtime.maxMemory` at 100 B/edge) and capped at 1M edges —
-   *  big enough that every bench-scale duplicate graph runs local,
-   *  small enough that the broadcast back (≤ 2M slim label rows)
-   *  stays executor-safe. Corpus-scale duplicate graphs keep the
-   *  distributed star rounds. Override via
-   *  `spark.graft.cc.localMaxEdges` (0 disables the local path). */
-  def ccLocalMaxEdges(spark: org.apache.spark.sql.SparkSession): Long = {
-    spark.conf.getOption("spark.graft.cc.localMaxEdges").map { v =>
-      try v.trim.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.cc.localMaxEdges must be an integer edge count (0 disables " +
-            s"the driver-side union-find path): got '$v'")
-      }
-    }.getOrElse {
-      val byHeap = Runtime.getRuntime.maxMemory() / 4 / 100
-      if (byHeap < 1000000L && !loggedCcHeapCeiling.getAndSet(true))
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"connected-components local-vs-distributed cutover is HEAP-derived on this " +
-            s"driver: $byHeap edges (maxMemory/4/100B) < the 1M cap — pin " +
-            s"spark.graft.cc.localMaxEdges for plan stability across drivers")
-      math.min(1000000L, byHeap)
-    }
-  }
-
-  /** One-shot latch for the heap-derived-ceiling log line above. */
-  private val loggedCcHeapCeiling = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** Bounded local-materialization probe for the driver-side graph
-   *  degenerates: collects at most cap+1 rows and returns None when
-   *  the frame exceeds cap. limit() short-circuits, so an over-cap
-   *  (corpus-scale) graph pays a bounded partial scan — not a full
-   *  count — before taking the distributed path. */
-  private def collectIfBounded(df: DataFrame, cap: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (cap <= 0) return None
-    val lim = math.min(cap + 1, Int.MaxValue.toLong - 1).toInt
-    val rows = df.limit(lim).collect()
-    if (rows.length > cap) None else Some(rows)
-  }
+                          maxIter: Int = 30,
+                          localMaxEdges: Long = DriverLocal.maxEdges): DataFrame =
+    connectedComponentsWithCache(pairs, aCol, bCol, maxIter, localMaxEdges)._1
 
   /** Per-iteration lineage truncation. `labels` feeds the next
    *  iteration TWICE (message join + self union), so without
@@ -133,9 +95,11 @@ object Graph {
    *  result cannot be recomputed. Throws IllegalStateException if the
    *  propagation has not converged within `maxIter` rounds (component
    *  diameter exceeds the bound) — silently returning partial labels
-   *  would corrupt downstream dedup. */
+   *  would corrupt downstream dedup — after freeing its own blocks. */
   def connectedComponentsWithCache(pairs: DataFrame, aCol: String, bCol: String,
-                                   maxIter: Int = 30): (DataFrame, () => Unit) = {
+                                   maxIter: Int = 30,
+                                   localMaxEdges: Long = DriverLocal.maxEdges)
+      : (DataFrame, () => Unit) = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     // non-numeric ids would cast to null, never equi-join, and return
     // every node as its own singleton component with no error
@@ -198,7 +162,7 @@ object Graph {
     // nodes (counted) and the canonical edge checkpoint are both
     // materialized — the pair checkpoint has served its two readers
     backingRdd(pr).foreach(free(pr))
-    // Scale-adaptive LOCAL degenerate (the MocLocalMaxTiles /
+    // Scale-adaptive LOCAL degenerate (the MOC localMax /
     // overlapJoin-broadcast precedent): the canonical edge count is
     // already known FOR FREE from the observed phi on the initial
     // truncate, and below the bounded ceiling a driver-side
@@ -210,7 +174,7 @@ object Graph {
     // min-id-per-component IS the star fixed point. Corpus-sized
     // edge sets (over the ceiling) keep the distributed rounds
     // unchanged.
-    if (phiPrev._1 <= ccLocalMaxEdges(pairs.sparkSession)) {
+    if (localMaxEdges > 0 && phiPrev._1 <= localMaxEdges) {
       val collected = edges.select(col("hi"), col("lo")).collect()
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x0: Long): Long = {
@@ -228,22 +192,12 @@ object Graph {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       // attach-smaller-root union keeps every root the minimum of the
-      // roots merged into it, so find(x) IS min id of x's component
-      val labels = new Array[org.apache.spark.sql.Row](collected.length * 2)
-      var i = 0
-      collected.foreach { r =>
-        labels(i) = org.apache.spark.sql.Row(r.getLong(0), find(r.getLong(0)))
-        labels(i + 1) = org.apache.spark.sql.Row(r.getLong(1), find(r.getLong(1)))
-        i += 2
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("comp", org.apache.spark.sql.types.LongType, nullable = false)))
-      val spark = pairs.sparkSession
+      // roots merged into it, so find(x) IS min id of x's component;
       // a node appears once per incident edge — dedupe before the
       // join or labels would multiply the node rows
-      import scala.jdk.CollectionConverters._
-      val labelsDf = spark.createDataFrame(labels.distinct.toSeq.asJava, schema)
+      val labels = collected.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
+        .distinct.map(n => (n, find(n))).toSeq
+      val labelsDf = DriverLocal.frame(pairs.sparkSession, labels, "id", "comp")
       val out = truncate(
         nodes.join(broadcast(labelsDf), Seq("id"), "left")
           .select(col("id"), coalesce(col("comp"), col("id")).as("comp")))
@@ -284,11 +238,14 @@ object Graph {
       edges = afterSmall
       it += 1
     }
-    if (!converged)
+    if (!converged) {
+      backingRdd(edges).foreach(free(edges))
+      nodes.unpersist(blocking = false)
       throw new IllegalStateException(
         s"connectedComponents did not converge within maxIter=$maxIter star rounds — " +
           "this bound is O(log n), not diameter; raise maxIter only for astronomically " +
           "deep graphs (2^30 ids need ~30 rounds)")
+    }
     // at the fixed point the edge set is a star per component rooted
     // at its min id: edges ARE the labels for non-min nodes, roots
     // and self-loop-only nodes label themselves
@@ -434,7 +391,7 @@ object Graph {
     val slim = pairs.select(col(uCol).cast("long").as("u"),
       col(vCol).cast("long").as("v"), col(wCol).cast("long").as("w"))
     // (A driver-side bounded degenerate was tried here — collect the
-    // pair table under the ccLocalMaxEdges ceiling and replay the
+    // pair table under the DriverLocal.maxEdges ceiling and replay the
     // deterministic top-k locally — and REJECTED by measurement: the
     // pair table is k-unbounded (499,500 rows at sf0.1), so the
     // boxed-row collect cost exactly what the window + distinct
@@ -521,9 +478,13 @@ object Graph {
    *  truncation the logical plan doubles per round — exponential
    *  analysis cost (OOMs around 20 rounds) long before any data
    *  moves. Rounds end early when a frontier empties. Returns
-   *  (node, hop) for reached nodes only. */
+   *  (node, hop) for reached nodes only. Edge sets of at most
+   *  `localMaxEdges` rows run the same frontier rounds on the driver
+   *  (default [[DriverLocal.maxEdges]]; 0 forces the distributed
+   *  rounds). */
   def bfsHops(edges0: DataFrame, aCol: String, bCol: String,
-              seeds: DataFrame, seedCol: String, maxHops: Int = 6): DataFrame = {
+              seeds: DataFrame, seedCol: String, maxHops: Int = 6,
+              localMaxEdges: Long = DriverLocal.maxEdges): DataFrame = {
     require(maxHops >= 1 && maxHops <= 64,
       s"bfsHops: maxHops must be in [1,64], got $maxHops")
     val lvl = StorageLevel.MEMORY_AND_DISK
@@ -535,7 +496,7 @@ object Graph {
     // checkpoint + isEmpty) jobs when the edge set is bounded; the
     // frontier discipline is identical, so (node, hop) match
     // bit-for-bit. Seeds are bounded by the node set once edges are.
-    collectIfBounded(e, ccLocalMaxEdges(edges0.sparkSession)) match {
+    DriverLocal.collectIfBounded(e, localMaxEdges) match {
       case Some(rows) =>
         val seedRows = seeds.select(col(seedCol).cast("long").as("node"))
           .filter(col("node").isNotNull).distinct().collect()
@@ -558,16 +519,7 @@ object Graph {
           frontier = next
           h += 1
         }
-        val out = new Array[org.apache.spark.sql.Row](dist.size)
-        var i = 0
-        dist.forEach { (n, d) => out(i) = org.apache.spark.sql.Row(n, d); i += 1 }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("hop",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        import scala.jdk.CollectionConverters._
-        return edges0.sparkSession.createDataFrame(out.toSeq.asJava, schema)
+        return DriverLocal.frame(edges0.sparkSession, dist.asScala.toSeq, "node", "hop")
       case None => ()
     }
     val dirE = e.select(col("a").as("n"), col("b").as("nb"))
@@ -630,10 +582,14 @@ object Graph {
    * frame joined against the pre-partitioned edge list, then a
    * map-side-combinable count + a single struct-min aggregate (max
    * count, min label — no window, no per-node sort); per-round
-   * lineage truncation keeps the plan flat ([[truncate]]).
+   * lineage truncation keeps the plan flat ([[truncate]]). Edge sets
+   * of at most `localMaxEdges` rows replay the rounds on the driver
+   * (default [[DriverLocal.maxEdges]]; 0 forces the distributed
+   * rounds).
    */
   def labelPropagation(edges0: DataFrame, aCol: String, bCol: String,
-                       rounds: Int = 4): DataFrame = {
+                       rounds: Int = 4,
+                       localMaxEdges: Long = DriverLocal.maxEdges): DataFrame = {
     require(rounds >= 1 && rounds <= 64,
       s"labelPropagation: rounds must be in [1,64], got $rounds")
     val lvl = StorageLevel.MEMORY_AND_DISK
@@ -647,7 +603,7 @@ object Graph {
     // checkpoint) jobs whose constants dwarf small graphs. Over-cap
     // graphs pay only the short-circuited limit probe and keep the
     // distributed rounds.
-    collectIfBounded(e, ccLocalMaxEdges(edges0.sparkSession)) match {
+    DriverLocal.collectIfBounded(e, localMaxEdges) match {
       case Some(rows) =>
         // distinct symmetric adjacency (the dirE contract)
         val nbrs = new java.util.HashMap[Long, java.util.TreeSet[java.lang.Long]]()
@@ -672,16 +628,7 @@ object Graph {
           }
           lab = next
         }
-        val out = new Array[org.apache.spark.sql.Row](lab.size)
-        var i = 0
-        lab.forEach { (n, l) => out(i) = org.apache.spark.sql.Row(n, l); i += 1 }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("community",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        import scala.jdk.CollectionConverters._
-        return edges0.sparkSession.createDataFrame(out.toSeq.asJava, schema)
+        return DriverLocal.frame(edges0.sparkSession, lab.asScala.toSeq, "node", "community")
       case None => ()
     }
     val dirE = e.select(col("a").as("n"), col("b").as("nb"))
@@ -776,11 +723,15 @@ object Graph {
    * window; labels pin per round (truncate + explicit free), early
    * exit when no positive mutual merge remains. `edges` must be
    * distinct undirected pairs ([[triangleCounts]] contract); labels
-   * must cover every endpoint.
+   * must cover every endpoint. Edge sets of at most `localMaxEdges`
+   * rows (with at most 2 * localMaxEdges + 1 labels) replay the rounds
+   * on the driver (default [[DriverLocal.maxEdges]]; 0 forces the
+   * distributed rounds).
    */
   def louvainMerge(edges0: DataFrame, aCol: String, bCol: String,
                    labels0: DataFrame, nodeCol: String = "node",
-                   commCol: String = "community", rounds: Int = 2): DataFrame = {
+                   commCol: String = "community", rounds: Int = 2,
+                   localMaxEdges: Long = DriverLocal.maxEdges): DataFrame = {
     require(rounds >= 1 && rounds <= 64, s"louvainMerge: rounds must be in [1,64], got $rounds")
     val e = edges0
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
@@ -790,11 +741,11 @@ object Graph {
     // rollups — replayed bit-identically on the driver when the edge
     // set (and hence the node/label set) is bounded. Each distributed
     // round otherwise costs ~10 tiny stages + 2 checkpoints.
-    val localEdges = collectIfBounded(e, ccLocalMaxEdges(edges0.sparkSession))
+    val localEdges = DriverLocal.collectIfBounded(e, localMaxEdges)
     val localLabels = if (localEdges.isDefined)
-      collectIfBounded(labels0.select(
+      DriverLocal.collectIfBounded(labels0.select(
         col(nodeCol).cast("long").as("node"), col(commCol).cast("long").as("lbl")),
-        2 * ccLocalMaxEdges(edges0.sparkSession) + 1)
+        2 * localMaxEdges + 1)
     else None
     (localEdges, localLabels) match {
       case (Some(er), Some(lr)) =>
@@ -850,16 +801,8 @@ object Graph {
           }
           r0 += 1
         }
-        val out = new Array[org.apache.spark.sql.Row](lab.size)
-        var i = 0
-        lab.forEach { (n, l) => out(i) = org.apache.spark.sql.Row(n, l); i += 1 }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField(commCol,
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        import scala.jdk.CollectionConverters._
-        return edges0.sparkSession.createDataFrame(out.toSeq.asJava, schema)
+        return DriverLocal.frame(edges0.sparkSession,
+          lab.asScala.toSeq.map { case (n, l) => (n, l.longValue) }, "node", commCol)
       case _ => ()
     }
     val m = e.count()
@@ -927,9 +870,13 @@ object Graph {
    * not a distance and silent nonsense would hash-match nothing.
    * Parallel edges collapse to their cheapest weight. Lineage
    * truncation per iteration keeps the plan flat (see [[truncate]]).
+   * Edge sets of at most `localMaxEdges` rows run the same rounds on
+   * the driver (default [[DriverLocal.maxEdges]]; 0 forces the
+   * distributed rounds).
    */
   def sssp(edges0: DataFrame, aCol: String, bCol: String, wCol: String,
-           seeds: DataFrame, seedCol: String, maxRounds: Int = 8): DataFrame = {
+           seeds: DataFrame, seedCol: String, maxRounds: Int = 8,
+           localMaxEdges: Long = DriverLocal.maxEdges): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 64,
       s"sssp: maxRounds must be in [1,64], got $maxRounds")
     val lvl = StorageLevel.MEMORY_AND_DISK
@@ -945,7 +892,7 @@ object Graph {
     // filter + accumulator re-aggregate is 3 checkpoints + an isEmpty,
     // all job-floor on small graphs. Distances are exact integers, so
     // the replay is bit-identical.
-    collectIfBounded(e, ccLocalMaxEdges(edges0.sparkSession)) match {
+    DriverLocal.collectIfBounded(e, localMaxEdges) match {
       case Some(rows) =>
         val seedRows = seeds.select(col(seedCol).cast("long").as("node"))
           .filter(col("node").isNotNull).distinct().collect()
@@ -990,16 +937,8 @@ object Graph {
           }
           r1 += 1
         }
-        val out = new Array[org.apache.spark.sql.Row](dist.size)
-        var i = 0
-        dist.forEach { (n, d) => out(i) = org.apache.spark.sql.Row(n, d); i += 1 }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("dist",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        import scala.jdk.CollectionConverters._
-        return edges0.sparkSession.createDataFrame(out.toSeq.asJava, schema)
+        return DriverLocal.frame(edges0.sparkSession,
+          dist.asScala.toSeq.map { case (n, d) => (n, d.longValue) }, "node", "dist")
       case None => ()
     }
     val dirE = e.select(col("a").as("n"), col("b").as("nb"), col("w"))
@@ -1133,7 +1072,8 @@ object Graph {
     // exiting via maxRounds without the fixpoint means depth >
     // 2^maxRounds — or a CYCLE (forest-contract violation), which
     // never converges. A silently truncated closure must not pass as
-    // complete (ADVICE r10).
+    // complete (ADVICE r10), nor keep its blocks.
+    if (!done) release(pairsCk)
     require(done, s"ancestorPairs: no fixpoint after $maxRounds rounds — " +
       s"either the hierarchy is deeper than 2^$maxRounds (raise maxRounds) " +
       "or the parent relation contains a cycle (not a forest)")

@@ -10,8 +10,8 @@ import scala.collection.mutable
  * the canonical quad-merge walk and the set algebra are pure-Scala
  * set operations, not 40 per-round Spark jobs whose job floors
  * dwarf the data). The distributed rounds in [[Spatial]] remain the
- * path for genuinely huge MOCs (tile counts past
- * [[Spatial.MocLocalMaxTiles]]); both paths produce the SAME
+ * path for genuinely huge MOCs (tile counts past the ops' `localMax`,
+ * default [[DriverLocal.maxTiles]]); both paths produce the SAME
  * canonical minimal tiling (which is unique given coverage), so the
  * choice is invisible to callers — SpatialSpec pins the parity.
  *

@@ -439,11 +439,13 @@ object Spatial {
    * group. Returns groups of n >= 2 (isolated points are field
    * objects, not groups) as (group_id = min member id, n_members)
    * plus whatever the caller aggregates from the joined members.
+   * `localMaxEdges` is the closure's cutover
+   * ([[Graph.connectedComponents]]): 0 forces the star rounds.
    */
   def fofGroups(df: DataFrame, raCol: String, decCol: String, idCol: String,
-                dthreshDeg: Double): DataFrame = {
+                dthreshDeg: Double, localMaxEdges: Long = DriverLocal.maxEdges): DataFrame = {
     val pairs = selfPairs(df, raCol, decCol, idCol, dthreshDeg)
-    Graph.connectedComponents(pairs, "id_a", "id_b")
+    Graph.connectedComponents(pairs, "id_a", "id_b", localMaxEdges = localMaxEdges)
       .withColumnRenamed("comp", "group_id")
       .withColumnRenamed("id", idCol)
   }
@@ -467,7 +469,7 @@ object Spatial {
    * row set is distinct-deduped once up front.
    */
   def mocNormalize(pixels: DataFrame, pixCol: String, order: Int,
-                   localMax: Int = MocLocalMaxTiles): DataFrame = {
+                   localMax: Int = DriverLocal.maxTiles): DataFrame = {
     require(order >= 0 && order <= 29, s"mocNormalize: order must be in [0, 29], got $order")
     if (Healpix.npix(order) <= localMax) {
       // bounded fast path (the partition_map precedent): the distinct
@@ -497,34 +499,10 @@ object Spatial {
   }
 
   // ------------------------------------------------------- MOC set algebra
-
-  /** Tile-count ceiling for the driver-side MOC paths ([[MocLocal]]).
-   *
-   *  Sizing: the FINAL representation is ~12 B/tile (primitive
-   *  (int, long) pairs — 4M ≈ 50 MB), but the TRANSIENT cost of
-   *  getting there is much larger: `collectIfBounded` holds boxed
-   *  `Row`s plus boxed `Tile` tuples (~150 B/tile all-in), so a 4M
-   *  collect peaks at several hundred MB per operand — a real OOM
-   *  risk on a default 1 GB driver. The ceiling is therefore derived
-   *  from the driver heap (a quarter of `Runtime.maxMemory` at
-   *  150 B/tile), capped at 4M so order-≤9 MOCs (npix(9) = 3.1M)
-   *  run local on any driver with ≥ ~2 GB heap; genuinely huge MOCs
-   *  (the ScaleProbe order-10 10.6M-pixel footprint) keep the
-   *  distributed rounds. Every MOC op takes an explicit `localMax`
-   *  (0 disables the local path entirely). */
-  def MocLocalMaxTiles: Int = {
-    val byHeap = Runtime.getRuntime.maxMemory() / 4 / 150
-    if (byHeap < 4000000L && !loggedHeapCeiling.getAndSet(true))
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"MOC local-vs-distributed cutover is HEAP-derived on this driver: " +
-          s"$byHeap tiles (maxMemory/4/150B) < the 4M cap — the same dataset can " +
-          s"take a different plan on a larger driver; pass an explicit localMax " +
-          s"for plan stability")
-    math.min(4000000L, byHeap).toInt
-  }
-
-  /** One-shot latch for the heap-derived-ceiling log line above. */
-  private val loggedHeapCeiling = new java.util.concurrent.atomic.AtomicBoolean(false)
+  //
+  // Every MOC op takes an explicit `localMax` tile count: operands
+  // that fit run the driver-side [[MocLocal]] algebra, 0 forces the
+  // distributed rounds. The default is [[DriverLocal.maxTiles]].
 
   /** The NUNIQ packing of a (norder, npix) tile — MOC 2.0 §2.3.1. */
   private def nuniqCol: Column = expr("shiftleft(cast(4 as bigint), 2 * norder) + npix")
@@ -534,19 +512,14 @@ object Spatial {
    *  downstream set ops collect it back job-free. */
   private def tilesToDf(spark: org.apache.spark.sql.SparkSession,
                         tiles: Array[MocLocal.Tile]): DataFrame =
-    spark.createDataFrame(tiles.toIndexedSeq.map { case (o, p) => (o, p, MocLocal.nuniq(o, p)) })
-      .toDF("norder", "npix", "nuniq")
+    DriverLocal.frame(spark, tiles.toIndexedSeq.map { case (o, p) => (o, p, MocLocal.nuniq(o, p)) },
+      "norder", "npix", "nuniq")
 
-  /** Collect a (pinned) MOC operand when its tile count fits the
-   *  driver-side path, else None. The limit probe bounds the
-   *  transfer: at most localMax + 1 rows come back even when the
-   *  operand is huge. */
-  private def collectIfBounded(m: DataFrame, localMax: Int): Option[Array[MocLocal.Tile]] = {
-    val rows = m.select(col("norder").cast("int"), col("npix").cast("long"))
-      .limit(localMax + 1).collect()
-    if (rows.length > localMax) None
-    else Some(rows.map(r => (r.getInt(0), r.getLong(1))))
-  }
+  /** A (pinned) MOC operand's tiles when at most `localMax` of them,
+   *  else None ([[DriverLocal.collectIfBounded]]). */
+  private def localTiles(m: DataFrame, localMax: Int): Option[Array[MocLocal.Tile]] =
+    DriverLocal.collectIfBounded(m.select(col("norder").cast("int"), col("npix").cast("long")),
+      localMax).map(_.map(r => (r.getInt(0), r.getLong(1))))
 
   /** Materialize a MOC operand and CUT its logical-plan lineage
    *  (localCheckpoint). The set ops below reference each operand many
@@ -663,7 +636,7 @@ object Spatial {
    * covered 3/4 by `a` and 1/4 by `b` now completes a quad.
    */
   def mocUnion(a: DataFrame, b: DataFrame, maxOrder: Int,
-               localMax: Int = MocLocalMaxTiles): DataFrame = {
+               localMax: Int = DriverLocal.maxTiles): DataFrame = {
     val (ap, bp) = (pinMoc(a), pinMoc(b))
     localPair(ap, bp, localMax) match {
       case Some((at, bt)) => tilesToDf(a.sparkSession, MocLocal.union(at, bt, maxOrder))
@@ -680,8 +653,8 @@ object Spatial {
   private def localPair(ap: DataFrame, bp: DataFrame,
                         localMax: Int): Option[(Array[MocLocal.Tile], Array[MocLocal.Tile])] =
     for {
-      at <- collectIfBounded(ap, localMax)
-      bt <- collectIfBounded(bp, localMax)
+      at <- localTiles(ap, localMax)
+      bt <- localTiles(bp, localMax)
     } yield (at, bt)
 
   /**
@@ -696,7 +669,7 @@ object Spatial {
    * canonical-output contract even on non-minimal inputs.
    */
   def mocIntersect(a: DataFrame, b: DataFrame, maxOrder: Int,
-                   localMax: Int = MocLocalMaxTiles): DataFrame = {
+                   localMax: Int = DriverLocal.maxTiles): DataFrame = {
     val (ap, bp) = (pinMoc(a), pinMoc(b))
     localPair(ap, bp, localMax) match {
       case Some((at, bt)) => tilesToDf(a.sparkSession, MocLocal.intersect(at, bt, maxOrder))
@@ -721,7 +694,7 @@ object Spatial {
    * paths, never the 4^k full expansion.
    */
   def mocDifference(a: DataFrame, b: DataFrame, maxOrder: Int,
-                    localMax: Int = MocLocalMaxTiles): DataFrame = {
+                    localMax: Int = DriverLocal.maxTiles): DataFrame = {
     val (ap, bp) = (pinMoc(a), pinMoc(b))
     localPair(ap, bp, localMax) match {
       case Some((at, bt)) =>
@@ -764,9 +737,9 @@ object Spatial {
    * identity and a ∪ ¬a = sky (SpatialSpec pins both).
    */
   def mocComplement(a: DataFrame, maxOrder: Int,
-                    localMax: Int = MocLocalMaxTiles): DataFrame = {
+                    localMax: Int = DriverLocal.maxTiles): DataFrame = {
     val ap = pinMoc(a)
-    collectIfBounded(ap, localMax) match {
+    localTiles(ap, localMax) match {
       case Some(at) => tilesToDf(a.sparkSession, MocLocal.complement(at, maxOrder))
       case None =>
         mocDifference(tilesToDf(a.sparkSession, MocLocal.allSky), ap, maxOrder, localMax)

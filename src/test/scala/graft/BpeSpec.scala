@@ -1,7 +1,9 @@
 package graft
 
-import graft.operators.Bpe
+import graft.operators.{Bpe, DriverLocal}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 class BpeSpec extends SparkSpecBase {
   import spark.implicits._
@@ -35,11 +37,27 @@ class BpeSpec extends SparkSpecBase {
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
       .select(regexp_replace(lower(col("text")), "[^a-z]+", " ").as("clean"))
     val local = Bpe.train(docs, "clean", nMerges = 6, maxWordLen = 12)
-    spark.conf.set("spark.graft.bpe.localMaxWords", "0")
-    try {
-      val dist = Bpe.train(docs, "clean", nMerges = 6, maxWordLen = 12)
-      assert(local == dist, "local replay must reproduce the distributed merges")
-    } finally spark.conf.unset("spark.graft.bpe.localMaxWords")
+    val dist = Bpe.train(docs, "clean", nMerges = 6, maxWordLen = 12, localMaxWords = 0)
+    assert(local == dist, "local replay must reproduce the distributed merges")
+  }
+
+  test("parity property: merge replay equals cutover 0 at 1 and 4 partitions") {
+    // fixed seed, bounded sample count: generated word lists over a
+    // three-letter alphabet (many frequency ties, repeated symbols)
+    // must learn the same merges on both paths and partitionings
+    val word = Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, Gen.oneOf("a", "b", "c")).map(_.mkString))
+    val doc = Gen.choose(1, 8).flatMap(n => Gen.listOfN(n, word).map(_.mkString(" ")))
+    val corpora = Iterator.iterate(Seed(20261018L))(_.next).take(5)
+      .map(seed => Gen.choose(2, 6).flatMap(n => Gen.listOfN(n, doc))
+        .pureApply(Gen.Parameters.default, seed)).toSeq
+    corpora.foreach { texts =>
+      val runs = for { parts <- Seq(1, 4); m <- Seq(DriverLocal.maxWords, 0L) } yield
+        (parts, m) -> Bpe.train(texts.toDF("text").repartition(parts), "text", nMerges = 4,
+          localMaxWords = m)
+      runs.foreach { case (how, merges) =>
+        assert(merges == runs.head._2, s"$texts: $how learned $merges, ${runs.head._1} ${runs.head._2}")
+      }
+    }
   }
 
   test("encode: more merges never increases a document's token count; NULL text counts 0") {

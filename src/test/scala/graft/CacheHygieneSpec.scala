@@ -107,4 +107,30 @@ class CacheHygieneSpec extends SparkSpecBase {
     assert(spark.sharedState.cacheManager.isEmpty,
       "an oversized batch must not leave the history state registered with the CacheManager")
   }
+
+  /** Ids of the RDDs persisted right now (copied out of the map: see
+   *  the drain test above). */
+  private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+
+  test("connectedComponents frees its node cache and edge checkpoint when maxIter is hit") {
+    spark.sharedState.cacheManager.clearCache()
+    import spark.implicits._
+    val before = persistedIds
+    val chain = (1L to 2000L).map(i => (i, i + 1)).toDF("a", "b")
+    intercept[IllegalStateException] {
+      graft.operators.Graph.connectedComponents(chain, "a", "b", maxIter = 1, localMaxEdges = 0)
+    }
+    assert(persistedIds -- before == Set.empty, "no RDD may stay persisted after the throw")
+    assert(spark.sharedState.cacheManager.isEmpty, "the node cache must leave the CacheManager")
+  }
+
+  test("ancestorPairs frees its pair and jump checkpoints when no fixpoint is reached") {
+    import spark.implicits._
+    val before = persistedIds
+    val chain = (1L to 64L).map(k => (k, k - 1)).toDF("node", "parent")
+    intercept[IllegalArgumentException] {
+      graft.operators.Graph.ancestorPairs(chain, "node", "parent", maxRounds = 2)
+    }
+    assert(persistedIds -- before == Set.empty, "no checkpoint may stay persisted after the throw")
+  }
 }

@@ -1,14 +1,45 @@
 package graft
 
-import graft.operators.Graph
+import graft.operators.{DriverLocal, Graph}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 class GraphSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def comps(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Graph.connectedComponents(edges.toDF("a", "b"), "a", "b")
+  private def comps(edges: Seq[(Long, Long)],
+                    localMaxEdges: Long = DriverLocal.maxEdges): Map[Long, Long] =
+    Graph.connectedComponents(edges.toDF("a", "b"), "a", "b", localMaxEdges = localMaxEdges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def planOf(name: String): String =
+    QueryRegistry.all.toMap.apply(name).run(spark, sf("sf0.001"))
+      .queryExecution.executedPlan.toString
+
+  /** Spark jobs started while `f` runs, counted by a listener. A
+   *  marker job run afterwards flushes the listener bus: its start
+   *  event is delivered after every earlier one. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobGroup("jobs-marker", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("jobs-marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("jobs-marker"), "the listener never saw the marker job")
+      groups.size - 1
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("connected components: path graph converges to min id") {
     // 1-2-3-4-5-6 chain: the star contraction must bridge every hop
@@ -30,17 +61,22 @@ class GraphSpec extends SparkSpecBase {
     assert(comps(Seq.empty) == Map.empty)
   }
 
-  test("q_fof_dist pins the distributed rounds on a child session, not the caller's conf") {
-    val key = "spark.graft.cc.localMaxEdges"
+  test("q_fof_dist runs the star rounds on the caller's session and returns q_fof's rows") {
     val qs = QueryRegistry.all.toMap
-    spark.conf.set(key, "123")
-    try {
-      val dist = qs("q_fof_dist").run(spark, sf("sf0.01"))
-      val rows = dist.collect().map(_.toString).toSeq
-      assert(spark.conf.get(key) == "123", "the caller's setting must be left as it was")
-      assert((dist.sparkSession ne spark) && dist.sparkSession.conf.get(key) == "0")
-      assert(rows.nonEmpty && rows == qs("q_fof").run(spark, sf("sf0.01")).collect().map(_.toString).toSeq)
-    } finally spark.conf.unset(key)
+    def rowsAndJobs(name: String): (Seq[String], Int) = {
+      var rows = Seq.empty[String]
+      val jobs = jobsDuring {
+        val df = qs(name).run(spark, sf("sf0.01"))
+        assert(df.sparkSession eq spark, s"$name must run on the caller's session")
+        rows = df.collect().map(_.toString).toSeq
+      }
+      (rows, jobs)
+    }
+    val (local, localJobs) = rowsAndJobs("q_fof")
+    val (dist, distJobs) = rowsAndJobs("q_fof_dist")
+    assert(dist.nonEmpty && dist == local)
+    // each star round adds two checkpoint jobs the union-find skips
+    assert(distJobs > localJobs, s"q_fof_dist ran $distJobs jobs, q_fof $localJobs")
   }
 
   test("connected components: refuses to return partial labels when maxIter is too low") {
@@ -49,11 +85,10 @@ class GraphSpec extends SparkSpecBase {
     // shortens chains by a constant factor)
     // force the distributed star rounds — the maxIter contract is
     // theirs (the local union-find degenerate has no iteration bound)
-    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
     val chain = (1L to 2000L).map(i => (i, i + 1)).toDF("a", "b")
-    val e = try intercept[IllegalStateException] {
-      Graph.connectedComponents(chain, "a", "b", maxIter = 1).collect()
-    } finally spark.conf.unset("spark.graft.cc.localMaxEdges")
+    val e = intercept[IllegalStateException] {
+      Graph.connectedComponents(chain, "a", "b", maxIter = 1, localMaxEdges = 0).collect()
+    }
     assert(e.getMessage.contains("did not converge"))
   }
 
@@ -79,10 +114,8 @@ class GraphSpec extends SparkSpecBase {
     assert(comps(edges) == expect,
       "local union-find labels must match exact union-find")
     // forced distributed star rounds must produce the same labels
-    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-    try assert(comps(edges) == expect,
+    assert(comps(edges, localMaxEdges = 0) == expect,
       "star-contraction labels must match exact union-find")
-    finally spark.conf.unset("spark.graft.cc.localMaxEdges")
   }
 
   test("local graph degenerates equal the forced-distributed rounds (LPA, louvain, bfs, sssp)") {
@@ -95,24 +128,70 @@ class GraphSpec extends SparkSpecBase {
     val wEdges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 4L, 7L), (1L, 4L, 20L),
       (4L, 5L, 2L), (7L, 8L, 1L)).toDF("a", "b", "w")
     val seeds = Seq(1L, 7L).toDF("s")
-    def both[T](f: => Seq[T]): (Seq[T], Seq[T]) = {
-      val local = f
-      spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-      try (local, f) finally spark.conf.unset("spark.graft.cc.localMaxEdges")
+    def both(f: Long => org.apache.spark.sql.DataFrame): (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+      def rows(m: Long) = f(m).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      (rows(DriverLocal.maxEdges), rows(0))
     }
-    val (lpaL, lpaD) = both(Graph.labelPropagation(edges, "a", "b", rounds = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    val (lpaL, lpaD) = both(m => Graph.labelPropagation(edges, "a", "b", rounds = 4, localMaxEdges = m))
     assert(lpaL == lpaD, s"LPA local $lpaL != distributed $lpaD")
     val labs = Graph.labelPropagation(edges, "a", "b", rounds = 2)
-    val (louL, louD) = both(Graph.louvainMerge(edges, "a", "b", labs, rounds = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    val (louL, louD) = both(m => Graph.louvainMerge(edges, "a", "b", labs, rounds = 2, localMaxEdges = m))
     assert(louL == louD, s"louvain local $louL != distributed $louD")
-    val (bfsL, bfsD) = both(Graph.bfsHops(edges, "a", "b", seeds, "s", maxHops = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    val (bfsL, bfsD) = both(m => Graph.bfsHops(edges, "a", "b", seeds, "s", maxHops = 3, localMaxEdges = m))
     assert(bfsL == bfsD, s"bfs local $bfsL != distributed $bfsD")
-    val (ssspL, ssspD) = both(Graph.sssp(wEdges, "a", "b", "w", seeds, "s", maxRounds = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    val (ssspL, ssspD) = both(m =>
+      Graph.sssp(wEdges, "a", "b", "w", seeds, "s", maxRounds = 4, localMaxEdges = m))
     assert(ssspL == ssspD, s"sssp local $ssspL != distributed $ssspD")
+  }
+
+  /** Small multigraphs made of the shapes the driver-side replays
+   *  must agree with the distributed rounds on: a chain (so there is
+   *  always a non-loop edge), then self-loops, parallel edges,
+   *  isolated pairs and random pockets, each on its own id range. */
+  private val smallGraph: Gen[Seq[(Long, Long)]] = {
+    val chain = Gen.choose(2, 6).map(n => (0 until n).map(i => (i.toLong, i + 1L)))
+    val part = Gen.oneOf(
+      chain,
+      Gen.const(Seq((0L, 0L))),
+      Gen.choose(2, 3).map(k => Seq.fill(k)((0L, 1L))),
+      Gen.const(Seq((0L, 1L))),
+      Gen.choose(3, 8).flatMap(n => Gen.listOfN(n, Gen.zip(Gen.choose(0L, 5L), Gen.choose(0L, 5L)))))
+    for {
+      first <- chain
+      k <- Gen.choose(0, 4)
+      rest <- Gen.listOfN(k, part)
+    } yield (first +: rest).zipWithIndex.flatMap { case (es, i) =>
+      es.map { case (a, b) => (a + 100L * i, b + 100L * i) }
+    }
+  }
+
+  test("parity property: graph replays equal cutover 0 at 1 and 4 partitions") {
+    // fixed seed, bounded sample count: each generated graph must give
+    // the same sorted rows on the default (driver-side) path and with
+    // the cutover at 0, with the input at 1 and at 4 partitions
+    val graphs = Iterator.iterate(Seed(20261018L))(_.next).take(5)
+      .map(seed => smallGraph.pureApply(Gen.Parameters.default, seed)).toSeq
+    graphs.foreach { g =>
+      val weighted = g.zipWithIndex.map { case ((a, b), i) => (a, b, (i % 4).toLong) }
+      val nodes = g.flatMap { case (a, b) => Seq(a, b) }.distinct.sorted
+      val seeds = (nodes.take(1) ++ nodes.takeRight(1) :+ 999L).toDF("s")
+      val singletons = nodes.map(n => (n, n)).toDF("node", "community")
+      val ops: Seq[(String, (org.apache.spark.sql.DataFrame, Long) => org.apache.spark.sql.DataFrame)] = Seq(
+        "connectedComponents" -> ((e, m) => Graph.connectedComponents(e, "a", "b", localMaxEdges = m)),
+        "labelPropagation" -> ((e, m) => Graph.labelPropagation(e, "a", "b", rounds = 3, localMaxEdges = m)),
+        "louvainMerge" -> ((e, m) => Graph.louvainMerge(e, "a", "b", singletons, rounds = 3, localMaxEdges = m)),
+        "bfsHops" -> ((e, m) => Graph.bfsHops(e, "a", "b", seeds, "s", maxHops = 3, localMaxEdges = m)),
+        "sssp" -> ((e, m) => Graph.sssp(e, "a", "b", "w", seeds, "s", maxRounds = 3, localMaxEdges = m)))
+      ops.foreach { case (name, op) =>
+        val runs = for { parts <- Seq(1, 4); m <- Seq(DriverLocal.maxEdges, 0L) } yield {
+          val e = weighted.toDF("a", "b", "w").repartition(parts)
+          (parts, m) -> op(e, m).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+        }
+        runs.foreach { case (how, rows) =>
+          assert(rows == runs.head._2, s"$name on $g: $how gave $rows, ${runs.head._1} gave ${runs.head._2}")
+        }
+      }
+    }
   }
 
   test("dedupClusters: transitive near-dups collapse to one canonical doc") {
@@ -137,14 +216,11 @@ class GraphSpec extends SparkSpecBase {
     // matter how many iterations ran (this chain needs all 50).
     // force the distributed star rounds — the lineage-truncation
     // guarantee under test is theirs (the local path never iterates)
-    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-    try {
-      val edges = (1L to 50L).map(i => (i, i + 1)).toDF("a", "b")
-      val labels = Graph.connectedComponents(edges, "a", "b", maxIter = 60)
-      val plan = labels.queryExecution.optimizedPlan.toString
-      assert(plan.length < 10000, s"iteration lineage must be truncated, got ${plan.length} chars")
-      assert(labels.collect().forall(_.getLong(1) == 1L), "51-node chain collapses to min id 1")
-    } finally spark.conf.unset("spark.graft.cc.localMaxEdges")
+    val edges = (1L to 50L).map(i => (i, i + 1)).toDF("a", "b")
+    val labels = Graph.connectedComponents(edges, "a", "b", maxIter = 60, localMaxEdges = 0)
+    val plan = labels.queryExecution.optimizedPlan.toString
+    assert(plan.length < 10000, s"iteration lineage must be truncated, got ${plan.length} chars")
+    assert(labels.collect().forall(_.getLong(1) == 1L), "51-node chain collapses to min id 1")
   }
 
   /** Driver-side replay of the EXACT integer update rule — the
@@ -396,5 +472,31 @@ class GraphSpec extends SparkSpecBase {
     val reparted = Graph.louvainMerge(edges.repartition(7), "a", "b",
       singletons.repartition(5), rounds = 2).as[(Long, Long)].collect().toMap
     assert(reparted == got)
+  }
+
+  test("ancestorPairs: exact closure on a hand tree; deep chain converges in log rounds") {
+    // ternary-ish tree: 0 <- {1,2,3}, 1 <- {4,5}, 4 <- {6}
+    val par = Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 1L), (5L, 1L), (6L, 4L))
+      .toDF("node", "parent")
+    val got = Graph.ancestorPairs(par, "node", "parent")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = Set((1L,0L),(2L,0L),(3L,0L),(4L,1L),(4L,0L),(5L,1L),(5L,0L),
+      (6L,4L),(6L,1L),(6L,0L))
+    assert(got == want, s"missing ${want -- got}, extra ${got -- want}")
+    // a 70-deep chain resolves within the 20-round bound (log2(70) ~ 7
+    // doubling rounds) and yields exactly sum(depth) = 70*71/2 pairs
+    val chain = (1L to 70L).map(k => (k, k - 1)).toDF("node", "parent")
+    assert(Graph.ancestorPairs(chain, "node", "parent").count() == 70L * 71 / 2,
+      "pointer doubling must reach every ancestor of a deep chain")
+  }
+
+  test("graph_pagerank: per-iteration shuffles stay bounded (edges persisted, ranks slim)") {
+    // 5 iterations over a persisted degree-annotated edge table: the
+    // returned plan is the LAST iteration reading cached blocks — it
+    // must reference the in-memory relation, not re-derive the edge
+    // pipeline from parquet each round.
+    val plan = planOf("graph_pagerank")
+    assert(plan.contains("InMemoryTableScan") || plan.contains("TableCacheQueryStage"),
+      s"edge table must come from cache on the final iteration:\n$plan")
   }
 }

@@ -53,23 +53,6 @@ class R16OpsSpec extends SparkSpecBase {
       s"log collapse must be a struct-max aggregate, never a window:\n$plan")
   }
 
-  test("ancestorPairs: exact closure on a hand tree; deep chain converges in log rounds") {
-    import graft.operators.Graph
-    // ternary-ish tree: 0 <- {1,2,3}, 1 <- {4,5}, 4 <- {6}
-    val par = Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 1L), (5L, 1L), (6L, 4L))
-      .toDF("node", "parent")
-    val got = Graph.ancestorPairs(par, "node", "parent")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = Set((1L,0L),(2L,0L),(3L,0L),(4L,1L),(4L,0L),(5L,1L),(5L,0L),
-      (6L,4L),(6L,1L),(6L,0L))
-    assert(got == want, s"missing ${want -- got}, extra ${got -- want}")
-    // a 70-deep chain resolves within the 20-round bound (log2(70) ~ 7
-    // doubling rounds) and yields exactly sum(depth) = 70*71/2 pairs
-    val chain = (1L to 70L).map(k => (k, k - 1)).toDF("node", "parent")
-    assert(Graph.ancestorPairs(chain, "node", "parent").count() == 70L * 71 / 2,
-      "pointer doubling must reach every ancestor of a deep chain")
-  }
-
   test("weightedTopK: exactly k per group, partitioning-invariant, weight-monotone bias") {
     import graft.operators.Sampling
     val rows = (1L to 600L).map { k =>

@@ -422,7 +422,7 @@ class SpatialSpec extends SparkSpecBase {
 
   test("mocComplement: identities (a ∪ ¬a = sky, ¬¬a = a, both paths)") {
     val a = mocOf(Seq(0L, 1L, 2L, 3L, 9L, 100L, 101L), 3)
-    for (localMax <- Seq(Spatial.MocLocalMaxTiles, 0)) {
+    for (localMax <- Seq(graft.operators.DriverLocal.maxTiles, 0)) {
       val na = Spatial.mocComplement(a, 3, localMax)
       // disjoint: a ∩ ¬a = ∅
       assert(Spatial.mocIntersect(a, na, 3, localMax).count() == 0, s"localMax=$localMax")
