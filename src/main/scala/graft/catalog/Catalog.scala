@@ -1,10 +1,17 @@
 package graft.catalog
 
+import graft.functions.{native, sphere, PartitionGrid}
+import graft.healpix.Healpix
+import graft.operators.Spatial
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /**
- * User-facing handle mirroring the reference's `hipscat.Catalog`
- * object API (hipscat/catalog.py:20) over the functional layer:
+ * The stored catalog at `location/catname`, mirroring the reference's
+ * `hipscat.Catalog` object API (hipscat/catalog.py:20). Every
+ * stored-catalog operation goes through this handle; ra/dec/id and
+ * the partition order come from the catalog's meta, the paths from
+ * its [[CatalogLayout]]:
  *
  * {{{
  * val gaia = Catalog(spark, "/data/hips", "gaia")
@@ -59,8 +66,8 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
 
   /** Load the catalog, optionally column-pruned (ra/dec/id always kept — catalog.py validate_user_input_cols). */
   def load(columns: Seq[String] = Nil): DataFrame = {
-    val df = HipsCatalog.load(spark, location, catname)
-    if (columns.isEmpty) df else df.select(withContractCols(columns).map(org.apache.spark.sql.functions.col): _*)
+    val df = layout.load(spark)
+    if (columns.isEmpty) df else df.select(withContractCols(columns).map(col): _*)
   }
 
   /** The reference column contract (util.py:276 validate_user_input_cols):
@@ -68,26 +75,72 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
   private def withContractCols(columns: Seq[String]): Seq[String] =
     if (columns.isEmpty) Nil else (columns ++ Seq(raKw, decKw, idKw)).distinct
 
-  /** Cone search with file-level pruning; adds `_DIST` (catalog.py:65).
-   *  `columns` prunes the scan — ra/dec/id always kept. */
+  /** Cone search with file-level pruning: the hive partition filter
+   *  on (Norder, Npix) restricts the scan to overlapping partitions
+   *  before any row is read; adds `_DIST` (catalog.py:65). `columns`
+   *  prunes the scan — ra/dec/id always kept. */
   def coneSearch(ra: Double, dec: Double, radiusDeg: Double,
                  columns: Seq[String] = Nil): DataFrame =
-    HipsCatalog.coneSearch(spark, location, catname, raKw, decKw, ra, dec, radiusDeg, orderK,
-      columns = withContractCols(columns))
+    search(ra, dec, radiusDeg, columns)(
+      _.withColumn("_DIST", sphere.gcDist(col(raKw), col(decKw), lit(ra), lit(dec)))
+        .filter(col("_DIST") < radiusDeg))
 
-  /** Box search (wrap-aware ra interval x dec band) with the same
-   *  partition pruning and column contract as [[coneSearch]]. */
+  /** Box search (wrap-aware ra interval x dec band): partition pruning
+   *  via the box's provable bounding cone, then the exact range
+   *  predicate; same column contract as [[coneSearch]]. */
   def boxSearch(raLo: Double, raHi: Double, decLo: Double, decHi: Double,
-                columns: Seq[String] = Nil): DataFrame =
-    HipsCatalog.boxSearch(spark, location, catname, raKw, decKw, raLo, raHi, decLo, decHi, orderK,
-      columns = withContractCols(columns))
+                columns: Seq[String] = Nil): DataFrame = {
+    val ((cra, cdec), radius) = Spatial.boxBoundingCone(raLo, raHi, decLo, decHi)
+    search(cra, cdec, radius, columns)(Spatial.boxSearch(_, raKw, decKw, raLo, raHi, decLo, decHi))
+  }
 
-  /** Convex polygon search (gnomonic half-planes) with the same
-   *  partition pruning and column contract as [[coneSearch]]. */
+  /** Convex polygon search: partition pruning via the polygon's
+   *  bounding cone, then the exact gnomonic half-plane test; same
+   *  column contract as [[coneSearch]]. */
   def polygonSearch(vertices: Seq[(Double, Double)],
-                    columns: Seq[String] = Nil): DataFrame =
-    HipsCatalog.polygonSearch(spark, location, catname, raKw, decKw, vertices, orderK,
-      columns = withContractCols(columns))
+                    columns: Seq[String] = Nil): DataFrame = {
+    val ((cra, cdec), radius, inside) = Spatial.polygonPredicate(raKw, decKw, vertices)
+    search(cra, cdec, radius, columns)(_.filter(inside))
+  }
+
+  /** The pruning shared by every search: a column-pruned scan of the
+   *  partitions overlapping the bounding cone, the search's `exact`
+   *  predicate, then the hive columns dropped unless the caller picked
+   *  them.
+   *
+   *  The disc cover is computed at an ADAPTIVE order: the finest
+   *  order <= orderK whose expected cover stays <= ~8k pixels, so a
+   *  wide query (a full-RA dec band gives a 180-deg bounding cone)
+   *  cannot blow up the driver-side candidate list no matter how
+   *  fine the catalog's partition order is. A partition at order o
+   *  overlaps the disc iff its coverOrder-aligned pixel does:
+   *  ancestors for o <= coverOrder (InSet on rebinned cover),
+   *  descendants via a constant shift for o > coverOrder — one small
+   *  InSet per order, all over partition columns, so file-level
+   *  pruning still applies. Coarsening only loses selectivity, never
+   *  rows. */
+  private def search(raDeg: Double, decDeg: Double, radiusDeg: Double, columns: Seq[String])
+                    (exact: DataFrame => DataFrame): DataFrame = {
+    val discFrac = (1 - math.cos(math.toRadians(math.min(radiusDeg, 180.0)))) / 2
+    val coverOrder = (0 to orderK).reverse
+      .find(o => discFrac * Healpix.npix(o) <= 8192 || o == 0).getOrElse(0)
+    val cover = Healpix.queryDiscCover(coverOrder, raDeg, decDeg, radiusDeg)
+    val coverBoxed = cover.map(Long.box).toSeq
+    val pred = (0 to orderK).map { o =>
+      if (o <= coverOrder) {
+        val anc = cover.map(_ >> (2 * (coverOrder - o))).distinct.map(Long.box).toSeq
+        col("Norder") === o && col("Npix").isin(anc: _*)
+      } else
+        col("Norder") === o && shiftright(col("Npix"), 2 * (o - coverOrder)).isin(coverBoxed: _*)
+    }.reduce(_ || _)
+    // user column selection BEFORE any predicate so the pruning
+    // reaches the parquet scan
+    val cols = withContractCols(columns)
+    val df = layout.load(spark)
+    val sel = if (cols.isEmpty) df else df.select((cols ++ Seq("Norder", "Npix")).distinct.map(col): _*)
+    Seq("Norder", "Npix").filterNot(c => cols.isEmpty || cols.contains(c))
+      .foldLeft(exact(sel.filter(pred)))(_.drop(_))
+  }
 
   /**
    * Compact every partition leaf of the catalog (and its margin
@@ -104,10 +157,7 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
   def compact(targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int, Int) = {
     val fs = CatalogLayout.fs(spark, location)
     var (done, before, after) = (0, 0, 0)
-    for {
-      tree <- Seq(layout.catalogTree, layout.neighborTree)
-      (o, p) <- CatalogLayout.listTiles(spark, tree)
-    } {
+    for ((tree, o, p) <- tiles()) {
       val leaf = CatalogLayout.tilePath(tree, o, p)
       val n = fs.listStatus(new org.apache.hadoop.fs.Path(leaf))
         .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -121,6 +171,13 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
     (done, before, after)
   }
 
+  /** (tree, order, pix) of every tile directory of the catalog/ and
+   *  neighbor/ trees. Bounded by directory count. */
+  private def tiles(): Seq[(String, Int, Long)] = for {
+    tree <- Seq(layout.catalogTree, layout.neighborTree)
+    (o, p) <- CatalogLayout.listTiles(spark, tree)
+  } yield (tree, o, p)
+
   /**
    * Incremental append: add rows to this catalog without
    * re-importing — frozen partition map, `_ID` ranks continued,
@@ -129,7 +186,7 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    * Columns must carry the catalog's ra/dec/id keywords.
    */
   def append(df: DataFrame): Catalog = {
-    HipsPartitioner.append(df, raKw, decKw, idKw, location, catname)
+    HipsPartitioner.append(df, layout)
     this
   }
 
@@ -140,16 +197,35 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    *  Returns a fresh handle (this one's cached meta is stale after the
    *  rewrite). */
   def repartition(): Catalog = {
-    HipsPartitioner.repartition(spark, location, catname)
+    HipsPartitioner.repartition(spark, layout)
     Catalog(spark, location, catname)
   }
 
+  /** Complete a repartition whose writer crashed after its commit
+   *  point, and discard a pre-commit stage
+   *  ([[HipsPartitioner.recoverRepartition]]); [[load]] warns while
+   *  such a commit is pending. True iff a pending commit was rolled
+   *  forward. */
+  def recoverRepartition(): Boolean = HipsPartitioner.recoverRepartition(spark, layout)
+
   /**
-   * kNN cross-match against another written catalog using its stored
-   * margins (catalog.py:144 cross_match). Output convention follows
-   * the reference: every column of BOTH sides carries a
-   * `{catname}.{col}` prefix (util.py:299 frame_prefix_all_cols,
-   * delim '.'), plus unprefixed `hips_k`/`hips_pix`/`_DIST`/`_RANK`.
+   * kNN cross-match against another written catalog using the
+   * PERSISTED margin cache — the reference's stored-neighbor
+   * semantics (catalog.py:144 cross_match + dask_utils.py:367): per
+   * partition pixel of `other`, candidates are that pixel's catalog
+   * rows plus its neighbor-file rows; this catalog's rows are
+   * assigned to `other`'s partition pixel containing them (the
+   * hierarchy alignment of util.map_catalog_hips, as one equi-join
+   * key). No per-row disc cover at query time — that work was done
+   * once at write time. Like the reference, matches beyond the stored
+   * margin radius are not found: import with marginDeg >= dthresh for
+   * exactness. Only the keying is the stored path's own; the ranking
+   * is the in-flight match's ([[Spatial.nearestK]]).
+   *
+   * Output convention follows the reference: every column of BOTH
+   * sides carries a `{catname}{delim}` prefix (util.py:299
+   * frame_prefix_all_cols, delim '.'), plus unprefixed
+   * `hips_k`/`hips_pix` (the match partition)/`_DIST`/`_RANK`.
    * `c1Cols`/`c2Cols` prune each side's scan before the join —
    * ra/dec/id are always kept (util.py:276).
    */
@@ -157,12 +233,56 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
                  c1Cols: Seq[String] = Nil, c2Cols: Seq[String] = Nil,
                  delim: String = "."): DataFrame = {
     require(other.catname != catname, "cannot cross-match a catalog with itself")
-    HipsCatalog.crossMatchStored(spark, location, catname, other.catname,
-      raKw, decKw, idKw, other.raKw, other.decKw, other.idKw,
-      k = nNeighbors, dthreshDeg = dthreshDeg, orderK = math.max(orderK, other.orderK),
-      rightPrefix = other.catname + delim, leftPrefix = catname + delim,
-      leftCols = c1Cols, rightCols = c2Cols)
+    val order = math.max(orderK, other.orderK)
+    val (lp, rp) = (catname + delim, other.catname + delim)
+    // the join key is the PACKED (order << 48 | pix) value of the
+    // right partition: a bare pixel number is ambiguous across orders
+    // in an adaptive map ((2, 5) and (3, 5) can coexist)
+    val bc = spark.sparkContext.broadcast(other.partitionGrid(order))
+    // column selection is applied BEFORE the join, on both sides, so
+    // the pruning reaches the parquet scans (ReadSchema); the left
+    // hive columns are dropped before prefixing, mirroring prep()
+    val l0 = layout.load(spark).drop(CatalogLayout.TileCols: _*)
+    val lSel = if (c1Cols.isEmpty) l0 else l0.select(withContractCols(c1Cols).map(col): _*)
+    val lm = prefixed(lSel.withColumn("__jpix",
+      native.packedPartitionPixel(col(raKw), col(decKw), order, bc)), lp)
+
+    def prep(df: DataFrame): DataFrame = {
+      val sel =
+        if (c2Cols.isEmpty) df
+        else df.select((other.withContractCols(c2Cols) ++ CatalogLayout.TileCols).distinct.map(col): _*)
+      val cols = sel.columns.filterNot(CatalogLayout.TileCols.contains)
+      sel.select((cols.map(col) :+
+        shiftleft(col("Norder").cast("long"), 48).bitwiseOR(col("Npix")).as("__jpix")): _*)
+    }
+    // right candidates per pixel: home rows + stored margin replicas
+    val rm = prefixed(prep(other.layout.load(spark)).unionByName(prep(other.layout.loadNeighbors(spark))), rp)
+
+    // prefixed names may contain '.' (the reference's delim), which
+    // col() would parse as struct access — backtick-quote them
+    def qc(name: String) = col("`" + name + "`")
+    val joined = lm.join(rm, "__jpix")
+      .withColumn("_DIST", sphere.gcDist(qc(lp + raKw), qc(lp + decKw), qc(rp + other.raKw), qc(rp + other.decKw)))
+      .filter(col("_DIST") < dthreshDeg)
+    Spatial.nearestK(joined, lp + idKw, rp + other.idKw, nNeighbors)
+      .withColumn("hips_k", shiftright(col("__jpix"), 48).cast("int"))
+      .withColumn("hips_pix", col("__jpix").bitwiseAND(lit(0xffffffffffffL)))
+      .drop("__jpix")
   }
+
+  /** Every column but the join key renamed to `prefix + name`. */
+  private def prefixed(df: DataFrame, prefix: String): DataFrame =
+    df.columns.filterNot(_ == "__jpix").foldLeft(df)((d, c) => d.withColumnRenamed(c, prefix + c))
+
+  /**
+   * Partition grid at `order` (SPARSE tiling, see [[PartitionGrid]]),
+   * reconstructed from the hive directories of BOTH trees, so sky
+   * regions that hold only margin replicas (empty home pixel,
+   * populated border) still resolve. Regions with no files at all
+   * become -1 gap tiles (no partition).
+   */
+  private def partitionGrid(order: Int): PartitionGrid =
+    PartitionGrid.fromTiles(order, tiles().map { case (_, o, p) => (p << (2 * (order - o)), o) })
 
   /** Density views render at most this order — the reference's own
    *  map order ({cat}_order10_hpmap.fits): a DENSE sky at order 10 is
@@ -212,7 +332,6 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    */
   def visualizeCrossMatch(other: Catalog, nNeighbors: Int = 1, dthreshDeg: Double = 0.01,
                           width: Int = 800, height: Int = 400): java.awt.image.BufferedImage = {
-    import org.apache.spark.sql.functions.{count, lit}
     val rows = crossMatch(other, nNeighbors, dthreshDeg,
         c1Cols = Seq(raKw), c2Cols = Seq(other.raKw))
       .groupBy("hips_k", "hips_pix").agg(count(lit(1)).as("cnt"))
@@ -259,8 +378,8 @@ object Catalog {
                  raKw: String, decKw: String, idKw: String,
                  orderK: Int = 6, threshold: Long = 1000000L, marginDeg: Double = 0.1,
                  exactMargin: Boolean = false): Catalog = {
-    HipsPartitioner.write(df, raKw, decKw, idKw, location, catname, orderK, threshold, marginDeg,
-      exactMargin = exactMargin)
+    HipsPartitioner.write(df, raKw, decKw, idKw, CatalogLayout(location, catname), orderK, threshold,
+      marginDeg, exactMargin)
     Catalog(df.sparkSession, location, catname)
   }
 
@@ -279,7 +398,7 @@ object Catalog {
     val batches = paths.grouped(batchFiles).toSeq
     HipsPartitioner.writeResumable(spark, batches,
       files => graft.sources.CatalogReader.read(spark, files, spec),
-      "ra", "dec", "id", location, catname, orderK, threshold, marginDeg, cleanStaging)
+      "ra", "dec", "id", CatalogLayout(location, catname), orderK, threshold, marginDeg, cleanStaging)
     Catalog(spark, location, catname)
   }
 }

@@ -36,6 +36,27 @@ final case class CatalogLayout(location: String, catname: String) {
   def writeMeta(spark: SparkSession, meta: CatalogMeta): Unit =
     CatalogLayout.writeString(spark, metaPath, meta.json)
 
+  /** The catalog tree (hive tile columns included). A lingering
+   *  repartition journal means a writer crashed mid-commit (old + new
+   *  sub-tile dirs may BOTH be visible = duplicate rows) — warn loudly
+   *  and point at the repair path rather than silently
+   *  double-counting; an ACTIVE repartition's commit window triggers
+   *  the same warning, which is the documented transient-duplicates
+   *  read behavior. */
+  private[catalog] def load(spark: SparkSession): DataFrame = {
+    if (CatalogLayout.exists(spark, journal))
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"catalog $catname has a pending repartition commit ($journal): rows in split tiles " +
+          "may appear twice until the commit finishes — if no repartition is running, " +
+          "a writer crashed; run Catalog.recoverRepartition() to roll it forward")
+    spark.read.parquet(catalogTree)
+  }
+
+  /** The neighbor (margin) tree; empty with the catalog schema if absent. */
+  private[catalog] def loadNeighbors(spark: SparkSession): DataFrame =
+    if (CatalogLayout.exists(spark, neighborTree)) spark.read.parquet(neighborTree)
+    else load(spark).limit(0)
+
   /** Drop the session's cached listings of both trees: a listing
    *  cached before another writer's files landed hides those files. */
   private[catalog] def invalidateTrees(spark: SparkSession): Unit =

@@ -1,7 +1,6 @@
 package graft.catalog
 
-import graft.functions.{sphere, PartitionGrid}
-import graft.healpix.Healpix
+import graft.functions.PartitionGrid
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,6 +28,9 @@ import org.apache.spark.sql.functions._
  *     rows within `marginDeg` of a FOREIGN partition pixel are
  *     replicated under `neighbor/Norder=K/Dir=D/Npix=P/` via a
  *     bounded disc-cover explode.
+ *
+ * The partition-map algorithm is public; the write lifecycle (import,
+ * append, repartition, recovery) is reached through [[Catalog]].
  */
 object HipsPartitioner {
 
@@ -156,23 +158,19 @@ object HipsPartitioner {
    * partitioner.py:350) that also records `exactMargin`, so appends
    * and repartitions keep the import's margin policy.
    */
-  def write(df: DataFrame, raCol: String, decCol: String, idCol: String,
-            outputDir: String, catname: String,
-            orderK: Int = 6, threshold: Long = 1000000L, marginDeg: Double = 0.1,
-            exactMargin: Boolean = false): PartitionMap =
+  private[catalog] def write(df: DataFrame, raCol: String, decCol: String, idCol: String,
+                             layout: CatalogLayout, orderK: Int, threshold: Long, marginDeg: Double,
+                             exactMargin: Boolean): PartitionMap =
     writeWithMap(df, computePartitionMap(df, raCol, decCol, orderK, threshold),
-      raCol, decCol, idCol, outputDir, catname, threshold, marginDeg, exactMargin)
+      raCol, decCol, idCol, layout, threshold, marginDeg, exactMargin)
 
   /** The write phases after the partition map is known — shared by
    *  [[write]] (map from a direct scan) and [[writeResumable]] (map
    *  from per-batch histogram artifacts). */
-  private[catalog] def writeWithMap(df: DataFrame, pm: PartitionMap,
-                                    raCol: String, decCol: String, idCol: String,
-                                    outputDir: String, catname: String,
-                                    threshold: Long, marginDeg: Double,
-                                    exactMargin: Boolean): PartitionMap = {
+  private def writeWithMap(df: DataFrame, pm: PartitionMap,
+                           raCol: String, decCol: String, idCol: String, layout: CatalogLayout,
+                           threshold: Long, marginDeg: Double, exactMargin: Boolean): PartitionMap = {
     val spark = df.sparkSession
-    val layout = CatalogLayout(outputDir, catname)
     val ids = Some(CatalogLayout.SpatialIds(raCol, decCol, idCol))
     CatalogLayout.writeTree(withPartitionColumns(df, raCol, decCol, pm), layout.catalogTree, "overwrite", ids)
     CatalogLayout.writeTree(marginRows(df, raCol, decCol, pm, marginDeg, exactMargin),
@@ -194,7 +192,7 @@ object HipsPartitioner {
     CatalogLayout.writeHist(hist, layout.importHist)
 
     layout.writeMeta(spark,
-      CatalogMeta(catname, raCol, decCol, idCol, threshold, pm.orderK, marginDeg, exactMargin).withMap(pm))
+      CatalogMeta(layout.catname, raCol, decCol, idCol, threshold, pm.orderK, marginDeg, exactMargin).withMap(pm))
     pm
   }
 
@@ -231,22 +229,24 @@ object HipsPartitioner {
    * a LIVE repartition's staging phase would silently destroy the
    * in-flight rewrite (the repartition then fails on the missing
    * stage). Don't run them concurrently.
+   *
+   * The rows' ra/dec/id columns are the ones the meta records, so an
+   * append ranks `_ID` on the same columns as the import.
    */
-  def append(df: DataFrame, raCol: String, decCol: String, idCol: String,
-             outputDir: String, catname: String): PartitionMap = {
+  private[catalog] def append(df: DataFrame, layout: CatalogLayout): PartitionMap = {
     val spark = df.sparkSession
-    val layout = CatalogLayout(outputDir, catname)
     // complete any crashed repartition commit FIRST (writers
     // serialize, so a pending journal here means the writer died):
     // without this, rows appended under the stale import_hist land in
     // the journal's doomed split dirs and the eventual roll-forward
     // would delete them — the one write path that could lose data
-    recoverRepartition(spark, outputDir, catname)
+    recoverRepartition(spark, layout)
     // drop any stale cached listing BEFORE reading rank offsets — a
     // listing cached before an external writer's files landed would
     // mint colliding _IDs
     layout.invalidateTrees(spark)
     val meta = layout.readMeta(spark)
+    import meta.{raKw => raCol, decKw => decCol, idKw => idCol}
 
     val (ihPix, ihCnt) = CatalogLayout.readHist(spark, layout.importHist)
     val frozen = partitionMapFromSparseHist(ihPix, ihCnt, meta.orderK, meta.pixThreshold)
@@ -255,9 +255,9 @@ object HipsPartitioner {
 
     def ids(existing: DataFrame) = Some(CatalogLayout.SpatialIds(raCol, decCol, idCol, Some(existing)))
     CatalogLayout.writeTree(withPartitionColumns(df, raCol, decCol, frozen), layout.catalogTree, "append",
-      ids(HipsCatalog.load(spark, outputDir, catname)))
+      ids(layout.load(spark)))
     CatalogLayout.writeTree(marginRows(df, raCol, decCol, frozen, meta.marginDeg, meta.exactMargin),
-      layout.neighborTree, "append", ids(HipsCatalog.loadNeighbors(spark, outputDir, catname)))
+      layout.neighborTree, "append", ids(layout.loadNeighbors(spark)))
     // the session FileStatusCache still holds the PRE-append listings
     // of partition dirs that already existed — without invalidation a
     // same-session reader sees only the old files of old dirs (new
@@ -316,15 +316,14 @@ object HipsPartitioner {
    *    each idempotent, so replaying them completes the rewrite;
    *  - a concurrent reader during the commit window sees transient
    *    duplicates rather than a gap (new sub-tile dirs land before
-   *    their old dir is deleted); [[HipsCatalog.load]] warns loudly
+   *    their old dir is deleted); [[CatalogLayout.load]] warns loudly
    *    when a journal is present so a crashed writer's lingering
    *    duplicates are detected rather than silently double-counted.
    */
-  def repartition(spark: SparkSession, outputDir: String, catname: String): PartitionMap = {
-    val layout = CatalogLayout(outputDir, catname)
+  private[catalog] def repartition(spark: SparkSession, layout: CatalogLayout): PartitionMap = {
     // complete any crashed prior commit / discard pre-commit debris
     // BEFORE reading layout state — the repaired tree is the basis
-    recoverRepartition(spark, outputDir, catname)
+    recoverRepartition(spark, layout)
     val meta = layout.readMeta(spark)
     import meta.{orderK, raKw => raCol, decKw => decCol, idKw => idCol}
 
@@ -389,7 +388,7 @@ object HipsPartitioner {
     // resulting rank gaps are harmless; uniqueness is the contract)
     CatalogLayout.writeTree(restricted, layout.stagedTree("neighbor"), "overwrite",
       Some(CatalogLayout.SpatialIds(raCol, decCol, idCol,
-        Some(HipsCatalog.loadNeighbors(spark, outputDir, catname)))))
+        Some(layout.loadNeighbors(spark)))))
 
     // COMMIT POINT: journal the staged sub-tile dirs + doomed old dirs.
     // Before the journal lands a crash leaves the old layout
@@ -402,7 +401,7 @@ object HipsPartitioner {
     layout.commitJournal(spark, split, staged)
 
     // 3+4) rename staged dirs in, drop old dirs, re-freeze, drop journal
-    commitRepartition(spark, outputDir, catname)
+    commitRepartition(spark, layout)
   }
 
   /**
@@ -413,14 +412,14 @@ object HipsPartitioner {
    * commit point — the old dirs are untouched and authoritative, so
    * the debris is discarded. Returns true iff a pending commit was
    * found and completed. Run automatically at the start of every
-   * [[repartition]]; callers seeing [[HipsCatalog.load]]'s journal
-   * warning should invoke this directly.
+   * [[repartition]] and [[append]]; callers seeing
+   * [[CatalogLayout.load]]'s journal warning run it through
+   * [[Catalog.recoverRepartition]].
    */
-  def recoverRepartition(spark: SparkSession, outputDir: String, catname: String): Boolean = {
-    val layout = CatalogLayout(outputDir, catname)
+  private[catalog] def recoverRepartition(spark: SparkSession, layout: CatalogLayout): Boolean = {
     val fsys = CatalogLayout.fs(spark, layout.root)
     val pending = fsys.exists(new Path(layout.journal))
-    if (pending) commitRepartition(spark, outputDir, catname)
+    if (pending) commitRepartition(spark, layout)
     fsys.delete(new Path(layout.stage), true)
     fsys.delete(new Path(s"${layout.journal}.tmp"), false)
     pending
@@ -437,9 +436,7 @@ object HipsPartitioner {
    * the basis that produced the staged layout); refresh meta; and only
    * then drop the journal + stage tree.
    */
-  private def commitRepartition(spark: SparkSession, outputDir: String,
-                                catname: String): PartitionMap = {
-    val layout = CatalogLayout(outputDir, catname)
+  private def commitRepartition(spark: SparkSession, layout: CatalogLayout): PartitionMap = {
     val fsys = CatalogLayout.fs(spark, layout.root)
     val (split, staged) = layout.readJournal(spark)
     staged.foreach { case (tree, o, p) =>
@@ -486,14 +483,13 @@ object HipsPartitioner {
    * Output is row-identical (including `_ID`) to a single-shot
    * [[write]] of the concatenated batches — asserted in ScalaTest.
    */
-  def writeResumable(spark: SparkSession, batches: Seq[Seq[String]],
-                     readBatch: Seq[String] => DataFrame,
-                     raCol: String, decCol: String, idCol: String,
-                     outputDir: String, catname: String,
-                     orderK: Int = 6, threshold: Long = 1000000L, marginDeg: Double = 0.1,
-                     cleanStaging: Boolean = false): PartitionMap = {
+  private[graft] def writeResumable(spark: SparkSession, batches: Seq[Seq[String]],
+                                    readBatch: Seq[String] => DataFrame,
+                                    raCol: String, decCol: String, idCol: String, layout: CatalogLayout,
+                                    orderK: Int, threshold: Long, marginDeg: Double,
+                                    cleanStaging: Boolean): PartitionMap = {
     requireOrderK(orderK)
-    val importDir = CatalogLayout(outputDir, catname).importDir
+    val importDir = layout.importDir
     val fs = new Path(importDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def done(dir: String) = fs.exists(new Path(s"$dir/_SUCCESS"))
 
@@ -554,213 +550,8 @@ object HipsPartitioner {
     val pm = partitionMapFromSparseHist(pix, cnt, orderK, threshold)
 
     val staged = spark.read.parquet(batches.indices.map(stageDir): _*)
-    writeWithMap(staged, pm, raCol, decCol, idCol, outputDir, catname, threshold, marginDeg,
-      exactMargin = false)
+    writeWithMap(staged, pm, raCol, decCol, idCol, layout, threshold, marginDeg, exactMargin = false)
     if (cleanStaging) fs.delete(new Path(importDir), true)
     pm
-  }
-}
-
-/**
- * Reader for a graft/HiPSCat-style partitioned catalog
- * (reference: hipscat/catalog.py Catalog.load + cone_search pruning).
- */
-object HipsCatalog {
-
-  /** Load the full catalog dataframe (hive partition columns included).
-   *  A lingering repartition journal means a writer crashed mid-commit
-   *  (old + new sub-tile dirs may BOTH be visible = duplicate rows) —
-   *  warn loudly and point at the repair path rather than silently
-   *  double-counting; an ACTIVE repartition's commit window triggers
-   *  the same warning, which is the documented transient-duplicates
-   *  read behavior. */
-  def load(spark: SparkSession, outputDir: String, catname: String): DataFrame = {
-    val layout = CatalogLayout(outputDir, catname)
-    if (CatalogLayout.exists(spark, layout.journal))
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"catalog $catname has a pending repartition commit (${layout.journal}): rows in split tiles " +
-          "may appear twice until the commit finishes — if no repartition is running, " +
-          "a writer crashed; run HipsPartitioner.recoverRepartition to roll it forward")
-    spark.read.parquet(layout.catalogTree)
-  }
-
-  /** Load the neighbor (margin) tree; empty DF with catalog schema if absent. */
-  def loadNeighbors(spark: SparkSession, outputDir: String, catname: String): DataFrame = {
-    val p = CatalogLayout(outputDir, catname).neighborTree
-    if (CatalogLayout.exists(spark, p)) spark.read.parquet(p)
-    else load(spark, outputDir, catname).limit(0)
-  }
-
-  /**
-   * Partition grid of a written catalog (SPARSE tiling, see
-   * [[graft.functions.PartitionGrid]]), reconstructed from the hive
-   * directory structure — catalog/ AND neighbor/ trees, so sky
-   * regions that hold only margin replicas (empty home pixel,
-   * populated border) still resolve. Regions with no files at all
-   * become -1 gap tiles (no partition). Bounded by directory count.
-   */
-  def partitionGrid(spark: SparkSession, outputDir: String, catname: String, orderK: Int): PartitionGrid = {
-    val layout = CatalogLayout(outputDir, catname)
-    val tiles = for {
-      tree <- Seq(layout.catalogTree, layout.neighborTree)
-      (o, p) <- CatalogLayout.listTiles(spark, tree)
-    } yield (p << (2 * (orderK - o)), o)
-    PartitionGrid.fromTiles(orderK, tiles)
-  }
-
-  /**
-   * Catalog-level kNN cross-match consuming the PERSISTED margin
-   * cache — the reference's stored-neighbor semantics
-   * (catalog.py:144 cross_match + dask_utils.py:367): per right-
-   * catalog partition pixel, candidates are that pixel's catalog
-   * rows plus its neighbor-file rows; left rows are assigned to the
-   * right catalog's partition pixel containing them (the hierarchy
-   * alignment of util.map_catalog_hips, as one equi-join key).
-   * No per-row disc cover at query time — that work was done once
-   * at write time. Like the reference, matches beyond the stored
-   * margin radius are not found: choose marginDeg >= dthresh at
-   * write time for exactness (asserted in ScalaTest). Only the keying
-   * is the stored path's own; the ranking is the in-flight match's
-   * ([[graft.operators.Spatial.nearestK]]).
-   */
-  def crossMatchStored(spark: SparkSession, outputDir: String,
-                       leftCat: String, rightCat: String,
-                       leftRa: String, leftDec: String, leftId: String,
-                       rightRa: String, rightDec: String, rightId: String,
-                       k: Int, dthreshDeg: Double, orderK: Int,
-                       rightPrefix: String = "r_", leftPrefix: String = "",
-                       leftCols: Seq[String] = Nil, rightCols: Seq[String] = Nil): DataFrame = {
-    // assign each left row to the RIGHT catalog's partition pixel —
-    // codegen kernel over the broadcast grid (was a Scala UDF in r1).
-    // The join key is the PACKED (order << 48 | pix) value: a bare
-    // pixel number is ambiguous across orders in an adaptive map
-    // ((2, 5) and (3, 5) can coexist), packing removes the hazard.
-    val bc = spark.sparkContext.broadcast(partitionGrid(spark, outputDir, rightCat, orderK))
-    // column selection is applied BEFORE the join, on both stored
-    // sides, so the pruning reaches the parquet scans (ReadSchema) —
-    // ra/dec/id are always kept (util.py:276 validate_user_input_cols)
-    // left hive partition columns (Norder/Dir/Npix) are dropped before
-    // prefixing, mirroring prep() on the right — otherwise an unpruned
-    // call leaks `{cat}.Norder` etc. asymmetrically into the output
-    val l0 = load(spark, outputDir, leftCat).drop(CatalogLayout.TileCols: _*)
-    val lSel =
-      if (leftCols.isEmpty) l0
-      else l0.select((leftCols ++ Seq(leftRa, leftDec, leftId)).distinct.map(col): _*)
-    val lm0 = lSel.withColumn("__jpix", graft.functions.native.packedPartitionPixel(
-      col(leftRa), col(leftDec), orderK, bc))
-    val lm = lm0.columns.filterNot(_ == "__jpix")
-      .foldLeft(lm0)((d, c) => d.withColumnRenamed(c, leftPrefix + c))
-
-    def prep(df: DataFrame): DataFrame = {
-      val sel =
-        if (rightCols.isEmpty) df
-        else df.select((rightCols ++ Seq(rightRa, rightDec, rightId) ++ CatalogLayout.TileCols)
-          .distinct.map(col): _*)
-      val cols = sel.columns.filterNot(CatalogLayout.TileCols.contains)
-      sel.select((cols.map(col) :+
-        shiftleft(col("Norder").cast("long"), 48).bitwiseOR(col("Npix")).as("__jpix")): _*)
-    }
-    // right candidates per pixel: home rows + stored margin replicas
-    val r0 = prep(load(spark, outputDir, rightCat))
-      .unionByName(prep(loadNeighbors(spark, outputDir, rightCat)))
-    val rp = r0.columns.filterNot(_ == "__jpix").foldLeft(r0)((d, c) => d.withColumnRenamed(c, rightPrefix + c))
-
-    // prefixed names may contain '.' (the reference's delim), which
-    // col() would parse as struct access — backtick-quote them
-    def qc(name: String) = col("`" + name + "`")
-    val joined = lm.join(rp, "__jpix")
-      .withColumn("_DIST", sphere.gcDist(qc(leftPrefix + leftRa), qc(leftPrefix + leftDec),
-        qc(rightPrefix + rightRa), qc(rightPrefix + rightDec)))
-      .filter(col("_DIST") < dthreshDeg)
-    graft.operators.Spatial.nearestK(joined, leftPrefix + leftId, rightPrefix + rightId, k)
-      // match-partition provenance, as in the in-flight crossMatchKnn
-      // and the reference output (catalog.py:232 hips_k/hips_pix)
-      .withColumn("hips_k", shiftright(col("__jpix"), 48).cast("int"))
-      .withColumn("hips_pix", col("__jpix").bitwiseAND(lit(0xffffffffffffL)))
-      .drop("__jpix")
-  }
-
-  /** The pruning machinery shared by every stored-catalog search:
-   *  column-pruned scan restricted to partitions overlapping the
-   *  bounding cone.
-   *
-   *  The disc cover is computed at an ADAPTIVE order: the finest
-   *  order <= orderK whose expected cover stays <= ~8k pixels, so a
-   *  wide query (a full-RA dec band gives a 180-deg bounding cone)
-   *  cannot blow up the driver-side candidate list no matter how
-   *  fine the catalog's partition order is. A partition at order o
-   *  overlaps the disc iff its coverOrder-aligned pixel does:
-   *  ancestors for o <= coverOrder (InSet on rebinned cover),
-   *  descendants via a constant shift for o > coverOrder — one small
-   *  InSet per order, all over partition columns, so file-level
-   *  pruning still applies. Coarsening only loses selectivity, never
-   *  rows. */
-  private def prunedScan(spark: SparkSession, outputDir: String, catname: String,
-                         raDeg: Double, decDeg: Double, radiusDeg: Double, orderK: Int,
-                         columns: Seq[String]): DataFrame = {
-    val discFrac = (1 - math.cos(math.toRadians(math.min(radiusDeg, 180.0)))) / 2
-    val coverOrder = (0 to orderK).reverse
-      .find(o => discFrac * Healpix.npix(o) <= 8192 || o == 0).getOrElse(0)
-    val cover = Healpix.queryDiscCover(coverOrder, raDeg, decDeg, radiusDeg)
-    val coverBoxed = cover.map(Long.box).toSeq
-    val pred = (0 to orderK).map { o =>
-      if (o <= coverOrder) {
-        val anc = cover.map(_ >> (2 * (coverOrder - o))).distinct.map(Long.box).toSeq
-        col("Norder") === o && col("Npix").isin(anc: _*)
-      } else
-        col("Norder") === o && shiftright(col("Npix"), 2 * (o - coverOrder)).isin(coverBoxed: _*)
-    }.reduce(_ || _)
-    val df = load(spark, outputDir, catname)
-    // user column selection BEFORE any predicate so the pruning
-    // reaches the parquet scan (caller guarantees ra/dec present;
-    // Catalog.* appends ra/dec/id per the reference contract)
-    val sel = if (columns.isEmpty) df
-      else df.select((columns ++ Seq("Norder", "Npix")).distinct.map(col): _*)
-    sel.filter(pred)
-  }
-
-  /** The hive columns were only needed for the partition filter — if
-   *  the user picked columns and didn't ask for them, drop them. */
-  private def dropHive(df: DataFrame, columns: Seq[String]): DataFrame =
-    Seq("Norder", "Npix").filterNot(c => columns.isEmpty || columns.contains(c))
-      .foldLeft(df)(_.drop(_))
-
-  /**
-   * Cone search with *file-level* pruning: the hive partition filter
-   * on (Norder, Npix) restricts the scan to overlapping partitions
-   * before any row is read (catalog.py:65 semantics).
-   */
-  def coneSearch(spark: SparkSession, outputDir: String, catname: String,
-                 raCol: String, decCol: String,
-                 raDeg: Double, decDeg: Double, radiusDeg: Double, orderK: Int,
-                 columns: Seq[String] = Nil): DataFrame = {
-    val filtered = prunedScan(spark, outputDir, catname, raDeg, decDeg, radiusDeg, orderK, columns)
-      .withColumn("_DIST", graft.functions.sphere.gcDist(col(raCol), col(decCol), lit(raDeg), lit(decDeg)))
-      .filter(col("_DIST") < radiusDeg)
-    dropHive(filtered, columns)
-  }
-
-  /** Stored-path box search: partition pruning via the box's provable
-   *  bounding cone, then the exact wrap-aware range predicate. */
-  def boxSearch(spark: SparkSession, outputDir: String, catname: String,
-                raCol: String, decCol: String,
-                raLo: Double, raHi: Double, decLo: Double, decHi: Double, orderK: Int,
-                columns: Seq[String] = Nil): DataFrame = {
-    val ((cra, cdec), radius) = graft.operators.Spatial.boxBoundingCone(raLo, raHi, decLo, decHi)
-    dropHive(graft.operators.Spatial.boxSearch(
-      prunedScan(spark, outputDir, catname, cra, cdec, radius, orderK, columns),
-      raCol, decCol, raLo, raHi, decLo, decHi), columns)
-  }
-
-  /** Stored-path convex polygon search: partition pruning via the
-   *  polygon's bounding cone, then the exact gnomonic half-plane test. */
-  def polygonSearch(spark: SparkSession, outputDir: String, catname: String,
-                    raCol: String, decCol: String,
-                    vertices: Seq[(Double, Double)], orderK: Int,
-                    columns: Seq[String] = Nil): DataFrame = {
-    val ((cra, cdec), radius, inside) =
-      graft.operators.Spatial.polygonPredicate(raCol, decCol, vertices)
-    dropHive(prunedScan(spark, outputDir, catname, cra, cdec, radius, orderK, columns)
-      .filter(inside), columns)
   }
 }

@@ -33,8 +33,6 @@ final case class PartitionGrid(orderK: Int, tileStarts: Array[Long], tileOrders:
     }
     tileOrders(lo)
   }
-
-  def nTiles: Int = tileOrders.count(_ >= 0)
 }
 
 object PartitionGrid {

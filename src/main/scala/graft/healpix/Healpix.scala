@@ -491,16 +491,4 @@ object Healpix {
     }
     frontier // unreachable
   }
-
-  /**
-   * Disc cover for codegen / UDF call sites: same as queryDiscCover
-   * but boxed for Spark array columns.
-   */
-  def discCoverBoxed(order: Int, raDeg: Double, decDeg: Double, radiusDeg: Double): Array[java.lang.Long] = {
-    val a = queryDiscCover(order, raDeg, decDeg, radiusDeg)
-    val out = new Array[java.lang.Long](a.length)
-    var i = 0
-    while (i < a.length) { out(i) = java.lang.Long.valueOf(a(i)); i += 1 }
-    out
-  }
 }

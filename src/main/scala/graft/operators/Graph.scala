@@ -1029,11 +1029,22 @@ object Graph {
     // fixed-point counts ride the checkpoint jobs as OBSERVED metrics
     // (the connectedComponents phi pattern): the old per-round
     // `pairs.count()` + `grown.count()` pair re-ran two jobs per round
-    // on data the truncate had just materialized
-    def truncateCounted(df: DataFrame): (DataFrame, Long) = {
+    // on data the truncate had just materialized. The same observation
+    // counts (n, n) pairs: a node that is its own ancestor means the
+    // parent relation has a cycle — the forest check costs no job. On
+    // a cycle the new checkpoint and the `live` ones are released
+    // before the throw.
+    def truncateCounted(df: DataFrame, live: DataFrame*): (DataFrame, Long) = {
       val obs = new org.apache.spark.sql.Observation()
-      val ck = truncate(df.observe(obs, count(lit(1)).as("n")))
-      (ck, obs.get("n").asInstanceOf[Long])
+      val ck = truncate(df.observe(obs, count(lit(1)).as("n"),
+        count(when(col("node") === col("anc"), 1)).as("self")))
+      val m = obs.get
+      if (m("self").asInstanceOf[Long] > 0) {
+        (ck +: live).distinct.foreach(release)
+        throw new IllegalArgumentException("ancestorPairs: the parent relation contains a cycle " +
+          "(a node is its own ancestor) — the input must be a forest")
+      }
+      (ck, m("n").asInstanceOf[Long])
     }
     val base = parents.select(col(childCol).cast("long").as("node"),
       col(parentCol).cast("long").as("anc"))
@@ -1049,7 +1060,7 @@ object Graph {
       // new ancestors: everything reachable THROUGH the current jump
       val step = pairs.join(jump.withColumnRenamed("node", "anc"), Seq("anc"))
         .select(col("node"), col("jump").as("anc"))
-      val (grown, nGrown) = truncateCounted(pairs.unionByName(step).distinct())
+      val (grown, nGrown) = truncateCounted(pairs.unionByName(step).distinct(), pairsCk, jumpCk)
       if (nGrown == nPairs) {
         release(grown)
         done = true
@@ -1070,9 +1081,9 @@ object Graph {
     // converged in round 0 ⇒ jump still shares pairs' RDD — the result
     if (jumpCk ne pairsCk) release(jumpCk)
     // exiting via maxRounds without the fixpoint means depth >
-    // 2^maxRounds — or a CYCLE (forest-contract violation), which
-    // never converges. A silently truncated closure must not pass as
-    // complete (ADVICE r10), nor keep its blocks.
+    // 2^maxRounds — or a cycle too long to close within the rounds
+    // (shorter cycles fail the forest check above). A silently
+    // truncated closure must not pass as complete, nor keep its blocks.
     if (!done) release(pairsCk)
     require(done, s"ancestorPairs: no fixpoint after $maxRounds rounds — " +
       s"either the hierarchy is deeper than 2^$maxRounds (raise maxRounds) " +

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.sphere
 import graft.healpix.Healpix
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,31 +37,14 @@ object Spatial {
     val cover = Healpix.queryDiscCover(order, raDeg, decDeg, radiusDeg)
     val pix: Column = pixCol.map(col).getOrElse(sphere.hpix(col(raCol), col(decCol), order))
     val pruned = df.filter(pix.isin(cover.map(Long.box).toIndexedSeq: _*))
-    // conservative bounding-box prefilters: redundant with the exact
-    // distance filter, but when ra/dec are STORED columns these are
-    // plain range predicates that reach the parquet scan and prune
+    // the optimizer rule's conservative bounding box, applied here too
+    // so sessions without GraftExtensions keep it: redundant with the
+    // exact distance filter, but when ra/dec are STORED columns these
+    // are plain range predicates that reach the parquet scan and prune
     // row groups via min/max stats (decisive at 100 TB)
-    val decLo = decDeg - radiusDeg
-    val decHi = decDeg + radiusDeg
-    val boxed0 = pruned.filter(col(decCol) >= decLo && col(decCol) <= decHi)
-    val maxAbsDec = math.max(math.abs(decLo), math.abs(decHi))
-    val sinRatio = math.sin(math.toRadians(radiusDeg)) / math.cos(math.toRadians(math.min(89.9, maxAbsDec)))
-    val boxed =
-      if (maxAbsDec < 89.0 && sinRatio < 1.0) {
-        // exact meridian bound: max |Δra| = asin(sin r / cos decMax); +1e-6 deg guard.
-        // RA is periodic and the stored convention may be [0,360) or
-        // [-180,180): admit the k in {-1,0,1} aliases as a disjunction
-        // of plain ranges (scan-pushable, unlike pmod(ra, 360)).
-        val ra0n = ((raDeg % 360) + 360) % 360
-        val raHalf = math.toDegrees(math.asin(sinRatio)) + 1e-6
-        if (ra0n - raHalf > 0 && ra0n + raHalf < 360) { // skip on wrap-around
-          def in(lo: Double, hi: Double): Column = col(raCol) >= lo && col(raCol) <= hi
-          boxed0.filter(in(ra0n - raHalf, ra0n + raHalf) ||
-            in(ra0n - raHalf - 360, ra0n + raHalf - 360) ||
-            in(ra0n - raHalf + 360, ra0n + raHalf + 360))
-        } else boxed0
-      } else boxed0
-    boxed
+    val box = graft.plans.SpatialFilterPushdown.bounds(
+      GraftBridge.expression(col(raCol)), GraftBridge.expression(col(decCol)), raDeg, decDeg, radiusDeg)
+    box.map(GraftBridge.column).reduceOption(_ && _).fold(pruned)(pruned.filter)
       .withColumn("_DIST", sphere.gcDist(col(raCol), col(decCol), lit(raDeg), lit(decDeg)))
       .filter(col("_DIST") < radiusDeg)
   }
@@ -98,7 +81,7 @@ object Spatial {
 
   /** The polygon machinery alone: (bounding-cone center, bounding-cone
    *  radius, exact inside predicate) — shared by the in-flight search
-   *  above and the stored-catalog pruned search (HipsCatalog). */
+   *  above and the stored-catalog pruned search (`Catalog.polygonSearch`). */
   private[graft] def polygonPredicate(raCol: String, decCol: String,
                                       vertices: Seq[(Double, Double)]): ((Double, Double), Double, org.apache.spark.sql.Column) = {
     require(vertices.length >= 3, "polygon needs >= 3 vertices")
@@ -244,7 +227,7 @@ object Spatial {
   /**
    * The nearest-k ranker of every kNN match (in-flight
    * [[crossMatchKnn]] and the stored-margin
-   * `HipsCatalog.crossMatchStored`): per `leftId`, the `k` candidates
+   * `Catalog.crossMatch`): per `leftId`, the `k` candidates
    * of least (round(_DIST, 9), rightId) — the rounding keeps the order
    * stable across JVM-vs-libm last-ulp trig differences. Keeps the
    * input's column order, drops `__salt`, appends `_RANK`.

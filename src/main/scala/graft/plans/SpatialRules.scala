@@ -61,7 +61,9 @@ object SpatialFilterPushdown extends Rule[LogicalPlan] {
 
   private def lit(d: Double): Expression = Literal(d)
 
-  private def bounds(ra: Expression, dec: Expression, ra0: Double, dec0: Double, r: Double): Seq[Expression] = {
+  /** Conservative dec / ra range bounds of the cone (ra0, dec0, r)
+   *  over `ra`/`dec`: shared with `Spatial.coneSearch`'s prefilter. */
+  private[graft] def bounds(ra: Expression, dec: Expression, ra0: Double, dec0: Double, r: Double): Seq[Expression] = {
     // only rewrite when the operands are plain references/cheap
     // expressions over attributes (else duplicating them may repeat work)
     if (ra.references.isEmpty || dec.references.isEmpty) return Nil

@@ -133,4 +133,14 @@ class CacheHygieneSpec extends SparkSpecBase {
     }
     assert(persistedIds -- before == Set.empty, "no checkpoint may stay persisted after the throw")
   }
+
+  test("ancestorPairs frees its pair and jump checkpoints when the parent relation has a cycle") {
+    import spark.implicits._
+    val before = persistedIds
+    val cyclic = Seq((1L, 2L), (2L, 1L), (3L, 1L)).toDF("node", "parent")
+    intercept[IllegalArgumentException] {
+      graft.operators.Graph.ancestorPairs(cyclic, "node", "parent")
+    }
+    assert(persistedIds -- before == Set.empty, "no checkpoint may stay persisted after the throw")
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.catalog.{Catalog, HipsCatalog, HipsPartitioner}
+import graft.catalog.{Catalog, CatalogLayout, HipsPartitioner}
 import graft.functions.sphere
 import org.apache.spark.sql.functions._
 
@@ -10,6 +10,9 @@ class CatalogSpec extends SparkSpecBase {
     .withColumn("k", col("l_orderkey") * 8 + col("l_linenumber"))
     .withColumn("cra", sphere.raOf(col("k")))
     .withColumn("cdec", sphere.decOf(col("k")))
+
+  /** Rows the catalog's current density map counts (its meta's n_sources). */
+  private def nSources(cat: Catalog): Long = cat.densityMap().agg(sum("cnt")).first().getLong(0)
 
   test("adaptive partition map: every pixel assigned, dense regions subdivide") {
     val pm = HipsPartitioner.computePartitionMap(li, "cra", "cdec", orderK = 4, threshold = 500)
@@ -68,13 +71,15 @@ class CatalogSpec extends SparkSpecBase {
     // array); the sparse walk runs order 12 (201M sky pixels) with
     // driver state bounded by OCCUPIED pixels
     val out = java.nio.file.Files.createTempDirectory("graft_o12").toString
-    val pm = HipsPartitioner.write(li, "cra", "cdec", "k", out, "fine12",
+    val cat = Catalog.importFrom(li, out, "fine12", "cra", "cdec", "k",
       orderK = 12, threshold = 200, marginDeg = 0.1)
+    // the import's map: the same deterministic walk over the same rows
+    val pm = HipsPartitioner.computePartitionMap(li, "cra", "cdec", orderK = 12, threshold = 200)
     assert(pm.histPix.length <= li.count(), "sparse hist bounded by row count")
     assert(pm.grid.tileStarts.length.toLong < 40L * pm.histPix.length + 12,
       s"tiles ${pm.grid.tileStarts.length} must be data-bounded (occupied=${pm.histPix.length})")
     assert(pm.grid.tileOrders.forall(o => o >= 0 && o <= 12))
-    val cone = HipsCatalog.coneSearch(spark, out, "fine12", "cra", "cdec", 180.0, 0.0, 30.0, orderK = 12)
+    val cone = cat.coneSearch(180.0, 0.0, 30.0)
       .select("k").collect().map(_.getLong(0)).sorted
     val brute = li.withColumn("d", sphere.gcDist(col("cra"), col("cdec"), lit(180.0), lit(0.0)))
       .filter(col("d") < 30.0).select("k").collect().map(_.getLong(0)).sorted
@@ -84,13 +89,13 @@ class CatalogSpec extends SparkSpecBase {
 
   test("write + load round-trips all rows; hive cone search equals brute force") {
     val out = java.nio.file.Files.createTempDirectory("graft_cat").toString
-    HipsPartitioner.write(li, "cra", "cdec", "k", out, "litest", orderK = 4, threshold = 500, marginDeg = 1.0)
+    val cat = Catalog.importFrom(li, out, "litest", "cra", "cdec", "k", orderK = 4, threshold = 500, marginDeg = 1.0)
 
-    val loaded = HipsCatalog.load(spark, out, "litest")
+    val loaded = cat.load()
     assert(loaded.count() == li.count())
 
     for (radius <- Seq(10.0, 30.0)) {
-      val cone = HipsCatalog.coneSearch(spark, out, "litest", "cra", "cdec", 180.0, 0.0, radius, orderK = 4)
+      val cone = cat.coneSearch(180.0, 0.0, radius)
         .select("k").collect().map(_.getLong(0)).sorted
       val brute = li.withColumn("d", sphere.gcDist(col("cra"), col("cdec"), lit(180.0), lit(0.0)))
         .filter(col("d") < radius).select("k").collect().map(_.getLong(0)).sorted
@@ -101,15 +106,14 @@ class CatalogSpec extends SparkSpecBase {
     // equal the in-flight operators over the same rows — including an
     // ra-wrapping box
     for ((raLo, raHi, decLo, decHi) <- Seq((170.0, 190.0, -20.0, 20.0), (350.0, 10.0, -30.0, 5.0))) {
-      val stored = HipsCatalog.boxSearch(spark, out, "litest", "cra", "cdec",
-        raLo, raHi, decLo, decHi, orderK = 4).select("k").collect().map(_.getLong(0)).sorted
+      val stored = cat.boxSearch(raLo, raHi, decLo, decHi).select("k").collect().map(_.getLong(0)).sorted
       val inflight = graft.operators.Spatial.boxSearch(li, "cra", "cdec", raLo, raHi, decLo, decHi)
         .select("k").collect().map(_.getLong(0)).sorted
       assert(stored.toSeq == inflight.toSeq, s"box ($raLo,$raHi,$decLo,$decHi)")
       assert(stored.nonEmpty, "box parity test must actually cover rows")
     }
     val poly = Seq((150.0, -25.0), (210.0, -25.0), (210.0, 25.0), (150.0, 25.0))
-    val storedPoly = HipsCatalog.polygonSearch(spark, out, "litest", "cra", "cdec", poly, orderK = 4)
+    val storedPoly = cat.polygonSearch(poly)
       .select("k").collect().map(_.getLong(0)).sorted
     val inflightPoly = graft.operators.Spatial.polygonSearch(li, "cra", "cdec", poly)
       .select("k").collect().map(_.getLong(0)).sorted
@@ -151,16 +155,16 @@ class CatalogSpec extends SparkSpecBase {
     // 49k-pixel sky; the adaptive cover coarsens instead) — both the
     // ancestor and the shifted-descendant pruning branches run here
     val out = java.nio.file.Files.createTempDirectory("graft_wide").toString
-    HipsPartitioner.write(li, "cra", "cdec", "k", out, "wide", orderK = 6, threshold = 200, marginDeg = 0.5)
+    val wide = Catalog.importFrom(li, out, "wide", "cra", "cdec", "k", orderK = 6, threshold = 200, marginDeg = 0.5)
 
     // full-RA dec band: bounding cone radius = 180 deg
-    val band = HipsCatalog.boxSearch(spark, out, "wide", "cra", "cdec", 0.0, 360.0, -10.0, 10.0, orderK = 6)
+    val band = wide.boxSearch(0.0, 360.0, -10.0, 10.0)
       .select("k").collect().map(_.getLong(0)).sorted
     val bandBrute = li.filter(col("cdec") >= -10.0 && col("cdec") <= 10.0)
       .select("k").collect().map(_.getLong(0)).sorted
     assert(band.toSeq == bandBrute.toSeq && band.nonEmpty)
 
-    val cone = HipsCatalog.coneSearch(spark, out, "wide", "cra", "cdec", 180.0, 0.0, 60.0, orderK = 6)
+    val cone = wide.coneSearch(180.0, 0.0, 60.0)
       .select("k").collect().map(_.getLong(0)).sorted
     val coneBrute = li.withColumn("d", sphere.gcDist(col("cra"), col("cdec"), lit(180.0), lit(0.0)))
       .filter(col("d") < 60.0).select("k").collect().map(_.getLong(0)).sorted
@@ -176,15 +180,17 @@ class CatalogSpec extends SparkSpecBase {
     val supp = spark.read.parquet(sf("sf0.001") + "/supplier.parquet")
       .withColumn("sra", sphere.raOf(col("s_suppkey")))
       .withColumn("sdec", sphere.decOf(col("s_suppkey")))
-    HipsPartitioner.write(cust, "cra", "cdec", "c_custkey", out, "c1", orderK = 2, threshold = 100, marginDeg = 12.0)
-    HipsPartitioner.write(supp, "sra", "sdec", "s_suppkey", out, "c2", orderK = 2, threshold = 100, marginDeg = 12.0)
+    val c1 = Catalog.importFrom(cust, out, "c1", "cra", "cdec", "c_custkey",
+      orderK = 2, threshold = 100, marginDeg = 12.0)
+    val c2 = Catalog.importFrom(supp, out, "c2", "sra", "sdec", "s_suppkey",
+      orderK = 2, threshold = 100, marginDeg = 12.0)
 
-    // k = 1 ranks through the aggregate path, k = 2 through the window
-    val grid = HipsCatalog.partitionGrid(spark, out, "c2", 2)
+    // k = 1 ranks through the aggregate path, k = 2 through the window;
+    // every matched left row lies in an occupied tile of c2's import map
+    val grid = HipsPartitioner.computePartitionMap(supp, "sra", "sdec", orderK = 2, threshold = 100).grid
     for (k <- Seq(1, 2)) {
-      val storedDf = HipsCatalog.crossMatchStored(spark, out, "c1", "c2",
-        "cra", "cdec", "c_custkey", "sra", "sdec", "s_suppkey", k = k, dthreshDeg = 10.0, orderK = 2)
-      val stored = storedDf.select("c_custkey", "r_s_suppkey")
+      val storedDf = c1.crossMatch(c2, k, dthreshDeg = 10.0)
+      val stored = storedDf.select("`c1.c_custkey`", "`c2.s_suppkey`")
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
 
       val inflight = graft.operators.Spatial.crossMatchKnn(cust, supp,
@@ -197,7 +203,7 @@ class CatalogSpec extends SparkSpecBase {
 
       // hips_k/hips_pix carry the match partition (the right catalog's
       // adaptive pixel containing the left row) — reference catalog.py:232
-      storedDf.select("cra", "cdec", "hips_k", "hips_pix").collect().foreach { r =>
+      storedDf.select("`c1.cra`", "`c1.cdec`", "hips_k", "hips_pix").collect().foreach { r =>
         val pixK = graft.healpix.Healpix.ang2pixNest(2, r.getDouble(0), r.getDouble(1))
         val o = grid.order(pixK)
         assert(r.getInt(2) == o, s"hips_k mismatch at $r (k=$k)")
@@ -205,6 +211,39 @@ class CatalogSpec extends SparkSpecBase {
       }
     }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("crossMatch reads the other catalog from its own location") {
+    val outL = java.nio.file.Files.createTempDirectory("graft_xm_left").toString
+    val outR = java.nio.file.Files.createTempDirectory("graft_xm_right").toString
+    val cust = spark.read.parquet(sf("sf0.001") + "/customer.parquet")
+      .withColumn("cra", sphere.raOf(col("c_custkey")))
+      .withColumn("cdec", sphere.decOf(col("c_custkey")))
+    val supp = spark.read.parquet(sf("sf0.001") + "/supplier.parquet")
+      .withColumn("sra", sphere.raOf(col("s_suppkey")))
+      .withColumn("sdec", sphere.decOf(col("s_suppkey")))
+    val c1 = Catalog.importFrom(cust, outL, "c1", "cra", "cdec", "c_custkey",
+      orderK = 2, threshold = 100, marginDeg = 12.0)
+    val c2 = Catalog.importFrom(supp, outR, "c2", "sra", "sdec", "s_suppkey",
+      orderK = 2, threshold = 100, marginDeg = 12.0)
+    def check(label: String): Unit = for (k <- Seq(1, 2)) {
+      val stored = c1.crossMatch(c2, k, dthreshDeg = 10.0)
+        .select("`c1.c_custkey`", "`c2.s_suppkey`")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+      val inflight = graft.operators.Spatial.crossMatchKnn(cust, supp,
+        "cra", "cdec", "c_custkey", "sra", "sdec", "s_suppkey",
+        k = k, dthreshDeg = 10.0, leftPrefix = "", rightPrefix = "x_")
+        .select("c_custkey", "x_s_suppkey")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+      assert(stored.nonEmpty && stored.toSeq == inflight.toSeq, s"$label, k=$k")
+    }
+    check("no c2 at the left location")
+    // a different catalog under the same name next to c1 must not
+    // stand in for c2
+    Catalog.importFrom(supp.withColumn("sra", (col("sra") + 90.0) % 360.0), outL, "c2",
+      "sra", "sdec", "s_suppkey", orderK = 2, threshold = 100, marginDeg = 12.0)
+    check("decoy c2 at the left location")
+    Seq(outL, outR).foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
 
   test("polar caps + RA seam: stored cross-match equals brute force — zero lost matches") {
@@ -236,8 +275,8 @@ class CatalogSpec extends SparkSpecBase {
     val rDf = right.toSeq.toDF("rid", "rra", "rdec")
 
     val out = java.nio.file.Files.createTempDirectory("graft_polar").toString
-    HipsPartitioner.write(lDf, "lra", "ldec", "lid", out, "pl", orderK = 4, threshold = 4, marginDeg = 0.2)
-    HipsPartitioner.write(rDf, "rra", "rdec", "rid", out, "pr", orderK = 4, threshold = 4, marginDeg = 0.2)
+    val pl = Catalog.importFrom(lDf, out, "pl", "lra", "ldec", "lid", orderK = 4, threshold = 4, marginDeg = 0.2)
+    val pr = Catalog.importFrom(rDf, out, "pr", "rra", "rdec", "rid", orderK = 4, threshold = 4, marginDeg = 0.2)
 
     val brute = lDf.crossJoin(rDf)
       .withColumn("d", sphere.gcDist(col("lra"), col("ldec"), col("rra"), col("rdec")))
@@ -251,9 +290,8 @@ class CatalogSpec extends SparkSpecBase {
     val crossPole = brute.filter { case (l, r) => polarRing(l) && r - 100000L != l }
     assert(crossPole.nonEmpty, "through-pole pairs must exist for the margin to be exercised")
 
-    val stored = HipsCatalog.crossMatchStored(spark, out, "pl", "pr",
-      "lra", "ldec", "lid", "rra", "rdec", "rid", k = 10, dthreshDeg = dthresh, orderK = 4)
-      .select("lid", "r_rid").as[(Long, Long)].collect().toSet
+    val stored = pl.crossMatch(pr, 10, dthresh)
+      .select("`pl.lid`", "`pr.rid`").as[(Long, Long)].collect().toSet
     assert(stored == brute,
       s"stored cross-match lost ${(brute -- stored).size} matches (extra: ${(stored -- brute).size}) " +
         s"— missing: ${(brute -- stored).take(5)}")
@@ -347,8 +385,7 @@ class CatalogSpec extends SparkSpecBase {
     import sess.implicits._
     val pts = Seq((1L, 200.0, -75.0), (2L, 310.0, -88.0), (3L, 45.0, -60.0), (4L, 10.0, 40.0))
       .toDF("id", "ra", "dec")
-    HipsPartitioner.write(pts, "ra", "dec", "id", out, "south", orderK = 0, threshold = 10)
-    val rows = HipsCatalog.load(spark, out, "south")
+    val rows = Catalog.importFrom(pts, out, "south", "ra", "dec", "id", orderK = 0, threshold = 10).load()
       .select("id", "ra", "dec", "_ID").collect()
     assert(rows.length == 4)
     var sawNegative = false
@@ -377,14 +414,16 @@ class CatalogSpec extends SparkSpecBase {
     val batches = (0 until 3).map(i => Seq(s"$srcDir/part$i"))
 
     // single-shot reference output
-    HipsPartitioner.write(cust, "cra", "cdec", "c_custkey", out, "direct",
+    Catalog.importFrom(cust, out, "direct", "cra", "cdec", "c_custkey",
       orderK = 2, threshold = 100, marginDeg = 5.0)
-    // resumable output over the same rows
-    HipsPartitioner.writeResumable(spark, batches,
-      files => spark.read.parquet(files: _*),
-      "cra", "cdec", "c_custkey", out, "resumed", orderK = 2, threshold = 100, marginDeg = 5.0)
+    // resumable output over the same rows; `readBatch` is the import's
+    // source reader, counted below to prove completed batches are skipped
+    def resume(bs: Seq[Seq[String]], readBatch: Seq[String] => org.apache.spark.sql.DataFrame): Unit =
+      HipsPartitioner.writeResumable(spark, bs, readBatch, "cra", "cdec", "c_custkey",
+        CatalogLayout(out, "resumed"), orderK = 2, threshold = 100, marginDeg = 5.0, cleanStaging = false)
+    resume(batches, files => spark.read.parquet(files: _*))
 
-    def dump(cat: String) = HipsCatalog.load(spark, out, cat)
+    def dump(cat: String) = Catalog(spark, out, cat).load()
       .select(col("c_custkey"), col("_ID"), col("Norder").cast("int"), col("Npix").cast("long"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).sorted.toSeq
@@ -400,9 +439,7 @@ class CatalogSpec extends SparkSpecBase {
     }.toMap
     val before = stageMtimes
     var reads = 0
-    HipsPartitioner.writeResumable(spark, batches,
-      files => { reads += 1; spark.read.parquet(files: _*) },
-      "cra", "cdec", "c_custkey", out, "resumed", orderK = 2, threshold = 100, marginDeg = 5.0)
+    resume(batches, files => { reads += 1; spark.read.parquet(files: _*) })
     assert(reads == 0, "a completed batch must not be re-read from source")
     assert(stageMtimes == before, "staged parquet must not be rewritten on resume")
     assert(dump("resumed") == dump("direct"), "re-run output still identical")
@@ -410,17 +447,13 @@ class CatalogSpec extends SparkSpecBase {
     // partial resume: invalidate ONE batch's histogram marker — only
     // that histogram is recomputed, staging is still reused
     fs.delete(new org.apache.hadoop.fs.Path(s"$out/resumed/_import/hist/batch=1/_SUCCESS"), false)
-    HipsPartitioner.writeResumable(spark, batches,
-      files => { reads += 1; spark.read.parquet(files: _*) },
-      "cra", "cdec", "c_custkey", out, "resumed", orderK = 2, threshold = 100, marginDeg = 5.0)
+    resume(batches, files => { reads += 1; spark.read.parquet(files: _*) })
     assert(reads == 0, "hist recompute reads staging, not sources")
     assert(dump("resumed") == dump("direct"))
 
     // resuming with a different batch list must be refused, not mixed
     val e = intercept[IllegalArgumentException] {
-      HipsPartitioner.writeResumable(spark, batches.take(2),
-        files => spark.read.parquet(files: _*),
-        "cra", "cdec", "c_custkey", out, "resumed", orderK = 2, threshold = 100, marginDeg = 5.0)
+      resume(batches.take(2), files => spark.read.parquet(files: _*))
     }
     assert(e.getMessage.contains("DIFFERENT batch list"))
 
@@ -430,27 +463,21 @@ class CatalogSpec extends SparkSpecBase {
     Thread.sleep(1100) // ensure a distinct mtime even on coarse filesystems
     cust.filter(col("c_custkey") % 3 === 0).coalesce(1)
       .write.mode("overwrite").parquet(s"$srcDir/part0")
-    HipsPartitioner.writeResumable(spark, batches,
-      files => { reads += 1; spark.read.parquet(files: _*) },
-      "cra", "cdec", "c_custkey", out, "resumed", orderK = 2, threshold = 100, marginDeg = 5.0)
+    resume(batches, files => { reads += 1; spark.read.parquet(files: _*) })
     assert(reads == 0, "completed staging must not consult changed sources")
     assert(dump("resumed") == dump("direct"))
     // ...including a batch with ONLY its histogram marker missing: the
     // histogram recomputes from staged bytes, so changed sources must
     // not block it (staleness gates on the STAGE marker alone)
     fs.delete(new org.apache.hadoop.fs.Path(s"$out/resumed/_import/hist/batch=0/_SUCCESS"), false)
-    HipsPartitioner.writeResumable(spark, batches,
-      files => { reads += 1; spark.read.parquet(files: _*) },
-      "cra", "cdec", "c_custkey", out, "resumed", orderK = 2, threshold = 100, marginDeg = 5.0)
+    resume(batches, files => { reads += 1; spark.read.parquet(files: _*) })
     assert(reads == 0, "hist-only recompute must not consult changed sources")
     assert(dump("resumed") == dump("direct"))
     // ...but an UNSTAGED batch whose sources changed must be refused
     // (it would re-read the new bytes and silently mix generations)
     fs.delete(new org.apache.hadoop.fs.Path(s"$out/resumed/_import/stage/batch=0/_SUCCESS"), false)
     val e2 = intercept[IllegalArgumentException] {
-      HipsPartitioner.writeResumable(spark, batches,
-        files => spark.read.parquet(files: _*),
-        "cra", "cdec", "c_custkey", out, "resumed", orderK = 2, threshold = 100, marginDeg = 5.0)
+      resume(batches, files => spark.read.parquet(files: _*))
     }
     assert(e2.getMessage.contains("UNSTAGED batch 0"))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
@@ -461,13 +488,13 @@ class CatalogSpec extends SparkSpecBase {
     val out = java.nio.file.Files.createTempDirectory("graft_append").toString
     val first = li.filter(col("k") % 2 === 0)
     val second = li.filter(col("k") % 2 =!= 0)
-    HipsPartitioner.write(first, "cra", "cdec", "k", out, "grow", orderK = 4, threshold = 500, marginDeg = 1.0)
-    val pm = HipsPartitioner.append(second, "cra", "cdec", "k", out, "grow")
+    val grow = Catalog.importFrom(first, out, "grow", "cra", "cdec", "k", orderK = 4, threshold = 500, marginDeg = 1.0)
+      .append(second)
 
     // every row present exactly once; merged histogram is the full count
-    val loaded = HipsCatalog.load(spark, out, "grow")
+    val loaded = grow.load()
     assert(loaded.count() == li.count())
-    assert(pm.nSources == li.count())
+    assert(nSources(grow) == li.count())
     // k is NOT row-unique in the synthetic lineitem — compare distincts
     assert(loaded.select("k").distinct().count() == li.select("k").distinct().count())
 
@@ -476,7 +503,7 @@ class CatalogSpec extends SparkSpecBase {
       "appended _IDs must continue, not collide with, existing ranks")
 
     // cone search on the appended catalog equals brute force over ALL rows
-    val cone = HipsCatalog.coneSearch(spark, out, "grow", "cra", "cdec", 180.0, 0.0, 30.0, orderK = 4)
+    val cone = grow.coneSearch(180.0, 0.0, 30.0)
       .select("k").collect().map(_.getLong(0)).sorted
     val brute = li.withColumn("d", sphere.gcDist(col("cra"), col("cdec"), lit(180.0), lit(0.0)))
       .filter(col("d") < 30.0).select("k").collect().map(_.getLong(0)).sorted
@@ -492,10 +519,10 @@ class CatalogSpec extends SparkSpecBase {
     // catalog equals the in-flight cross-match over the union
     val cust = spark.read.parquet(sf("sf0.001") + "/customer.parquet")
       .withColumn("cra", sphere.raOf(col("c_custkey"))).withColumn("cdec", sphere.decOf(col("c_custkey")))
-    HipsPartitioner.write(cust, "cra", "cdec", "c_custkey", out, "qcat", orderK = 4, threshold = 500, marginDeg = 1.0)
-    val stored = HipsCatalog.crossMatchStored(spark, out, "qcat", "grow",
-        "cra", "cdec", "c_custkey", "cra", "cdec", "k", k = 2, dthreshDeg = 0.8, orderK = 4)
-      .select(col("c_custkey"), col("r_k"), col("_RANK")).collect()
+    val stored = Catalog.importFrom(cust, out, "qcat", "cra", "cdec", "c_custkey",
+        orderK = 4, threshold = 500, marginDeg = 1.0)
+      .crossMatch(grow, 2, dthreshDeg = 0.8)
+      .select(col("`qcat.c_custkey`"), col("`grow.k`"), col("_RANK")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
     val inflight = graft.operators.Spatial.crossMatchKnn(cust, li, "cra", "cdec", "c_custkey",
         "cra", "cdec", "k", k = 2, dthreshDeg = 0.8, leftPrefix = "", rightPrefix = "r_")
@@ -514,7 +541,7 @@ class CatalogSpec extends SparkSpecBase {
     // a SECOND append (even of duplicate rows) keeps _ID unique —
     // ranks continue from the post-first-append maxima
     cat.append(li.limit(137))
-    val again = HipsCatalog.load(spark, out, "grow")
+    val again = cat.load()
     assert(again.count() == li.count() + 137)
     assert(again.select("_ID").distinct().count() == li.count() + 137,
       "second append must continue ranks, not restart them")
@@ -527,9 +554,9 @@ class CatalogSpec extends SparkSpecBase {
     // ~8x past the import-time density, the frozen-map lifecycle gap
     val first = li.filter(col("k") % 8 === 1)
     val rest = li.filter(col("k") % 8 =!= 1)
-    HipsPartitioner.write(first, "cra", "cdec", "k", out, "rp", orderK = 4, threshold = 200, marginDeg = 1.0)
-    HipsPartitioner.append(rest, "cra", "cdec", "k", out, "rp")
-    val beforeIds = HipsCatalog.load(spark, out, "rp")
+    val grown = Catalog.importFrom(first, out, "rp", "cra", "cdec", "k", orderK = 4, threshold = 200, marginDeg = 1.0)
+      .append(rest)
+    val beforeIds = grown.load()
       .select("_ID").collect().map(_.getLong(0)).sorted.toSeq
     def tilesOf(cat: String): Set[(Int, Long)] = {
       val root = new java.io.File(s"$out/$cat/catalog")
@@ -541,29 +568,29 @@ class CatalogSpec extends SparkSpecBase {
     }
     val tilesBefore = tilesOf("rp")
 
-    val pm = HipsPartitioner.repartition(spark, out, "rp")
+    val rp = grown.repartition()
     // rows survive exactly, _IDs byte-preserved
-    val after = HipsCatalog.load(spark, out, "rp")
+    val after = rp.load()
     assert(after.count() == li.count())
     assert(after.select("_ID").collect().map(_.getLong(0)).sorted.toSeq == beforeIds,
       "repartition must preserve _IDs — the index is partitioning-independent")
-    assert(pm.nSources == li.count())
+    assert(nSources(rp) == li.count())
 
     // the refined layout equals a FRESH single-shot import of the
     // union (same histogram -> same deterministic walk), and it
     // actually refined something
-    HipsPartitioner.write(li, "cra", "cdec", "k", out, "rpfresh", orderK = 4, threshold = 200, marginDeg = 1.0)
+    val rpfresh = Catalog.importFrom(li, out, "rpfresh", "cra", "cdec", "k", orderK = 4, threshold = 200, marginDeg = 1.0)
     val tilesAfter = tilesOf("rp")
     assert(tilesAfter == tilesOf("rpfresh"), "repartitioned layout must equal a fresh import's")
     assert(tilesAfter != tilesBefore, "the 8x growth must have split at least one tile")
     // _ID rank ranges per order-14 pixel are dense 0..n-1 in both
     // builds, so the _ID multisets agree even though append order differed
-    val freshIds = HipsCatalog.load(spark, out, "rpfresh")
+    val freshIds = rpfresh.load()
       .select("_ID").collect().map(_.getLong(0)).sorted.toSeq
     assert(beforeIds == freshIds)
 
     // pruned cone search parity against brute force
-    val cone = HipsCatalog.coneSearch(spark, out, "rp", "cra", "cdec", 180.0, 0.0, 30.0, orderK = 4)
+    val cone = rp.coneSearch(180.0, 0.0, 30.0)
       .select("k").collect().map(_.getLong(0)).sorted
     val brute = li.withColumn("d", sphere.gcDist(col("cra"), col("cdec"), lit(180.0), lit(0.0)))
       .filter(col("d") < 30.0).select("k").collect().map(_.getLong(0)).sorted
@@ -573,13 +600,12 @@ class CatalogSpec extends SparkSpecBase {
     // NEW internal borders) equals the fresh import's and the in-flight
     val cust = spark.read.parquet(sf("sf0.001") + "/customer.parquet")
       .withColumn("cra", sphere.raOf(col("c_custkey"))).withColumn("cdec", sphere.decOf(col("c_custkey")))
-    HipsPartitioner.write(cust, "cra", "cdec", "c_custkey", out, "rq", orderK = 4, threshold = 500, marginDeg = 1.0)
-    def stored(cat: String) = HipsCatalog.crossMatchStored(spark, out, "rq", cat,
-        "cra", "cdec", "c_custkey", "cra", "cdec", "k", k = 2, dthreshDeg = 0.8, orderK = 4)
-      .select(col("c_custkey"), col("r_k"), col("_RANK")).collect()
+    val rq = Catalog.importFrom(cust, out, "rq", "cra", "cdec", "c_custkey", orderK = 4, threshold = 500, marginDeg = 1.0)
+    def stored(cat: Catalog) = rq.crossMatch(cat, 2, dthreshDeg = 0.8)
+      .select(col("`rq.c_custkey`"), col(s"`${cat.catname}.k`"), col("_RANK")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    val viaRepart = stored("rp")
-    assert(viaRepart == stored("rpfresh"), "margin caches must agree after repartition")
+    val viaRepart = stored(rp)
+    assert(viaRepart == stored(rpfresh), "margin caches must agree after repartition")
     val inflight = graft.operators.Spatial.crossMatchKnn(cust, li, "cra", "cdec", "c_custkey",
         "cra", "cdec", "k", k = 2, dthreshDeg = 0.8, leftPrefix = "", rightPrefix = "r_")
       .select(col("c_custkey"), col("r_k"), col("_RANK")).collect()
@@ -587,12 +613,12 @@ class CatalogSpec extends SparkSpecBase {
     assert(viaRepart == inflight && viaRepart.nonEmpty)
 
     // idempotent: a second repartition finds nothing to split
-    val pm2 = HipsPartitioner.repartition(spark, out, "rp")
-    assert(tilesOf("rp") == tilesAfter && pm2.nSources == li.count())
+    val rp2 = rp.repartition()
+    assert(tilesOf("rp") == tilesAfter && nSources(rp2) == li.count())
 
     // appends AFTER repartition assign under the REFINED frozen map
     Catalog(spark, out, "rp").append(li.limit(97))
-    val again = HipsCatalog.load(spark, out, "rp")
+    val again = Catalog(spark, out, "rp").load()
     assert(again.count() == li.count() + 97)
     assert(again.select("_ID").distinct().count() == li.count() + 97,
       "post-repartition append must continue ranks uniquely")
@@ -605,8 +631,8 @@ class CatalogSpec extends SparkSpecBase {
     val out = java.nio.file.Files.createTempDirectory("graft_repartcrash").toString
     val first = li.filter(col("k") % 8 === 1)
     val rest = li.filter(col("k") % 8 =!= 1)
-    HipsPartitioner.write(first, "cra", "cdec", "k", out, "rc", orderK = 4, threshold = 200, marginDeg = 1.0)
-    HipsPartitioner.append(rest, "cra", "cdec", "k", out, "rc")
+    val rc = Catalog.importFrom(first, out, "rc", "cra", "cdec", "k", orderK = 4, threshold = 200, marginDeg = 1.0)
+      .append(rest)
 
     def tiles(cat: String, tree: String): Set[(Int, Long)] = {
       val root = new File(s"$out/$cat/$tree")
@@ -624,8 +650,7 @@ class CatalogSpec extends SparkSpecBase {
     FileUtils.copyDirectory(new File(s"$out/rc"), new File(s"$out/rc2"))
     FileUtils.moveFile(new File(s"$out/rc2/rc_meta.json"), new File(s"$out/rc2/rc2_meta.json"))
     val tilesBefore = Map("catalog" -> tiles("rc", "catalog"), "neighbor" -> tiles("rc", "neighbor"))
-    HipsPartitioner.repartition(spark, out, "rc2")
-    val truthIds = HipsCatalog.load(spark, out, "rc2")
+    val truthIds = Catalog(spark, out, "rc2").repartition().load()
       .select("_ID").collect().map(_.getLong(0)).sorted.toSeq
 
     // --- crash BEFORE the commit point: stage debris + tmp journal,
@@ -634,12 +659,12 @@ class CatalogSpec extends SparkSpecBase {
     junk.mkdirs()
     FileUtils.writeStringToFile(new File(junk, "part-junk.parquet"), "junk", "UTF-8")
     FileUtils.writeStringToFile(new File(s"$out/rc/_repartition_journal.json.tmp"), "{", "UTF-8")
-    assert(!HipsPartitioner.recoverRepartition(spark, out, "rc"),
+    assert(!rc.recoverRepartition(),
       "no journal => no pending commit to roll forward")
     assert(!new File(s"$out/rc/_repartition_stage").exists(), "pre-commit stage debris must be discarded")
     assert(!new File(s"$out/rc/_repartition_journal.json.tmp").exists())
     assert(tiles("rc", "catalog") == tilesBefore("catalog"), "pre-commit crash leaves the old layout authoritative")
-    assert(HipsCatalog.load(spark, out, "rc").count() == li.count())
+    assert(rc.load().count() == li.count())
 
     // --- crash AFTER the commit point: reconstruct the committed state
     // (complete stage tree + journal, old dirs still live) from the
@@ -668,26 +693,26 @@ class CatalogSpec extends SparkSpecBase {
     FileUtils.copyDirectory(new File(s"$out/rc"), new File(s"$out/rc4"))
     FileUtils.moveFile(new File(s"$out/rc4/rc_meta.json"), new File(s"$out/rc4/rc4_meta.json"))
 
-    assert(HipsPartitioner.recoverRepartition(spark, out, "rc"), "journal present => roll forward")
+    assert(rc.recoverRepartition(), "journal present => roll forward")
     assert(!new File(s"$out/rc/_repartition_journal.json").exists())
     assert(!new File(s"$out/rc/_repartition_stage").exists())
     for (tree <- Seq("catalog", "neighbor"))
       assert(tiles("rc", tree) == tiles("rc2", tree), s"recovered $tree layout must equal the clean run's")
-    val rec = HipsCatalog.load(spark, out, "rc")
+    val rec = rc.load()
     assert(rec.count() == li.count(), "no duplicate rows after roll-forward")
     assert(rec.select("_ID").collect().map(_.getLong(0)).sorted.toSeq == truthIds)
 
     // import_hist was re-frozen: a follow-up repartition finds nothing
-    val pmAfter = HipsPartitioner.repartition(spark, out, "rc")
-    assert(tiles("rc", "catalog") == tiles("rc2", "catalog") && pmAfter.nSources == li.count())
+    val rcAfter = rc.repartition()
+    assert(tiles("rc", "catalog") == tiles("rc2", "catalog") && nSources(rcAfter) == li.count())
 
     // --- append ONTO the crashed (journal-pending) state: append must
     // roll the commit forward FIRST, or its rows would land in the
     // doomed split dirs and be deleted by the eventual recovery
-    HipsPartitioner.append(li.limit(97), "cra", "cdec", "k", out, "rc4")
+    val rc4 = Catalog(spark, out, "rc4").append(li.limit(97))
     assert(!new File(s"$out/rc4/_repartition_journal.json").exists(),
       "append must complete the pending commit before writing")
-    val afterAppend = HipsCatalog.load(spark, out, "rc4")
+    val afterAppend = rc4.load()
     assert(afterAppend.count() == li.count() + 97, "no appended row may be lost to the roll-forward")
     assert(afterAppend.select("_ID").distinct().count() == li.count() + 97)
     assert(tiles("rc4", "catalog") == tiles("rc2", "catalog"),
@@ -697,9 +722,9 @@ class CatalogSpec extends SparkSpecBase {
 
   test("catalog compaction: append tails fold to one file per leaf, search + margin parity") {
     val out = java.nio.file.Files.createTempDirectory("graft_compactcat").toString
-    HipsPartitioner.write(li.filter(col("k") % 2 === 0), "cra", "cdec", "k",
-      out, "cc", orderK = 4, threshold = 500, marginDeg = 1.0)
-    HipsPartitioner.append(li.filter(col("k") % 2 =!= 0), "cra", "cdec", "k", out, "cc")
+    Catalog.importFrom(li.filter(col("k") % 2 === 0), out, "cc", "cra", "cdec", "k",
+      orderK = 4, threshold = 500, marginDeg = 1.0)
+      .append(li.filter(col("k") % 2 =!= 0))
     val cat = Catalog.open(spark, out, "cc")
     val beforeRows = cat.load().orderBy("_ID").collect().toSeq
     val cone0 = cat.coneSearch(180.0, 0.0, 30.0).select("k")
@@ -771,11 +796,11 @@ class CatalogSpec extends SparkSpecBase {
     // under the frozen map, and stays inside the band after the re-split
     val out = java.nio.file.Files.createTempDirectory("graft_exactappend").toString
     val first = li.filter(col("k") % 4 === 0)
-    HipsPartitioner.write(first, "cra", "cdec", "k", out, "band", orderK = 4, threshold = 500,
+    val band = Catalog.importFrom(first, out, "band", "cra", "cdec", "k", orderK = 4, threshold = 500,
       marginDeg = margin, exactMargin = true)
-    HipsPartitioner.append(li.filter(col("k") % 4 =!= 0), "cra", "cdec", "k", out, "band")
+      .append(li.filter(col("k") % 4 =!= 0))
     // hive partition inference reads small Npix back as int
-    def stored() = HipsCatalog.loadNeighbors(spark, out, "band")
+    def stored() = spark.read.parquet(CatalogLayout(out, "band").neighborTree)
       .select(col("k"), col("cra"), col("cdec"), col("Norder"), col("Npix").cast("long"))
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getInt(3), r.getLong(4)))
     val frozen = HipsPartitioner.computePartitionMap(first, "cra", "cdec", orderK = 4, threshold = 500)
@@ -784,7 +809,7 @@ class CatalogSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getInt(3), r.getLong(4)))
     assert(stored().sorted.toSeq == expected.sorted.toSeq,
       "appended neighbor rows must be trimmed like the import's")
-    HipsPartitioner.repartition(spark, out, "band")
+    band.repartition()
     stored().foreach { case t @ (_, ra, dec, o, pix) =>
       val d = graft.healpix.Healpix.distToPixelDeg(o, pix, ra, dec)
       assert(d <= margin + 1e-3, s"repartitioned neighbor row at dist $d > $margin: $t")
@@ -841,17 +866,16 @@ class CatalogSpec extends SparkSpecBase {
     val lDf = left.toSeq.toDF("lid", "lra", "ldec")
     val rDf = right.toSeq.toDF("rid", "rra", "rdec")
     val out = java.nio.file.Files.createTempDirectory("graft_exactm").toString
-    HipsPartitioner.write(lDf, "lra", "ldec", "lid", out, "pl", orderK = 4, threshold = 4,
+    val pl = Catalog.importFrom(lDf, out, "pl", "lra", "ldec", "lid", orderK = 4, threshold = 4,
       marginDeg = 0.2, exactMargin = true)
-    HipsPartitioner.write(rDf, "rra", "rdec", "rid", out, "pr", orderK = 4, threshold = 4,
+    val pr = Catalog.importFrom(rDf, out, "pr", "rra", "rdec", "rid", orderK = 4, threshold = 4,
       marginDeg = 0.2, exactMargin = true)
     val brute = lDf.crossJoin(rDf)
       .withColumn("d", sphere.gcDist(col("lra"), col("ldec"), col("rra"), col("rdec")))
       .filter(col("d") < dthresh)
       .select("lid", "rid").as[(Long, Long)].collect().toSet
-    val stored = HipsCatalog.crossMatchStored(spark, out, "pl", "pr",
-      "lra", "ldec", "lid", "rra", "rdec", "rid", k = 10, dthreshDeg = dthresh, orderK = 4)
-      .select("lid", "r_rid").as[(Long, Long)].collect().toSet
+    val stored = pl.crossMatch(pr, 10, dthresh)
+      .select("`pl.lid`", "`pr.rid`").as[(Long, Long)].collect().toSet
     assert(stored == brute,
       s"exact-margin stored cross-match lost ${(brute -- stored).size} matches " +
         s"(extra: ${(stored -- brute).size})")

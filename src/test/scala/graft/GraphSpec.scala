@@ -490,6 +490,17 @@ class GraphSpec extends SparkSpecBase {
       "pointer doubling must reach every ancestor of a deep chain")
   }
 
+  test("ancestorPairs: a cyclic parent relation is rejected, not closed into self-ancestry") {
+    // 1 -> 2 -> 1 is a cycle; 3 hangs off it. Pointer doubling reaches
+    // a fixpoint here, so only the forest check can refuse it
+    val cyclic = Seq((1L, 2L), (2L, 1L), (3L, 1L)).toDF("node", "parent")
+    val e = intercept[IllegalArgumentException](Graph.ancestorPairs(cyclic, "node", "parent"))
+    assert(e.getMessage.contains("cycle"), e.getMessage)
+    // a self-parent row is the shortest cycle
+    intercept[IllegalArgumentException](
+      Graph.ancestorPairs(Seq((1L, 1L)).toDF("node", "parent"), "node", "parent"))
+  }
+
   test("graph_pagerank: per-iteration shuffles stay bounded (edges persisted, ranks slim)") {
     // 5 iterations over a persisted degree-annotated edge table: the
     // returned plan is the LAST iteration reading cached blocks — it
