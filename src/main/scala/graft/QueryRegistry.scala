@@ -4586,8 +4586,6 @@ object QueryRegistry {
       // replace three sequential range-exchange cycles; the
       // reassembly is a map-side-combinable groupBy(ck), not joins.
       val n = mObs.get("n").asInstanceOf[Long]
-      val q = n / 5
-      val r = n % 5
       val ex = m.select(col("ck"), explode(array(
           struct(lit(0).as("w"), col("rec").as("v")),
           struct(lit(1).as("w"), col("freq").as("v")),
@@ -4595,14 +4593,10 @@ object QueryRegistry {
         .select(col("ck"), col("e.w").as("w"), col("e.v").as("v"))
       val ranked = graft.operators.Rank.globalRowNumber(ex,
         Seq(col("w").asc, col("v").asc, col("ck").asc))
-      // exact ntile(5) of the within-metric rank (integer `div` only
-      // — the curriculum formula: first n%5 tiles get the extra row)
-      val wr = s"((rank - 1) % ${n}L + 1)"
-      val tile =
-        if (q == 0) expr(wr)
-        else expr(s"CASE WHEN $wr <= ${r * (q + 1)}L THEN ($wr - 1) div ${q + 1}L + 1" +
-          s" ELSE ${r}L + ($wr - ${r * (q + 1)}L - 1) div ${q}L + 1 END")
-      ranked.withColumn("tile", tile.cast("long"))
+      // exact ntile(5) of the within-metric rank (the curriculum
+      // formula: first n%5 tiles get the extra row)
+      ranked.withColumn("tile",
+          graft.operators.Rank.exactNtile(expr(s"(rank - 1) % ${n}L + 1"), n, 5))
         .groupBy("ck").agg(
           max(when(col("w") === 0, col("tile"))).as("r_q"),
           max(when(col("w") === 1, col("tile"))).as("f_q"),

@@ -156,13 +156,6 @@ object CatalogLayout {
 
   // ----------------------------------------------------------- histograms
 
-  /** The sparse order-k density histogram `(pix, cnt)`: one row per
-   *  OCCUPIED pixel (map-side combined), so a collect is data-bounded,
-   *  not 4^k-bounded. */
-  private[catalog] def histogram(df: DataFrame, raCol: String, decCol: String, orderK: Int): DataFrame =
-    df.groupBy(sphere.hpix(col(raCol), col(decCol), orderK).as("pix"))
-      .agg(count(lit(1)).as("cnt"))
-
   private[catalog] def histFrame(spark: SparkSession, pix: Array[Long], cnt: Array[Long]): DataFrame = {
     import spark.implicits._
     pix.zip(cnt).toSeq.toDF("pix", "cnt")

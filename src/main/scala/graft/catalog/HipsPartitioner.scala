@@ -1,6 +1,7 @@
 package graft.catalog
 
 import graft.functions.PartitionGrid
+import graft.operators.Spatial
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -65,7 +66,7 @@ object HipsPartitioner {
   def computePartitionMap(df: DataFrame, raCol: String, decCol: String,
                           orderK: Int, threshold: Long): PartitionMap = {
     requireOrderK(orderK)
-    val (pix, cnt) = CatalogLayout.collectHist(CatalogLayout.histogram(df, raCol, decCol, orderK))
+    val (pix, cnt) = CatalogLayout.collectHist(Spatial.densityHistogram(df, raCol, decCol, orderK))
     partitionMapFromSparseHist(pix, cnt, orderK, threshold)
   }
 
@@ -251,7 +252,7 @@ object HipsPartitioner {
     val (ihPix, ihCnt) = CatalogLayout.readHist(spark, layout.importHist)
     val frozen = partitionMapFromSparseHist(ihPix, ihCnt, meta.orderK, meta.pixThreshold)
     val (mPix, mCnt) = CatalogLayout.collectHist(CatalogLayout.loadHist(spark, layout.pointMap)
-      .unionByName(CatalogLayout.histogram(df, raCol, decCol, meta.orderK)))
+      .unionByName(Spatial.densityHistogram(df, raCol, decCol, meta.orderK)))
 
     def ids(existing: DataFrame) = Some(CatalogLayout.SpatialIds(raCol, decCol, idCol, Some(existing)))
     CatalogLayout.writeTree(withPartitionColumns(df, raCol, decCol, frozen), layout.catalogTree, "append",
@@ -542,7 +543,8 @@ object HipsPartitioner {
       // histogram from the STAGED bytes (not the source) so the map
       // always matches what phase 2 will actually read
       if (!done(hist))
-        CatalogLayout.writeHist(CatalogLayout.histogram(spark.read.parquet(stage), raCol, decCol, orderK), hist)
+        CatalogLayout.writeHist(
+          Spatial.densityHistogram(spark.read.parquet(stage), raCol, decCol, orderK), hist)
     }
 
     val (pix, cnt) = CatalogLayout.collectHist(

@@ -174,57 +174,30 @@ object Layout {
    * NONDECREASING in the sort order but not necessarily contiguous —
    * the documented trade for never splitting a sample.
    *
-   * Distributed prefix sum, not a global window: range Exchange on
-   * `sortCols` + local sorts + ONE bounded size job (numPartitions
-   * per-partition byte totals to the driver) + a map-only running
-   * walk — the same shape as [[Rank.globalRowNumber]], carrying
-   * bytes instead of row counts. A `sum OVER (ORDER BY ...)` window
-   * would funnel the whole corpus through one task; this never
-   * materializes more than a partition per task. Ties in `sortCols`
-   * must be broken by the caller (append a unique id) or assignment
-   * between equal keys is partitioning-dependent.
+   * The bytes before a row are the [[Rank.prefixScan]] of the size
+   * column (any numeric type, truncated to a long; nulls and
+   * negatives fail loudly) minus the row's own size — never a
+   * corpus-wide `sum OVER (ORDER BY ...)` window. Ties in `sortCols`
+   * must be broken by the caller (append a unique id).
    *
    * Output: input columns + `shard` (0-based LongType).
    */
   def shardAssign(df: DataFrame, sizeCol: String, sortCols: Seq[Column],
-                  targetBytes: Long, numPartitions: Int = 0): DataFrame = {
+                  targetBytes: Long): DataFrame = {
     require(targetBytes > 0, s"shardAssign: targetBytes must be positive (got $targetBytes)")
-    require(sortCols.nonEmpty, "shardAssign needs at least one sort column")
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = df.repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val idx = ranged.schema.fieldIndex(sizeCol)
-    def sizeOf(row: org.apache.spark.sql.Row): Long = {
-      require(!row.isNullAt(idx), s"shardAssign: null $sizeCol — a row without a size cannot be placed")
-      val s = row.get(idx).asInstanceOf[Number].longValue
-      require(s >= 0, s"shardAssign: negative $sizeCol ($s)")
-      s
-    }
-    val rdd = ranged.rdd
-    val partBytes = rdd.mapPartitionsWithIndex { case (i, it) =>
-      Iterator.single(i -> it.map(sizeOf).sum)
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = partBytes.scanLeft(0L)(_ + _)
-    val withShard = rdd.mapPartitionsWithIndex { case (i, it) =>
-      var cum = offsets(i)
-      it.map { row =>
-        val out = org.apache.spark.sql.Row.fromSeq(row.toSeq :+ cum / targetBytes)
-        cum += sizeOf(row)
-        out
-      }
-    }
-    spark.createDataFrame(withShard,
-      ranged.schema.add("shard", org.apache.spark.sql.types.LongType, nullable = false))
+    val (scanned, _) =
+      Rank.prefixScan(df, sortCols, Seq(Rank.Weight.Size(sizeCol) -> "__cum"), "shardAssign")
+    scanned.withColumn("shard", call_function("div",
+        col("__cum") - col(sizeCol).cast("long"), lit(targetBytes)))
+      .drop("__cum")
   }
 
   /** [[shardAssign]] + hive-partitioned parquet write: one `shard=K/`
    *  directory per shard, rows shard-local in `sortCols` order — the
    *  export a sequential training loader consumes shard by shard. */
   def writeShards(df: DataFrame, path: String, sizeCol: String, sortCols: Seq[Column],
-                  targetBytes: Long, numPartitions: Int = 0): Unit =
-    shardAssign(df, sizeCol, sortCols, targetBytes, numPartitions)
+                  targetBytes: Long): Unit =
+    shardAssign(df, sizeCol, sortCols, targetBytes)
       .write.mode("overwrite").partitionBy("shard").parquet(path)
 
   /**
@@ -239,13 +212,13 @@ object Layout {
    * assignment is total and partitioning-independent.
    */
   def shuffledShards(df: DataFrame, idCol: String, sizeCol: String, targetBytes: Long,
-                     seed: Long = 0L, numPartitions: Int = 0): DataFrame = {
+                     seed: Long = 0L): DataFrame = {
     Sampling.requireIntegralId(df, idCol, "shuffledShards")
     require(seed >= 0 && seed < (1L << 40),
       s"shuffledShards: seed must be in [0, 2^40) so id + seed stays in the hash twin's " +
         s"nonnegative domain (got $seed)")
     shardAssign(df.withColumn("__shuffle_k", Sampling.knuthHash(col(idCol) + lit(seed))),
-        sizeCol, Seq(col("__shuffle_k"), col(idCol)), targetBytes, numPartitions)
+        sizeCol, Seq(col("__shuffle_k"), col(idCol)), targetBytes)
       .drop("__shuffle_k")
   }
 }

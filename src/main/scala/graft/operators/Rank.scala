@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /**
  * Distributed global ordering operators. Spark's
@@ -9,10 +10,11 @@ import org.apache.spark.sql.functions._
  * collapses the whole dataset into ONE task — the classic Spark
  * scale-killer (the r6 ANN audit found and removed exactly this
  * shape from the top-k paths). These operators compute the same
- * total-order results with a RANGE exchange instead: every partition
- * sorts locally, partition row-counts (one long per partition) are
- * the only thing collected, and each row's global position is its
- * partition offset + local index. 100 TB sorts at full parallelism.
+ * total-order results with a RANGE exchange instead, through the one
+ * [[Rank.prefixScan]] core: every partition sorts locally, partition
+ * totals (a few longs per partition) are the only thing collected,
+ * and each row's running total is its partition offset + the local
+ * walk. 100 TB sorts at full parallelism.
  */
 object Rank {
 
@@ -23,15 +25,14 @@ object Rank {
    *  constant: ceil(estimated bytes / `target` (64 MB)), clamped to
    *  [1, spark.sql.shuffle.partitions].
    *  The estimate is Catalyst's free sizeInBytes (no job); partition
-   *  count never affects the rank values (the global order is the
-   *  same under any partitioning), only parallelism, so a misestimate
-   *  degrades performance, not correctness. Unknown/huge estimates
-   *  (rdd-backed frames report the default ~8 EB) clamp to the
-   *  session parallelism — exactly today's behavior — while small
+   *  count never affects the running totals of [[prefixScan]] (the
+   *  global order is the same under any partitioning), only
+   *  parallelism, so a misestimate degrades performance, not
+   *  correctness. Unknown/huge estimates (rdd-backed frames report the
+   *  default ~8 EB) clamp to the session parallelism, while small
    *  frames drop to ONE partition, which additionally skips the
    *  RangePartitioner's sampling job (a whole scheduling round trip
-   *  on every ranking of a small frame). Explicit `numPartitions`
-   *  callers are untouched. */
+   *  on every scan of a small frame). */
   private[graft] def adaptiveParts(df: DataFrame, target: Long = BytesPerPartition): Int = {
     val maxParts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -39,50 +40,109 @@ object Rank {
     else ((est + target - 1) / target).min(BigInt(maxParts)).max(BigInt(1)).toInt
   }
 
-  /** Core: ranked frame + total row count (the count is free — it is
-   *  the sum of the partition sizes the offset walk already
-   *  collected). The range-exchange shuffle files are reused between
-   *  the size job and the caller's action, so the input is scanned
-   *  once and sorted once. */
-  private def rankedWithCount(df: DataFrame, sortCols: Seq[Column],
-                              numPartitions: Int): (DataFrame, Long) = {
-    require(sortCols.nonEmpty, "globalRowNumber needs at least one sort column")
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions else adaptiveParts(df)
-    val ranged = df.repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    // RDD face for the per-partition offset walk: the range exchange
-    // + sort stay in the SQL plan above; from here it is one bounded
-    // size job (numPartitions longs to the driver) + a map-only zip
-    val rdd = ranged.rdd
-    val sizes = rdd.mapPartitionsWithIndex { case (i, it) =>
-      Iterator.single(i -> it.size.toLong)
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = sizes.scanLeft(1L)(_ + _) // 1-based
-    val withRank = rdd.mapPartitionsWithIndex { case (i, it) =>
-      var r = offsets(i)
-      it.map { row =>
-        val out = org.apache.spark.sql.Row.fromSeq(row.toSeq :+ r)
-        r += 1
-        out
-      }
-    }
-    val out = spark.createDataFrame(withRank,
-      ranged.schema.add("rank", org.apache.spark.sql.types.LongType, nullable = false))
-    (out, sizes.sum)
+  /** What one running total of [[prefixScan]] adds up per row. */
+  private[graft] sealed trait Weight
+  private[graft] object Weight {
+    /** 1 per row: the running total is the 1-based rank, the grand
+     *  total the row count. Reads no column. */
+    case object One extends Weight
+    /** Integral column (byte, short, int, long) read as a long; any
+     *  sign. */
+    final case class Sum(col: String) extends Weight
+    /** Any numeric column truncated to a long; negatives refused. */
+    final case class Size(col: String) extends Weight
   }
 
   /**
-   * Global row_number (1-based) by `sortCols` — ties must be broken
-   * by the caller (include a unique id as the last sort column, or
-   * the assignment between equal keys is partitioning-dependent).
-   * Plan: one range Exchange + local sorts + a partition-size
-   * collect (numPartitions longs) + a map-only index pass. Output:
-   * input columns + `rank`.
+   * The distributed prefix scan under every global-order operator
+   * ([[globalRowNumber]], [[curriculum]], [[prefixSums]],
+   * [[Layout.shardAssign]]): running totals over a total order
+   * without the single-task `Window.orderBy`.
+   *
+   * Plan: a range exchange on `sortCols` into `parts` partitions
+   * ([[adaptiveParts]] when 0) + local sorts, ONE job that collects
+   * each partition's totals (parts x weights longs to the driver), a
+   * driver-side scanLeft of those totals into partition offsets, and
+   * a map-only walk appending, for each (weight, name), the non-null
+   * LONG column `name`: the weight's running total over every row
+   * at-or-before this one. Returns the scanned frame and the grand
+   * totals.
+   *
+   * Ties in `sortCols` must be broken by the caller (append a unique
+   * id), or the running total WITHIN a tie group is
+   * partitioning-dependent; totals at tie-group boundaries are exact
+   * either way.
+   *
+   * Contract: the input must be DETERMINISTIC under recomputation.
+   * The totals job and the walk are two jobs over the same lineage,
+   * correct because Spark reuses the range exchange's shuffle files
+   * between them (the input is scanned once and sorted once); a
+   * nondeterministic upstream (e.g. an unseeded rand()) would desync
+   * the collected offsets from the walk's rows — seed or materialize
+   * such inputs first. Weight column types are checked here, on the
+   * driver; a null or (for [[Weight.Size]]) negative weight fails its
+   * task with an error naming the column.
    */
-  def globalRowNumber(df: DataFrame, sortCols: Seq[Column],
-                      numPartitions: Int = 0): DataFrame =
-    rankedWithCount(df, sortCols, numPartitions)._1
+  private[graft] def prefixScan(df: DataFrame, sortCols: Seq[Column], weights: Seq[(Weight, String)],
+                                op: String, parts: Int = 0): (DataFrame, Array[Long]) = {
+    require(sortCols.nonEmpty, s"$op needs at least one sort column")
+    // per weight: field index (-1 reads no column), negatives
+    // refused, and the name its errors give
+    val (idx, nonNeg, names) = weights.map(_._1).map {
+      case Weight.One => (-1, false, "")
+      case Weight.Sum(c) =>
+        val dt = df.schema(c).dataType
+        require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+          s"$op: sum column '$c' must be integral (found $dt)")
+        (df.schema.fieldIndex(c), false, s"sum column '$c'")
+      case Weight.Size(c) =>
+        val dt = df.schema(c).dataType
+        require(dt.isInstanceOf[NumericType], s"$op: size column '$c' must be numeric (found $dt)")
+        (df.schema.fieldIndex(c), true, s"size column '$c'")
+    }.unzip3 match { case (i, n, m) => (i.toArray, n.toArray, m.toArray) }
+    val k = weights.length
+    def weight(r: Row, j: Int): Long = {
+      val i = idx(j)
+      if (i < 0) 1L
+      else if (r.isNullAt(i))
+        throw new IllegalArgumentException(s"$op: null in ${names(j)} — coalesce it upstream")
+      else {
+        val w = r.get(i).asInstanceOf[Number].longValue
+        if (w < 0 && nonNeg(j)) throw new IllegalArgumentException(s"$op: negative ${names(j)} ($w)")
+        w
+      }
+    }
+    // RDD face for the per-partition walk: the range exchange + sort
+    // stay in the SQL plan
+    val ranged = df.repartitionByRange(if (parts > 0) parts else adaptiveParts(df), sortCols: _*)
+      .sortWithinPartitions(sortCols: _*)
+    val rdd = ranged.rdd
+    val totals = rdd.mapPartitionsWithIndex { case (p, it) =>
+      val acc = new Array[Long](k)
+      it.foreach { r => var j = 0; while (j < k) { acc(j) += weight(r, j); j += 1 } }
+      Iterator.single(p -> acc)
+    }.collect().sortBy(_._1).map(_._2)
+    val offsets = totals.scanLeft(new Array[Long](k))((a, b) => Array.tabulate(k)(j => a(j) + b(j)))
+    val walked = rdd.mapPartitionsWithIndex { case (p, it) =>
+      val run = offsets(p).clone()
+      it.map { r =>
+        var j = 0
+        while (j < k) { run(j) += weight(r, j); j += 1 }
+        Row.fromSeq(r.toSeq ++ run)
+      }
+    }
+    val schema = weights.foldLeft(ranged.schema)((s, w) => s.add(w._2, LongType, nullable = false))
+    (df.sparkSession.createDataFrame(walked, schema), offsets.last)
+  }
+
+  /**
+   * Global row_number (1-based) by `sortCols`: the [[prefixScan]] of
+   * [[Weight.One]]. Ties must be broken by the caller (include a
+   * unique id as the last sort column). Output: input columns +
+   * `rank`.
+   */
+  def globalRowNumber(df: DataFrame, sortCols: Seq[Column]): DataFrame =
+    prefixScan(df, sortCols, Seq(Weight.One -> "rank"), "globalRowNumber")._1
 
   /**
    * Exact k-th smallest values (order statistics) of an integral
@@ -191,17 +251,23 @@ object Rank {
    */
   def curriculum(df: DataFrame, scoreCols: Seq[Column], phases: Int): DataFrame = {
     require(phases >= 1, s"curriculum needs phases >= 1, got $phases")
-    val (ranked, n) = rankedWithCount(df, scoreCols, 0)
-    val q = n / phases
-    val r = n % phases
-    // integer `div` only (Column./ is double division, which loses
-    // exactness past 2^53 — ranks at 100 TB get close)
-    val phase =
-      if (q == 0) col("rank") // n < phases: tile == rank
-      else when(col("rank") <= lit(r * (q + 1)),
-          expr(s"(rank - 1) div ${q + 1}") + 1)
-        .otherwise(lit(r) + expr(s"(rank - ${r * (q + 1)} - 1) div $q") + 1)
-    ranked.withColumn("phase", phase.cast("long"))
+    val (ranked, Array(n)) = prefixScan(df, scoreCols, Seq(Weight.One -> "rank"), "curriculum")
+    ranked.withColumn("phase", exactNtile(col("rank"), n, phases))
+  }
+
+  /** SQL `ntile(tiles)` of a 1-based `rank` over `n` rows, exactly:
+   *  the first `n % tiles` tiles get the extra row. Integer `div` only
+   *  (Column./ is double division, which loses exactness past 2^53 —
+   *  ranks at 100 TB get close). A LONG column. */
+  private[graft] def exactNtile(rank: Column, n: Long, tiles: Int): Column = {
+    val q = n / tiles
+    val r = n % tiles
+    def div(a: Column, b: Long): Column = call_function("div", a, lit(b))
+    val tile =
+      if (q == 0) rank // n < tiles: tile == rank
+      else when(rank <= lit(r * (q + 1)), div(rank - 1, q + 1) + 1)
+        .otherwise(lit(r) + div(rank - (r * (q + 1)) - 1, q) + 1)
+    tile.cast("long")
   }
 
   /**
@@ -268,62 +334,16 @@ object Rank {
 
   /**
    * Distributed running totals: for each row, the cumulative sums of
-   * `sumCols` (LONG columns) over all rows at-or-before it in
-   * `sortCols` order — the scale-safe replacement for a single-task
-   * `sum() OVER (ORDER BY ...)` window. Same shape as
-   * [[globalRowNumber]]: one range Exchange + local sorts, a bounded
-   * per-partition totals collect (numPartitions x sumCols longs),
-   * then a map-only accumulation pass. Ties must be fully ordered by
-   * the caller (include a unique tiebreak column) or the running
-   * value WITHIN a tie group is partitioning-dependent — cumulative
-   * totals at tie-group boundaries are always exact either way.
-   * Output: input columns + `cum_<c>` for each requested column.
-   *
-   * Contract: sum columns must be non-null LONGs (checked per row
-   * with a named error — a bare getLong on a null would NPE deep in
-   * an RDD task), and the input must be DETERMINISTIC under
-   * recomputation: the totals pass and the accumulation pass are two
-   * jobs over the same lineage, correct because Spark reuses the
-   * range exchange's shuffle files between them (same reuse contract
-   * [[globalRowNumber]] relies on); a nondeterministic upstream (e.g.
-   * an unseeded rand()) would desync the collected offsets from the
-   * second pass's rows — seed or materialize such inputs first.
+   * the integral `sumCols` over all rows at-or-before it in `sortCols`
+   * order — the [[prefixScan]] of one [[Weight.Sum]] per column, the
+   * scale-safe replacement for a single-task `sum() OVER (ORDER BY
+   * ...)` window (ties and the determinism contract as there).
+   * Output: input columns + `cum_<c>` (LONG) for each requested
+   * column. A non-integral sum column is refused at the call, naming
+   * it; a null fails the task, naming it.
    */
-  def prefixSums(df: DataFrame, sortCols: Seq[Column], sumCols: Seq[String],
-                 numPartitions: Int = 0): DataFrame = {
+  def prefixSums(df: DataFrame, sortCols: Seq[Column], sumCols: Seq[String]): DataFrame = {
     require(sumCols.nonEmpty, "prefixSums needs at least one sum column")
-    val spark = df.sparkSession
-    val parts = if (numPartitions > 0) numPartitions else adaptiveParts(df)
-    val ranged = df.repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val idx = sumCols.map(ranged.schema.fieldIndex).toArray
-    val names = sumCols.toArray
-    val rdd = ranged.rdd
-    def getChecked(r: org.apache.spark.sql.Row, j: Int): Long = {
-      if (r.isNullAt(idx(j)))
-        throw new IllegalArgumentException(
-          s"prefixSums: null in sum column '${names(j)}' — coalesce it upstream")
-      r.getLong(idx(j))
-    }
-    val totals = rdd.mapPartitionsWithIndex { case (i, it) =>
-      val acc = new Array[Long](idx.length)
-      it.foreach { r => var j = 0; while (j < idx.length) { acc(j) += getChecked(r, j); j += 1 } }
-      Iterator.single(i -> acc)
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = totals.scanLeft(new Array[Long](idx.length)) { (a, b) =>
-      Array.tabulate(idx.length)(j => a(j) + b(j))
-    }
-    val withCum = rdd.mapPartitionsWithIndex { case (i, it) =>
-      val run = offsets(i).clone()
-      it.map { row =>
-        var j = 0
-        while (j < idx.length) { run(j) += getChecked(row, j); j += 1 }
-        org.apache.spark.sql.Row.fromSeq(row.toSeq ++ run.toSeq)
-      }
-    }
-    val schema = sumCols.foldLeft(ranged.schema) { (s, c) =>
-      s.add(s"cum_$c", org.apache.spark.sql.types.LongType, nullable = false)
-    }
-    spark.createDataFrame(withCum, schema)
+    prefixScan(df, sortCols, sumCols.map(c => Weight.Sum(c) -> s"cum_$c"), "prefixSums")._1
   }
 }

@@ -337,7 +337,10 @@ object Spatial {
     df.withColumn("_ID", shiftleft(pix, 64 - bits) + rank)
   }
 
-  /** HEALPix density histogram (reference: partitioner.gather_statistics). */
+  /** HEALPix density histogram (reference: partitioner.gather_statistics):
+   *  the sparse order-`order` `(pix, cnt)` counts, one row per OCCUPIED
+   *  pixel (map-side combined), so a collect is data-bounded, not
+   *  4^order-bounded. The catalog's import/append histograms are this. */
   def densityHistogram(df: DataFrame, raCol: String, decCol: String, order: Int): DataFrame =
     df.groupBy(sphere.hpix(col(raCol), col(decCol), order).as("pix"))
       .agg(count(lit(1)).as("cnt"))

@@ -436,4 +436,17 @@ class DedupSpec extends SparkSpecBase {
       Dedup.sortedNeighborhood(docs, "doc_id", "text", window = 1))
       .getMessage.contains("window must be >= 2"))
   }
+
+  test("incrementalNearDedup refuses a batch above maxBatchRows loudly") {
+    val history = Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    val batch = (10L to 19L).map(i => (i, s"doc number $i words here")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.incrementalNearDedup(batch, history, "doc_id", "text", maxBatchRows = 5L)
+    }
+    assert(e.getMessage.contains("maxBatchRows") || e.getMessage.contains("batch rows"),
+      s"guard must name the contract: ${e.getMessage}")
+    // at/below the bound the operator still works
+    val kept = Dedup.incrementalNearDedup(batch, history, "doc_id", "text", maxBatchRows = 10L)
+    assert(kept.count() == 10L, "non-duplicate batch survives under the bound")
+  }
 }

@@ -1,10 +1,17 @@
 package graft
 
-import graft.operators.Layout
+import graft.operators.{Layout, Rank}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class LayoutSpec extends SparkSpecBase {
   import spark.implicits._
+
+  /** (id, bytes, bytes before the row) of the "bytes" size column at
+   *  `parts` range partitions: [[Layout.shardAssign]]'s prefix scan. */
+  private def bytesBefore(rows: DataFrame, sortCols: Seq[Column], parts: Int): Array[(Long, Long, Long)] =
+    Rank.prefixScan(rows, sortCols, Seq(Rank.Weight.Size("bytes") -> "cum"), "shardAssign", parts)._1
+      .select(col("id"), col("bytes"), col("cum") - col("bytes")).as[(Long, Long, Long)].collect()
 
   test("zvalue: golden bit interleave, mask, and column bit ownership") {
     val df = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L), (255L, 255L), (256L, 0L))
@@ -155,7 +162,7 @@ class LayoutSpec extends SparkSpecBase {
     import spark.implicits._
     // deterministic sizes: doc i carries 100+i bytes; target 1000
     val rows = (0L until 60L).map(i => (i, 100L + i)).toDF("id", "bytes")
-    val assigned = Layout.shardAssign(rows, "bytes", Seq(col("id")), targetBytes = 1000L, numPartitions = 7)
+    val assigned = Layout.shardAssign(rows, "bytes", Seq(col("id")), targetBytes = 1000L)
       .select("id", "bytes", "shard").as[(Long, Long, Long)].collect().sortBy(_._1)
     // reference walk
     var cum = 0L
@@ -167,10 +174,12 @@ class LayoutSpec extends SparkSpecBase {
     assigned.groupBy(_._3).values.foreach { g =>
       assert(g.map(_._2).sum < 1000L + maxRow, s"shard overshoot bounded by one row")
     }
-    // partitioning invariance: a different partition count, same assignment
-    val again = Layout.shardAssign(rows.repartition(3), "bytes", Seq(col("id")), 1000L, numPartitions = 2)
-      .select("id", "shard").as[(Long, Long)].collect().sortBy(_._1)
-    assert(again.map(_._2).toSeq == expect, "assignment is partitioning-independent")
+    // partitioning invariance, where partitioning enters (the prefix-scan
+    // core): at 7 and at 2 range partitions, the same bytes before each row
+    for ((input, parts) <- Seq((rows, 7), (rows.repartition(3), 2))) {
+      val again = bytesBefore(input, Seq(col("id")), parts).sortBy(_._1)
+      assert(again.map(_._3 / 1000L).toSeq == expect, s"assignment is partitioning-independent ($parts)")
+    }
     // an oversized row never splits; following shard ids skip (documented)
     val over = Seq((0L, 100L), (1L, 5000L), (2L, 100L)).toDF("id", "bytes")
     val o = Layout.shardAssign(over, "bytes", Seq(col("id")), 1000L)
@@ -232,5 +241,32 @@ class LayoutSpec extends SparkSpecBase {
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(dir).getParentFile)
     }
+  }
+
+  test("q_shards: range exchange, never a single-task global window") {
+    val plan = QueryRegistry.all.toMap.apply("q_shards").run(spark, sf("sf0.001"))
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Window"), s"the prefix walk replaces the cumulative window:\n$plan")
+    assert(!plan.contains("Exchange SinglePartition") || plan.contains("TakeOrdered"),
+      s"shard assignment must stay parallel:\n$plan")
+  }
+
+  test("shardAssign output: genuinely multi-partition (the walk never serializes the corpus)") {
+    // the range exchange itself hides behind the RDD boundary of the
+    // offset walk; what is observable — and what matters — is that the
+    // result KEEPS the range partitioning: rows stay spread across the
+    // requested partitions, shard-sorted within each
+    val rows = (0L until 1000L).map(i => (i, 10L + i)).toDF("id", "bytes")
+    val out = Rank.prefixScan(rows, Seq(col("id")), Seq(Rank.Weight.Size("bytes") -> "cum"),
+        "shardAssign", parts = 8)._1
+      .withColumn("shard", expr("(cum - bytes) div 2000"))
+    val perPart = out.rdd.mapPartitions(it => Iterator.single(it.size)).collect()
+    assert(perPart.length == 8 && perPart.count(_ > 0) >= 7,
+      s"rows must stay range-spread across partitions (got ${perPart.toSeq})")
+    val sortedWithin = out.select("id", "shard").rdd.mapPartitions { it =>
+      val s = it.map(r => (r.getLong(0), r.getLong(1))).toSeq
+      Iterator.single(s == s.sortBy(_._1) && s.map(_._2) == s.map(_._2).sorted)
+    }.collect()
+    assert(sortedWithin.forall(identity), "each partition is id-sorted with monotone shards")
   }
 }

@@ -1,12 +1,10 @@
 package graft
 
-import graft.operators.{Layout, Multimodal}
-import org.apache.spark.sql.functions._
+import graft.operators.Multimodal
 
-/** Plan-shape guards for the multimodal dedup/export additions: every
+/** Plan-shape guards for the multimodal dedup additions: every
   * decode+hash pass must stay MAP-ONLY (no Exchange before the final
-  * bounded aggregate), and the shard prefix walk must never collapse
-  * the corpus into one task. */
+  * bounded aggregate). */
 class R12PlanSpec extends SparkSpecBase {
 
   private def planOf(name: String): String =
@@ -54,30 +52,5 @@ class R12PlanSpec extends SparkSpecBase {
       assert(hasAgg(j.left) && hasAgg(j.right),
         s"every join input must read the distinct-hash aggregate, never raw rows:\n$plan")
     }
-  }
-
-  test("q_shards: range exchange, never a single-task global window") {
-    val plan = planOf("q_shards")
-    assert(!plan.contains("Window"), s"the prefix walk replaces the cumulative window:\n$plan")
-    assert(!plan.contains("Exchange SinglePartition") || plan.contains("TakeOrdered"),
-      s"shard assignment must stay parallel:\n$plan")
-  }
-
-  test("shardAssign output: genuinely multi-partition (the walk never serializes the corpus)") {
-    import spark.implicits._
-    // the range exchange itself hides behind the RDD boundary of the
-    // offset walk; what is observable — and what matters — is that the
-    // result KEEPS the range partitioning: rows stay spread across the
-    // requested partitions, shard-sorted within each
-    val rows = (0L until 1000L).map(i => (i, 10L + i)).toDF("id", "bytes")
-    val out = Layout.shardAssign(rows, "bytes", Seq(col("id")), 2000L, numPartitions = 8)
-    val perPart = out.rdd.mapPartitions(it => Iterator.single(it.size)).collect()
-    assert(perPart.length == 8 && perPart.count(_ > 0) >= 7,
-      s"rows must stay range-spread across partitions (got ${perPart.toSeq})")
-    val sortedWithin = out.select("id", "shard").rdd.mapPartitions { it =>
-      val s = it.map(r => (r.getLong(0), r.getLong(1))).toSeq
-      Iterator.single(s == s.sortBy(_._1) && s.map(_._2) == s.map(_._2).sorted)
-    }.collect()
-    assert(sortedWithin.forall(identity), "each partition is id-sorted with monotone shards")
   }
 }

@@ -135,4 +135,22 @@ class StatsSpec extends SparkSpecBase {
     assert(out.forall(r => r.isNullAt(4) && r.isNullAt(6)), "degenerate covariate -> null")
     assert(out.map(_.getLong(5)).toSeq == Seq(15000000L, 30000000L), "raw means still exact")
   }
+
+  test("basketPairs: fused guard still enforces the hot-basket bound and lift uses the exact basket count") {
+    val items = Seq(
+      (1L, "a"), (1L, "b"), (1L, "c"),
+      (2L, "a"), (2L, "b"),
+      (3L, "a")).toDF("basket", "item")
+    val out = Associations.basketPairs(items, Seq("basket"), "item")
+      .orderBy("item_a", "item_b").collect()
+    // n_baskets = 3; {a,b} support 2, support_a 3, support_b 2:
+    // lift_e6 = 2*3*1e6 / (3*2) = 1_000_000
+    val ab = out.find(r => r.getString(0) == "a" && r.getString(1) == "b").get
+    assert(ab.getLong(2) == 2L && ab.getLong(3) == 3L && ab.getLong(4) == 2L)
+    assert(ab.getLong(5) == 1000000L, s"lift must use the fused basket count: $ab")
+    val e = intercept[IllegalArgumentException] {
+      Associations.basketPairs(items, Seq("basket"), "item", maxItemsPerBasket = 2L)
+    }
+    assert(e.getMessage.contains("largest basket"))
+  }
 }
