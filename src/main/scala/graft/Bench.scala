@@ -59,6 +59,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
     val loads = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
     val reruns = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
+    val persistedRdds = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                 withWarmup: Boolean): Double = {
       val runs = (if (withWarmup) 0 else 1) to nRuns
@@ -70,22 +71,23 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
-        // registry queries that persist intermediates (minhash/neardup
-        // signature caches) have no post-materialization unpersist
-        // hook. Dataset-level persists are plan-keyed in the session
-        // CacheManager, so run k's rebuild of an identical plan would
-        // silently read run k-1's cached blocks — the median would
-        // measure cached-state READS, not the state build (r16 verdict
-        // item 1). Clear between RUNS (outside the timed region) so no
-        // run reads an entry registered with the CacheManager by an
-        // earlier one, and between queries so those entries' storage
-        // can't distort later measurements. Checkpoint blocks
-        // (gcPersist / localCheckpoint) are not CacheManager entries:
-        // only the ContextCleaner frees them, once their RDDs are
-        // garbage-collected.
+        // what still registers with the session CacheManager —
+        // Graph.pageRank's persists and the Classify.NbModel / Lm model
+        // objects — is plan-keyed, so run k's rebuild of an identical
+        // plan would silently read run k-1's cached blocks and the
+        // median would measure cached-state READS, not the state build.
+        // Clear between RUNS (outside the timed region) so no run reads
+        // an entry registered by an earlier one.
         spark.sharedState.cacheManager.clearCache()
         dt
       }
+      // storage-block residency between queries: every other operator
+      // cache (CacheUtil.cached, gcPersist, checkpoints) is owned by
+      // its result and stays persisted until the ContextCleaner sees
+      // the result's RDDs garbage-collected. Left to the JVM's own
+      // collections: forcing a GC after each run (or each query)
+      // measured 10-40% slower timed dedup runs at sf0.1.
+      persistedRdds(name) = spark.sparkContext.getPersistentRDDs.size
       if (times.contains(-1.0)) -1.0
       else median(if (withWarmup) times.tail else times)
     }
@@ -130,6 +132,7 @@ object Bench {
     val rerunJson = reruns
       .map { case (k, (first, b)) => s"""\"$k\":{\"first_median\":$first,\"baseline\":$b}""" }
       .mkString("{", ",", "}")
+    val persistedJson = persistedRdds.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     val fullQs = results.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     System.err.println(s"""[bench-diag] {"load_start":$loadStart,"load_end":${loadavg()},""" +
       s""""load":$loadJson,"reruns":$rerunJson,"queries_full":$fullQs}""")
@@ -149,7 +152,8 @@ object Bench {
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
         (s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,""" +
-          s""""sf":"$sfDir","load":$loadJson,"reruns":$rerunJson}""" + "\n")
+          s""""sf":"$sfDir","load":$loadJson,"reruns":$rerunJson,"persisted_rdds":$persistedJson}""" +
+          "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       System.err.println(s"[bench] full per-query artifact -> $fullPath (${results.size} queries)")
     } catch { case e: Throwable =>

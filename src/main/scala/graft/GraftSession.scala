@@ -40,6 +40,11 @@ object GraftSession {
       // direct reads see it as EventsTable.read does; a no-op on micros
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // with a checkpoint dir set, the graph operators cut lineage with
+      // reliable checkpoints, and connectedComponents' result owns its
+      // label checkpoint: the ContextCleaner deletes such files once
+      // their RDD is garbage-collected instead of leaving them on disk
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -63,11 +63,8 @@ object ScaleProbe {
     time("tfidfTopTerms")(graft.operators.TextAnalysis.tfidfTopTerms(big, "lang", "doc_id", "text").count())
     time("winnowFingerprints (map-only)")(
       graft.operators.TextAnalysis.winnowFingerprints(big, "doc_id", "text").count())
-    time("winnowMatches (banded fp join, hot-fp capped)") {
-      val (m, done) = graft.operators.TextAnalysis.winnowMatchesWithCache(
-        big, "doc_id", "text", minShared = 3, maxDocFreq = 50)
-      val n = m.count(); done(); n
-    }
+    time("winnowMatches (banded fp join, hot-fp capped)")(graft.operators.TextAnalysis.winnowMatches(
+      big, "doc_id", "text", minShared = 3, maxDocFreq = 50).count())
     time("cdcChunks (content-defined, target 32 tok)")(
       graft.operators.TextAnalysis.cdcChunks(big, "doc_id", "text").count())
     time("withSplit")(graft.operators.Sampling.withSplit(big, "doc_id")

@@ -32,25 +32,16 @@ object Associations {
    */
   def basketPairs(df: DataFrame, basketCols: Seq[String], itemCol: String,
                   minSupport: Long = 1L,
-                  maxItemsPerBasket: Long = 10000L): DataFrame =
-    basketPairsWithCache(df, basketCols, itemCol, minSupport, maxItemsPerBasket)._1
-
-  /** As [[basketPairs]], additionally returning an unpersist handle
-   *  for the distinct basket-item cache (consumed four times by the
-   *  returned plan — the columnar persist keeps the within-basket
-   *  self-join scanning compressed batches). Call it once the result
-   *  is materialized ([[graft.operators.Dedup.minhashPairsWithCache]]
-   *  convention). */
-  def basketPairsWithCache(df: DataFrame, basketCols: Seq[String], itemCol: String,
-                           minSupport: Long = 1L,
-                           maxItemsPerBasket: Long = 10000L): (DataFrame, () => Unit) = {
+                  maxItemsPerBasket: Long = 10000L): DataFrame = {
     require(basketCols.nonEmpty, "basketPairs: at least one basket column")
     require(minSupport >= 1L, s"basketPairs: minSupport must be >= 1, got $minSupport")
-    val items = df
+    // the distinct basket-item table feeds the guard and four faces of
+    // the returned plan; the columnar cache keeps the within-basket
+    // self-join scanning compressed batches (owned by the result)
+    val items = CacheUtil.cached(df
       .select((basketCols.map(col) :+ col(itemCol).as("item")): _*)
       .filter(col("item").isNotNull)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // ONE job answers both guard questions: the per-basket rollup's
     // max is the hot-basket bound and its row count IS the distinct
     // basket count (items is already distinct over basket+item) — the
@@ -66,7 +57,7 @@ object Associations {
     val itemSupport = items.groupBy("item").agg(count(lit(1)).as("s"))
     val a = items.select(basketCols.map(col) :+ col("item").as("item_a"): _*)
     val b = items.select(basketCols.map(col) :+ col("item").as("item_b"): _*)
-    val out = a.join(b, basketCols)
+    a.join(b, basketCols)
       .filter(col("item_a") < col("item_b"))
       .groupBy("item_a", "item_b").agg(count(lit(1)).as("support"))
       .filter(col("support") >= minSupport)
@@ -80,6 +71,5 @@ object Associations {
       .withColumn("lift_e6",
         expr(s"(support * ${nBaskets}L * 1000000) div (support_a * support_b)"))
       .select("item_a", "item_b", "support", "support_a", "support_b", "lift_e6")
-    (out, () => { items.unpersist(); () })
   }
 }

@@ -1,49 +1,47 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 
 /**
- * Cache-lifetime conventions for operators that materialize an
- * intermediate consumed more than once by the RETURNED plan — the
- * case where neither an in-function unpersist (the result still
- * needs the blocks at the caller's action) nor a caller-visible
- * handle (`*WithHandle` — the right shape when the CALLER owns the
- * lifetime, e.g. a signature table reused across corpora) fits.
+ * Cache lifetimes for operator intermediates. There are two:
+ *  - released inside the function: a paired `persist`/`unpersist`
+ *    (or a freed checkpoint) around work the function finishes
+ *    itself, on every exit path;
+ *  - owned by the result: the intermediate is consumed more than
+ *    once by the RETURNED plan, so its blocks must outlive the call
+ *    and go when the caller drops the result. [[cached]] is the
+ *    default; [[gcPersist]] is for lineage cuts.
  *
- * The grep-able convention (r13 verdict item 8):
- *  - paired `persist`/`unpersist` inside one function → "released";
- *  - a `*WithHandle`/`*WithCache` variant returning `() => Unit` →
- *    "handle" — the REQUIRED shape when the columnar in-memory scan
- *    or the planner's size statistics are load-bearing (measured:
- *    prefixFilterJoin 5-7x and triangleCounts ~3x slower when their
- *    caches were converted to lineage-cut checkpoints — downstream
- *    joins lost their broadcast decisions and columnar pruning);
- *  - [[CacheUtil.gcPersist]] → lifetime tied to the returned frame;
- *    for SLIM frames (a few fixed-width columns) whose consumers
- *    don't depend on cache statistics.
- *
- * Why RDD-level persist: `Dataset.persist` registers the plan in the
- * session's CacheManager, which holds a STRONG reference until an
- * explicit unpersist or a session-wide clearCache — a library caller
- * running many operators would accumulate executor storage without
- * bound (the bench harness only masked this by clearing the cache
- * between queries). An RDD persist stays out of the CacheManager and
- * is tracked by the ContextCleaner through a weak reference: the
- * blocks free themselves once the caller drops the last reference to
- * the result. CacheHygieneSpec pins both halves (no CacheManager
- * entry; blocks drain after GC).
+ * Neither registers with the session's CacheManager. A
+ * `Dataset.persist` entry is held by a STRONG reference until an
+ * explicit unpersist or a session-wide clearCache, so a library
+ * caller running many operators would accumulate executor storage
+ * without bound. Result-owned blocks are tracked by the
+ * ContextCleaner through a weak reference and free themselves once
+ * the last frame over them is garbage-collected. CacheHygieneSpec
+ * pins both halves (no CacheManager entry; blocks drain after GC).
  */
 private[graft] object CacheUtil {
 
-  /** Eagerly-materialized cache whose lifetime is the returned frame
-   *  (see object doc): `localCheckpoint` stores the INTERNAL row
-   *  representation (columnar-friendly serialized batches — a
-   *  `df.rdd.persist` round-trip would deserialize every row into
-   *  external Row objects, measured 5x slower on the wide
-   *  token-array frame of prefixFilterJoin), keeps the blocks out of
-   *  the CacheManager, and cuts the logical plan so multi-consumer
-   *  reuse never re-analyzes the upstream subtree. Blocks free via
-   *  the ContextCleaner once the caller drops the result. */
+  /** Lazily-materialized columnar cache owned by the returned frame:
+   *  the same `InMemoryRelation` `Dataset.persist` builds
+   *  (MEMORY_AND_DISK, compressed column batches, row-count and size
+   *  statistics once materialized), kept out of the CacheManager.
+   *  The statistics and the columnar scan are load-bearing where the
+   *  cached frame feeds joins: converting these caches to lineage-cut
+   *  checkpoints measured 5-7x slower on prefixFilterJoin and ~3x on
+   *  triangleCounts (downstream joins lost their broadcast decisions
+   *  and columnar pruning). The plan is NOT cut: the relation keeps
+   *  its child plan for recomputation. */
+  def cached(df: DataFrame): DataFrame = GraftBridge.inMemory(df)
+
+  /** Eagerly-materialized cache that also cuts the plan, owned by the
+   *  returned frame: `localCheckpoint` stores the INTERNAL row
+   *  representation (a `df.rdd.persist` round-trip would deserialize
+   *  every row into external Row objects, measured 5x slower on a wide
+   *  token-array frame), keeps the blocks out of the CacheManager, and
+   *  cuts the logical plan so multi-consumer reuse never re-analyzes
+   *  the upstream subtree. For SLIM frames (a few fixed-width columns)
+   *  whose consumers don't depend on cache statistics. */
   def gcPersist(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 }

@@ -71,31 +71,19 @@ object Dedup {
    */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    numPerms: Int = 64, bands: Int = 16, minEstSim: Double = 0.5,
-                   shingleN: Int = 3): DataFrame =
-    minhashPairsWithCache(df, idCol, textCol, numPerms, bands, minEstSim, shingleN)._1
-
-  /** As [[minhashPairs]], additionally returning an unpersist handle for
-   *  the shared signature cache — call it once the result is
-   *  materialized; without it the cache lives until the session's
-   *  CacheManager is cleared (fine for one-shot jobs, a leak in
-   *  long-lived sessions). */
-  def minhashPairsWithCache(df: DataFrame, idCol: String, textCol: String,
-                            numPerms: Int = 64, bands: Int = 16, minEstSim: Double = 0.5,
-                            shingleN: Int = 3): (DataFrame, () => Unit) = {
+                   shingleN: Int = 3): DataFrame = {
     // signatures are tiny relative to the corpus (numPerms longs per
-    // doc); persist so the banded self-join doesn't recompute the
-    // shingle scan twice (the returned handle unpersists)
-    val sigs = minhashSignatures(df, idCol, textCol, numPerms, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (estimatedPairs(sigs, idCol, numPerms, bands, minEstSim), () => { sigs.unpersist(); () })
+    // doc); cache so the banded self-join doesn't recompute the
+    // shingle scan twice
+    val sigs = CacheUtil.cached(minhashSignatures(df, idCol, textCol, numPerms, shingleN))
+    estimatedPairs(sigs, idCol, numPerms, bands, minEstSim)
   }
 
   /** Banded candidate pairs with their signature-estimated Jaccard,
-   *  from an already-materialized (id, sig) frame — the persist-free
-   *  core shared by [[minhashPairsWithCache]] and
-   *  [[minhashCalibration]] (which re-scans the corpus for exact
-   *  shingle sets anyway, so caching signatures buys nothing there
-   *  and leaked its handle before this split). */
+   *  from an (id, sig) frame — the cache-free core shared by
+   *  [[minhashPairs]] and [[minhashCalibration]] (which re-scans the
+   *  corpus for exact shingle sets anyway, so caching signatures buys
+   *  nothing there). */
   private def estimatedPairs(sigs: DataFrame, idCol: String, numPerms: Int,
                              bands: Int, minEstSim: Double): DataFrame = {
     val rowsPerBand = bandLayout(numPerms, bands)
@@ -121,8 +109,8 @@ object Dedup {
   /** Banded LSH candidate pairs over a (id, sig) frame: per-band
    *  xxhash64 bucket keys, bounded self-join, ordered-pair filter,
    *  exactly-once emission at the first truly-matching band (no
-   *  distinct shuffle). Shared by [[minhashPairsWithCache]] and
-   *  [[nearDuplicatesWithCache]]. */
+   *  distinct shuffle). Shared by [[minhashPairs]] and
+   *  [[nearDuplicates]]. */
   /** The band bucket keys of a signature column — ONE definition of
    *  the banding geometry shared by the self-join path and the
    *  incremental batch-vs-history path (a drift between the two would
@@ -170,31 +158,21 @@ object Dedup {
    */
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String,
                      minJaccard: Double = 0.8, numPerms: Int = 128, bands: Int = 32,
-                     shingleN: Int = 3): DataFrame =
-    nearDuplicatesWithCache(df, idCol, textCol, minJaccard, numPerms, bands, shingleN)._1
-
-  /** As [[nearDuplicates]], additionally returning an unpersist handle
-   *  for the shared shingle-scan cache — call it once the result is
-   *  materialized so repeated calls in a long-lived session don't
-   *  accumulate cached partitions. */
-  def nearDuplicatesWithCache(df: DataFrame, idCol: String, textCol: String,
-                              minJaccard: Double = 0.8, numPerms: Int = 128, bands: Int = 32,
-                              shingleN: Int = 3): (DataFrame, () => Unit) = {
+                     shingleN: Int = 3): DataFrame = {
     val rowsPerBand = bandLayout(numPerms, bands)
     // one shingle scan: signature (for candidates) + sorted hashes
-    // (for exact verification) computed side by side, then persisted —
+    // (for exact verification) computed side by side, then cached —
     // both the band self-join and the two verification joins reuse it
-    val base = df.select(col(idCol), shingles(col(textCol), shingleN).as("__shg"))
+    val base = CacheUtil.cached(df.select(col(idCol), shingles(col(textCol), shingleN).as("__shg"))
       .select(col(idCol),
         graft.functions.native.minhashSig(col("__shg"), lit(numPerms)).as("sig"),
         graft.functions.native.sortedHashes(col("__shg")).as("sh"))
-      .withColumn("sz", size(col("sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("sz", size(col("sh"))))
     // slim candidate pairs (ids only — the heavy shingle-hash arrays
     // do NOT ride through the band join's row multiplication)
     val cand = bandedCandidates(base.select(col(idCol), col("sig")), idCol, bands, rowsPerBand)
       .select("id_a", "id_b")
-    val out = cand
+    cand
       .join(base.select(col(idCol).as("id_a"), col("sh").as("sh_a"), col("sz").as("sz_a")), "id_a")
       .join(base.select(col(idCol).as("id_b"), col("sh").as("sh_b"), col("sz").as("sz_b")), "id_b")
       // size bound: J <= min/max, prune before the merge
@@ -203,7 +181,6 @@ object Dedup {
       .withColumn("jaccard", col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "jaccard")
-    (out, () => { base.unpersist(); () })
   }
 
   /**
@@ -283,17 +260,9 @@ object Dedup {
    * and the registry oracle brute-forces all pairs).
    */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 6): DataFrame =
-    simhashPairsWithCache(df, idCol, textCol, maxHamming)._1
-
-  /** As [[simhashPairs]], additionally returning an unpersist handle:
-   *  the signature scan feeds both sides of the chunk self-join, so
-   *  persisting it halves the text-kernel work. */
-  def simhashPairsWithCache(df: DataFrame, idCol: String, textCol: String,
-                            maxHamming: Int = 6): (DataFrame, () => Unit) = {
-    val sigs = simhashSignatures(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (simhashPairsFromSigs(sigs, idCol, maxHamming), () => { sigs.unpersist(); () })
-  }
+    // the signature scan feeds both sides of the chunk self-join, so
+    // caching it halves the text-kernel work
+    simhashPairsFromSigs(CacheUtil.cached(simhashSignatures(df, idCol, textCol)), idCol, maxHamming)
 
   /** Pair generation over a precomputed (id, simhash) frame — the
    *  persistable-signature entry point (and the oracle/property-test
@@ -331,10 +300,8 @@ object Dedup {
   def minhashCalibration(df: DataFrame, idCol: String, textCol: String,
                          numPerms: Int = 64, bands: Int = 16, minEstSim: Double = 0.5,
                          shingleN: Int = 3): DataFrame = {
-    // NO signature persist here: unlike minhashPairs, calibration has
-    // no caller to hand an unpersist handle to, and it re-reads the
-    // corpus for exact shingle sets regardless — so the cache would be
-    // a pure leak (it WAS one: r9 VERDICT "What's wrong" #1)
+    // NO signature cache here: calibration re-reads the corpus for
+    // exact shingle sets regardless, so the cache would buy nothing
     val sigs = minhashSignatures(df, idCol, textCol, numPerms, shingleN)
     val pairs = estimatedPairs(sigs, idCol, numPerms, bands, minEstSim)
     val sh = df.select(col(idCol).as("__cid"),
@@ -394,10 +361,10 @@ object Dedup {
     // each doc's shingle set becomes a sorted array of 64-bit hashes
     // once; per-pair intersection is then a linear long-merge kernel
     // instead of a per-pair string hash set (profiled ~5x faster)
-    val sh = df.select((blockCols :+ idCol).map(col) :+
+    // both join sides share one shingle scan
+    val sh = CacheUtil.cached(df.select((blockCols :+ idCol).map(col) :+
         graft.functions.native.sortedHashes(shingles(col(textCol), n)).as("sh"): _*)
-      .withColumn("sz", size(col("sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // both join sides share one shingle scan
+      .withColumn("sz", size(col("sh"))))
     val a = sh.select(blockCols.map(col) :+ col(idCol).as("id_a") :+ col("sh").as("sh_a") :+ col("sz").as("sz_a"): _*)
     val b = sh.select(blockCols.map(col) :+ col(idCol).as("id_b") :+ col("sh").as("sh_b") :+ col("sz").as("sz_b"): _*)
     a.join(b, blockCols)
@@ -440,9 +407,8 @@ object Dedup {
         substring(normalizeText(col(textCol)), 1, keyLen).as("__snkey"),
         graft.functions.native.sortedHashes(shingles(col(textCol), n)).as("sh"))
       .withColumn("sz", size(col("sh")))
-    val ranked = graft.operators.Rank
-      .globalRowNumber(sh, Seq(col("__snkey"), col(idCol)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranked = CacheUtil.cached(graft.operators.Rank
+      .globalRowNumber(sh, Seq(col("__snkey"), col(idCol))))
     val a = ranked.select(col(idCol).as("id_a"), col("sh").as("sh_a"),
         col("sz").as("sz_a"), col("rank"),
         explode(sequence(lit(1), lit(window - 1))).as("__off"))
@@ -478,10 +444,9 @@ object Dedup {
                        blockCols: Seq[String], n: Int = 3, minContainment: Double = 0.8,
                        maxBlockRows: Long = 1000000L): DataFrame = {
     guardBlockCardinality(df, blockCols, maxBlockRows, "containmentPairs")
-    val sh = df.select((blockCols :+ idCol).map(col) :+
+    val sh = CacheUtil.cached(df.select((blockCols :+ idCol).map(col) :+
         graft.functions.native.sortedHashes(shingles(col(textCol), n)).as("sh"): _*)
-      .withColumn("sz", size(col("sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("sz", size(col("sh"))))
     val a = sh.select(blockCols.map(col) :+ col(idCol).as("id_a") :+ col("sh").as("sh_a") :+ col("sz").as("sz_a"): _*)
     val b = sh.select(blockCols.map(col) :+ col(idCol).as("id_b") :+ col("sh").as("sh_b") :+ col("sz").as("sz_b"): _*)
     a.join(b, blockCols)
@@ -539,41 +504,22 @@ object Dedup {
    */
   def incrementalDedup(newBatch: DataFrame, history: DataFrame,
                        textCol: String,
-                       logM: Int = 16, k: Int = 4): DataFrame =
-    incrementalDedupWithCache(newBatch, history, textCol, logM, k)._1
-
-  /** As [[incrementalDedup]], additionally returning an unpersist
-   *  handle for the history fingerprint cache — the Bloom build
-   *  materializes the fingerprints immediately, so without the
-   *  persist the verify anti-join would RE-FINGERPRINT the entire
-   *  history text (the expensive pass the slim long column exists to
-   *  avoid). Call the handle for deterministic release; a discarded
-   *  handle (the plain [[incrementalDedup]] path) does NOT leak: the
-   *  cache is an RDD-level persist, and Spark's ContextCleaner
-   *  unpersists an RDD once the driver drops its last reference (the
-   *  result plan holds one) — unlike `df.persist`, whose blocks the
-   *  CacheManager pins until an explicit unpersist. Recurring-ingest
-   *  callers therefore shed each call's cache with its result. */
-  def incrementalDedupWithCache(newBatch: DataFrame, history: DataFrame,
-                                textCol: String,
-                                logM: Int = 16, k: Int = 4): (DataFrame, () => Unit) = {
+                       logM: Int = 16, k: Int = 4): DataFrame = {
     import graft.operators.{Sketch, TextAnalysis}
-    val spark = newBatch.sparkSession
-    import spark.implicits._
-    val histFpRdd = history
+    // history's slim fingerprint column, cached: the Bloom build
+    // materializes it, and the verify anti-join then reads the cache
+    // instead of RE-FINGERPRINTING the entire history text
+    val hist = CacheUtil.cached(history
       .select(TextAnalysis.fingerprint(col(textCol)).as("__fp"))
-      // NULL fp (NULL text) can match nothing on either branch; dropping it keeps the cache slim and the RDD encodable as Long
-      .filter(col("__fp").isNotNull)
-      .as[Long].rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hist = histFpRdd.toDF("__fp")
+      // NULL fp (NULL text) can match nothing on either branch; dropping it keeps the cache slim
+      .filter(col("__fp").isNotNull))
     val words = Sketch.bloomBuild(hist, "__fp", logM, k) // materializes (and caches) the fingerprints
     val batch = newBatch.withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
     val hit = Sketch.bloomProbe(col("__fp"), words, logM, k)
     val novel = batch.filter(!hit) // map-only: no false negatives => provably not in history
     val survivors = batch.filter(hit) // bounded sliver: dups + FPs
       .join(hist, Seq("__fp"), "left_anti")
-    (novel.unionByName(survivors).drop("__fp"), () => { histFpRdd.unpersist(blocking = false); () })
+    novel.unionByName(survivors).drop("__fp")
   }
 
   /**
@@ -624,26 +570,14 @@ object Dedup {
                            idCol: String, textCol: String,
                            minJaccard: Double = 0.8, numPerms: Int = 128,
                            bands: Int = 32, shingleN: Int = 3,
-                           maxBatchRows: Long = 100000L): DataFrame = {
-    // columnar Dataset persist, NOT the GC-tracked .rdd persist the
-    // exact-dedup sibling uses: the state is consumed twice (band
-    // join + verify join) and the RDD round-trip costs a full
-    // InternalRow -> Row -> InternalRow conversion of the signature
-    // and shingle-hash ARRAYS per consumer (measured: state
-    // materialization 0.66 s columnar vs 1.93 s via .rdd at sf0.1),
-    // and strips the size statistics the join planning needs. The
-    // cost is the minhashPairs convention's leak: the cache lives
-    // until the session clears it (one-shot jobs fine; long-lived
-    // recurring-ingest callers should use [[incrementalNearDedupWithState]]
-    // against a state THEY persist and release).
-    val st = nearDupState(history, idCol, textCol, numPerms, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the WithState guards (batch size, id type) throw eagerly; the
-    // state cache they leave behind would never be released
-    try incrementalNearDedupWithState(newBatch, st,
+                           maxBatchRows: Long = 100000L): DataFrame =
+    // the state is consumed twice (band join + verify join); the cache
+    // is owned by the result, so a throwing batch guard leaves nothing
+    // behind either. Recurring-ingest callers that keep the state
+    // across batches use [[incrementalNearDedupWithState]].
+    incrementalNearDedupWithState(newBatch,
+      CacheUtil.cached(nearDupState(history, idCol, textCol, numPerms, shingleN)),
       idCol, textCol, minJaccard, numPerms, bands, shingleN, maxBatchRows)
-    catch { case e: Throwable => st.unpersist(); throw e }
-  }
 
   /** As [[incrementalNearDedup]] against a PRE-BUILT (and ideally
    *  persisted/stored) [[nearDupState]] — the entry point for real
@@ -675,16 +609,14 @@ object Dedup {
         "batch-derived band keys and signatures by contract (history streams); " +
         "for corpus-sized re-dedup use nearDuplicates/minhashPairs, or raise " +
         "maxBatchRows explicitly")
-    val bb = newBatch
+    // batch state is consumed twice as well; cached like the state
+    val batchBase = CacheUtil.cached(newBatch
       .select(col(idCol).as("__bid"), shingles(col(textCol), shingleN).as("__shg"))
       .select(col("__bid"),
         graft.functions.native.minhashSig(col("__shg"), lit(numPerms)).as("bsig"),
         graft.functions.native.sortedHashes(col("__shg")).as("bsh"))
       .withColumn("bsz", size(col("bsh")))
-      .filter(col("bsz") > 0)
-    // batch state is consumed twice as well; same columnar persist
-    // (and same leak note) as the history state above
-    val batchBase = bb.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("bsz") > 0))
     val bBand = batchBase.select(col("__bid"), col("bsig"),
         posexplode(bandHashes(col("bsig"), bands, rowsPerBand)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandhash")
@@ -695,10 +627,10 @@ object Dedup {
     // first truly-matching band, not a distinct shuffle of all pairs.
     // The batch-derived frames (band keys, verify payloads, candidate
     // ids, dup ids) are BROADCAST by the operator's own contract —
-    // ingest batches are small relative to history, and the
-    // RDD-backed GC-tracked caches carry no size statistics, so
-    // without the hints every join here planned sort-merge and the
-    // corpus-sized history state was shuffled per ingest (measured:
+    // ingest batches are small relative to history, and a caller's
+    // state frame may carry no size statistics, so without the hints
+    // every join here can plan sort-merge and shuffle the corpus-sized
+    // history state per ingest (measured on statistics-free caches:
     // 33 SMJs, zero broadcasts at sf0.1). History always streams.
     val cand = broadcast(bBand).join(hBand, Seq("band", "bandhash"))
       .filter(col("band") === firstMatchingBand(col("bsig"), col("sig"), bands, rowsPerBand))
@@ -866,35 +798,22 @@ object Dedup {
    * slice; sh: the dup-hash aggregate + the back-join probe), so
    * both are cached MEMORY_AND_DISK — the r11 uncached shape
    * re-tokenized the corpus three times and re-hashed every window
-   * twice (3.3x idle ratio); the caches follow the minhash/neardup
-   * signature-cache precedent: long-lived library callers should use
-   * [[exactDupSpansWithHandle]] and unpersist after their action
-   * (this arity is the bench-session face, where the session's cache
-   * clearing releases the blocks).
+   * twice (3.3x idle ratio). Both caches are owned by the result.
    */
   def exactDupSpans(df: DataFrame, idCol: String, textCol: String,
-                    minTokens: Int = 5, maxDocs: Int = 1): DataFrame =
-    exactDupSpansWithHandle(df, idCol, textCol, minTokens, maxDocs)._1
-
-  /** As [[exactDupSpans]], additionally returning an unpersist handle
-   *  releasing the token-array and shingle caches — call it after the
-   *  action consuming the result (the [[minhashPairsWithHandle]] /
-   *  [[nearDuplicatesWithHandle]] precedent, so library callers don't
-   *  accumulate executor-storage blocks across many corpora). */
-  def exactDupSpansWithHandle(df: DataFrame, idCol: String, textCol: String,
-                    minTokens: Int = 5, maxDocs: Int = 1): (DataFrame, () => Unit) = {
+                    minTokens: Int = 5, maxDocs: Int = 1): DataFrame = {
     require(minTokens >= 1, s"minTokens must be >= 1 (got $minTokens)")
     require(maxDocs >= 1, s"maxDocs must be >= 1 (got $maxDocs)")
     val w = minTokens
     val toks = split(normalizeText(coalesce(col(textCol), lit(""))), " ")
-    val base = df.select(col(idCol), toks.as("__tk")).withColumn("__ntok", size(col("__tk")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = CacheUtil.cached(
+      df.select(col(idCol), toks.as("__tk")).withColumn("__ntok", size(col("__tk"))))
     val posArr = when(col("__ntok") < w, array(lit(0)))
       .otherwise(sequence(lit(0), col("__ntok") - w))
-    val sh = base.select(col(idCol), col("__ntok"), explode(posArr).as("__pos"), col("__tk"))
-      .withColumn("__h", sha2(array_join(slice(col("__tk"), col("__pos") + 1, lit(w)), " "), 256))
-      .drop("__tk")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = CacheUtil.cached(
+      base.select(col(idCol), col("__ntok"), explode(posArr).as("__pos"), col("__tk"))
+        .withColumn("__h", sha2(array_join(slice(col("__tk"), col("__pos") + 1, lit(w)), " "), 256))
+        .drop("__tk"))
     val dup = sh.groupBy("__h")
       .agg(countDistinct(col(idCol)).as("__nd"))
       .filter(col("__nd") > maxDocs)
@@ -911,13 +830,12 @@ object Dedup {
       .agg(min(col("__pos")).cast("long").as("span_start"),
         max(col("__e")).cast("long").as("span_end"),
         count(lit(1)).as("n_windows"))
-    val out = islands.join(base.select(col(idCol), col("__tk")), Seq(idCol))
+    islands.join(base.select(col(idCol), col("__tk")), Seq(idCol))
       .select(col(idCol), col("span_start"), col("span_end"),
         (col("span_end") - col("span_start")).as("span_tokens"),
         col("n_windows"),
         array_join(slice(col("__tk"), (col("span_start") + 1).cast("int"),
           (col("span_end") - col("span_start")).cast("int")), " ").as("span_text"))
-    (out, () => { base.unpersist(); sh.unpersist(); () })
   }
 
   /**
@@ -957,19 +875,7 @@ object Dedup {
    * verify join. No all-pairs stage at any cardinality.
    */
   def prefixFilterJoin(df: DataFrame, idCol: String, textCol: String,
-                       t100: Int = 60): DataFrame =
-    prefixFilterJoinWithCache(df, idCol, textCol, t100)._1
-
-  /** As [[prefixFilterJoin]], additionally returning an unpersist
-   *  handle for the ordered-token cache — the columnar Dataset
-   *  persist is load-bearing here (the cached frame feeds the prefix
-   *  explode AND both sides of the exact-verify join; an RDD-level
-   *  checkpoint measured 5-7x slower end-to-end: it loses the
-   *  columnar scan and the size statistics that let the verify joins
-   *  broadcast at moderate corpus sizes). Call the handle once the
-   *  result is materialized ([[minhashPairsWithCache]] convention). */
-  def prefixFilterJoinWithCache(df: DataFrame, idCol: String, textCol: String,
-                                t100: Int = 60): (DataFrame, () => Unit) = {
+                       t100: Int = 60): DataFrame = {
     require(t100 >= 1 && t100 <= 100, s"prefixFilterJoin: t100 must be in [1,100], got $t100")
     // distinct (doc, token) pairs; blank tokens (empty docs) dropped
     val flat = df.select(col(idCol).as("id"),
@@ -979,13 +885,15 @@ object Dedup {
     val freq = flat.groupBy("tok").agg(count(lit(1)).as("f"))
     // rare-first total order (f, tok) realized per doc via array_sort
     // on (f, tok) structs — no corpus-wide window needed
-    val ordered = flat.join(freq, "tok")
+    // the cached frame feeds the prefix explode AND both sides of the
+    // exact-verify join; its size statistics let the verify joins
+    // broadcast at moderate corpus sizes
+    val ordered = CacheUtil.cached(flat.join(freq, "tok")
       .groupBy("id")
       .agg(array_sort(collect_list(struct(col("f"), col("tok")))).as("ord"))
       .select(col("id"),
         transform(col("ord"), x => x("tok")).as("toks"),
-        size(col("ord")).cast("long").as("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        size(col("ord")).cast("long").as("sz")))
     val pre = ordered
       .withColumn("p", col("sz") - expr(s"(sz * $t100 + 99) div 100") + 1)
       .select(col("id"), col("sz"),
@@ -999,14 +907,13 @@ object Dedup {
         expr(s"($t100 * (sz_a + sz_b) + ${100 + t100 - 1}) div ${100 + t100}"))
       .groupBy("id_a", "id_b", "sz_a", "sz_b")
       .agg(count(lit(1)).as("__shared_prefix"))
-    val out = cand
+    cand
       .join(ordered.select(col("id").as("id_a"), col("toks").as("__ta")), "id_a")
       .join(ordered.select(col("id").as("id_b"), col("toks").as("__tb")), "id_b")
       .withColumn("inter", size(array_intersect(col("__ta"), col("__tb"))).cast("long"))
       .filter(col("inter") * 100 >= (col("sz_a") + col("sz_b") - col("inter")) * t100)
       .select(col("id_a"), col("id_b"), col("inter"),
         expr("(inter * 10000) div (sz_a + sz_b - inter)").as("jaccard_e4"))
-    (out, () => { ordered.unpersist(); () })
   }
 
   /** Embedding near-dup pairs within a blocking column (e.g. cluster label). */

@@ -20,6 +20,36 @@ import scala.jdk.CollectionConverters._
  */
 object Graph {
 
+  /** Per-iteration lineage truncation. `labels` feeds the next
+   *  iteration TWICE (message join + self union), so without
+   *  truncation the logical plan DOUBLES every round — exponential
+   *  planning/analysis cost long before any data moves. Checkpointing
+   *  materializes the iteration and restarts the plan from the stored
+   *  blocks: reliable `.checkpoint` when the session has a checkpoint
+   *  dir (cluster fault tolerance), executor-local otherwise. */
+  private def truncate(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
+
+  /** Free a superseded checkpoint or a [[CacheUtil.cached]] frame
+   *  now: its blocks AND any reliable-checkpoint files. Both live
+   *  outside the CacheManager (`Dataset.unpersist` is a NO-OP for
+   *  them), so without this the per-iteration block sets pile up until
+   *  a JVM GC lets the ContextCleaner collect the old RDDs. */
+  private def release(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder.cachedColumnBuffers
+    }.foreach { rdd =>
+      rdd.unpersist(false)
+      rdd.getCheckpointFile.foreach { p =>
+        try {
+          val path = new org.apache.hadoop.fs.Path(p)
+          path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
+        } catch { case _: Exception => () } // best effort — the cleaner's job otherwise
+      }
+    }
+
   /**
    * Connected components by alternating large-star / small-star
    * rounds (Kiveris et al. 2014, "Connected Components in MapReduce
@@ -45,61 +75,15 @@ object Graph {
    * rounds: a driver-side union-find gives the same labels (its
    * min-id root per component IS the star fixed point). The default
    * is [[DriverLocal.maxEdges]]; 0 forces the star rounds.
+   *
+   * The labels are a lineage-cut checkpoint owned by the result.
+   * Throws IllegalStateException if the propagation has not converged
+   * within `maxIter` rounds — silently returning partial labels would
+   * corrupt downstream dedup — after freeing its own blocks.
    */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 30,
-                          localMaxEdges: Long = DriverLocal.maxEdges): DataFrame =
-    connectedComponentsWithCache(pairs, aCol, bCol, maxIter, localMaxEdges)._1
-
-  /** Per-iteration lineage truncation. `labels` feeds the next
-   *  iteration TWICE (message join + self union), so without
-   *  truncation the logical plan DOUBLES every round — exponential
-   *  planning/analysis cost long before any data moves. Checkpointing
-   *  materializes the iteration and restarts the plan from the stored
-   *  blocks: reliable `.checkpoint` when the session has a checkpoint
-   *  dir (cluster fault tolerance), executor-local otherwise. */
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
-  /** The materialized RDD behind a checkpointed iteration, freed
-   *  explicitly when the next iteration supersedes it —
-   *  `Dataset.unpersist` is a NO-OP for checkpointed plans (their
-   *  blocks live outside the CacheManager), so without this the
-   *  per-iteration block sets pile up until a JVM GC happens to
-   *  collect the old RDD objects. */
-  private def backingRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
-  /** Free a superseded iteration: cached blocks (local checkpoints)
-   *  AND the reliable-checkpoint files — Spark only deletes those at
-   *  shutdown when `spark.cleaner.referenceTracking.cleanCheckpoints`
-   *  is set, so a long-lived session running repeated clusterings
-   *  would otherwise fill the checkpoint filesystem. */
-  private def free(df: DataFrame)(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
-    rdd.unpersist(false)
-    rdd.getCheckpointFile.foreach { p =>
-      try {
-        val path = new org.apache.hadoop.fs.Path(p)
-        path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
-      } catch { case _: Exception => () } // best effort — the cleaner's job otherwise
-    }
-  }
-
-  /** As [[connectedComponents]], additionally returning a release
-   *  handle that frees the final label blocks. Call it only once the
-   *  result is no longer needed (or has been written/persisted
-   *  elsewhere): checkpointing truncates lineage, so a released
-   *  result cannot be recomputed. Throws IllegalStateException if the
-   *  propagation has not converged within `maxIter` rounds (component
-   *  diameter exceeds the bound) — silently returning partial labels
-   *  would corrupt downstream dedup — after freeing its own blocks. */
-  def connectedComponentsWithCache(pairs: DataFrame, aCol: String, bCol: String,
-                                   maxIter: Int = 30,
-                                   localMaxEdges: Long = DriverLocal.maxEdges)
-      : (DataFrame, () => Unit) = {
+                          localMaxEdges: Long = DriverLocal.maxEdges): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
     // non-numeric ids would cast to null, never equi-join, and return
     // every node as its own singleton component with no error
@@ -120,8 +104,8 @@ object Graph {
     val pr = truncate(pairs.select(a.as("pa"), b.as("pb")))
     // node universe (the output contract) — self-loop-only nodes
     // carry no star edge but must still label themselves
-    val nodes = pr.select(col("pa").as("id")).union(pr.select(col("pb").as("id")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = CacheUtil.cached(pr.select(col("pa").as("id")).union(pr.select(col("pb").as("id")))
+      .distinct())
     nodes.count()
     // canonical undirected edges, oriented hi > lo; both star
     // operators preserve the orientation (they only rewire toward
@@ -161,7 +145,7 @@ object Graph {
     }
     // nodes (counted) and the canonical edge checkpoint are both
     // materialized — the pair checkpoint has served its two readers
-    backingRdd(pr).foreach(free(pr))
+    release(pr)
     // Scale-adaptive LOCAL degenerate (the MOC localMax /
     // overlapJoin-broadcast precedent): the canonical edge count is
     // already known FOR FREE from the observed phi on the initial
@@ -201,9 +185,9 @@ object Graph {
       val out = truncate(
         nodes.join(broadcast(labelsDf), Seq("id"), "left")
           .select(col("id"), coalesce(col("comp"), col("id")).as("comp")))
-      backingRdd(edges).foreach(free(edges))
-      nodes.unpersist(blocking = false)
-      return (out, () => { backingRdd(out).foreach(free(out)); () })
+      release(edges)
+      release(nodes)
+      return out
     }
     var it = 0
     var converged = false
@@ -233,14 +217,14 @@ object Graph {
       val phiS = phiOf(obsS)
       converged = phiS == phiPrev
       phiPrev = phiS
-      backingRdd(afterLarge).foreach(free(afterLarge))
-      backingRdd(edges).foreach(free(edges))
+      release(afterLarge)
+      release(edges)
       edges = afterSmall
       it += 1
     }
     if (!converged) {
-      backingRdd(edges).foreach(free(edges))
-      nodes.unpersist(blocking = false)
+      release(edges)
+      release(nodes)
       throw new IllegalStateException(
         s"connectedComponents did not converge within maxIter=$maxIter star rounds — " +
           "this bound is O(log n), not diameter; raise maxIter only for astronomically " +
@@ -255,9 +239,9 @@ object Graph {
     val out = truncate(
       nodes.join(starLabels, Seq("id"), "left")
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp")))
-    backingRdd(edges).foreach(free(edges))
-    nodes.unpersist(blocking = false)
-    (out, () => { backingRdd(out).foreach(free(out)); () })
+    release(edges)
+    release(nodes)
+    out
   }
 
   /**
@@ -269,28 +253,16 @@ object Graph {
    */
   def dedupClusters(df: DataFrame, idCol: String, textCol: String,
                     minJaccard: Double = 0.8, numPerms: Int = 128, bands: Int = 32,
-                    shingleN: Int = 3): DataFrame =
-    dedupClustersWithCache(df, idCol, textCol, minJaccard, numPerms, bands, shingleN)._1
-
-  /** As [[dedupClusters]], additionally returning a release handle
-   *  for the component-label blocks — call it only once the result is
-   *  no longer needed (checkpoint lineage is truncated, so released
-   *  labels cannot be recomputed). */
-  def dedupClustersWithCache(df: DataFrame, idCol: String, textCol: String,
-                             minJaccard: Double = 0.8, numPerms: Int = 128, bands: Int = 32,
-                             shingleN: Int = 3): (DataFrame, () => Unit) = {
-    val (pairs, releasePairs) =
-      Dedup.nearDuplicatesWithCache(df, idCol, textCol, minJaccard, numPerms, bands, shingleN)
-    val (comp, releaseComp) = connectedComponentsWithCache(pairs, "id_a", "id_b")
+                    shingleN: Int = 3): DataFrame = {
     // component labels are fully materialized by the iteration's own
-    // actions, so the (much heavier) pair/shingle cache can be dropped
-    // now — consuming the result only re-reads the label cache
-    releasePairs()
-    val out = df.join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
+    // actions (a lineage-cut checkpoint), so the result does not hold
+    // the (much heavier) pair/shingle cache: it goes with `pairs`
+    val pairs = Dedup.nearDuplicates(df, idCol, textCol, minJaccard, numPerms, bands, shingleN)
+    val comp = connectedComponents(pairs, "id_a", "id_b")
+    df.join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("comp"), col(idCol)))
       .withColumn("is_canonical", col("cluster_id") === col(idCol))
       .drop("comp")
-    (out, releaseComp)
   }
 
   /**
@@ -416,24 +388,15 @@ object Graph {
    *  would generate d^2 wedges under naive a<b enumeration generates
    *  none, because all its edges point INTO it. Returns one row per
    *  graph node: (node, degree, triangles). */
-  def triangleCounts(edges0: DataFrame, aCol: String, bCol: String): DataFrame =
-    triangleCountsWithCache(edges0, aCol, bCol)._1
-
-  /** As [[triangleCounts]], additionally returning an unpersist
-   *  handle for the canonical-edge and triangle caches — columnar
-   *  Dataset persists are load-bearing here: `e` feeds the degree
-   *  rollup, the orientation join and the wedge-closing join, and
-   *  the size statistics they carry let those joins broadcast on
-   *  moderate graphs (an RDD-level checkpoint measured ~3x slower).
-   *  Call the handle once the result is materialized
-   *  ([[connectedComponentsWithCache]] convention). */
-  def triangleCountsWithCache(edges0: DataFrame, aCol: String,
-                              bCol: String): (DataFrame, () => Unit) = {
-    val e = edges0
+  def triangleCounts(edges0: DataFrame, aCol: String, bCol: String): DataFrame = {
+    // columnar caches owned by the result: `e` feeds the degree
+    // rollup, the orientation join and the wedge-closing join, and
+    // the size statistics it carries let those joins broadcast on
+    // moderate graphs (a lineage-cut checkpoint measured ~3x slower)
+    val e = CacheUtil.cached(edges0
       .select(least(col(aCol), col(bCol)).cast("long").as("a"),
         greatest(col(aCol), col(bCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .filter(col("a") =!= col("b")).distinct())
     val deg = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     // total order (degree, id): orient src -> dst upward
@@ -455,17 +418,15 @@ object Graph {
       // each unordered {v,w} wedge appears twice; keep one by id order
       .filter(col("v") < col("w"))
     val closing = e.select(col("a").as("v"), col("b").as("w"))
-    val tris = wedges.join(closing, Seq("v", "w"))
-      .select(col("src").as("x"), col("v").as("y"), col("w").as("z"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val tris = CacheUtil.cached(wedges.join(closing, Seq("v", "w"))
+      .select(col("src").as("x"), col("v").as("y"), col("w").as("z")))
     val perNode = tris.select(col("x").as("n"))
       .union(tris.select(col("y").as("n")))
       .union(tris.select(col("z").as("n")))
       .groupBy("n").agg(count(lit(1)).as("triangles"))
-    val out = deg.join(perNode, Seq("n"), "left")
+    deg.join(perNode, Seq("n"), "left")
       .select(col("n").as("node"), col("d").as("degree"),
         coalesce(col("triangles"), lit(0L)).as("triangles"))
-    (out, () => { e.unpersist(); tris.unpersist(); () })
   }
 
   /** Multi-source BFS: minimum hop count from any seed, bounded by
@@ -544,7 +505,7 @@ object Graph {
           .select(col("nb").as("node")).distinct()
           .join(dist, Seq("node"), "left_anti")
           .withColumn("hop", lit(h)))
-      if (nxt.isEmpty) { backingRdd(nxt).foreach(free(nxt)); done = true }
+      if (nxt.isEmpty) { release(nxt); done = true }
       else {
         dist = dist.union(nxt)
         frontier = nxt
@@ -650,7 +611,7 @@ object Graph {
           .select(col("n").as("node"), col("__b.l").as("lbl"))
       val prev = labels
       labels = truncate(next)
-      backingRdd(prev).foreach(free(prev))
+      release(prev)
     }
     dirE.unpersist(blocking = false)
     labels.select(col("node"), col("lbl").as("community"))
@@ -845,12 +806,12 @@ object Graph {
         val prev = lab
         lab = truncate(lab.join(remap, col("lbl") === col("__lbl"), "left")
           .select(col("node"), coalesce(col("__new"), col("lbl")).as("lbl")))
-        backingRdd(prev).foreach(free(prev))
+        release(prev)
       }
-      backingRdd(mut).foreach(free(mut))
+      release(mut)
       r += 1
     }
-    backingRdd(deg).foreach(free(deg))
+    release(deg)
     lab.select(col("node"), col("lbl").as(commCol))
   }
 
@@ -962,7 +923,6 @@ object Graph {
     // constant default; the extra row decode is map-only and lazy.
     def fresh(t: DataFrame): DataFrame =
       t.sparkSession.createDataFrame(t.rdd, t.schema)
-    def release(t: DataFrame): Unit = backingRdd(t).foreach(free(t))
     var distCk = truncate(
       seeds.select(col(seedCol).cast("long").as("node"))
         .filter(col("node").isNotNull)
@@ -1025,7 +985,6 @@ object Graph {
     // checkpointed RDD so size-only stats cannot compound
     def fresh(t: DataFrame): DataFrame =
       t.sparkSession.createDataFrame(t.rdd, t.schema)
-    def release(t: DataFrame): Unit = backingRdd(t).foreach(free(t))
     // fixed-point counts ride the checkpoint jobs as OBSERVED metrics
     // (the connectedComponents phi pattern): the old per-round
     // `pairs.count()` + `grown.count()` pair re-ran two jobs per round

@@ -231,29 +231,20 @@ object TextAnalysis {
    */
   def winnowMatches(df: DataFrame, idCol: String, textCol: String,
                     k: Int = 5, w: Int = 4, minShared: Int = 2,
-                    maxDocFreq: Int = 50): DataFrame =
-    winnowMatchesWithCache(df, idCol, textCol, k, w, minShared, maxDocFreq)._1
-
-  /** As [[winnowMatches]], additionally returning an unpersist handle:
-   *  the distinct fingerprint table feeds the doc-frequency aggregate
-   *  AND both sides of the self-join — without the persist the
-   *  per-document winnow kernel pass would re-run up to 4x (the
-   *  minhashPairsWithCache precedent). */
-  def winnowMatchesWithCache(df: DataFrame, idCol: String, textCol: String,
-                             k: Int = 5, w: Int = 4, minShared: Int = 2,
-                             maxDocFreq: Int = 50): (DataFrame, () => Unit) = {
-    val fps = winnowFingerprints(df, idCol, textCol, k, w)
-      .select(col(idCol).as("id"), col("fp")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                    maxDocFreq: Int = 50): DataFrame = {
+    // the distinct fingerprint table feeds the doc-frequency aggregate
+    // AND both sides of the self-join — without the cache the
+    // per-document winnow kernel pass would re-run up to 4x
+    val fps = CacheUtil.cached(winnowFingerprints(df, idCol, textCol, k, w)
+      .select(col(idCol).as("id"), col("fp")).distinct())
     val rare = fps.groupBy("fp").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDocFreq).select("fp")
     val pruned = fps.join(rare, "fp")
-    val out = pruned.as("a").join(pruned.as("b"),
+    pruned.as("a").join(pruned.as("b"),
         col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("shared_fps"))
       .filter(col("shared_fps") >= minShared)
-    (out, () => { fps.unpersist(); () })
   }
 
   /** DuckDB twin of the whole [[winnowFingerprints]] pipeline: gram

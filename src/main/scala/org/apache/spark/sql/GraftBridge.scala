@@ -1,14 +1,48 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Minimal bridge into Spark's private[sql] Column <-> Expression
  * conversions (Spark 4.x moved Column to a ColumnNode wrapper; this
  * is the standard extension-library pattern for building typed
- * Columns around custom Catalyst expressions).
+ * Columns around custom Catalyst expressions), and into the
+ * in-memory relation `Dataset.persist` builds.
  */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `df` over an `InMemoryRelation` built the way
+   *  `CacheManager.cacheQuery` builds one for `Dataset.persist()`
+   *  (MEMORY_AND_DISK, normalized plan, executed under the same
+   *  session with bucketed-scan rewriting and, unless cached plans may
+   *  change partitioning, the final-stage shuffle optimizations turned
+   *  off) but never registered with the CacheManager: the relation
+   *  lives in the returned plan only, so its blocks go when the last
+   *  frame over it is garbage-collected.
+   *
+   *  The relation carries no logical output ordering.
+   *  `InMemoryRelation.newInstance` (the right side of a self-join)
+   *  copies the ordering without remapping it onto the new attribute
+   *  ids, and canonicalizing the join then fails with `key not found`.
+   *  The physical scan still reports the cached plan's ordering and
+   *  partitioning. */
+  def inMemory(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val session = ds.sparkSession
+    val off = SQLConf.AUTO_BUCKETED_SCAN_ENABLED +:
+      (if (session.sessionState.conf.getConf(SQLConf.CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING)) Nil
+       else Seq(SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS))
+    val cacheSession = classic.SparkSession.getOrCloneSessionWithConfigsOff(session, off)
+    val built = cacheSession.withActive {
+      val qe = cacheSession.sessionState.executePlan(ds.queryExecution.normalized)
+      InMemoryRelation(StorageLevel.MEMORY_AND_DISK, qe, None)
+    }
+    classic.Dataset.ofRows(session,
+      InMemoryRelation(built.output, built.cacheBuilder, Nil, built.statsOfPlanToCache))
+  }
 }

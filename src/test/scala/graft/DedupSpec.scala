@@ -17,6 +17,8 @@ class DedupSpec extends SparkSpecBase {
     base.union(dups)
   }
 
+  private def q(name: String) = QueryRegistry.all.toMap.apply(name).run(spark, sf("sf0.001"))
+
   test("exactDedup collapses exact duplicates, keeps min id") {
     val res = Dedup.exactDedup(docsWithPlants, "doc_id", "text")
     val planted = res.filter(col("keep_id") >= 100001L).collect()
@@ -41,14 +43,15 @@ class DedupSpec extends SparkSpecBase {
       "calibration must not persist anything it cannot unpersist")
   }
 
-  test("minhashPairsWithCache handle releases the signature cache") {
+  test("minhashPairs caches its signatures outside the CacheManager") {
     spark.sharedState.cacheManager.clearCache()
-    val (pairs, done) = Dedup.minhashPairsWithCache(docsWithPlants, "doc_id", "text",
-      minEstSim = 0.5)
+    val before = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+    val pairs = Dedup.minhashPairs(docsWithPlants, "doc_id", "text", minEstSim = 0.5)
     assert(pairs.count() > 0)
-    assert(!spark.sharedState.cacheManager.isEmpty, "signatures should be cached mid-flight")
-    done()
-    assert(spark.sharedState.cacheManager.isEmpty, "handle must clear the signature cache")
+    assert((spark.sparkContext.getPersistentRDDs.keysIterator.toSet -- before).nonEmpty,
+      "signatures should be cached while the result is live")
+    assert(spark.sharedState.cacheManager.isEmpty, "the signature cache must not need a release")
+    java.lang.ref.Reference.reachabilityFence(pairs)
   }
 
   test("minhashPairs emits each pair exactly once (min-band dedup, no distinct shuffle)") {
@@ -448,5 +451,124 @@ class DedupSpec extends SparkSpecBase {
     // at/below the bound the operator still works
     val kept = Dedup.incrementalNearDedup(batch, history, "doc_id", "text", maxBatchRows = 10L)
     assert(kept.count() == 10L, "non-duplicate batch survives under the bound")
+  }
+
+  test("exactDupSpans recovers a planted sub-10-token overlap with exact offsets") {
+    // 6-token copied span ("one two three four five six") planted at
+    // token 3 of doc 1 and token 2 of doc 2, inside otherwise-unique noise
+    val docs = Seq(
+      (1L, "aa bb cc one two three four five six dd ee"),
+      (2L, "ff gg one two three four five six hh"),
+      (3L, "ii jj kk ll mm nn oo pp qq rr")).toDF("doc_id", "text")
+    val got = Dedup.exactDupSpans(docs, "doc_id", "text", minTokens = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(5))).sorted
+    assert(got.toSeq == Seq(
+      (1L, 3L, 9L, "one two three four five six"),
+      (2L, 2L, 8L, "one two three four five six")),
+      s"maximal spans must carry exact [start, end) offsets and the copied text: ${got.toSeq}")
+  }
+
+  test("exactDupSpans: overlaps shorter than minTokens stay invisible; whole-doc short dups surface") {
+    val docs = Seq(
+      (1L, "pp qq rr ss zz yy xx"), // 4-token overlap pp..ss with doc 2
+      (2L, "pp qq rr ss aa bb cc"),
+      (3L, "tiny doc"), // exact whole-text dup with doc 4 (< minTokens)
+      (4L, "tiny doc")).toDF("doc_id", "text")
+    val got = Dedup.exactDupSpans(docs, "doc_id", "text", minTokens = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(!got.exists(g => g._1 == 1L || g._1 == 2L),
+      s"a 4-token overlap must not survive minTokens=5: ${got.toSeq}")
+    assert(got.toSet == Set((3L, 0L, 2L), (4L, 0L, 2L)),
+      s"short whole-doc copies ride the single whole-text window: ${got.toSeq}")
+  }
+
+  test("exactDupSpans merges adjacent duplicated windows into ONE maximal span") {
+    // a 9-token copied run = 5 overlapping 5-windows -> exactly one island
+    val run = "k1 k2 k3 k4 k5 k6 k7 k8 k9"
+    val docs = Seq(
+      (1L, s"u1 u2 $run u3 u4"),
+      (2L, s"v1 $run v2 v3 v4")).toDF("doc_id", "text")
+    val got = Dedup.exactDupSpans(docs, "doc_id", "text", minTokens = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(4)))
+    assert(got.length == 2 && got.forall(_._4 == 5L),
+      s"each doc gets one island of 5 windows: ${got.toSeq}")
+    assert(got.toSet == Set((1L, 2L, 11L, 5L), (2L, 1L, 10L, 5L)), got.toSeq.toString)
+  }
+
+  test("exactDupSpans plan: no cartesian/nested-loop anywhere in the span pipeline") {
+    val docs = Seq((1L, "aa bb cc dd ee ff"), (2L, "aa bb cc dd ee gg")).toDF("doc_id", "text")
+    val plan = Dedup.exactDupSpans(docs, "doc_id", "text", minTokens = 5)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+      s"span extraction must stay equi-join only:\n$plan")
+  }
+
+  test("dedup_ppjoin: prefix join is an equi-join with no cartesian product and no corpus-wide window") {
+    val plan = q("dedup_ppjoin").queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct"), s"no all-pairs stage:\n$plan")
+    assert(!plan.contains("Exchange SinglePartition"),
+      s"no stage may collapse to a single partition:\n$plan")
+  }
+
+  test("pipeline_er: entity partition is consistent (sizes sum to corpus, one canonical each)") {
+    val out = q("pipeline_er").cache()
+    try {
+      val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet").count()
+      assert(out.count() == docs, "every document gets exactly one entity row")
+      // csize really is the entity's row count
+      val bad = out.groupBy("entity_id").agg(count(lit(1)).as("n"), first("csize").as("c"),
+          sum(when(col("is_canonical"), 1).otherwise(0)).as("canon"))
+        .filter(col("n") =!= col("c") || col("canon") =!= 1).count()
+      assert(bad == 0, "each entity: csize == member count and exactly one canonical")
+      // canonical representative is the smallest member id
+      val badCanon = out.groupBy("entity_id").agg(min("doc_id").as("lo"))
+        .filter(col("entity_id") =!= col("lo")).count()
+      assert(badCanon == 0, "entity_id must be the component minimum")
+    } finally out.unpersist()
+  }
+
+  test("dedup_keepbest: exactly one keep per cluster and it is the longest member") {
+    val out = q("dedup_keepbest").cache()
+    try {
+      val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet").count()
+      assert(out.count() == docs, "every document gets exactly one row")
+      val badKeep = out.groupBy("cluster_id")
+        .agg(sum(when(col("keep"), 1).otherwise(0)).as("keeps"))
+        .filter(col("keeps") =!= 1).count()
+      assert(badKeep == 0, "each cluster keeps exactly one member")
+      // the kept member attains the cluster's (max len, min doc_id at that len)
+      val best = out.groupBy("cluster_id").agg(max(struct(col("len"),
+        (-col("doc_id")).as("negid"))).as("b"))
+      val bad = out.filter(col("keep"))
+        .join(best, "cluster_id")
+        .filter(col("len") =!= col("b.len") || col("doc_id") =!= -col("b.negid"))
+        .count()
+      assert(bad == 0, "survivor must be longest, tie -> smallest id")
+    } finally out.unpersist()
+  }
+
+  test("keep rule prefers content length over id accident (seeded cluster)") {
+    import spark.implicits._
+    // three near-identical docs; the LONGEST has the LARGEST id, so the
+    // id-minimum rule and the C4 rule disagree — the query must keep 93.
+    val common = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 6
+    val seeded = Seq(
+      (91L, common),
+      (92L, common + "lambda"),
+      (93L, common + "lambda mu nu"),
+      (94L, "entirely different text about bucketed joins and shuffle-free plans")
+    ).toDF("doc_id", "text")
+    val cl = graft.operators.Graph.dedupClusters(seeded, "doc_id", "text", minJaccard = 0.8)
+      .select("doc_id", "cluster_id")
+    val len = seeded.select(col("doc_id"),
+      length(graft.operators.Dedup.normalizeText(col("text"))).cast("long").as("len"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("cluster_id").orderBy(col("len").desc, col("doc_id"))
+    val kept = cl.join(len, "doc_id")
+      .withColumn("keep", row_number().over(w) === 1)
+      .filter(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(kept.contains(93L), s"C4 rule keeps the longest member, got $kept")
+    assert(kept.contains(94L), "singleton is its own survivor")
+    assert(kept.size == 2, s"one survivor per cluster, got $kept")
   }
 }

@@ -9,6 +9,8 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(spark.conf.get("spark.sql.files.maxPartitionBytes").toLong == GraftSession.maxPartitionBytes)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(spark.catalog.functionExists("hpix"), "GraftExtensions must register the hpix function")
+    assert(spark.sparkContext.getConf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true",
+      "result-owned reliable checkpoints must be deleted when their RDD is collected")
   }
 
   test("a configured master wins over local[cores]") {

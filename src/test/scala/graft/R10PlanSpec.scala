@@ -18,13 +18,6 @@ class R10PlanSpec extends SparkSpecBase {
       s"top-10 must be a distributed TakeOrdered, not a global sort:\n$plan")
   }
 
-  test("dedup_ppjoin: prefix join is an equi-join with no cartesian product and no corpus-wide window") {
-    val plan = planOf("dedup_ppjoin")
-    assert(!plan.contains("CartesianProduct"), s"no all-pairs stage:\n$plan")
-    assert(!plan.contains("Exchange SinglePartition"),
-      s"no stage may collapse to a single partition:\n$plan")
-  }
-
   test("q_resample: the carry window partitions by key — never a single-task global window") {
     val plan = planOf("q_resample")
     assert(!plan.contains("Exchange SinglePartition"),

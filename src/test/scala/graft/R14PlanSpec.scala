@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-10 additions: YoY lag-window shape and the composed
-  * entity-resolution pipeline's structural invariants. */
+/** Round-10 additions: YoY lag-window shape and light-curve
+  * variability features. */
 class R14PlanSpec extends SparkSpecBase {
 
   private def q(name: String) = QueryRegistry.all.toMap.apply(name).run(spark, sf("sf0.001"))
@@ -45,22 +45,5 @@ class R14PlanSpec extends SparkSpecBase {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(out(1L) > 1.2 && out(1L) < 3.0, s"noise eta ~ 2: ${out(1L)}")
     assert(out(2L) < 0.1, s"ramp eta ~ 0: ${out(2L)}")
-  }
-
-  test("pipeline_er: entity partition is consistent (sizes sum to corpus, one canonical each)") {
-    val out = q("pipeline_er").cache()
-    try {
-      val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet").count()
-      assert(out.count() == docs, "every document gets exactly one entity row")
-      // csize really is the entity's row count
-      val bad = out.groupBy("entity_id").agg(count(lit(1)).as("n"), first("csize").as("c"),
-          sum(when(col("is_canonical"), 1).otherwise(0)).as("canon"))
-        .filter(col("n") =!= col("c") || col("canon") =!= 1).count()
-      assert(bad == 0, "each entity: csize == member count and exactly one canonical")
-      // canonical representative is the smallest member id
-      val badCanon = out.groupBy("entity_id").agg(min("doc_id").as("lo"))
-        .filter(col("entity_id") =!= col("lo")).count()
-      assert(badCanon == 0, "entity_id must be the component minimum")
-    } finally out.unpersist()
   }
 }

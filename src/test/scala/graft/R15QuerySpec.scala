@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-10 additions: the Top-N + OTHER rollup and the C4-style
-  * quality-aware duplicate canonicalization (keep the LONGEST member
-  * of each near-dup cluster, tie -> smallest id). */
+/** Round-10 additions: the Top-N + OTHER rollup. */
 class R15QuerySpec extends SparkSpecBase {
 
   private def q(name: String) = QueryRegistry.all.toMap.apply(name).run(spark, sf("sf0.001"))
@@ -28,50 +26,5 @@ class R15QuerySpec extends SparkSpecBase {
     // distributed TakeOrdered, never a global Sort for the top side
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), s"top-k must be TakeOrdered:\n$plan")
-  }
-
-  test("dedup_keepbest: exactly one keep per cluster and it is the longest member") {
-    val out = q("dedup_keepbest").cache()
-    try {
-      val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet").count()
-      assert(out.count() == docs, "every document gets exactly one row")
-      val badKeep = out.groupBy("cluster_id")
-        .agg(sum(when(col("keep"), 1).otherwise(0)).as("keeps"))
-        .filter(col("keeps") =!= 1).count()
-      assert(badKeep == 0, "each cluster keeps exactly one member")
-      // the kept member attains the cluster's (max len, min doc_id at that len)
-      val best = out.groupBy("cluster_id").agg(max(struct(col("len"),
-        (-col("doc_id")).as("negid"))).as("b"))
-      val bad = out.filter(col("keep"))
-        .join(best, "cluster_id")
-        .filter(col("len") =!= col("b.len") || col("doc_id") =!= -col("b.negid"))
-        .count()
-      assert(bad == 0, "survivor must be longest, tie -> smallest id")
-    } finally out.unpersist()
-  }
-
-  test("keep rule prefers content length over id accident (seeded cluster)") {
-    import spark.implicits._
-    // three near-identical docs; the LONGEST has the LARGEST id, so the
-    // id-minimum rule and the C4 rule disagree — the query must keep 93.
-    val common = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 6
-    val seeded = Seq(
-      (91L, common),
-      (92L, common + "lambda"),
-      (93L, common + "lambda mu nu"),
-      (94L, "entirely different text about bucketed joins and shuffle-free plans")
-    ).toDF("doc_id", "text")
-    val cl = graft.operators.Graph.dedupClusters(seeded, "doc_id", "text", minJaccard = 0.8)
-      .select("doc_id", "cluster_id")
-    val len = seeded.select(col("doc_id"),
-      length(graft.operators.Dedup.normalizeText(col("text"))).cast("long").as("len"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("cluster_id").orderBy(col("len").desc, col("doc_id"))
-    val kept = cl.join(len, "doc_id")
-      .withColumn("keep", row_number().over(w) === 1)
-      .filter(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept.contains(93L), s"C4 rule keeps the longest member, got $kept")
-    assert(kept.contains(94L), "singleton is its own survivor")
-    assert(kept.size == 2, s"one survivor per cluster, got $kept")
   }
 }

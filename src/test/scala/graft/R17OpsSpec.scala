@@ -1,57 +1,12 @@
 package graft
 
-import graft.operators.{Dedup, Privacy, Temporal, TextAnalysis}
+import graft.operators.{Privacy, Temporal, TextAnalysis}
 import org.apache.spark.sql.functions._
 
-/** Round-11 additions: token-exact duplicated spans, k-anonymity
-  * generalization ladder, funnel transition latency, corpus drift
-  * divergence. */
+/** Round-11 additions: k-anonymity generalization ladder, funnel
+  * transition latency, corpus drift divergence. */
 class R17OpsSpec extends SparkSpecBase {
   import spark.implicits._
-
-  // ---------------------------------------------- exactDupSpans
-
-  test("exactDupSpans recovers a planted sub-10-token overlap with exact offsets") {
-    // 6-token copied span ("one two three four five six") planted at
-    // token 3 of doc 1 and token 2 of doc 2, inside otherwise-unique noise
-    val docs = Seq(
-      (1L, "aa bb cc one two three four five six dd ee"),
-      (2L, "ff gg one two three four five six hh"),
-      (3L, "ii jj kk ll mm nn oo pp qq rr")).toDF("doc_id", "text")
-    val got = Dedup.exactDupSpans(docs, "doc_id", "text", minTokens = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(5))).sorted
-    assert(got.toSeq == Seq(
-      (1L, 3L, 9L, "one two three four five six"),
-      (2L, 2L, 8L, "one two three four five six")),
-      s"maximal spans must carry exact [start, end) offsets and the copied text: ${got.toSeq}")
-  }
-
-  test("exactDupSpans: overlaps shorter than minTokens stay invisible; whole-doc short dups surface") {
-    val docs = Seq(
-      (1L, "pp qq rr ss zz yy xx"), // 4-token overlap pp..ss with doc 2
-      (2L, "pp qq rr ss aa bb cc"),
-      (3L, "tiny doc"), // exact whole-text dup with doc 4 (< minTokens)
-      (4L, "tiny doc")).toDF("doc_id", "text")
-    val got = Dedup.exactDupSpans(docs, "doc_id", "text", minTokens = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(!got.exists(g => g._1 == 1L || g._1 == 2L),
-      s"a 4-token overlap must not survive minTokens=5: ${got.toSeq}")
-    assert(got.toSet == Set((3L, 0L, 2L), (4L, 0L, 2L)),
-      s"short whole-doc copies ride the single whole-text window: ${got.toSeq}")
-  }
-
-  test("exactDupSpans merges adjacent duplicated windows into ONE maximal span") {
-    // a 9-token copied run = 5 overlapping 5-windows -> exactly one island
-    val run = "k1 k2 k3 k4 k5 k6 k7 k8 k9"
-    val docs = Seq(
-      (1L, s"u1 u2 $run u3 u4"),
-      (2L, s"v1 $run v2 v3 v4")).toDF("doc_id", "text")
-    val got = Dedup.exactDupSpans(docs, "doc_id", "text", minTokens = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(4)))
-    assert(got.length == 2 && got.forall(_._4 == 5L),
-      s"each doc gets one island of 5 windows: ${got.toSeq}")
-    assert(got.toSet == Set((1L, 2L, 11L, 5L), (2L, 1L, 10L, 5L)), got.toSeq.toString)
-  }
 
   // ---------------------------------------------- kAnonymize
 
@@ -192,14 +147,6 @@ class R17OpsSpec extends SparkSpecBase {
     assert(plan.contains("BroadcastHashJoin"), s"count back-joins must broadcast:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
       s"no fact-table shuffle join may appear:\n$plan")
-  }
-
-  test("exactDupSpans plan: no cartesian/nested-loop anywhere in the span pipeline") {
-    val docs = Seq((1L, "aa bb cc dd ee ff"), (2L, "aa bb cc dd ee gg")).toDF("doc_id", "text")
-    val plan = Dedup.exactDupSpans(docs, "doc_id", "text", minTokens = 5)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"span extraction must stay equi-join only:\n$plan")
   }
 
   // ---------------------------------------------- galactic transform

@@ -34,12 +34,4 @@ class R8PlanSpec extends SparkSpecBase {
       s"winnowFingerprints must be map-only — no Exchange in:\n$plan")
     assert(plan.contains("Generate"), s"fingerprint explode missing:\n$plan")
   }
-
-  test("winnowMatches: equi-join on fp, never a cartesian/broadcast-nested-loop") {
-    val m = graft.operators.TextAnalysis.winnowMatches(
-      spark.read.parquet(sf("sf0.001") + "/documents.parquet"), "doc_id", "text")
-    val plan = m.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"the match join must stay a banded equi-join:\n$plan")
-  }
 }

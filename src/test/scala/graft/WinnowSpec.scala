@@ -111,4 +111,12 @@ class WinnowSpec extends SparkSpecBase {
       TextAnalysis.winnowFingerprints(docs(1L -> "x"), "doc_id", "text", w = 65))
       .getMessage.contains("[1, 64]"))
   }
+
+  test("winnowMatches: equi-join on fp, never a cartesian/broadcast-nested-loop") {
+    val m = graft.operators.TextAnalysis.winnowMatches(
+      spark.read.parquet(sf("sf0.001") + "/documents.parquet"), "doc_id", "text")
+    val plan = m.queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+      s"the match join must stay a banded equi-join:\n$plan")
+  }
 }
