@@ -64,6 +64,7 @@ object Bench {
                 withWarmup: Boolean): Double = {
       val runs = (if (withWarmup) 0 else 1) to nRuns
       val times = runs.map { _ =>
+        val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
         val t0 = System.nanoTime()
         // a failed query must not masquerade as a fast success
         val dt = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
@@ -71,23 +72,25 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
-        // what still registers with the session CacheManager —
-        // Graph.pageRank's persists and the Classify.NbModel / Lm model
-        // objects — is plan-keyed, so run k's rebuild of an identical
-        // plan would silently read run k-1's cached blocks and the
-        // median would measure cached-state READS, not the state build.
-        // Clear between RUNS (outside the timed region) so no run reads
-        // an entry registered by an earlier one.
+        // Outside the timed region, leave the next run the state this
+        // one found. What still registers with the session CacheManager
+        // — Graph.pageRank's persists and the Classify.NbModel / Lm
+        // model objects — is plan-keyed, so run k's rebuild of an
+        // identical plan would silently read run k-1's cached blocks
+        // and the median would measure cached-state READS, not the
+        // state build: clearCache drops it. Every other operator cache
+        // (CacheUtil.cached, gcPersist, checkpoints) is owned by its
+        // result and would stay in the block store until a driver GC
+        // lets the ContextCleaner free it, so later runs would be timed
+        // against earlier runs' resident blocks: unpersist what this
+        // run left persisted (a forced System.gc() drains the same
+        // blocks but measured 10-40% slower timed dedup runs at sf0.1).
         spark.sharedState.cacheManager.clearCache()
+        val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !persistedBefore(id) }
+        persistedRdds(name) = left.size
+        left.values.foreach(_.unpersist(blocking = true))
         dt
       }
-      // storage-block residency between queries: every other operator
-      // cache (CacheUtil.cached, gcPersist, checkpoints) is owned by
-      // its result and stays persisted until the ContextCleaner sees
-      // the result's RDDs garbage-collected. Left to the JVM's own
-      // collections: forcing a GC after each run (or each query)
-      // measured 10-40% slower timed dedup runs at sf0.1.
-      persistedRdds(name) = spark.sparkContext.getPersistentRDDs.size
       if (times.contains(-1.0)) -1.0
       else median(if (withWarmup) times.tail else times)
     }

@@ -38,16 +38,20 @@ object Graph {
    *  a JVM GC lets the ContextCleaner collect the old RDDs. */
   private def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder.cachedColumnBuffers
-    }.foreach { rdd =>
-      rdd.unpersist(false)
-      rdd.getCheckpointFile.foreach { p =>
-        try {
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
-        } catch { case _: Exception => () } // best effort — the cleaner's job otherwise
-      }
+      case l: org.apache.spark.sql.execution.LogicalRDD => Left(l.rdd)
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => Right(r.cacheBuilder)
+    }.foreach {
+      // Spark's own release for the builder: unpersists only buffers
+      // that were built (never builds them) and resets its state
+      case Right(builder) => builder.clearCache(blocking = false)
+      case Left(rdd) =>
+        rdd.unpersist(false)
+        rdd.getCheckpointFile.foreach { p =>
+          try {
+            val path = new org.apache.hadoop.fs.Path(p)
+            path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
+          } catch { case _: Exception => () } // best effort — the cleaner's job otherwise
+        }
     }
 
   /**
@@ -255,10 +259,12 @@ object Graph {
                     minJaccard: Double = 0.8, numPerms: Int = 128, bands: Int = 32,
                     shingleN: Int = 3): DataFrame = {
     // component labels are fully materialized by the iteration's own
-    // actions (a lineage-cut checkpoint), so the result does not hold
-    // the (much heavier) pair/shingle cache: it goes with `pairs`
+    // actions (a lineage-cut checkpoint), so the result does not need
+    // the (much heavier) shingle/signature cache: free it now rather
+    // than at the next driver GC
     val pairs = Dedup.nearDuplicates(df, idCol, textCol, minJaccard, numPerms, bands, shingleN)
     val comp = connectedComponents(pairs, "id_a", "id_b")
+    release(pairs)
     df.join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("comp"), col(idCol)))
       .withColumn("is_canonical", col("cluster_id") === col(idCol))

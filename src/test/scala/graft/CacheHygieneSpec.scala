@@ -136,6 +136,20 @@ class CacheHygieneSpec extends SparkSpecBase {
     assert(leaked.isEmpty, s"the cache must drain once the frames are dropped; leaked: $leaked")
   }
 
+  test("dedupClusters frees nearDuplicates' shingle cache before returning, with no GC") {
+    spark.sharedState.cacheManager.clearCache()
+    val before = persistedIds
+    val out = graft.operators.Graph.dedupClusters(docs.select("doc_id", "text"), "doc_id", "text")
+    out.collect()
+    // only the label checkpoint may stay persisted while the result is
+    // live; an un-checkpointed RDD here is the columnar shingle cache
+    val live = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(live.nonEmpty, "the result should hold its label checkpoint")
+    val cachesHeld = live.collect { case (id, rdd) if !rdd.isCheckpointed => id }
+    assert(cachesHeld.isEmpty, s"the shingle cache must be released inside dedupClusters: $cachesHeld")
+    java.lang.ref.Reference.reachabilityFence(out)
+  }
+
   test("basketPairs leaves the CacheManager empty when its hot-basket guard throws") {
     spark.sharedState.cacheManager.clearCache()
     intercept[IllegalArgumentException] {
