@@ -73,19 +73,16 @@ object Bench {
           -1.0
         }
         // Outside the timed region, leave the next run the state this
-        // one found. What still registers with the session CacheManager
-        // — Graph.pageRank's persists and the Classify.NbModel / Lm
-        // model objects — is plan-keyed, so run k's rebuild of an
-        // identical plan would silently read run k-1's cached blocks
-        // and the median would measure cached-state READS, not the
-        // state build: clearCache drops it. Every other operator cache
-        // (CacheUtil.cached, gcPersist, checkpoints) is owned by its
-        // result and would stay in the block store until a driver GC
-        // lets the ContextCleaner free it, so later runs would be timed
-        // against earlier runs' resident blocks: unpersist what this
-        // run left persisted (a forced System.gc() drains the same
-        // blocks but measured 10-40% slower timed dedup runs at sf0.1).
-        spark.sharedState.cacheManager.clearCache()
+        // one found. No operator registers with the session
+        // CacheManager (CacheUtil.cached, gcPersist and checkpoints are
+        // owned by their result), so nothing is plan-keyed: a rerun of
+        // an identical plan rebuilds its state instead of reading run
+        // k-1's. Result-owned blocks would stay in the block store
+        // until a driver GC lets the ContextCleaner free them, and
+        // later runs would be timed against earlier runs' resident
+        // blocks: unpersist what this run left persisted (a forced
+        // System.gc() drains the same blocks but measured 10-40%
+        // slower timed dedup runs at sf0.1).
         val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !persistedBefore(id) }
         persistedRdds(name) = left.size
         left.values.foreach(_.unpersist(blocking = true))

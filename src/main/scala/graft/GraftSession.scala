@@ -40,9 +40,10 @@ object GraftSession {
       // direct reads see it as EventsTable.read does; a no-op on micros
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // with a checkpoint dir set, the graph operators cut lineage with
-      // reliable checkpoints, and connectedComponents' result owns its
-      // label checkpoint: the ContextCleaner deletes such files once
+      // with a checkpoint dir set, every CacheUtil.gcPersist lineage
+      // cut is a reliable checkpoint, and many are owned by the result
+      // (connectedComponents' labels, pageRank's edges, the registry's
+      // pinned frames): the ContextCleaner deletes such files once
       // their RDD is garbage-collected instead of leaving them on disk
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()

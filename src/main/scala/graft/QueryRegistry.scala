@@ -2966,7 +2966,7 @@ object QueryRegistry {
       // intra-edge join and the degree rollup (r13 verdict item).
       // The edge list is slim (2 longs x |E|), so the eager
       // materialization is cheap at any SF.
-      val edges = coSupplyKnnEdges(s, dir).localCheckpoint()
+      val edges = graft.operators.CacheUtil.gcPersist(coSupplyKnnEdges(s, dir))
       val labels = graft.operators.Graph.labelPropagation(edges, "a", "b", rounds = 4)
       graft.operators.Graph.modularity(edges, "a", "b", labels).orderBy("community")
     },
@@ -2996,7 +2996,7 @@ object QueryRegistry {
    *  windows, mutual matching, relabel) and the q_num arithmetic. */
   private val graph_louvain = QueryDef(
     (s, dir) => {
-      val edges = coSupplyKnnEdges(s, dir).localCheckpoint()
+      val edges = graft.operators.CacheUtil.gcPersist(coSupplyKnnEdges(s, dir))
       val lpa = graft.operators.Graph.labelPropagation(edges, "a", "b", rounds = 4)
       val merged = graft.operators.Graph.louvainMerge(edges, "a", "b", lpa, rounds = 2)
       graft.operators.Graph.modularity(edges, "a", "b", merged).orderBy("community")
@@ -4571,12 +4571,11 @@ object QueryRegistry {
       // separate count job over data the checkpoint had just
       // materialized
       val mObs = new org.apache.spark.sql.Observation()
-      val m = t(s, dir, "orders").groupBy(col("o_custkey").as("ck"))
+      val m = graft.operators.CacheUtil.gcPersist(t(s, dir, "orders").groupBy(col("o_custkey").as("ck"))
         .agg(max(unix_timestamp(col("o_orderdate").cast("timestamp"))).cast("long").as("rec"),
           count(lit(1)).as("freq"),
           sum(floor(col("o_totalprice") * 100).cast("long")).as("mon"))
-        .observe(mObs, count(lit(1)).as("n"))
-        .localCheckpoint()
+        .observe(mObs, count(lit(1)).as("n")))
       // ONE fused ranking instead of three: explode each customer
       // into (metric-code, value) rows and range-rank the 3n-row
       // union by (metric, value, ck) — each metric occupies a

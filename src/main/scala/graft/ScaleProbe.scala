@@ -430,10 +430,8 @@ object ScaleProbe {
       require(biTypes > 0 && biTypes < 3000000L,
         s"KN model faces must stay broadcast-grade: $biTypes bigram types")
       println(s"[probe]   KN faces: $biTypes bigram types (ctx/bwd/stats all <= that)")
-      val out = graft.operators.Lm.crossEntropyKn(big, "doc_id", "text", kn)
+      graft.operators.Lm.crossEntropyKn(big, "doc_id", "text", kn)
         .agg(sum("n_bigrams"), avg("cross_entropy")).count()
-      kn.unpersist()
-      out
     }
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -421,25 +421,27 @@ object Ann {
         "retrieval result; run an ANN top-N first, or raise maxCandidates explicitly")
     val spark = candidates.sparkSession
     import spark.implicits._
-    var cur = candidates.select(col(idCol), col(vecCol).cast("array<float>").as("__v"),
-        col(relCol).cast("double").as("__rel"))
-      .withColumn("__ms", lit(0.0))
-    cur.persist()
+    var cur = CacheUtil.cached(candidates.select(col(idCol),
+        col(vecCol).cast("array<float>").as("__v"), col(relCol).cast("double").as("__rel"))
+      .withColumn("__ms", lit(0.0)))
+    // each step's argmax materializes `cur`; only then is its
+    // predecessor dead (scanning a released cache would rebuild it)
+    var prev: Option[DataFrame] = None
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Any, Double)]
     for (_ <- 1 to math.min(k, n).toInt) {
       val best = cur
         .withColumn("__score", lit(lambda) * col("__rel") - lit(1.0 - lambda) * col("__ms"))
         .orderBy(round(col("__score"), 9).desc, col(idCol).asc)
         .limit(1).select(col(idCol), col("__rel"), col("__v")).collect()(0)
+      prev.foreach(CacheUtil.release)
       picked += ((best.get(0), best.getDouble(1)))
       val bvec = best.getSeq[Float](2)
-      val prev = cur
-      cur = cur.filter(col(idCol) =!= lit(best.get(0)))
-        .withColumn("__ms", greatest(col("__ms"), Dedup.cosine(col("__v"), typedLit(bvec))))
-      cur.persist()
-      prev.unpersist()
+      prev = Some(cur)
+      cur = CacheUtil.cached(cur.filter(col(idCol) =!= lit(best.get(0)))
+        .withColumn("__ms", greatest(col("__ms"), Dedup.cosine(col("__v"), typedLit(bvec)))))
     }
-    cur.unpersist()
+    prev.foreach(CacheUtil.release)
+    CacheUtil.release(cur)
     // build typed Rows so the picked ids keep their NATIVE value and
     // DataType — a toString round-trip would corrupt non-parseable id
     // types (binary ids stringify as "[B@..." and cast back to null)

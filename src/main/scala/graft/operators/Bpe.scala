@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -96,11 +95,13 @@ object Bpe {
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .as[(String, Long)]
       .map { case (w, f) => (w.map(_.toString).toArray, f) }
-    var words = words0.persist(StorageLevel.MEMORY_AND_DISK)
+    def cachedWords(ds: Dataset[(Array[String], Long)]) =
+      CacheUtil.cached(ds.toDF).as[(Array[String], Long)]
+    var words = cachedWords(words0)
     val nWords = words.count()
     if (localMaxWords > 0 && nWords <= localMaxWords) {
       val local = words.collect()
-      words.unpersist(blocking = false)
+      CacheUtil.release(words.toDF)
       return trainLocal(local, nMerges)
     }
     val merges = new ArrayBuffer[Merge]
@@ -119,14 +120,13 @@ object Bpe {
         val (l, r) = (best(0).getString(0), best(0).getString(1))
         merges += Merge(rank, l, r)
         val prev = words
-        words = prev.map { case (syms, f) => (applyMerge(syms, l, r), f) }
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        words = cachedWords(prev.map { case (syms, f) => (applyMerge(syms, l, r), f) })
         words.count() // materialize before freeing the parent
-        prev.unpersist(blocking = false)
+        CacheUtil.release(prev.toDF)
         rank += 1
       }
     }
-    words.unpersist(blocking = false)
+    CacheUtil.release(words.toDF)
     merges.toSeq
   }
 

@@ -35,14 +35,11 @@ object Classify {
    *  `termMap` is term -> map(label -> c_lt); `classes` is one row
    *  per label with (c_l, n_l); `stats` is a 1-row frame with
    *  (vocabulary size v, total training docs n). All declarative —
-   *  no driver action at train time. */
-  final case class NbModel(termMap: DataFrame, classes: DataFrame, stats: DataFrame,
-                           private[operators] val counts: DataFrame) {
-    /** Releases the persisted (label, term) count table every model
-     *  face derives from (the frame trainNb actually cached —
-     *  unpersisting a derived face would be a silent no-op). */
-    def unpersist(): Unit = { counts.unpersist(); () }
-  }
+   *  no driver action at train time. The three faces share one
+   *  (label, term) count cache ([[CacheUtil.cached]]), owned by the
+   *  model: its blocks go once the caller drops the model and every
+   *  frame scored with it. */
+  final case class NbModel(termMap: DataFrame, classes: DataFrame, stats: DataFrame)
 
   /** Normalized non-empty tokens, one row per (id, term) — the
    *  [[TextAnalysis.tokens]] tokenization shared with the LM/TF-IDF
@@ -53,14 +50,13 @@ object Classify {
 
   /** Train on a labeled slice. The per-(label, term) count table is
    *  folded into a term -> map(label, count) frame (one row per
-   *  vocabulary term — the broadcast face), persisted lazily since
+   *  vocabulary term — the broadcast face), cached lazily since
    *  scoring broadcasts it and the class/stat faces both derive from
    *  the same counts. */
   def trainNb(labeled: DataFrame, labelCol: String, idCol: String, textCol: String): NbModel = {
     val toks = tokenStream(labeled, idCol, textCol)
       .join(labeled.select(col(idCol), col(labelCol).cast("string").as("__label")), idCol)
-    val lt = toks.groupBy("__label", "__term").agg(count(lit(1)).as("__c_lt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lt = CacheUtil.cached(toks.groupBy("__label", "__term").agg(count(lit(1)).as("__c_lt")))
     val termMap = lt.groupBy("__term")
       .agg(map_from_entries(collect_list(struct(col("__label"), col("__c_lt")))).as("__lmap"))
     val classes = lt.groupBy("__label").agg(sum("__c_lt").cast("long").as("__c_l"))
@@ -68,7 +64,7 @@ object Classify {
         .agg(count(lit(1)).as("__n_l")), "__label")
     val stats = lt.agg(countDistinct("__term").as("__v"))
       .crossJoin(labeled.agg(count(lit(1)).as("__n")))
-    NbModel(termMap, classes, stats, lt)
+    NbModel(termMap, classes, stats)
   }
 
   /**

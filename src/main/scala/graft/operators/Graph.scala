@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import scala.jdk.CollectionConverters._
 
@@ -20,39 +19,22 @@ import scala.jdk.CollectionConverters._
  */
 object Graph {
 
-  /** Per-iteration lineage truncation. `labels` feeds the next
-   *  iteration TWICE (message join + self union), so without
-   *  truncation the logical plan DOUBLES every round — exponential
-   *  planning/analysis cost long before any data moves. Checkpointing
-   *  materializes the iteration and restarts the plan from the stored
-   *  blocks: reliable `.checkpoint` when the session has a checkpoint
-   *  dir (cluster fault tolerance), executor-local otherwise. */
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
+  import CacheUtil.{cached, gcPersist, release}
 
-  /** Free a superseded checkpoint or a [[CacheUtil.cached]] frame
-   *  now: its blocks AND any reliable-checkpoint files. Both live
-   *  outside the CacheManager (`Dataset.unpersist` is a NO-OP for
-   *  them), so without this the per-iteration block sets pile up until
-   *  a JVM GC lets the ContextCleaner collect the old RDDs. */
-  private def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Left(l.rdd)
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => Right(r.cacheBuilder)
-    }.foreach {
-      // Spark's own release for the builder: unpersists only buffers
-      // that were built (never builds them) and resets its state
-      case Right(builder) => builder.clearCache(blocking = false)
-      case Left(rdd) =>
-        rdd.unpersist(false)
-        rdd.getCheckpointFile.foreach { p =>
-          try {
-            val path = new org.apache.hadoop.fs.Path(p)
-            path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
-          } catch { case _: Exception => () } // best effort — the cleaner's job otherwise
-        }
-    }
+  /** Rebuilds a [[CacheUtil.gcPersist]] frame over its backing RDD to
+   *  RESET Catalyst's size estimate: `Dataset.checkpoint` deliberately
+   *  carries the original plan's estimate into the LogicalRDD, but
+   *  size-only stats MULTIPLY across a join, so an iteration whose
+   *  accumulator JOINS a frame derived from itself compounds the
+   *  estimate — digit count DOUBLES per round, and by round ~15 the
+   *  driver burns minutes in million-digit BigInteger multiplications
+   *  inside the stats visitor (observed live in the 1M-node SSSP
+   *  probe; [[bfsHops]] survives only because its estimate grows
+   *  linearly). The rebuild drops the inherited estimate to the
+   *  constant default; the extra row decode is map-only and lazy. The
+   *  checkpoint handle stays the one to [[CacheUtil.release]]. */
+  private def fresh(t: DataFrame): DataFrame =
+    t.sparkSession.createDataFrame(t.rdd, t.schema)
 
   /**
    * Connected components by alternating large-star / small-star
@@ -105,10 +87,10 @@ object Graph {
     // checkpoint. Deriving nodes directly from `pairs` re-executed the
     // whole upstream pair computation a second time just to count
     // distinct endpoints (measured +1.8 s on dedup_cluster at sf0.1).
-    val pr = truncate(pairs.select(a.as("pa"), b.as("pb")))
+    val pr = gcPersist(pairs.select(a.as("pa"), b.as("pb")))
     // node universe (the output contract) — self-loop-only nodes
     // carry no star edge but must still label themselves
-    val nodes = CacheUtil.cached(pr.select(col("pa").as("id")).union(pr.select(col("pb").as("id")))
+    val nodes = cached(pr.select(col("pa").as("id")).union(pr.select(col("pb").as("id")))
       .distinct())
     nodes.count()
     // canonical undirected edges, oriented hi > lo; both star
@@ -144,7 +126,7 @@ object Graph {
     }
     var phiPrev = {
       val (df0, obs0) = phiObserved(edges)
-      edges = truncate(df0)
+      edges = gcPersist(df0)
       phiOf(obs0)
     }
     // nodes (counted) and the canonical edge checkpoint are both
@@ -186,7 +168,7 @@ object Graph {
       val labels = collected.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
         .distinct.map(n => (n, find(n))).toSeq
       val labelsDf = DriverLocal.frame(pairs.sparkSession, labels, "id", "comp")
-      val out = truncate(
+      val out = gcPersist(
         nodes.join(broadcast(labelsDf), Seq("id"), "left")
           .select(col("id"), coalesce(col("comp"), col("id")).as("comp")))
       release(edges)
@@ -202,7 +184,7 @@ object Graph {
         .union(edges.select(col("lo").as("n"), col("hi").as("nb")))
       val lmins = sym.groupBy("n").agg(min("nb").as("mn"))
         .select(col("n"), least(col("n"), col("mn")).as("m"))
-      val afterLarge = truncate(
+      val afterLarge = gcPersist(
         sym.join(lmins, "n").filter(col("nb") > col("n"))
           .select(col("nb").as("hi"), col("m").as("lo")).distinct())
       // SMALL-STAR: edges now point hi -> lo; each hi rewires its
@@ -217,7 +199,7 @@ object Graph {
           .select(col("lo").as("hi"), col("m").as("lo"))
           .union(joined.select(col("hi"), col("m").as("lo")))
           .distinct())
-      val afterSmall = truncate(smallObserved)
+      val afterSmall = gcPersist(smallObserved)
       val phiS = phiOf(obsS)
       converged = phiS == phiPrev
       phiPrev = phiS
@@ -240,7 +222,7 @@ object Graph {
     val starLabels = edges.select(col("hi").as("id"), col("lo").as("comp"))
       .union(edges.select(col("lo").as("id"), col("lo").as("comp")))
       .groupBy("id").agg(min("comp").as("comp"))
-    val out = truncate(
+    val out = gcPersist(
       nodes.join(starLabels, Seq("id"), "left")
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp")))
     release(edges)
@@ -288,7 +270,7 @@ object Graph {
    * un-normalized (proportional to the rank-sum-N convention).
    *
    * Scale shape: degree table and degree-annotated edges are built
-   * ONCE, hash-partitioned by src and persisted — each of the K
+   * ONCE, hash-partitioned by src and cached — each of the K
    * iterations then shuffles only the slim (node, rank) table into
    * that layout plus one map-side-combined groupBy(dst); the edge set
    * itself never re-shuffles. Driver holds no per-node state.
@@ -302,7 +284,6 @@ object Graph {
       s"pageRank: iterations must be in [1,100], got $iterations")
     require(d100 >= 0 && d100 <= 100, s"pageRank: d100 must be in [0,100], got $d100")
     require(scale > 0 && scale % 100 == 0, s"pageRank: scale must be a positive multiple of 100")
-    val lvl = StorageLevel.MEMORY_AND_DISK
     // materialize the canonical edge set ONCE (the CC pair-frame
     // discipline, r16): the distinct subtree otherwise re-executes
     // inside every consumer that cannot share an exchange — the
@@ -318,30 +299,30 @@ object Graph {
     // collect alone cost ~1.4 s and the 5x1.2M-row boxed replay
     // another ~1.5 s, matching the distributed rounds' cost with
     // extra driver pressure.)
-    val edges = CacheUtil.gcPersist(edges0
+    val edges = gcPersist(edges0
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .distinct())
     val deg = edges.groupBy("src").agg(count(lit(1)).as("od"))
-    val withDeg = edges.join(deg, "src")
+    // withDeg and nodes are owned by the result: every iteration's
+    // join reads them, and the iterations run in the caller's action
+    val withDeg = cached(edges.join(deg, "src")
       .repartition(col("src"))
-      // pin the sort into the persisted layout: every iteration's
+      // pin the sort into the cached layout: every iteration's
       // sort-merge join on src otherwise re-sorts the edge side
       // (the iteration-invariant big side) per round
-      .sortWithinPartitions("src")
-      .persist(lvl)
-    val nodes = edges.select(col("src").as("node"))
+      .sortWithinPartitions("src"))
+    val nodes = cached(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .persist(lvl)
+      .distinct())
     val teleport = (100L - d100) * (scale / 100L)
     // the rank table feeds each iteration exactly ONCE (the message
-    // join; `nodes` is a separate persisted frame), so the chained
+    // join; `nodes` is a separate cached frame), so the chained
     // plan grows LINEARLY in the iteration count — no per-iteration
     // checkpoint is needed (contrast labelPropagation, whose labels
     // feed twice per round). Chaining all K iterations into the
-    // consumer's single action replaces K (persist + count)
+    // consumer's single action replaces K (cache + count)
     // materialization jobs with one job whose stages pipeline over
-    // the pre-partitioned persisted edge layout.
+    // the pre-partitioned cached edge layout.
     var ranks = nodes.select(col("node"), lit(scale).as("r"))
     for (_ <- 1 to iterations) {
       val contrib = withDeg.join(ranks, col("node") === col("src"))
@@ -399,7 +380,7 @@ object Graph {
     // rollup, the orientation join and the wedge-closing join, and
     // the size statistics it carries let those joins broadcast on
     // moderate graphs (a lineage-cut checkpoint measured ~3x slower)
-    val e = CacheUtil.cached(edges0
+    val e = cached(edges0
       .select(least(col(aCol), col(bCol)).cast("long").as("a"),
         greatest(col(aCol), col(bCol)).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct())
@@ -424,7 +405,7 @@ object Graph {
       // each unordered {v,w} wedge appears twice; keep one by id order
       .filter(col("v") < col("w"))
     val closing = e.select(col("a").as("v"), col("b").as("w"))
-    val tris = CacheUtil.cached(wedges.join(closing, Seq("v", "w"))
+    val tris = cached(wedges.join(closing, Seq("v", "w"))
       .select(col("src").as("x"), col("v").as("y"), col("w").as("z")))
     val perNode = tris.select(col("x").as("n"))
       .union(tris.select(col("y").as("n")))
@@ -439,8 +420,8 @@ object Graph {
    *  `maxHops`. Classic frontier expansion — each round shuffles only
    *  the CURRENT frontier (slim (node) set) into the edge layout and
    *  anti-joins the visited set; the edge table is symmetrized,
-   *  hash-partitioned by source and persisted ONCE. Every round's
-   *  frontier is lineage-TRUNCATED ([[truncate]]): the next round
+   *  hash-partitioned by source and cached ONCE. Every round's
+   *  frontier is lineage-TRUNCATED ([[CacheUtil.gcPersist]]): the next round
    *  references the visited set twice (anti-join + union), so without
    *  truncation the logical plan doubles per round — exponential
    *  analysis cost (OOMs around 20 rounds) long before any data
@@ -454,7 +435,6 @@ object Graph {
               localMaxEdges: Long = DriverLocal.maxEdges): DataFrame = {
     require(maxHops >= 1 && maxHops <= 64,
       s"bfsHops: maxHops must be in [1,64], got $maxHops")
-    val lvl = StorageLevel.MEMORY_AND_DISK
     val e = edges0
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
@@ -489,15 +469,14 @@ object Graph {
         return DriverLocal.frame(edges0.sparkSession, dist.asScala.toSeq, "node", "hop")
       case None => ()
     }
-    val dirE = e.select(col("a").as("n"), col("b").as("nb"))
+    val dirE = cached(e.select(col("a").as("n"), col("b").as("nb"))
       .union(e.select(col("b").as("n"), col("a").as("nb")))
       .distinct()
       .repartition(col("n"))
-      // sorted persisted layout — per-round joins on n skip the
+      // sorted cached layout — per-round joins on n skip the
       // edge-side sort (see pageRank's withDeg note)
-      .sortWithinPartitions("n")
-      .persist(lvl)
-    var frontier = truncate(
+      .sortWithinPartitions("n"))
+    var frontier = gcPersist(
       seeds.select(col(seedCol).cast("long").as("node"))
         .filter(col("node").isNotNull) // null seeds match no edge and would emit a null row
         .distinct()
@@ -506,7 +485,7 @@ object Graph {
     var h = 1L
     var done = false
     while (h <= maxHops && !done) {
-      val nxt = truncate(
+      val nxt = gcPersist(
         frontier.join(dirE, col("node") === col("n"))
           .select(col("nb").as("node")).distinct()
           .join(dist, Seq("node"), "left_anti")
@@ -518,7 +497,7 @@ object Graph {
         h += 1
       }
     }
-    dirE.unpersist(blocking = false)
+    release(dirE)
     // the result is a union of checkpointed leaves — the superseded
     // frontiers ARE those leaves, so they must stay materialized;
     // only the edge cache is released here. Callers wanting full
@@ -549,7 +528,7 @@ object Graph {
    * frame joined against the pre-partitioned edge list, then a
    * map-side-combinable count + a single struct-min aggregate (max
    * count, min label — no window, no per-node sort); per-round
-   * lineage truncation keeps the plan flat ([[truncate]]). Edge sets
+   * lineage truncation keeps the plan flat ([[CacheUtil.gcPersist]]). Edge sets
    * of at most `localMaxEdges` rows replay the rounds on the driver
    * (default [[DriverLocal.maxEdges]]; 0 forces the distributed
    * rounds).
@@ -559,7 +538,6 @@ object Graph {
                        localMaxEdges: Long = DriverLocal.maxEdges): DataFrame = {
     require(rounds >= 1 && rounds <= 64,
       s"labelPropagation: rounds must be in [1,64], got $rounds")
-    val lvl = StorageLevel.MEMORY_AND_DISK
     val e = edges0
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
@@ -598,15 +576,14 @@ object Graph {
         return DriverLocal.frame(edges0.sparkSession, lab.asScala.toSeq, "node", "community")
       case None => ()
     }
-    val dirE = e.select(col("a").as("n"), col("b").as("nb"))
+    val dirE = cached(e.select(col("a").as("n"), col("b").as("nb"))
       .union(e.select(col("b").as("n"), col("a").as("nb")))
       .distinct()
       .repartition(col("n"))
-      // sorted persisted layout — per-round joins on n skip the
+      // sorted cached layout — per-round joins on n skip the
       // edge-side sort (see pageRank's withDeg note)
-      .sortWithinPartitions("n")
-      .persist(lvl)
-    var labels = truncate(
+      .sortWithinPartitions("n"))
+    var labels = gcPersist(
       dirE.select(col("n").as("node")).distinct().withColumn("lbl", col("node")))
     for (_ <- 0 until rounds) {
       val next =
@@ -616,10 +593,10 @@ object Graph {
           .agg(min(struct((-col("__c")).as("nc"), col("lbl").as("l"))).as("__b"))
           .select(col("n").as("node"), col("__b.l").as("lbl"))
       val prev = labels
-      labels = truncate(next)
+      labels = gcPersist(next)
       release(prev)
     }
-    dirE.unpersist(blocking = false)
+    release(dirE)
     labels.select(col("node"), col("lbl").as("community"))
   }
 
@@ -687,7 +664,7 @@ object Graph {
    *
    * Scale shape: per round ONE edge-relabel join (the LPA cost
    * shape) + community-bounded aggregates and a per-community
-   * window; labels pin per round (truncate + explicit free), early
+   * window; labels pin per round (gcPersist + release), early
    * exit when no positive mutual merge remains. `edges` must be
    * distinct undirected pairs ([[triangleCounts]] contract); labels
    * must cover every endpoint. Edge sets of at most `localMaxEdges`
@@ -774,10 +751,10 @@ object Graph {
     }
     val m = e.count()
     require(m > 0, "louvainMerge: empty edge set")
-    val deg = truncate(
+    val deg = gcPersist(
       e.select(col("a").as("n")).unionByName(e.select(col("b").as("n")))
         .groupBy("n").agg(count(lit(1)).as("__dd")))
-    var lab = truncate(labels0.select(
+    var lab = gcPersist(labels0.select(
       col(nodeCol).cast("long").as("node"), col(commCol).cast("long").as("lbl")))
     var r = 0
     var done = false
@@ -801,7 +778,7 @@ object Graph {
         .withColumn("__rn", row_number().over(
           Window.partitionBy(col("x")).orderBy(col("dq").desc, col("y").asc)))
         .filter(col("__rn") === 1).select("x", "y")
-      val mut = truncate(
+      val mut = gcPersist(
         best.alias("p").join(best.alias("q"),
             col("q.x") === col("p.y") && col("q.y") === col("p.x"))
           .filter(col("p.x") < col("p.y"))
@@ -810,7 +787,7 @@ object Graph {
       else {
         val remap = mut.select(col("d").as("__lbl"), col("c").as("__new"))
         val prev = lab
-        lab = truncate(lab.join(remap, col("lbl") === col("__lbl"), "left")
+        lab = gcPersist(lab.join(remap, col("lbl") === col("__lbl"), "left")
           .select(col("node"), coalesce(col("__new"), col("lbl")).as("lbl")))
         release(prev)
       }
@@ -836,7 +813,7 @@ object Graph {
    * front (one cheap scan): with them "min over bounded paths" is
    * not a distance and silent nonsense would hash-match nothing.
    * Parallel edges collapse to their cheapest weight. Lineage
-   * truncation per iteration keeps the plan flat (see [[truncate]]).
+   * truncation per iteration keeps the plan flat (see [[CacheUtil.gcPersist]]).
    * Edge sets of at most `localMaxEdges` rows run the same rounds on
    * the driver (default [[DriverLocal.maxEdges]]; 0 forces the
    * distributed rounds).
@@ -846,7 +823,6 @@ object Graph {
            localMaxEdges: Long = DriverLocal.maxEdges): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 64,
       s"sssp: maxRounds must be in [1,64], got $maxRounds")
-    val lvl = StorageLevel.MEMORY_AND_DISK
     val e = edges0
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"),
         col(wCol).cast("long").as("w"))
@@ -908,28 +884,14 @@ object Graph {
           dist.asScala.toSeq.map { case (n, d) => (n, d.longValue) }, "node", "dist")
       case None => ()
     }
-    val dirE = e.select(col("a").as("n"), col("b").as("nb"), col("w"))
+    val dirE = cached(e.select(col("a").as("n"), col("b").as("nb"), col("w"))
       .union(e.select(col("b").as("n"), col("a").as("nb"), col("w")))
       .groupBy("n", "nb").agg(min("w").as("w"))
       .repartition(col("n"))
-      .sortWithinPartitions("n")
-      .persist(lvl)
-    // ckpt handles (for freeing blocks) are kept SEPARATE from the
-    // stats-reset frames the next round plans over. `fresh` rebuilds
-    // a checkpointed frame over its backing RDD to RESET Catalyst's
-    // size estimate: `Dataset.checkpoint` deliberately carries the
-    // original plan's estimate into the LogicalRDD, but size-only
-    // stats MULTIPLY across a join, so an iteration whose accumulator
-    // JOINS a frame derived from itself compounds the estimate —
-    // digit count DOUBLES per round, and by round ~15 the driver
-    // burns minutes in million-digit BigInteger multiplications
-    // inside the stats visitor (observed live in the 1M-node SSSP
-    // probe; [[bfsHops]] survives only because its estimate grows
-    // linearly). The rebuild drops the inherited estimate to the
-    // constant default; the extra row decode is map-only and lazy.
-    def fresh(t: DataFrame): DataFrame =
-      t.sparkSession.createDataFrame(t.rdd, t.schema)
-    var distCk = truncate(
+      .sortWithinPartitions("n"))
+    // checkpoint handles (for freeing blocks) are kept SEPARATE from
+    // the stats-reset frames the next round plans over ([[fresh]])
+    var distCk = gcPersist(
       seeds.select(col(seedCol).cast("long").as("node"))
         .filter(col("node").isNotNull)
         .distinct()
@@ -940,11 +902,11 @@ object Graph {
     var r = 1
     var done = false
     while (r <= maxRounds && !done) {
-      val candCk = truncate(
+      val candCk = gcPersist(
         frontier.join(dirE, col("node") === col("n"))
           .select(col("nb").as("node"), (col("dist") + col("w")).as("dist"))
           .groupBy("node").agg(min("dist").as("dist")))
-      val improvedCk = truncate(
+      val improvedCk = gcPersist(
         fresh(candCk).join(dist.withColumnRenamed("dist", "__old"), Seq("node"), "left")
           .filter(col("__old").isNull || col("dist") < col("__old"))
           .select("node", "dist"))
@@ -953,7 +915,7 @@ object Graph {
         release(improvedCk)
         done = true
       } else {
-        val newDistCk = truncate(
+        val newDistCk = gcPersist(
           dist.union(fresh(improvedCk)).groupBy("node").agg(min("dist").as("dist")))
         if (frontCk ne distCk) release(frontCk) // consumed by cand above
         release(distCk)                         // superseded by newDist
@@ -963,7 +925,7 @@ object Graph {
       }
     }
     if (frontCk ne distCk) release(frontCk) // the last frontier is not part of the result
-    dirE.unpersist(blocking = false)
+    release(dirE)
     dist
   }
 
@@ -987,10 +949,8 @@ object Graph {
     require(maxRounds >= 1 && maxRounds <= 40, s"maxRounds must be in [1,40]: $maxRounds")
     // same lineage/stats discipline as sssp: per-round checkpoint
     // truncation (the pairs table feeds the next round twice — the
-    // plan would double per round) + frame rebuild over the
+    // plan would double per round) + [[fresh]] frames over the
     // checkpointed RDD so size-only stats cannot compound
-    def fresh(t: DataFrame): DataFrame =
-      t.sparkSession.createDataFrame(t.rdd, t.schema)
     // fixed-point counts ride the checkpoint jobs as OBSERVED metrics
     // (the connectedComponents phi pattern): the old per-round
     // `pairs.count()` + `grown.count()` pair re-ran two jobs per round
@@ -1001,7 +961,7 @@ object Graph {
     // before the throw.
     def truncateCounted(df: DataFrame, live: DataFrame*): (DataFrame, Long) = {
       val obs = new org.apache.spark.sql.Observation()
-      val ck = truncate(df.observe(obs, count(lit(1)).as("n"),
+      val ck = gcPersist(df.observe(obs, count(lit(1)).as("n"),
         count(when(col("node") === col("anc"), 1)).as("self")))
       val m = obs.get
       if (m("self").asInstanceOf[Long] > 0) {
@@ -1033,7 +993,7 @@ object Graph {
         // double the jump distance: jump_{r+1} = jump_r ∘ jump_r —
         // nodes whose 2^r-ancestor chain already ended drop out of
         // the jump table (their ancestors are all in `pairs`)
-        val jump2 = truncate(jump.join(
+        val jump2 = gcPersist(jump.join(
             jump.withColumnRenamed("jump", "jump2").withColumnRenamed("node", "jump"),
             Seq("jump"))
           .select(col("node"), col("jump2").as("jump")))

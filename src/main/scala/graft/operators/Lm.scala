@@ -29,10 +29,7 @@ import org.apache.spark.sql.functions._
  */
 object Lm {
 
-  final case class BigramLm(bi: DataFrame, ctx: DataFrame, vocab: DataFrame) {
-    /** Release the cached bigram table (see [[trainBigram]]). */
-    def unpersist(): Unit = { bi.unpersist(); () }
-  }
+  final case class BigramLm(bi: DataFrame, ctx: DataFrame, vocab: DataFrame)
 
   /** Adjacent-token bigrams of normalized text: one row per (id, w1,
    *  w2). Same tokenization as collocations ([[TextAnalysis.tokens]],
@@ -51,15 +48,14 @@ object Lm {
    *  (`sum_w2` of the bigram table, so the smoothed conditional
    *  normalizes), and the prediction vocabulary as a 1-row frame
    *  (kept declarative — no driver action at train time). The bigram
-   *  table is marked persisted (lazily): all three model faces derive
-   *  from it, and scoring broadcasts each face separately — without
-   *  the cache the reference-slice explode+aggregate would re-run per
-   *  broadcast (3x per model). Call [[BigramLm.unpersist]] when done
-   *  with a model in a long-lived session. */
+   *  table is cached lazily ([[CacheUtil.cached]]): all three model
+   *  faces derive from it, and scoring broadcasts each face
+   *  separately — without the cache the reference-slice
+   *  explode+aggregate would re-run per broadcast (3x per model). The
+   *  cache is owned by the model and goes once the caller drops it. */
   def trainBigram(ref: DataFrame, idCol: String, textCol: String): BigramLm = {
     val bg = bigrams(ref, idCol, textCol)
-    val bi = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bi = CacheUtil.cached(bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val ctx = bi.groupBy("w1").agg(sum("c12").cast("long").as("c1"))
     val vocab = bi.agg(countDistinct("w2").as("v"))
     BigramLm(bi, ctx, vocab)
@@ -93,10 +89,7 @@ object Lm {
    *  n1f = distinct continuations of w1), `bwd` (w2, n1b = distinct
    *  left-contexts of w2), `stats` (nall = distinct bigram types,
    *  v = prediction vocab). */
-  final case class KneserNeyLm(bi: DataFrame, ctx: DataFrame, bwd: DataFrame, stats: DataFrame) {
-    /** Release the cached bigram table every face derives from. */
-    def unpersist(): Unit = { bi.unpersist(); () }
-  }
+  final case class KneserNeyLm(bi: DataFrame, ctx: DataFrame, bwd: DataFrame, stats: DataFrame)
 
   /** Train an interpolated Kneser-Ney bigram model (Kneser & Ney
    *  1995; Chen & Goodman 1999's interpolated form — the smoothing
@@ -104,8 +97,8 @@ object Lm {
    *  same single reference-slice aggregate as trainBigram plus the
    *  continuation-count faces. Same bounded-model contract. */
   def trainKneserNey(ref: DataFrame, idCol: String, textCol: String): KneserNeyLm = {
-    val bi = bigrams(ref, idCol, textCol).groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bi = CacheUtil.cached(
+      bigrams(ref, idCol, textCol).groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val ctx = bi.groupBy("w1").agg(sum("c12").cast("long").as("c1"), count(lit(1)).as("n1f"))
     val bwd = bi.groupBy("w2").agg(count(lit(1)).as("n1b"))
     val stats = bi.agg(count(lit(1)).as("nall"), countDistinct("w2").as("v"))

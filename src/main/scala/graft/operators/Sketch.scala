@@ -752,7 +752,7 @@ object Sketch {
   def heavyHitters(items: DataFrame, termCol: String, k: Int): DataFrame = {
     val spark = items.sparkSession
     import spark.implicits._
-    val summ = mgSummaries(items, termCol, k).persist()
+    val summ = CacheUtil.cached(mgSummaries(items, termCol, k))
     // both driver-side results are bounded by partitions x k (the
     // candidate array is exactly what broadcast() would ship anyway)
     // coalesce: an empty input yields zero sentinel rows -> null sum
@@ -760,7 +760,7 @@ object Sketch {
       .agg(coalesce(sum("wt"), lit(0L))).first().getLong(0)
     val candArr = summ.filter(col("term").isNotNull)
       .select("term").distinct().as[String].collect()
-    summ.unpersist()
+    CacheUtil.release(summ)
     val cands = candArr.toSeq.toDF("term")
     items.select(col(termCol).cast("string").as("term"))
       .join(broadcast(cands), "term")

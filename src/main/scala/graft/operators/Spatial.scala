@@ -508,7 +508,7 @@ object Spatial {
       localMax).map(_.map(r => (r.getInt(0), r.getLong(1))))
 
   /** Materialize a MOC operand and CUT its logical-plan lineage
-   *  (localCheckpoint). The set ops below reference each operand many
+   *  ([[CacheUtil.gcPersist]]). The set ops below reference each operand many
    *  times across ancestor-chain joins plus up-to-29 re-normalization
    *  rounds; carrying an operand's full upstream plan (itself often a
    *  multi-round [[mocNormalize]]) into every reference multiplies
@@ -530,7 +530,7 @@ object Spatial {
     val plan = m.queryExecution.optimizedPlan
     if (plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD] ||
         plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) slim
-    else slim.localCheckpoint()
+    else CacheUtil.gcPersist(slim)
   }
 
   /**
@@ -570,7 +570,7 @@ object Spatial {
       // cuts TRIPLES total time (Catalyst re-analysis of the widened
       // tree costs far more than the extra job floors; 14 s with
       // per-round cuts vs 48 s with every-4th-round cuts)
-      cur = fullParents.unionByName(level(o - 1)).localCheckpoint()
+      cur = CacheUtil.gcPersist(fullParents.unionByName(level(o - 1)))
     }
     out = out :+ cur.select(lit(0).as("norder"), col("pix").as("npix"))
     out.reduce(_ unionByName _).withColumn("nuniq", nuniqCol)
@@ -687,7 +687,7 @@ object Spatial {
         return tilesToDf(a.sparkSession, MocLocal.difference(at, bt, maxOrder))
       case None => ()
     }
-    val bAnc = strictAncestors(bp).localCheckpoint()
+    val bAnc = CacheUtil.gcPersist(strictAncestors(bp))
     val bTiles = bp.select("norder", "npix")
     val a0 = tilesCoveredBy(ap, bp, strict = false, keep = "anti")
     def partsOf(tiles: DataFrame): (DataFrame, DataFrame) = {
@@ -702,7 +702,7 @@ object Spatial {
     // isEmpty on an already-checkpointed frame is near-free; as in
     // mocNormalizeMixed, per-round cuts measured FASTER than amortized
     // ones — re-analysis of a widened tree dominates the job floors)
-    var contested = contested0.localCheckpoint()
+    var contested = CacheUtil.gcPersist(contested0)
     var round = 0
     while (round < maxOrder && !contested.isEmpty) {
       val children = contested.select((col("norder") + 1).as("norder"),
@@ -710,7 +710,7 @@ object Spatial {
       val surviving = children.join(bTiles, Seq("norder", "npix"), "left_anti")
       val (whole, next) = partsOf(surviving)
       kept = kept :+ whole
-      contested = next.localCheckpoint()
+      contested = CacheUtil.gcPersist(next)
       round += 1
     }
     mocNormalizeMixed(kept.reduce(_ unionByName _), maxOrder)

@@ -146,7 +146,7 @@ object TextAnalysis {
    * (group, term) rows (bounded by the gt aggregate itself, group-
    * cardinality-independent); the r14 grid shape paid a groups x
    * vocab cross join. The corpus-total scalar rides a broadcast
-   * 1-row cross join. The term table is persisted for its three
+   * 1-row cross join. The term table is cached for its three
    * derived faces and released EAGERLY by materializing the
    * group-bounded result; the group-cardinality contract (groupCol
    * is a source/shard/slice) is enforced AT that collect via a limit
@@ -157,8 +157,7 @@ object TextAnalysis {
   def sourceDrift(df: DataFrame, groupCol: String, textCol: String): DataFrame = {
     val tok = df.select(col(groupCol).as("__grp"),
       explode(filter(tokens(col(textCol)), t => length(t) > 0)).as("__t"))
-    val gt = tok.groupBy("__grp", "__t").agg(count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val gt = CacheUtil.cached(tok.groupBy("__grp", "__t").agg(count(lit(1)).as("__c")))
     val vocab = gt.groupBy("__t").agg(sum("__c").as("__ct"))
     val gTot = gt.groupBy("__grp").agg(sum("__c").as("__n"), count(lit(1)).as("n_types"))
     val nTot = vocab.agg(sum("__ct").as("__nn"))
@@ -177,7 +176,7 @@ object TextAnalysis {
           col("__q") * ln2)) * 0.5, 6).as("jsd"))
       .withColumnRenamed("__grp", groupCol)
     val rows = out.limit(4097).collect()
-    gt.unpersist()
+    CacheUtil.release(gt)
     require(rows.length <= 4096,
       s"sourceDrift: groupCol '$groupCol' has over 4096 distinct groups; " +
         "the per-group result is materialized on the driver, so the group " +

@@ -5,18 +5,17 @@ import org.apache.spark.sql.functions._
 
 /**
  * Cache-lifetime regression. Two lifetimes (CacheUtil doc):
- *  - released inside the function: a paired persist/unpersist or a
- *    freed checkpoint, on every exit path including a throwing guard;
+ *  - released inside the function: a cache or checkpoint freed with
+ *    `CacheUtil.release`, on every exit path including a throwing
+ *    guard;
  *  - owned by the result: [[graft.operators.CacheUtil.cached]] (the
  *    columnar in-memory relation `Dataset.persist` builds, kept out
- *    of the CacheManager) or gcPersist (an eager localCheckpoint that
- *    also cuts the plan); the ContextCleaner drains the blocks once
- *    the caller drops the result.
+ *    of the CacheManager) or gcPersist (an eager checkpoint that also
+ *    cuts the plan); the ContextCleaner drains the blocks once the
+ *    caller drops the result.
  * Either way, a library caller running many operators in one
- * long-lived session never needs Bench's clearCache. The exceptions
- * still registering with the CacheManager are `Graph.pageRank`'s
- * persists and the caller-released `Classify.NbModel` and `Lm` model
- * objects.
+ * long-lived session never needs a session-wide clearCache, and a
+ * source scan keeps every cache call inside CacheUtil.
  */
 class CacheHygieneSpec extends SparkSpecBase {
 
@@ -65,6 +64,45 @@ class CacheHygieneSpec extends SparkSpecBase {
     persistedIds -- before
   }
 
+  /** What an operator's collected result keeps persisted while live. */
+  private sealed trait Held
+  /** result-owned caches and/or checkpoints */
+  private case object ResultBlocks extends Held
+  /** result-owned checkpoints only: the in-function caches are released */
+  private case object CheckpointsOnly extends Held
+  /** nothing: every cache is released inside the function */
+  private case object NoBlocks extends Held
+
+  /** Runs each op, collects its result and checks, while the result is
+   *  live, that no CacheManager entry exists and that what stays
+   *  persisted matches `held`; then that every block drains once the
+   *  result is dropped. */
+  private def checkLifetimes(ops: Seq[(String, Held, () => DataFrame)]): Unit =
+    ops.foreach { case (name, held, op) =>
+      val before = persistedIds
+      // the result lives only in this frame, popped before the drain
+      def collectWhileLive(): Unit = {
+        val out = op()
+        out.collect()
+        assert(spark.sharedState.cacheManager.isEmpty, s"$name registered a CacheManager entry")
+        val live = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+        held match {
+          case ResultBlocks =>
+            assert(live.nonEmpty, s"$name should hold its cache while the result is live")
+          case CheckpointsOnly =>
+            assert(live.nonEmpty, s"$name should hold its checkpoints while the result is live")
+            val caches = live.collect { case (id, rdd) if !rdd.isCheckpointed => id }
+            assert(caches.isEmpty, s"$name must release its caches inside the function: $caches")
+          case NoBlocks =>
+            assert(live.isEmpty, s"$name must release its caches inside the function: ${live.keys}")
+        }
+        java.lang.ref.Reference.reachabilityFence(out)
+      }
+      collectWhileLive()
+      val leaked = drainSince(before)
+      assert(leaked.isEmpty, s"$name: blocks must drain once the result is dropped; leaked: $leaked")
+    }
+
   test("operator caches: no CacheManager entry, drained once the result is dropped") {
     import graft.operators.{Associations, Dedup, Graph, TextAnalysis}
     import spark.implicits._
@@ -93,20 +131,54 @@ class CacheHygieneSpec extends SparkSpecBase {
       "connectedComponents" -> (() => Graph.connectedComponents(edges, "a", "b")),
       "dedupClusters" -> (() => Graph.dedupClusters(d, "doc_id", "text")),
       "triangleCounts" -> (() => Graph.triangleCounts(edges, "a", "b")))
-    ops.foreach { case (name, op) =>
-      val before = persistedIds
-      // the result lives only in this frame, popped before the drain
-      def collectWhileLive(): Unit = {
-        val out = op()
-        out.collect()
-        assert(spark.sharedState.cacheManager.isEmpty, s"$name registered a CacheManager entry")
-        assert((persistedIds -- before).nonEmpty, s"$name should hold its cache while the result is live")
-        java.lang.ref.Reference.reachabilityFence(out)
-      }
-      collectWhileLive()
-      val leaked = drainSince(before)
-      assert(leaked.isEmpty, s"$name: blocks must drain once the result is dropped; leaked: $leaked")
+    checkLifetimes(ops.map { case (name, op) => (name, ResultBlocks, op) })
+  }
+
+  test("pageRank, the NB / LM models and the in-function caches: no CacheManager entry, drained") {
+    import graft.operators.{Ann, Bpe, Classify, Graph, Lm, Sketch, TextAnalysis}
+    import spark.implicits._
+    spark.sharedState.cacheManager.clearCache()
+    val d = docs.select("doc_id", "text", "source")
+    val train = d.filter(col("doc_id") % 2 === 0)
+    val labeled = train.withColumn("label", (col("doc_id") % 3).cast("string"))
+    val edges = d.select((col("doc_id") % 40).as("a"), ((col("doc_id") * 7 + 3) % 40).as("b"),
+      (col("doc_id") % 5).as("w"))
+    val seeds = Seq(0L, 1L).toDF("s")
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+    val cands = emb.filter(col("vec_id") < 50).withColumn("rel", col("vec_id").cast("double"))
+    val toks = d.select(explode(split(col("text"), " ")).as("term"))
+    val ops: Seq[(String, Held, () => DataFrame)] = Seq(
+      ("pageRank", ResultBlocks, () => Graph.pageRank(edges, "a", "b")),
+      ("trainNb + classifyNb", ResultBlocks, () => Classify.classifyNb(d, "doc_id", "text",
+        Classify.trainNb(labeled, "label", "doc_id", "text"))),
+      ("trainBigram + crossEntropy", ResultBlocks, () => Lm.crossEntropy(d, "doc_id", "text",
+        Lm.trainBigram(train, "doc_id", "text"))),
+      ("trainKneserNey + crossEntropyKn", ResultBlocks, () => Lm.crossEntropyKn(d, "doc_id", "text",
+        Lm.trainKneserNey(train, "doc_id", "text"))),
+      ("heavyHitters", NoBlocks, () => Sketch.heavyHitters(toks, "term", 8)),
+      ("sourceDrift", NoBlocks, () => TextAnalysis.sourceDrift(d, "source", "text")),
+      ("mmrSelect", NoBlocks, () => Ann.mmrSelect(cands, "vec_id", "embedding", "rel", k = 4)),
+      ("Bpe.train", NoBlocks, () =>
+        Bpe.train(d, "text", nMerges = 3, maxWordLen = 12, localMaxWords = 0).toDF()),
+      ("bfsHops", CheckpointsOnly, () =>
+        Graph.bfsHops(edges, "a", "b", seeds, "s", maxHops = 3, localMaxEdges = 0)),
+      ("labelPropagation", CheckpointsOnly, () =>
+        Graph.labelPropagation(edges, "a", "b", rounds = 2, localMaxEdges = 0)),
+      ("sssp", CheckpointsOnly, () =>
+        Graph.sssp(edges, "a", "b", "w", seeds, "s", maxRounds = 3, localMaxEdges = 0)))
+    checkLifetimes(ops)
+  }
+
+  test("classifyNb leaves the CacheManager empty when its empty-training-slice guard throws") {
+    import graft.operators.Classify
+    spark.sharedState.cacheManager.clearCache()
+    val empty = docs.filter(col("doc_id") < 0).withColumn("label", lit("x"))
+    val e = intercept[IllegalArgumentException] {
+      Classify.classifyNb(docs, "doc_id", "text", Classify.trainNb(empty, "label", "doc_id", "text"))
     }
+    assert(e.getMessage.contains("vocab v=0"), e.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a throwing guard must not leave the count table registered with the CacheManager")
   }
 
   test("a self-join over a cached frame with an output ordering plans and runs") {
@@ -161,20 +233,36 @@ class CacheHygieneSpec extends SparkSpecBase {
       "a throwing guard must not leave the basket-item cache registered with the CacheManager")
   }
 
-  test("no *WithCache / *WithHandle twin or () => Unit release handle in src/main") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val twin = """def\s+\w+(WithCache|WithHandle)\b""".r
-    val handle = """\(DataFrame,\s*\(\)\s*=>\s*Unit\)""".r
-    val hits = files(root).filter(_.getName.endsWith(".scala")).flatMap { f =>
+  /** `path:line: text` for each line of a `.scala` file under one of
+   *  `roots` (files or directories, from the project root) that
+   *  matches one of `patterns`. */
+  private def scanSources(roots: Seq[String], patterns: Seq[scala.util.matching.Regex]): Seq[String] = {
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    roots.map(new java.io.File(_)).flatMap { r =>
+      assert(r.exists, s"run from the project root: ${r.getAbsolutePath}")
+      files(r)
+    }.filter(_.getName.endsWith(".scala")).flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       try src.getLines().zipWithIndex.collect {
-        case (line, i) if twin.findFirstIn(line).isDefined || handle.findFirstIn(line).isDefined =>
+        case (line, i) if patterns.exists(_.findFirstIn(line).isDefined) =>
           s"${f.getPath}:${i + 1}: ${line.trim}"
       }.toList finally src.close()
     }
+  }
+
+  test("no *WithCache / *WithHandle twin or () => Unit release handle in src/main") {
+    val hits = scanSources(Seq("src/main/scala"),
+      Seq("""def\s+\w+(WithCache|WithHandle)\b""".r, """\(DataFrame,\s*\(\)\s*=>\s*Unit\)""".r))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("operators, catalog and registry cache, cut lineage and free blocks only through CacheUtil") {
+    val main = "src/main/scala/graft"
+    val hits = scanSources(Seq(s"$main/operators", s"$main/catalog", s"$main/QueryRegistry.scala"),
+      Seq("""\.persist\(""".r, """\.cache\(\)""".r, """\.unpersist\(""".r,
+        """localCheckpoint\(""".r, """\.checkpoint\(""".r))
+      .filterNot(_.startsWith(s"$main/operators/CacheUtil.scala:"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

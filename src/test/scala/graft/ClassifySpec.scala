@@ -25,7 +25,6 @@ class ClassifySpec extends SparkSpecBase {
     val hp = Classify.classifyNb(held, "id", "text", m)
       .select("id", "pred_label").as[(Long, String)].collect().toMap
     assert(hp == Map(10L -> "spam", 11L -> "ham"))
-    m.unpersist()
   }
 
   test("nb scores are partitioning-invariant and empty docs produce no row") {
@@ -38,7 +37,6 @@ class ClassifySpec extends SparkSpecBase {
       .orderBy("id").collect().toSeq
     assert(a == b, "scores must be identical across partitionings")
     assert(!a.exists(_.getLong(0) == 99L), "an empty doc has nothing to score")
-    m.unpersist()
   }
 
   test("nb: empty training slice fails loudly; 6-dp ties break to the largest label") {
@@ -187,5 +185,15 @@ class ClassifySpec extends SparkSpecBase {
       Classify.rocAuc(perfect.filter($"__y"), "delta", "__y")
     }
     assert(e.getMessage.contains("both classes"), e.getMessage)
+  }
+
+  private def planOf(name: String): String =
+    QueryRegistry.all.toMap.apply(name).run(spark, sf("sf0.001"))
+      .queryExecution.executedPlan.toString
+
+  test("text_nb: model faces ride broadcasts; corpus scoring has exactly one aggregate shuffle pair") {
+    val plan = planOf("text_nb")
+    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
+      s"model joins must broadcast, never shuffle the token stream:\n$plan")
   }
 }

@@ -317,6 +317,43 @@ class GraphSpec extends SparkSpecBase {
     assert(a == b)
   }
 
+  test("pageRank: the cached edge layout feeds each iteration's sort-merge join unshuffled and unsorted") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec,
+      ShuffleQueryStageExec, TableCacheQueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val edges = (1L to 200L).map(i => (i, i * 7 % 201)).toDF("src", "dst")
+      val ranks = Graph.pageRank(edges, "src", "dst", iterations = 3)
+      ranks.collect()
+      // the operators between a join side and the degree-annotated
+      // edge cache (the one cache with an `od` column), if the side
+      // is a single-child chain down to that cache
+      def toEdgeScan(p: SparkPlan): Option[List[SparkPlan]] = p match {
+        case t: TableCacheQueryStageExec => toEdgeScan(t.plan)
+        case s: InMemoryTableScanExec => if (s.output.exists(_.name == "od")) Some(Nil) else None
+        case q: QueryStageExec => toEdgeScan(q.plan).map(q :: _)
+        case o if o.children.size == 1 => toEdgeScan(o.children.head).map(o :: _)
+        case _ => None
+      }
+      val plan = ranks.queryExecution.executedPlan
+      val edgePaths = new AdaptiveSparkPlanHelper {}.collect(plan) {
+        case j: SortMergeJoinExec => Seq(j.left, j.right)
+      }.flatten.flatMap(toEdgeScan)
+      assert(edgePaths.size == 3, s"one sort-merge join per iteration reads the edge cache:\n$plan")
+      edgePaths.foreach { ops =>
+        assert(!ops.exists {
+            case _: SortExec | _: ShuffleExchangeLike | _: ShuffleQueryStageExec => true
+            case _ => false
+          }, s"the edge side must keep the cached partitioning and order: ${ops.map(_.nodeName)}\n$plan")
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
+  }
+
   test("pageRank guards its parameter domains") {
     val edges = Seq((1L, 2L)).toDF("src", "dst")
     assert(intercept[IllegalArgumentException] {

@@ -1,10 +1,10 @@
 package graft
 
-import graft.operators.{Privacy, Temporal, TextAnalysis}
+import graft.operators.{Privacy, Temporal}
 import org.apache.spark.sql.functions._
 
 /** Round-11 additions: k-anonymity generalization ladder, funnel
-  * transition latency, corpus drift divergence. */
+  * transition latency. */
 class R17OpsSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -165,25 +165,5 @@ class R17OpsSpec extends SparkSpecBase {
     assert(near(pts(2L)._2, 0.0, 0.01) && (pts(2L)._1 < 0.01 || pts(2L)._1 > 359.99),
       s"galactic center maps to (l~0, b~0): ${pts(2L)}")
     assert(near(pts(3L)._2, 90.0, 0.001), s"pole maps to b=90: ${pts(3L)}")
-  }
-
-  // ---------------------------------------------- sourceDrift
-
-  test("sourceDrift: identical distributions score zero; a skewed source scores positive") {
-    val docs = Seq(
-      (1L, "s1", "aa bb cc dd"), (2L, "s1", "aa bb cc dd"),
-      (3L, "s2", "aa bb cc dd"), (4L, "s2", "aa bb cc dd"),
-      (5L, "s3", "aa aa aa aa")).toDF("doc_id", "source", "text")
-    val rows = TextAnalysis.sourceDrift(docs, "source", "text")
-      .collect().map(r => r.getString(0) -> (r.getDouble(3), r.getDouble(4))).toMap
-    // s1 and s2 match each other but NOT the corpus (s3 skews the mix),
-    // so only compare them to each other and check the ordering signal
-    assert(rows("s1") == rows("s2"), "same distribution, same divergence")
-    assert(rows("s3")._1 > rows("s1")._1 && rows("s3")._2 > rows("s1")._2,
-      s"the skewed source must out-diverge the balanced ones: $rows")
-    val uniform = TextAnalysis.sourceDrift(docs.filter(col("source") =!= "s3"), "source", "text")
-      .collect().map(r => (r.getDouble(3), r.getDouble(4)))
-    assert(uniform.forall(r => r._1 == 0.0 && r._2 == 0.0),
-      s"group == corpus -> KL = JSD = 0 exactly: ${uniform.toSeq}")
   }
 }

@@ -352,4 +352,16 @@ class SketchSpec extends SparkSpecBase {
     } yield (a, b) -> n.toLong).toMap
     assert(fast == want)
   }
+
+  private def planOf(name: String): String =
+    QueryRegistry.all.toMap.apply(name).run(spark, sf("sf0.001"))
+      .queryExecution.executedPlan.toString
+
+  test("q_heavyhitters: the exact recount joins candidates as a BROADCAST, never shuffling the stream for the join") {
+    val plan = planOf("q_heavyhitters")
+    assert(plan.contains("BroadcastHashJoin"),
+      s"candidate set must broadcast back onto the token stream:\n$plan")
+    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
+      s"the token stream must never shuffle for the candidate join:\n$plan")
+  }
 }

@@ -88,4 +88,22 @@ class TextIndexSpec extends SparkSpecBase {
       TextAnalysis.editDistancePairs(docs, "doc_id", "text", Seq.empty, 5))
     assert(e.getMessage.contains("block"))
   }
+
+  test("sourceDrift: identical distributions score zero; a skewed source scores positive") {
+    val docs = Seq(
+      (1L, "s1", "aa bb cc dd"), (2L, "s1", "aa bb cc dd"),
+      (3L, "s2", "aa bb cc dd"), (4L, "s2", "aa bb cc dd"),
+      (5L, "s3", "aa aa aa aa")).toDF("doc_id", "source", "text")
+    val rows = TextAnalysis.sourceDrift(docs, "source", "text")
+      .collect().map(r => r.getString(0) -> (r.getDouble(3), r.getDouble(4))).toMap
+    // s1 and s2 match each other but NOT the corpus (s3 skews the mix),
+    // so only compare them to each other and check the ordering signal
+    assert(rows("s1") == rows("s2"), "same distribution, same divergence")
+    assert(rows("s3")._1 > rows("s1")._1 && rows("s3")._2 > rows("s1")._2,
+      s"the skewed source must out-diverge the balanced ones: $rows")
+    val uniform = TextAnalysis.sourceDrift(docs.filter(col("source") =!= "s3"), "source", "text")
+      .collect().map(r => (r.getDouble(3), r.getDouble(4)))
+    assert(uniform.forall(r => r._1 == 0.0 && r._2 == 0.0),
+      s"group == corpus -> KL = JSD = 0 exactly: ${uniform.toSeq}")
+  }
 }
