@@ -19,11 +19,38 @@ import org.apache.spark.sql.functions._
  * gaia.coneSearch(ra = 56, dec = 20, radiusDeg = 10)
  * gaia.crossMatch(sdss, nNeighbors = 4, dthreshDeg = 1.0)
  * }}}
+ *
+ * A handle reads through a snapshot of the catalog: the meta, both
+ * trees listed with their schemas inferred, and the tile list. The
+ * first read of a handle resolves it and pays the listing and the
+ * schema inference; later searches, loads and cross-matches only plan
+ * and run. Every completed write (import, append, repartition and its
+ * roll-forward, compact) ends by rewriting the meta, and each read
+ * checks the meta's status (one `getFileStatus`, no listing), so a
+ * handle re-resolves after any write, by this handle, another handle
+ * or another session; its own [[append]] and [[compact]] also drop
+ * its snapshot, whatever the store's timestamp granularity.
+ * Resolution is lazy: [[Catalog.importFrom]] and [[append]] return
+ * handles that have resolved nothing.
  */
 final case class Catalog(spark: SparkSession, location: String, catname: String) {
 
   private val layout = CatalogLayout(location, catname)
-  private lazy val meta: CatalogMeta = layout.readMeta(spark)
+  @volatile private var resolved: CatalogSnapshot = _
+
+  /** The snapshot current with the meta on disk, resolved again when
+   *  the meta's status moved. */
+  private def snapshot(): CatalogSnapshot = {
+    val s = resolved
+    if (s != null && s.metaStatus == layout.metaStatus(spark)) s
+    else {
+      val fresh = layout.resolve(spark)
+      resolved = fresh
+      fresh
+    }
+  }
+
+  private def meta: CatalogMeta = snapshot().meta
 
   def raKw: String = meta.raKw
   def decKw: String = meta.decKw
@@ -66,32 +93,37 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
 
   /** Load the catalog, optionally column-pruned (ra/dec/id always kept — catalog.py validate_user_input_cols). */
   def load(columns: Seq[String] = Nil): DataFrame = {
-    val df = layout.load(spark)
-    if (columns.isEmpty) df else df.select(withContractCols(columns).map(col): _*)
+    val s = snapshot()
+    val df = s.load(spark)
+    if (columns.isEmpty) df else df.select(withContractCols(s.meta, columns).map(col): _*)
   }
 
   /** The reference column contract (util.py:276 validate_user_input_cols):
    *  a non-empty selection always keeps ra/dec/id. */
-  private def withContractCols(columns: Seq[String]): Seq[String] =
-    if (columns.isEmpty) Nil else (columns ++ Seq(raKw, decKw, idKw)).distinct
+  private def withContractCols(m: CatalogMeta, columns: Seq[String]): Seq[String] =
+    if (columns.isEmpty) Nil else (columns ++ Seq(m.raKw, m.decKw, m.idKw)).distinct
 
   /** Cone search with file-level pruning: the hive partition filter
    *  on (Norder, Npix) restricts the scan to overlapping partitions
    *  before any row is read; adds `_DIST` (catalog.py:65). `columns`
    *  prunes the scan — ra/dec/id always kept. */
   def coneSearch(ra: Double, dec: Double, radiusDeg: Double,
-                 columns: Seq[String] = Nil): DataFrame =
-    search(ra, dec, radiusDeg, columns)(
-      _.withColumn("_DIST", sphere.gcDist(col(raKw), col(decKw), lit(ra), lit(dec)))
+                 columns: Seq[String] = Nil): DataFrame = {
+    val s = snapshot()
+    search(s, ra, dec, radiusDeg, columns)(
+      _.withColumn("_DIST", sphere.gcDist(col(s.meta.raKw), col(s.meta.decKw), lit(ra), lit(dec)))
         .filter(col("_DIST") < radiusDeg))
+  }
 
   /** Box search (wrap-aware ra interval x dec band): partition pruning
    *  via the box's provable bounding cone, then the exact range
    *  predicate; same column contract as [[coneSearch]]. */
   def boxSearch(raLo: Double, raHi: Double, decLo: Double, decHi: Double,
                 columns: Seq[String] = Nil): DataFrame = {
+    val s = snapshot()
     val ((cra, cdec), radius) = Spatial.boxBoundingCone(raLo, raHi, decLo, decHi)
-    search(cra, cdec, radius, columns)(Spatial.boxSearch(_, raKw, decKw, raLo, raHi, decLo, decHi))
+    search(s, cra, cdec, radius, columns)(
+      Spatial.boxSearch(_, s.meta.raKw, s.meta.decKw, raLo, raHi, decLo, decHi))
   }
 
   /** Convex polygon search: partition pruning via the polygon's
@@ -99,32 +131,38 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    *  column contract as [[coneSearch]]. */
   def polygonSearch(vertices: Seq[(Double, Double)],
                     columns: Seq[String] = Nil): DataFrame = {
-    val ((cra, cdec), radius, inside) = Spatial.polygonPredicate(raKw, decKw, vertices)
-    search(cra, cdec, radius, columns)(_.filter(inside))
+    val s = snapshot()
+    val ((cra, cdec), radius, inside) = Spatial.polygonPredicate(s.meta.raKw, s.meta.decKw, vertices)
+    search(s, cra, cdec, radius, columns)(_.filter(inside))
   }
 
-  /** The pruning shared by every search: a column-pruned scan of the
-   *  partitions overlapping the bounding cone, the search's `exact`
-   *  predicate, then the hive columns dropped unless the caller picked
-   *  them.
+  /**
+   * The HEALPix cover a search of the disc (`ra`, `dec`, `radiusDeg`)
+   * prunes with, as (cover order, nested pixels at that order).
    *
-   *  The disc cover is computed at an ADAPTIVE order: the finest
-   *  order <= orderK whose expected cover stays <= ~8k pixels, so a
-   *  wide query (a full-RA dec band gives a 180-deg bounding cone)
-   *  cannot blow up the driver-side candidate list no matter how
-   *  fine the catalog's partition order is. A partition at order o
-   *  overlaps the disc iff its coverOrder-aligned pixel does:
-   *  ancestors for o <= coverOrder (InSet on rebinned cover),
-   *  descendants via a constant shift for o > coverOrder — one small
-   *  InSet per order, all over partition columns, so file-level
-   *  pruning still applies. Coarsening only loses selectivity, never
-   *  rows. */
-  private def search(raDeg: Double, decDeg: Double, radiusDeg: Double, columns: Seq[String])
-                    (exact: DataFrame => DataFrame): DataFrame = {
-    val discFrac = (1 - math.cos(math.toRadians(math.min(radiusDeg, 180.0)))) / 2
-    val coverOrder = (0 to orderK).reverse
-      .find(o => discFrac * Healpix.npix(o) <= 8192 || o == 0).getOrElse(0)
-    val cover = Healpix.queryDiscCover(coverOrder, raDeg, decDeg, radiusDeg)
+   * The order is ADAPTIVE: the finest order <= orderK whose expected
+   * cover stays <= ~8k pixels, so a wide query (a full-RA dec band
+   * gives a 180-deg bounding cone) cannot blow up the driver-side
+   * candidate list no matter how fine the catalog's partition order
+   * is. Coarsening only loses selectivity, never rows.
+   */
+  def searchCover(ra: Double, dec: Double, radiusDeg: Double): (Int, Array[Long]) =
+    Catalog.searchCover(orderK, ra, dec, radiusDeg)
+
+  /** The pruning shared by every search: a column-pruned scan of the
+   *  partitions overlapping the bounding cone's [[searchCover]], the
+   *  search's `exact` predicate, then the hive columns dropped unless
+   *  the caller picked them.
+   *
+   *  A partition at order o overlaps the disc iff its coverOrder-aligned
+   *  pixel does: ancestors for o <= coverOrder (InSet on rebinned
+   *  cover), descendants via a constant shift for o > coverOrder — one
+   *  small InSet per order, all over partition columns, so file-level
+   *  pruning still applies. */
+  private def search(s: CatalogSnapshot, raDeg: Double, decDeg: Double, radiusDeg: Double,
+                     columns: Seq[String])(exact: DataFrame => DataFrame): DataFrame = {
+    val orderK = s.meta.orderK
+    val (coverOrder, cover) = Catalog.searchCover(orderK, raDeg, decDeg, radiusDeg)
     val coverBoxed = cover.map(Long.box).toSeq
     val pred = (0 to orderK).map { o =>
       if (o <= coverOrder) {
@@ -135,8 +173,8 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
     }.reduce(_ || _)
     // user column selection BEFORE any predicate so the pruning
     // reaches the parquet scan
-    val cols = withContractCols(columns)
-    val df = layout.load(spark)
+    val cols = withContractCols(s.meta, columns)
+    val df = s.load(spark)
     val sel = if (cols.isEmpty) df else df.select((cols ++ Seq("Norder", "Npix")).distinct.map(col): _*)
     Seq("Norder", "Npix").filterNot(c => cols.isEmpty || cols.contains(c))
       .foldLeft(exact(sel.filter(pred)))(_.drop(_))
@@ -151,13 +189,18 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    * any leaf with more than one file (sorted by `_ID` within files, the
    * import-time order). The leaf walk is driver-side but bounded by
    * the partition map (the same cardinality every catalog operation
-   * already lists); each leaf rewrite is its own small Spark job.
+   * already lists); each leaf rewrite is its own small Spark job. The
+   * leaf walk lists the trees afresh rather than trusting a snapshot,
+   * because it rewrites leaves. When any leaf was rewritten, both
+   * trees' summary sidecars are rewritten to name the new files, and
+   * the meta is rewritten unchanged so every handle's snapshot moves
+   * past the deleted files.
    * Returns (leaves compacted, files before, files after).
    */
   def compact(targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int, Int) = {
     val fs = CatalogLayout.fs(spark, location)
     var (done, before, after) = (0, 0, 0)
-    for ((tree, o, p) <- tiles()) {
+    for (tree <- Seq(layout.catalogTree, layout.neighborTree); (o, p) <- CatalogLayout.listTiles(spark, tree)) {
       val leaf = CatalogLayout.tilePath(tree, o, p)
       val n = fs.listStatus(new org.apache.hadoop.fs.Path(leaf))
         .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -168,15 +211,13 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
         after += a
       } else after += n
     }
+    if (done > 0) {
+      layout.finishTrees(spark)
+      CatalogLayout.writeString(spark, layout.metaPath, CatalogLayout.readString(spark, layout.metaPath))
+      resolved = null
+    }
     (done, before, after)
   }
-
-  /** (tree, order, pix) of every tile directory of the catalog/ and
-   *  neighbor/ trees. Bounded by directory count. */
-  private def tiles(): Seq[(String, Int, Long)] = for {
-    tree <- Seq(layout.catalogTree, layout.neighborTree)
-    (o, p) <- CatalogLayout.listTiles(spark, tree)
-  } yield (tree, o, p)
 
   /**
    * Incremental append: add rows to this catalog without
@@ -187,6 +228,7 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    */
   def append(df: DataFrame): Catalog = {
     HipsPartitioner.append(df, layout)
+    resolved = null
     this
   }
 
@@ -194,8 +236,8 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    *  appends ([[HipsPartitioner.repartition]] — rewrites only the
    *  over-threshold tiles, `_ID`s preserved, margins rebuilt under the
    *  import's margin policy, meta + frozen layout basis refreshed).
-   *  Returns a fresh handle (this one's cached meta is stale after the
-   *  rewrite). */
+   *  Returns a fresh handle; this one also sees the new tiles on its
+   *  next read. */
   def repartition(): Catalog = {
     HipsPartitioner.repartition(spark, layout)
     Catalog(spark, location, catname)
@@ -233,38 +275,41 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
                  c1Cols: Seq[String] = Nil, c2Cols: Seq[String] = Nil,
                  delim: String = "."): DataFrame = {
     require(other.catname != catname, "cannot cross-match a catalog with itself")
-    val order = math.max(orderK, other.orderK)
+    val (ls, rs) = (snapshot(), other.snapshot())
+    val (lmeta, rmeta) = (ls.meta, rs.meta)
+    val order = math.max(lmeta.orderK, rmeta.orderK)
     val (lp, rp) = (catname + delim, other.catname + delim)
     // the join key is the PACKED (order << 48 | pix) value of the
     // right partition: a bare pixel number is ambiguous across orders
     // in an adaptive map ((2, 5) and (3, 5) can coexist)
-    val bc = spark.sparkContext.broadcast(other.partitionGrid(order))
+    val bc = spark.sparkContext.broadcast(Catalog.partitionGrid(rs, order))
     // column selection is applied BEFORE the join, on both sides, so
     // the pruning reaches the parquet scans (ReadSchema); the left
     // hive columns are dropped before prefixing, mirroring prep()
-    val l0 = layout.load(spark).drop(CatalogLayout.TileCols: _*)
-    val lSel = if (c1Cols.isEmpty) l0 else l0.select(withContractCols(c1Cols).map(col): _*)
+    val l0 = ls.load(spark).drop(CatalogLayout.TileCols: _*)
+    val lSel = if (c1Cols.isEmpty) l0 else l0.select(withContractCols(lmeta, c1Cols).map(col): _*)
     val lm = prefixed(lSel.withColumn("__jpix",
-      native.packedPartitionPixel(col(raKw), col(decKw), order, bc)), lp)
+      native.packedPartitionPixel(col(lmeta.raKw), col(lmeta.decKw), order, bc)), lp)
 
     def prep(df: DataFrame): DataFrame = {
       val sel =
         if (c2Cols.isEmpty) df
-        else df.select((other.withContractCols(c2Cols) ++ CatalogLayout.TileCols).distinct.map(col): _*)
+        else df.select((withContractCols(rmeta, c2Cols) ++ CatalogLayout.TileCols).distinct.map(col): _*)
       val cols = sel.columns.filterNot(CatalogLayout.TileCols.contains)
       sel.select((cols.map(col) :+
         shiftleft(col("Norder").cast("long"), 48).bitwiseOR(col("Npix")).as("__jpix")): _*)
     }
     // right candidates per pixel: home rows + stored margin replicas
-    val rm = prefixed(prep(other.layout.load(spark)).unionByName(prep(other.layout.loadNeighbors(spark))), rp)
+    val rm = prefixed(prep(rs.load(spark)).unionByName(prep(rs.loadNeighbors(spark))), rp)
 
     // prefixed names may contain '.' (the reference's delim), which
     // col() would parse as struct access — backtick-quote them
     def qc(name: String) = col("`" + name + "`")
     val joined = lm.join(rm, "__jpix")
-      .withColumn("_DIST", sphere.gcDist(qc(lp + raKw), qc(lp + decKw), qc(rp + other.raKw), qc(rp + other.decKw)))
+      .withColumn("_DIST", sphere.gcDist(qc(lp + lmeta.raKw), qc(lp + lmeta.decKw),
+        qc(rp + rmeta.raKw), qc(rp + rmeta.decKw)))
       .filter(col("_DIST") < dthreshDeg)
-    Spatial.nearestK(joined, lp + idKw, rp + other.idKw, nNeighbors)
+    Spatial.nearestK(joined, lp + lmeta.idKw, rp + rmeta.idKw, nNeighbors)
       .withColumn("hips_k", shiftright(col("__jpix"), 48).cast("int"))
       .withColumn("hips_pix", col("__jpix").bitwiseAND(lit(0xffffffffffffL)))
       .drop("__jpix")
@@ -273,16 +318,6 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
   /** Every column but the join key renamed to `prefix + name`. */
   private def prefixed(df: DataFrame, prefix: String): DataFrame =
     df.columns.filterNot(_ == "__jpix").foldLeft(df)((d, c) => d.withColumnRenamed(c, prefix + c))
-
-  /**
-   * Partition grid at `order` (SPARSE tiling, see [[PartitionGrid]]),
-   * reconstructed from the hive directories of BOTH trees, so sky
-   * regions that hold only margin replicas (empty home pixel,
-   * populated border) still resolve. Regions with no files at all
-   * become -1 gap tiles (no partition).
-   */
-  private def partitionGrid(order: Int): PartitionGrid =
-    PartitionGrid.fromTiles(order, tiles().map { case (_, o, p) => (p << (2 * (order - o)), o) })
 
   /** Density views render at most this order — the reference's own
    *  map order ({cat}_order10_hpmap.fits): a DENSE sky at order 10 is
@@ -342,6 +377,24 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
 }
 
 object Catalog {
+
+  /** [[Catalog.searchCover]] for a catalog of partition order `orderK`. */
+  private def searchCover(orderK: Int, ra: Double, dec: Double, radiusDeg: Double): (Int, Array[Long]) = {
+    val discFrac = (1 - math.cos(math.toRadians(math.min(radiusDeg, 180.0)))) / 2
+    val coverOrder = (0 to orderK).reverse
+      .find(o => discFrac * Healpix.npix(o) <= 8192 || o == 0).getOrElse(0)
+    (coverOrder, Healpix.queryDiscCover(coverOrder, ra, dec, radiusDeg))
+  }
+
+  /**
+   * Partition grid at `order` (SPARSE tiling, see [[PartitionGrid]]),
+   * from the snapshot's tiles of BOTH trees, so sky regions that hold
+   * only margin replicas (empty home pixel, populated border) still
+   * resolve. Regions with no files at all become -1 gap tiles (no
+   * partition).
+   */
+  private def partitionGrid(s: CatalogSnapshot, order: Int): PartitionGrid =
+    PartitionGrid.fromTiles(order, s.tiles.map { case (_, o, p) => (p << (2 * (order - o)), o) })
 
   /**
    * Open a catalog at any Hadoop-FileSystem location (local path,

@@ -2,7 +2,8 @@ package graft.catalog
 
 import graft.functions.sphere
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /**
@@ -36,26 +37,37 @@ final case class CatalogLayout(location: String, catname: String) {
   def writeMeta(spark: SparkSession, meta: CatalogMeta): Unit =
     CatalogLayout.writeString(spark, metaPath, meta.json)
 
-  /** The catalog tree (hive tile columns included). A lingering
+  /** (modification time, length) of the meta file. Every completed
+   *  write ends by rewriting the meta, so this is the key a
+   *  [[CatalogSnapshot]] stays current under: one `getFileStatus`, no
+   *  listing. */
+  private[catalog] def metaStatus(spark: SparkSession): (Long, Long) = {
+    val st = CatalogLayout.fs(spark, metaPath).getFileStatus(new Path(metaPath))
+    (st.getModificationTime, st.getLen)
+  }
+
+  /** Resolve the catalog as it is on disk: the meta, and each tree
+   *  listed and its schema inferred once (the only read of a tree
+   *  through `spark.read`; the neighbor tree on first use). The meta's
+   *  status is read before anything else, so a write landing meanwhile
+   *  changes the key and the next read resolves again. A lingering
    *  repartition journal means a writer crashed mid-commit (old + new
    *  sub-tile dirs may BOTH be visible = duplicate rows) — warn loudly
-   *  and point at the repair path rather than silently
-   *  double-counting; an ACTIVE repartition's commit window triggers
-   *  the same warning, which is the documented transient-duplicates
-   *  read behavior. */
-  private[catalog] def load(spark: SparkSession): DataFrame = {
+   *  and point at the repair path rather than silently double-counting;
+   *  an ACTIVE repartition's commit window triggers the same warning,
+   *  which is the documented transient-duplicates read behavior. */
+  private[catalog] def resolve(spark: SparkSession): CatalogSnapshot = {
+    val key = metaStatus(spark)
+    val meta = readMeta(spark)
     if (CatalogLayout.exists(spark, journal))
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"catalog $catname has a pending repartition commit ($journal): rows in split tiles " +
           "may appear twice until the commit finishes — if no repartition is running, " +
           "a writer crashed; run Catalog.recoverRepartition() to roll it forward")
-    spark.read.parquet(catalogTree)
+    def relation(tree: String) = GraftBridge.fileRelation(spark.read.parquet(tree))
+    new CatalogSnapshot(key, meta, relation(catalogTree),
+      () => if (CatalogLayout.exists(spark, neighborTree)) Some(relation(neighborTree)) else None)
   }
-
-  /** The neighbor (margin) tree; empty with the catalog schema if absent. */
-  private[catalog] def loadNeighbors(spark: SparkSession): DataFrame =
-    if (CatalogLayout.exists(spark, neighborTree)) spark.read.parquet(neighborTree)
-    else load(spark).limit(0)
 
   /** Drop the session's cached listings of both trees: a listing
    *  cached before another writer's files landed hides those files. */
@@ -308,6 +320,43 @@ object CatalogLayout {
         org.apache.parquet.hadoop.ParquetOutputFormat.JobSummaryLevel.ALL)
     }
   }
+}
+
+/**
+ * One resolved state of a catalog ([[CatalogLayout.resolve]]): the
+ * meta, both trees' relations (listed, schema inferred) and the tiles
+ * of both trees. Every read builds a fresh relation instance over the
+ * shared file index, so it plans without listing; Spark's partition
+ * pruning still restricts a scan to the tiles its filter names.
+ * `metaStatus` is the key it was resolved under. The neighbor tree is
+ * resolved on first use: searches and the left side of a cross-match
+ * never read it.
+ */
+private[catalog] final class CatalogSnapshot(val metaStatus: (Long, Long), val meta: CatalogMeta,
+                                             catalogRel: LogicalRelation,
+                                             resolveNeighbors: () => Option[LogicalRelation]) {
+
+  private lazy val neighborRel: Option[LogicalRelation] = resolveNeighbors()
+
+  /** `(tree name, order, pix)` of every tile holding files, in both
+   *  trees, read from the file indexes: no filesystem call. */
+  lazy val tiles: Seq[(String, Int, Long)] =
+    (Seq("catalog" -> catalogRel) ++ neighborRel.map("neighbor" -> _)).flatMap { case (name, rel) =>
+      val index = rel.relation.asInstanceOf[HadoopFsRelation].location
+      val schema = index.partitionSchema
+      val (o, p) = (schema.fieldIndex("Norder"), schema.fieldIndex("Npix"))
+      index.listFiles(Nil, Nil).map { d =>
+        def num(i: Int) = d.values.get(i, schema(i).dataType).asInstanceOf[Number].longValue
+        (name, num(o).toInt, num(p))
+      }
+    }
+
+  /** The catalog tree (hive tile columns included). */
+  def load(spark: SparkSession): DataFrame = GraftBridge.ofRelation(spark, catalogRel)
+
+  /** The neighbor (margin) tree; empty with the catalog schema if absent. */
+  def loadNeighbors(spark: SparkSession): DataFrame =
+    neighborRel.fold(load(spark).limit(0))(GraftBridge.ofRelation(spark, _))
 }
 
 /**

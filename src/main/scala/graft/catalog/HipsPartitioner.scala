@@ -246,7 +246,8 @@ object HipsPartitioner {
     // listing cached before an external writer's files landed would
     // mint colliding _IDs
     layout.invalidateTrees(spark)
-    val meta = layout.readMeta(spark)
+    val current = layout.resolve(spark)
+    val meta = current.meta
     import meta.{raKw => raCol, decKw => decCol, idKw => idCol}
 
     val (ihPix, ihCnt) = CatalogLayout.readHist(spark, layout.importHist)
@@ -256,9 +257,9 @@ object HipsPartitioner {
 
     def ids(existing: DataFrame) = Some(CatalogLayout.SpatialIds(raCol, decCol, idCol, Some(existing)))
     CatalogLayout.writeTree(withPartitionColumns(df, raCol, decCol, frozen), layout.catalogTree, "append",
-      ids(layout.load(spark)))
+      ids(current.load(spark)))
     CatalogLayout.writeTree(marginRows(df, raCol, decCol, frozen, meta.marginDeg, meta.exactMargin),
-      layout.neighborTree, "append", ids(layout.loadNeighbors(spark)))
+      layout.neighborTree, "append", ids(current.loadNeighbors(spark)))
     // the session FileStatusCache still holds the PRE-append listings
     // of partition dirs that already existed — without invalidation a
     // same-session reader sees only the old files of old dirs (new
@@ -317,7 +318,7 @@ object HipsPartitioner {
    *    each idempotent, so replaying them completes the rewrite;
    *  - a concurrent reader during the commit window sees transient
    *    duplicates rather than a gap (new sub-tile dirs land before
-   *    their old dir is deleted); [[CatalogLayout.load]] warns loudly
+   *    their old dir is deleted); [[CatalogLayout.resolve]] warns loudly
    *    when a journal is present so a crashed writer's lingering
    *    duplicates are detected rather than silently double-counted.
    */
@@ -328,7 +329,6 @@ object HipsPartitioner {
     val meta = layout.readMeta(spark)
     import meta.{orderK, raKw => raCol, decKw => decCol, idKw => idCol}
 
-    spark.catalog.refreshByPath(layout.catalogTree)
     val (phPix, phCnt) = CatalogLayout.readHist(spark, layout.pointMap)
     val newMap = partitionMapFromSparseHist(phPix, phCnt, orderK, meta.pixThreshold)
     val (ihPix, ihCnt) = CatalogLayout.readHist(spark, layout.importHist)
@@ -353,24 +353,26 @@ object HipsPartitioner {
       }
     if (split.isEmpty) return PartitionMap(orderK, oldMap.grid, phPix, phCnt)
 
-    def existing(tree: String): Seq[String] =
-      split.map { case (o, p) => CatalogLayout.tilePath(tree, o, p) }.filter(CatalogLayout.exists(spark, _))
-
-    val catPaths = existing(layout.catalogTree)
-    require(catPaths.nonEmpty,
+    val current = layout.resolve(spark)
+    val catTiles = current.tiles.collect { case ("catalog", o, p) => (o, p) }.toSet
+    require(split.exists(catTiles.contains),
       s"repartition: none of the ${split.length} split tiles have catalog dirs — " +
         s"split=${split.take(5)}, probe=${split.headOption.map { case (o, p) =>
           CatalogLayout.tilePath(layout.catalogTree, o, p) }}")
+    // the split tiles' rows, read through the resolved trees: the
+    // filter names only tile columns, so the scan is pruned to them
+    val splitKeys = split.map { case (o, p) => Long.box((o.toLong << 48) | p) }
+    def splitRows(tree: DataFrame): DataFrame =
+      tree.filter(shiftleft(col("Norder").cast("long"), 48).bitwiseOR(col("Npix")).isin(splitKeys: _*))
+        .drop(CatalogLayout.TileCols: _*)
     // parquet re-reads surface every column nullable, but `_ID` was
     // written non-nullable — restore that in the rewrite's schema
     // (coalesce against a literal is non-nullable by construction and
     // never fires: _ID has no nulls) or the summary sidecar's footer
     // merge rejects the mixed row metadata
-    val oldCat = spark.read.parquet(catPaths: _*)
+    val oldCat = splitRows(current.load(spark))
       .withColumn("_ID", coalesce(col("_ID"), lit(Long.MinValue)))
-    val nbrPaths = existing(layout.neighborTree)
-    val oldNbr =
-      if (nbrPaths.nonEmpty) spark.read.parquet(nbrPaths: _*) else oldCat.limit(0)
+    val oldNbr = splitRows(current.loadNeighbors(spark))
 
     // 1) STAGE the re-bucketed split-tile catalog rows, _ID preserved
     //    (invisible to readers until the journal commits)
@@ -389,7 +391,7 @@ object HipsPartitioner {
     // resulting rank gaps are harmless; uniqueness is the contract)
     CatalogLayout.writeTree(restricted, layout.stagedTree("neighbor"), "overwrite",
       Some(CatalogLayout.SpatialIds(raCol, decCol, idCol,
-        Some(layout.loadNeighbors(spark)))))
+        Some(current.loadNeighbors(spark)))))
 
     // COMMIT POINT: journal the staged sub-tile dirs + doomed old dirs.
     // Before the journal lands a crash leaves the old layout
@@ -414,7 +416,7 @@ object HipsPartitioner {
    * the debris is discarded. Returns true iff a pending commit was
    * found and completed. Run automatically at the start of every
    * [[repartition]] and [[append]]; callers seeing
-   * [[CatalogLayout.load]]'s journal warning run it through
+   * [[CatalogLayout.resolve]]'s journal warning run it through
    * [[Catalog.recoverRepartition]].
    */
   private[catalog] def recoverRepartition(spark: SparkSession, layout: CatalogLayout): Boolean = {

@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
@@ -9,8 +10,9 @@ import org.apache.spark.storage.StorageLevel
  * Minimal bridge into Spark's private[sql] Column <-> Expression
  * conversions (Spark 4.x moved Column to a ColumnNode wrapper; this
  * is the standard extension-library pattern for building typed
- * Columns around custom Catalyst expressions), and into the
- * in-memory relation `Dataset.persist` builds.
+ * Columns around custom Catalyst expressions), into the in-memory
+ * relation `Dataset.persist` builds, and into the resolved file
+ * relation under a `spark.read` frame.
  */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -45,4 +47,18 @@ object GraftBridge {
     classic.Dataset.ofRows(session,
       InMemoryRelation(built.output, built.cacheBuilder, Nil, built.statsOfPlanToCache))
   }
+
+  /** The resolved file relation a `spark.read` frame reads: its file
+   *  index is listed and its schema inferred. */
+  def fileRelation(df: DataFrame): LogicalRelation =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed match {
+      case r: LogicalRelation => r
+      case p => throw new IllegalArgumentException(s"not a file relation: ${p.nodeName}")
+    }
+
+  /** A frame over a fresh instance of `rel`: the same file index and
+   *  schema under new attribute ids, so two frames over one relation
+   *  still join with each other. Plans without listing anything. */
+  def ofRelation(spark: SparkSession, rel: LogicalRelation): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], rel.newInstance())
 }

@@ -124,21 +124,20 @@ class CatalogSpec extends SparkSpecBase {
     // file's row groups — total rows and file count must match the
     // written tree exactly; _common_metadata carries the schema
     for (tree <- Seq("catalog", "neighbor")) {
-      val (nFiles, nRows, sidecarFiles) = summaryStats(s"$out/litest/$tree")
+      val (files, nRows, sidecarFiles) = summaryStats(s"$out/litest/$tree")
       val treeRows = spark.read.parquet(s"$out/litest/$tree").count()
-      val partFiles = org.apache.commons.io.FileUtils
-        .listFiles(new java.io.File(s"$out/litest/$tree"), Array("parquet"), true)
-        .size()
+      val partFiles = dataFiles(s"$out/litest/$tree")
       assert(nRows == treeRows, s"$tree: _metadata row total $nRows != $treeRows")
-      assert(nFiles == partFiles, s"$tree: _metadata covers $nFiles files, tree has $partFiles")
+      assert(files == partFiles, s"$tree: _metadata covers ${files.size} files, tree has ${partFiles.size}")
       assert(Set("_metadata", "_common_metadata").subsetOf(sidecarFiles))
     }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
-  /** (#files covered, total rows, sidecar names present) from a
-   *  tree's `_metadata` summary file. */
-  private def summaryStats(dir: String): (Int, Long, Set[String]) = {
+  /** (files covered, total rows, sidecar names present) from a
+   *  tree's `_metadata` summary file; files are paths relative to the
+   *  tree, as the sidecar records them. */
+  private def summaryStats(dir: String): (Set[String], Long, Set[String]) = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
     val meta = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
@@ -146,7 +145,15 @@ class CatalogSpec extends SparkSpecBase {
     val blocks = meta.getBlocks.asScala
     val present = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("_")).map(_.getName).toSet
-    (blocks.map(_.getPath).distinct.size, blocks.map(_.getRowCount).sum, present)
+    (blocks.map(_.getPath).toSet, blocks.map(_.getRowCount).sum, present)
+  }
+
+  /** The data files of a tree, relative to it. */
+  private def dataFiles(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File(dir).toPath
+    org.apache.commons.io.FileUtils.listFiles(root.toFile, Array("parquet"), true).asScala
+      .map(f => root.relativize(f.toPath).toString).toSet
   }
 
   test("wide queries on a fine catalog: adaptive cover order keeps candidates bounded, results exact") {
@@ -739,7 +746,108 @@ class CatalogSpec extends SparkSpecBase {
     val cone1 = cat.coneSearch(180.0, 0.0, 30.0).select("k")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(cone1 == cone0 && cone1.nonEmpty, "pruned search parity after compaction")
+    // the summary sidecars name exactly the compacted files and count
+    // every row of the tree
+    for (tree <- Seq("catalog", "neighbor")) {
+      val dir = s"$out/cc/$tree"
+      val (files, rows, _) = summaryStats(dir)
+      assert(files == dataFiles(dir), s"$tree: _metadata names files the compaction deleted")
+      assert(rows == spark.read.parquet(dir).count(), s"$tree: _metadata row total")
+    }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("a handle is a snapshot: it sees every completed write, its frames self-join, a resolved search starts no job") {
+    val out = java.nio.file.Files.createTempDirectory("graft_snapshot").toString
+    def ks(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("k").collect().map(_.getLong(0)).sorted.toSeq
+    def cone(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      ks(df.filter(sphere.gcDist(col("cra"), col("cdec"), lit(180.0), lit(0.0)) < 30.0))
+    def tilesOf(cat: Catalog): Set[(Int, Long)] =
+      cat.load().select(col("Norder").cast("int"), col("Npix").cast("long")).distinct().collect()
+        .map(r => (r.getInt(0), r.getLong(1))).toSet
+    val first = li.filter(col("k") % 8 === 1)
+    val own = Catalog.importFrom(first, out, "snap", "cra", "cdec", "k", orderK = 4, threshold = 200, marginDeg = 1.0)
+    val other = Catalog(spark, out, "snap")
+    assert(ks(other.coneSearch(180.0, 0.0, 30.0)) == cone(first))
+
+    // the handle's own append, then the other handle, resolved before
+    // it, on its next search
+    own.append(li.filter(col("k") % 8 =!= 1))
+    assert(own.load().count() == li.count())
+    assert(ks(other.coneSearch(180.0, 0.0, 30.0)) == cone(li))
+
+    // two loads of one handle are distinct relation instances
+    val (a, b) = (own.load(), own.load())
+    assert(a.join(b, a("_ID") === b("_ID")).count() == li.count())
+
+    // resolved: building the frame lists nothing and infers nothing
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { df = own.coneSearch(180.0, 0.0, 30.0) } == 0)
+    assert(ks(df) == cone(li))
+
+    // compaction deletes the files both snapshots listed
+    assert(own.compact()._1 > 0)
+    assert(ks(own.coneSearch(180.0, 0.0, 30.0)) == cone(li))
+    assert(ks(other.coneSearch(180.0, 0.0, 30.0)) == cone(li))
+
+    // repartition splits tiles; its fresh handle and the old ones see
+    // the tiles on disk
+    val before = tilesOf(own)
+    val rp = own.repartition()
+    val onDisk = new java.io.File(s"$out/snap/catalog").listFiles().filter(_.getName.startsWith("Norder="))
+      .flatMap { od =>
+        od.listFiles().flatMap(_.listFiles()).filter(_.getName.startsWith("Npix="))
+          .map(pd => (od.getName.stripPrefix("Norder=").toInt, pd.getName.stripPrefix("Npix=").toLong))
+      }.toSet
+    assert(onDisk != before, "the 8x growth must split a tile")
+    assert(tilesOf(rp) == onDisk && tilesOf(other) == onDisk)
+    assert(ks(other.coneSearch(180.0, 0.0, 30.0)) == cone(li))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("searchCover: a narrow cone covers at orderK, a full-RA dec band stays within ~8192 pixels") {
+    val out = java.nio.file.Files.createTempDirectory("graft_cover").toString
+    val cat = Catalog.importFrom(li.limit(500), out, "cover", "cra", "cdec", "k", orderK = 8, threshold = 100, marginDeg = 0.1)
+    val (narrowOrder, narrow) = cat.searchCover(180.0, 0.0, 0.1)
+    assert(narrowOrder == 8)
+    assert(narrow.toSeq == graft.healpix.Healpix.queryDiscCover(8, 180.0, 0.0, 0.1).toSeq && narrow.nonEmpty)
+    val ((cra, cdec), radius) = graft.operators.Spatial.boxBoundingCone(0.0, 360.0, -10.0, 10.0)
+    val (bandOrder, band) = cat.searchCover(cra, cdec, radius)
+    assert(bandOrder < 8 && band.length <= 8192 && band.nonEmpty, s"order $bandOrder, ${band.length} pixels")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("spark.read reaches a catalog tree only in the snapshot resolution") {
+    // every other read of a tree plans over a resolved snapshot. The
+    // exempt readers: the histogram artifacts (loadHist) and the
+    // resumable import's staged batches (writeResumable)
+    val allowed = Map("CatalogLayout.scala" -> Set("resolve", "loadHist"),
+      "HipsPartitioner.scala" -> Set("writeResumable"))
+    val dir = new java.io.File("src/main/scala/graft/catalog")
+    assert(dir.isDirectory, s"run from the project root: ${dir.getAbsolutePath}")
+    val member = """^  (?:[\w\[\]]+ )*def (\w+)""".r.unanchored
+    val reads = dir.listFiles().filter(_.getName.endsWith(".scala")).toSeq.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toList finally src.close()
+      lines.scanLeft(("", "")) {
+        case ((cur, _), line @ member(name)) => (name, line)
+        case ((cur, _), line) => (cur, line)
+      }.tail.collect { case (cur, line) if line.matches(""".*\.read\s*\..*""") => (f.getName, cur, line.trim) }
+    }
+    assert(reads.exists { case (f, m, _) => f == "CatalogLayout.scala" && m == "resolve" },
+      "the snapshot resolution must be found by this scan")
+    val hits = reads.filterNot { case (f, m, _) => allowed.get(f).exists(_(m)) }
+    assert(hits.isEmpty, hits.mkString("\n"))
+    // no main source outside the catalog package names a tree
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val outside = files(new java.io.File("src/main/scala")).filter(f =>
+      f.getName.endsWith(".scala") && !f.getPath.contains("graft/catalog/")).filter { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.mkString.matches("(?s).*\\b(catalogTree|neighborTree)\\b.*") finally src.close()
+    }
+    assert(outside.isEmpty, outside.mkString("\n"))
   }
 
   test("ingest path is UDF-free and stays inside WholeStageCodegen") {

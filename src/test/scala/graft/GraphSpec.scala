@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{DriverLocal, Graph}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -17,29 +16,6 @@ class GraphSpec extends SparkSpecBase {
   private def planOf(name: String): String =
     QueryRegistry.all.toMap.apply(name).run(spark, sf("sf0.001"))
       .queryExecution.executedPlan.toString
-
-  /** Spark jobs started while `f` runs, counted by a listener. A
-   *  marker job run afterwards flushes the listener bus: its start
-   *  event is delivered after every earlier one. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      sc.setJobGroup("jobs-marker", "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("jobs-marker") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(groups.contains("jobs-marker"), "the listener never saw the marker job")
-      groups.size - 1
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("connected components: path graph converges to min id") {
     // 1-2-3-4-5-6 chain: the star contraction must bridge every hop

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -8,6 +9,29 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** Spark jobs started while `f` runs, counted by a listener. A
+   *  marker job run afterwards flushes the listener bus: its start
+   *  event is delivered after every earlier one. */
+  def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobGroup("jobs-marker", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("jobs-marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("jobs-marker"), "the listener never saw the marker job")
+      groups.size - 1
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpecBase {
