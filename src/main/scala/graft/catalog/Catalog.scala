@@ -254,20 +254,30 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    * kNN cross-match against another written catalog using the
    * PERSISTED margin cache — the reference's stored-neighbor
    * semantics (catalog.py:144 cross_match + dask_utils.py:367): per
-   * partition pixel of `other`, candidates are that pixel's catalog
+   * partition tile of `other`, candidates are that tile's catalog
    * rows plus its neighbor-file rows; this catalog's rows are
-   * assigned to `other`'s partition pixel containing them (the
+   * assigned to `other`'s partition tile containing them (the
    * hierarchy alignment of util.map_catalog_hips, as one equi-join
-   * key). No per-row disc cover at query time — that work was done
-   * once at write time. Like the reference, matches beyond the stored
+   * key, `__jpix`). Like the reference, matches beyond the stored
    * margin radius are not found: import with marginDeg >= dthresh for
-   * exactness. Only the keying is the stored path's own; the ranking
-   * is the in-flight match's ([[Spatial.nearestK]]).
+   * exactness.
+   *
+   * Inside a tile the match is local, as lsd2's per-pixel KD-tree is:
+   * the candidate join is [[Spatial.pixelJoin]] keyed by (tile,
+   * fine pixel) at `Spatial.autoOrder(dthreshDeg)`. A right row (home
+   * or margin) carries its own fine pixel; a left row is exploded to
+   * the fine pixels of its disc cover ([[Spatial.discCover]]). So a
+   * left row meets only the right rows of its tile that lie in its
+   * cover: its candidates are the local density times the cover, not
+   * the tile's row count. A right row R within dthresh of a left row L
+   * lies in L's cover and is stored once in L's tile T (home or
+   * margin), so each pair meets exactly once. The ranking is the
+   * in-flight match's ([[Spatial.nearestK]]).
    *
    * Output convention follows the reference: every column of BOTH
    * sides carries a `{catname}{delim}` prefix (util.py:299
-   * frame_prefix_all_cols, delim '.'), plus unprefixed
-   * `hips_k`/`hips_pix` (the match partition)/`_DIST`/`_RANK`.
+   * frame_prefix_all_cols, delim '.'), plus unprefixed `_DIST`,
+   * `_RANK` and `hips_k`/`hips_pix` (the match partition tile).
    * `c1Cols`/`c2Cols` prune each side's scan before the join —
    * ra/dec/id are always kept (util.py:276).
    */
@@ -279,7 +289,7 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
     val (lmeta, rmeta) = (ls.meta, rs.meta)
     val order = math.max(lmeta.orderK, rmeta.orderK)
     val (lp, rp) = (catname + delim, other.catname + delim)
-    // the join key is the PACKED (order << 48 | pix) value of the
+    // the tile key is the PACKED (order << 48 | pix) value of the
     // right partition: a bare pixel number is ambiguous across orders
     // in an adaptive map ((2, 5) and (3, 5) can coexist)
     val bc = spark.sparkContext.broadcast(Catalog.partitionGrid(rs, order))
@@ -299,20 +309,21 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
       sel.select((cols.map(col) :+
         shiftleft(col("Norder").cast("long"), 48).bitwiseOR(col("Npix")).as("__jpix")): _*)
     }
-    // right candidates per pixel: home rows + stored margin replicas
+    // right candidates per tile: home rows + stored margin replicas
     val rm = prefixed(prep(rs.load(spark)).unionByName(prep(rs.loadNeighbors(spark))), rp)
 
-    // prefixed names may contain '.' (the reference's delim), which
-    // col() would parse as struct access — backtick-quote them
-    def qc(name: String) = col("`" + name + "`")
-    val joined = lm.join(rm, "__jpix")
-      .withColumn("_DIST", sphere.gcDist(qc(lp + lmeta.raKw), qc(lp + lmeta.decKw),
-        qc(rp + rmeta.raKw), qc(rp + rmeta.decKw)))
-      .filter(col("_DIST") < dthreshDeg)
+    val o = Spatial.autoOrder(dthreshDeg)
+    val (lra, ldec) = (lp + lmeta.raKw, lp + lmeta.decKw)
+    val joined = Spatial.pixelJoin(rm, rp + rmeta.raKw, rp + rmeta.decKw,
+      Spatial.discCover(lm, lra, ldec, o, dthreshDeg), lra, ldec,
+      dthreshDeg, o, saltKey = None, keys = Seq("__jpix"))
+    // left columns, right columns, _DIST, _RANK, then the tile; the
+    // prefixed names may contain '.', so they are backtick-quoted
+    val out = (lm.columns ++ rm.columns).filterNot(_ == "__jpix") ++ Seq("_DIST", "_RANK")
     Spatial.nearestK(joined, lp + lmeta.idKw, rp + rmeta.idKw, nNeighbors)
-      .withColumn("hips_k", shiftright(col("__jpix"), 48).cast("int"))
-      .withColumn("hips_pix", col("__jpix").bitwiseAND(lit(0xffffffffffffL)))
-      .drop("__jpix")
+      .select(out.map(Spatial.qc) ++ Seq(
+        shiftright(col("__jpix"), 48).cast("int").as("hips_k"),
+        col("__jpix").bitwiseAND(lit(0xffffffffffffL)).as("hips_pix")): _*)
   }
 
   /** Every column but the join key renamed to `prefix + name`. */

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * The on-disk format of the catalog at `location/catname`, owned here
@@ -47,8 +48,10 @@ final case class CatalogLayout(location: String, catname: String) {
   }
 
   /** Resolve the catalog as it is on disk: the meta, and each tree
-   *  listed and its schema inferred once (the only read of a tree
-   *  through `spark.read`; the neighbor tree on first use). The meta's
+   *  listed once with its schema read from its `_common_metadata`
+   *  footer in this JVM, so resolving runs no Spark job; a tree
+   *  without the sidecar has its schema inferred (the only read of a
+   *  tree through `spark.read`; the neighbor tree on first use). The meta's
    *  status is read before anything else, so a write landing meanwhile
    *  changes the key and the next read resolves again. A lingering
    *  repartition journal means a writer crashed mid-commit (old + new
@@ -64,7 +67,8 @@ final case class CatalogLayout(location: String, catname: String) {
         s"catalog $catname has a pending repartition commit ($journal): rows in split tiles " +
           "may appear twice until the commit finishes — if no repartition is running, " +
           "a writer crashed; run Catalog.recoverRepartition() to roll it forward")
-    def relation(tree: String) = GraftBridge.fileRelation(spark.read.parquet(tree))
+    def relation(tree: String) = CatalogLayout.sparkSchema(spark, tree)
+      .fold(GraftBridge.fileRelation(spark.read.parquet(tree)))(GraftBridge.parquetRelation(spark, tree, _))
     new CatalogSnapshot(key, meta, relation(catalogTree),
       () => if (CatalogLayout.exists(spark, neighborTree)) Some(relation(neighborTree)) else None)
   }
@@ -165,6 +169,28 @@ object CatalogLayout {
       .withColumn("Npix", npix)
       .drop(packed)
   }
+
+  /** The data schema Spark wrote into a tree's files, from the
+   *  `_common_metadata` sidecar's footer (the key Spark's own schema
+   *  inference reads from a data file's footer); None when the sidecar
+   *  or the key is absent. One small footer read, no Spark job. */
+  private[catalog] def sparkSchema(spark: SparkSession, tree: String): Option[StructType] = {
+    val path = new Path(s"$tree/_common_metadata")
+    val conf = spark.sessionState.newHadoopConf()
+    if (!path.getFileSystem(conf).exists(path)) None
+    else {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+      val kv = try reader.getFooter.getFileMetaData.getKeyValueMetaData finally reader.close()
+      Option(kv.get(SparkSchemaKey)).flatMap { json =>
+        scala.util.Try(DataType.fromJson(json)).toOption.collect { case st: StructType => st }
+      }
+    }
+  }
+
+  /** Spark's footer key for the schema it wrote
+   *  (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   // ----------------------------------------------------------- histograms
 

@@ -452,22 +452,44 @@ object Healpix {
     out.toArray
   }
 
+  /** [[maxPixRad]] in degrees, per order 0..29. */
+  private val maxPixRadDeg: Array[Double] = Array.tabulate(30)(o => math.toDegrees(maxPixRad(o)))
+
   /**
    * Conservative cover: all pixels at `order` whose region MAY
    * intersect the disc of `radiusDeg` around (raDeg, decDeg) —
    * guaranteed superset of the true intersecting set. Hierarchical
-   * descent from the 12 base pixels using the maxPixRad bound; cost
-   * is O(cover size * order), no full-sky enumeration.
+   * descent using the maxPixRad bound; cost is O(cover size * levels
+   * descended), no full-sky enumeration.
+   *
+   * The descent starts at the deepest order s in [2, `order` - 1]
+   * whose pixels are at least 8x the radius (maxPixRad(s) >= 8 r):
+   * there the disc lies inside the point's own pixel and its
+   * 8-neighborhood, so those (at most 9) pixels replace the 12 base
+   * pixels and the s levels above them. A small-radius cover (a
+   * cross-match explode, a margin explode) then descends a few levels
+   * instead of `order`. Without such an order (a wide disc, a coarse
+   * `order`) the descent starts from the 12 base pixels. The bounds
+   * keep the cover the base-pixel descent's: started AT `order`, the
+   * 9 pixels miss pixels two steps away whose centres still pass the
+   * loose centre test, and the base pixels' neighborhoods are too
+   * distorted (HealpixSpec pins the containment on seeded discs).
    */
   def queryDiscCover(order: Int, raDeg: Double, decDeg: Double, radiusDeg: Double): Array[Long] = {
-    var frontier = new Array[Long](12)
-    var i = 0
-    while (i < 12) { frontier(i) = i.toLong; i += 1 }
-    var o = 0
+    var start = math.min(order - 1, 23)
+    while (start >= 2 && maxPixRadDeg(start) < 8 * radiusDeg) start -= 1
+    if (start < 2) start = 0
+    // ascending, so the descent emits the cover in ascending order
+    var frontier =
+      if (start > 0) {
+        val own = ang2pixNest(start, raDeg, decDeg)
+        (own +: neighborsNest(start, own)).sorted
+      } else Array.tabulate(12)(_.toLong)
+    var o = start
     while (o <= order) {
       require(frontier.length <= (4 << 20),
         s"disc cover too large (order=$order radius=$radiusDeg): use a coarser order for wide discs")
-      val bound = radiusDeg + math.toDegrees(maxPixRad(o))
+      val bound = radiusDeg + maxPixRadDeg(o)
       val keep = new scala.collection.mutable.ArrayBuffer[Long](frontier.length)
       var j = 0
       while (j < frontier.length) {

@@ -182,15 +182,21 @@ object Spatial {
    *  `dthreshDeg` of it — a bounded, conservative disc cover. */
   private[graft] def discCover(df: DataFrame, raCol: String, decCol: String,
                                o: Int, dthreshDeg: Double): DataFrame =
-    df.withColumn("__pix", explode(sphere.hpixCover(col(raCol), col(decCol), o, lit(dthreshDeg))))
+    df.withColumn("__pix", explode(sphere.hpixCover(qc(raCol), qc(decCol), o, lit(dthreshDeg))))
+
+  /** A column by its exact name: prefixed names may contain '.'
+   *  (`Catalog.crossMatch`'s delimiter, any caller's prefix), which
+   *  col() would parse as struct access. */
+  private[graft] def qc(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   /**
    * The candidate join under every angular match ([[crossMatchKnn]],
-   * the pair joins, the streaming alert match): `own` is keyed by its
-   * OWN order-`o` pixel, `covered` comes keyed by [[discCover]], so
-   * each (own, covered) pair with gc < dthresh meets exactly once — a
-   * plain pixel equi-join whose fan-out is local density x cover size,
-   * never an all-pairs comparison. Keeps `_DIST < dthreshDeg`.
+   * the stored `Catalog.crossMatch`, the pair joins, the streaming
+   * alert match): `own` is keyed by its OWN order-`o` pixel,
+   * `covered` comes keyed by [[discCover]], so each (own, covered)
+   * pair with gc < dthresh meets exactly once — a plain pixel
+   * equi-join whose fan-out is local density x cover size, never an
+   * all-pairs comparison. Keeps `_DIST < dthreshDeg`.
    *
    * Salting: wide thresholds force coarse orders, where npix(o) can
    * drop below the cluster parallelism (48 pixels = 48 join keys).
@@ -201,26 +207,32 @@ object Spatial {
    * never salts (a stream-static join keeps its static side as
    * prepared).
    *
-   * Output: `__pix`, `__salt` (when salted), own's columns, covered's
-   * columns, `_DIST`.
+   * `keys` are further equi-join columns both sides carry: a caller
+   * that has already grouped both sides (the stored cross-match's
+   * partition tile) keeps a pair only when those agree too, so the
+   * join stays selective inside each group.
+   *
+   * Output: `__pix`, `keys`, `__salt` (when salted), own's columns,
+   * covered's columns, `_DIST`.
    */
   private[graft] def pixelJoin(own: DataFrame, ownRa: String, ownDec: String,
                                covered: DataFrame, coveredRa: String, coveredDec: String,
                                dthreshDeg: Double, o: Int,
-                               saltKey: Option[String], saltBuckets: Int = -1): DataFrame = {
+                               saltKey: Option[String], saltBuckets: Int = -1,
+                               keys: Seq[String] = Nil): DataFrame = {
     val salt = saltKey.fold(1) { _ =>
       if (saltBuckets > 0) saltBuckets
       else math.max(1, math.ceil(2.0 * own.sparkSession.sparkContext.defaultParallelism / Healpix.npix(o)).toInt)
     }
-    val a = own.withColumn("__pix", sphere.hpix(col(ownRa), col(ownDec), o))
-    val (l, r, keys) =
+    val a = own.withColumn("__pix", sphere.hpix(qc(ownRa), qc(ownDec), o))
+    val (l, r, joinKeys) =
       if (salt > 1)
-        (a.withColumn("__salt", pmod(xxhash64(col(saltKey.get)), lit(salt))),
+        (a.withColumn("__salt", pmod(xxhash64(qc(saltKey.get)), lit(salt))),
           covered.withColumn("__salt", explode(sequence(lit(0L), lit(salt - 1L)))),
-          Seq("__pix", "__salt"))
-      else (a, covered, Seq("__pix"))
-    l.join(r, keys)
-      .withColumn("_DIST", sphere.gcDist(col(ownRa), col(ownDec), col(coveredRa), col(coveredDec)))
+          ("__pix" +: keys) :+ "__salt")
+      else (a, covered, "__pix" +: keys)
+    l.join(r, joinKeys)
+      .withColumn("_DIST", sphere.gcDist(qc(ownRa), qc(ownDec), qc(coveredRa), qc(coveredDec)))
       .filter(col("_DIST") < dthreshDeg)
   }
 
@@ -241,12 +253,9 @@ object Spatial {
    * — exactly the window's ORDER BY — and a (left, right) candidate
    * pair is unique in `joined`, so the payload is never compared.
    *
-   * Names are backtick-quoted: prefixed names may contain '.'
-   * (`Catalog.crossMatch`'s delimiter), which col() would parse as
-   * struct access.
+   * Names are backtick-quoted, as in [[pixelJoin]].
    */
   private[graft] def nearestK(joined: DataFrame, leftId: String, rightId: String, k: Int): DataFrame = {
-    def qc(name: String) = col("`" + name + "`")
     val cols = joined.columns.filterNot(_ == "__salt")
     if (k == 1) {
       val best = joined.groupBy(qc(leftId)).agg(

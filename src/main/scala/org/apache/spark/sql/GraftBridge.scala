@@ -1,9 +1,12 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -12,7 +15,8 @@ import org.apache.spark.storage.StorageLevel
  * is the standard extension-library pattern for building typed
  * Columns around custom Catalyst expressions), into the in-memory
  * relation `Dataset.persist` builds, and into the resolved file
- * relation under a `spark.read` frame.
+ * relation under a `spark.read` frame (or one built over a known
+ * schema).
  */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -55,6 +59,21 @@ object GraftBridge {
       case r: LogicalRelation => r
       case p => throw new IllegalArgumentException(s"not a file relation: ${p.nodeName}")
     }
+
+  /** The relation `spark.read.parquet(path)` resolves to (the same
+   *  listed file index, with partition columns inferred from the
+   *  directory names), but over the given `dataSchema` instead of one
+   *  inferred from a file footer by a Spark job. */
+  def parquetRelation(spark: SparkSession, path: String, dataSchema: StructType): LogicalRelation = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val root = new Path(path)
+    val fs = root.getFileSystem(session.sessionState.newHadoopConf())
+    val options = Map("path" -> path)
+    val index = new InMemoryFileIndex(session, Seq(root.makeQualified(fs.getUri, fs.getWorkingDirectory)),
+      options, None, FileStatusCache.getOrCreate(session))
+    LogicalRelation(HadoopFsRelation(index, index.partitionSchema, dataSchema.asNullable, None,
+      new ParquetFileFormat, options)(session))
+  }
 
   /** A frame over a fresh instance of `rel`: the same file index and
    *  schema under new attribute ids, so two frames over one relation

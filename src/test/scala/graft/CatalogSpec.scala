@@ -806,6 +806,39 @@ class CatalogSpec extends SparkSpecBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
+  test("resolving a written catalog runs no Spark job: each tree's schema comes from its _common_metadata") {
+    val out = java.nio.file.Files.createTempDirectory("graft_resolve").toString
+    val rows = li.filter(col("k") % 4 === 1)
+    Catalog.importFrom(rows, out, "a", "cra", "cdec", "k", orderK = 4, threshold = 200, marginDeg = 1.0)
+    Catalog.importFrom(rows.withColumn("cra", (col("cra") + 0.5) % 360.0), out, "b", "cra", "cdec", "k",
+      orderK = 4, threshold = 200, marginDeg = 1.0)
+    val inferred = spark.read.parquet(s"$out/a/catalog").schema
+    var (loaded, matched) = (null: org.apache.spark.sql.DataFrame, null: org.apache.spark.sql.DataFrame)
+    // a fresh handle's first load resolves the catalog tree; a
+    // cross-match open resolves both trees of the right catalog too
+    assert(jobsDuring { loaded = Catalog(spark, out, "a").load() } == 0)
+    assert(jobsDuring { matched = Catalog(spark, out, "a").crossMatch(Catalog(spark, out, "b"), 2, 1.0) } == 0)
+    assert(loaded.schema == inferred && loaded.count() == rows.count())
+    assert(matched.count() > 0)
+    // without the sidecars the schema is inferred, to the same result
+    for (tree <- Seq("catalog", "neighbor"); f <- Seq("_common_metadata", "_metadata"))
+      new java.io.File(s"$out/a/$tree/$f").delete()
+    spark.catalog.refreshByPath(s"$out/a/catalog")
+    val fallback = Catalog(spark, out, "a").load()
+    assert(fallback.schema == inferred && fallback.count() == rows.count())
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("Catalog.scala builds no join of its own: Spatial.pixelJoin is the one angular candidate join") {
+    val f = new java.io.File("src/main/scala/graft/catalog/Catalog.scala")
+    assert(f.isFile, s"run from the project root: ${f.getAbsolutePath}")
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    val lines = try src.getLines().toList finally src.close()
+    val joins = lines.zipWithIndex.collect { case (l, i) if l.contains(".join(") => s"${i + 1}: ${l.trim}" }
+    assert(joins.isEmpty, joins.mkString("\n"))
+    assert(lines.exists(_.contains("Spatial.pixelJoin(")), "the stored cross-match must join through pixelJoin")
+  }
+
   test("searchCover: a narrow cone covers at orderK, a full-RA dec band stays within ~8192 pixels") {
     val out = java.nio.file.Files.createTempDirectory("graft_cover").toString
     val cat = Catalog.importFrom(li.limit(500), out, "cover", "cra", "cdec", "k", orderK = 8, threshold = 100, marginDeg = 0.1)

@@ -1,9 +1,14 @@
 package graft
 
 import graft.healpix.Healpix
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.math.{asin, toDegrees}
+
 class HealpixSpec extends AnyFunSuite {
+  import SkyGen.offset
 
   private def rng(seed: Long) = new scala.util.Random(seed)
 
@@ -229,5 +234,68 @@ class HealpixSpec extends AnyFunSuite {
         assert(slow - fast <= tol, s"fast $fast too far below brute $slow at ($ra,$dec) o$order p$pix")
       }
     }
+  }
+
+  /** The cover descent from the 12 base pixels at every radius: the
+   *  reference the small-radius start must contain. */
+  private def baseDescentCover(order: Int, ra: Double, dec: Double, radius: Double): Set[Long] = {
+    var frontier: Seq[Long] = 0L until 12L
+    var o = 0
+    while (true) {
+      val bound = radius + toDegrees(Healpix.maxPixRad(o))
+      val keep = frontier.filter { p =>
+        val (cra, cdec) = Healpix.pix2angNest(o, p)
+        Healpix.gcDistDeg(ra, dec, cra, cdec) <= bound
+      }
+      if (o == order) return keep.toSet
+      frontier = keep.flatMap(p => (0L until 4L).map(4 * p + _))
+      o += 1
+    }
+    Set.empty
+  }
+
+  test("queryDiscCover's small-radius start contains the base-pixel descent and every in-disc point's pixel") {
+    // base-pixel vertices: vertices at every order, where three or four
+    // faces meet; (0, 41.8) also sits on the RA seam
+    val corners = Seq((0.0, 90.0), (0.0, -90.0), (45.0, 0.0), (135.0, 0.0), (225.0, 0.0), (315.0, 0.0)) ++
+      Seq(0.0, 90.0, 180.0, 270.0).flatMap(ra => Seq((ra, 41.8103149), (ra, -41.8103149)))
+    val centre: Gen[(Double, Double)] = Gen.frequency(
+      3 -> (for (ra <- Gen.choose(0.0, 359.999999); z <- Gen.choose(-1.0, 1.0)) yield (ra, toDegrees(asin(z)))),
+      2 -> (for (ra <- Gen.choose(0.0, 359.999999); dec <- Gen.choose(85.0, 90.0); sg <- Gen.oneOf(1.0, -1.0))
+        yield (ra, sg * dec)),
+      2 -> (for (ra <- Gen.choose(-0.01, 0.01); dec <- Gen.choose(-89.0, 89.0)) yield ((ra + 360.0) % 360.0, dec)),
+      3 -> (for (c <- Gen.oneOf(corners); e <- Gen.choose(-7, -1); d <- Gen.choose(0.0, 1.0); b <- Gen.choose(0.0, 360.0))
+        yield offset(c._1, c._2, d * math.pow(10, e), b)))
+    // radii around each order's pixel size, so the start order lands
+    // anywhere from the base pixels to `order` itself
+    val disc: Gen[(Int, (Double, Double), Double)] = for {
+      order <- Gen.choose(0, 18)
+      c <- centre
+      f <- Gen.frequency(4 -> Gen.choose(0.001, 0.3), 2 -> Gen.choose(0.3, 3.0), 1 -> Gen.const(0.0))
+      up <- Gen.choose(0, 3)
+    } yield (order, c, f * toDegrees(Healpix.maxPixRad(math.max(0, order - up))))
+    var seed = Seed(20261020L)
+    var fastStarts = 0
+    for (_ <- 0 until 3000) {
+      val (order, (ra, dec), radius) = disc.pureApply(Gen.Parameters.default, seed)
+      seed = seed.next
+      val cover = Healpix.queryDiscCover(order, ra, dec, radius)
+      val coverSet = cover.toSet
+      assert(cover.toSeq == cover.sorted.toSeq && coverSet.size == cover.length, s"($order, $ra, $dec, $radius)")
+      val old = baseDescentCover(order, ra, dec, radius)
+      assert(old.subsetOf(coverSet), s"($order, $ra, $dec, $radius): missing ${old -- coverSet}")
+      if (order >= 3 && toDegrees(Healpix.maxPixRad(2)) >= 8 * radius) fastStarts += 1
+      for (i <- 0 until 24) {
+        val d = if (i < 4) radius * (1 - 1e-9) else radius * math.sqrt(seed.double._1)
+        seed = seed.next
+        val (pra, pdec) = offset(ra, dec, d, i * 15.0 + seed.double._1 * 15.0)
+        seed = seed.next
+        if (Healpix.gcDistDeg(ra, dec, pra, pdec) <= radius) {
+          val p = Healpix.ang2pixNest(order, pra, pdec)
+          assert(coverSet.contains(p), s"($order, $ra, $dec, $radius): in-disc ($pra, $pdec) in pixel $p")
+        }
+      }
+    }
+    assert(fastStarts > 1500, s"only $fastStarts discs took the small-radius start")
   }
 }

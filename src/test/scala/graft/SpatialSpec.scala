@@ -176,6 +176,21 @@ class SpatialSpec extends SparkSpecBase {
     assert(run(1) == run(4))
   }
 
+  test("'.'-delimited prefixes: crossMatchKnn's disc cover, pixel join and ranker quote column names") {
+    val supp = spark.read.parquet(sf("sf0.001") + "/supplier.parquet")
+      .withColumn("sra", sphere.raOf(col("s_suppkey")))
+      .withColumn("sdec", sphere.decOf(col("s_suppkey")))
+    for (k <- Seq(1, 2); salt <- Seq(1, 4)) {
+      def run(lp: String, rp: String) = Spatial.crossMatchKnn(cust, supp,
+          "cra", "cdec", "c_custkey", "sra", "sdec", "s_suppkey",
+          k = k, dthreshDeg = 20.0, leftPrefix = lp, rightPrefix = rp, saltBuckets = salt)
+        .select(col(s"`${lp}c_custkey`"), col(s"`${rp}s_suppkey`"), col("_DIST"), col("_RANK"))
+        .collect().map(_.toSeq).sortBy(_.toString).toSeq
+      val dotted = run("l.", "r.")
+      assert(dotted.nonEmpty && dotted == run("l_", "r_"), s"k=$k salt=$salt")
+    }
+  }
+
   test("propagateEpoch: known motion gives the expected offset; -dt round-trips") {
     // 1000 mas/yr for 36 years = 36 arcsec = 0.01 deg, at the equator
     val src = Seq((1L, 100.0, 0.0, 1000.0, -1000.0)).toDF("id", "ra", "dec", "pmra", "pmdec")
