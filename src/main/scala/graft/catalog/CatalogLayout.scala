@@ -175,12 +175,12 @@ object CatalogLayout {
    *  inference reads from a data file's footer); None when the sidecar
    *  or the key is absent. One small footer read, no Spark job. */
   private[catalog] def sparkSchema(spark: SparkSession, tree: String): Option[StructType] = {
-    val path = new Path(s"$tree/_common_metadata")
-    val conf = spark.sessionState.newHadoopConf()
-    if (!path.getFileSystem(conf).exists(path)) None
+    val path = s"$tree/_common_metadata"
+    if (!exists(spark, path)) None
     else {
+      val conf = spark.sessionState.newHadoopConf()
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf))
       val kv = try reader.getFooter.getFileMetaData.getKeyValueMetaData finally reader.close()
       Option(kv.get(SparkSchemaKey)).flatMap { json =>
         scala.util.Try(DataType.fromJson(json)).toOption.collect { case st: StructType => st }
