@@ -21,11 +21,12 @@ import org.apache.spark.sql.functions._
  * }}}
  *
  * A handle reads through a snapshot of the catalog: the meta, both
- * trees listed with their schemas inferred, and the tile list. The
- * first read of a handle resolves it and pays the listing and the
- * schema inference; later searches, loads and cross-matches only plan
- * and run. Every completed write (import, append, repartition and its
- * roll-forward, compact) ends by rewriting the meta, and each read
+ * trees listed with their schemas read from their `_common_metadata`
+ * sidecars, and the tile list. The first read of a handle resolves it
+ * and pays the listing and the sidecar footer reads; later searches,
+ * loads and cross-matches only plan and run. Every completed write
+ * (import, append, repartition and its roll-forward, compact) ends
+ * by rewriting the meta, and each read
  * checks the meta's status (one `getFileStatus`, no listing), so a
  * handle re-resolves after any write, by this handle, another handle
  * or another session; its own [[append]] and [[compact]] also drop
@@ -68,8 +69,9 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
    * artifact `{cat}_order{K}_hpmap.fits` (hp.write_map at
    * partitioner.py:129; hp.read_map via lsd2_io.read_fits_file:163)
    * next to the parquet point map, and return the written path. The
-   * sparse map is child-sum downsampled to `order` in Spark BEFORE
-   * the dense driver-side collect, so the pull is bounded at
+   * sparse map (occupied pixels only, the state an append already
+   * holds on the driver) is read and child-sum downsampled to `order`
+   * BEFORE it is made dense, so the dense map is bounded at
    * 12*4^order entries regardless of the catalog's own map order
    * (order 10 = the reference's layout = 100 MB ceiling).
    */
@@ -85,10 +87,11 @@ final case class Catalog(spark: SparkSession, location: String, catname: String)
     path
   }
 
-  /** The density map child-sum downsampled to `order` in Spark, then collected. */
+  /** The density map read on the driver and child-sum downsampled to `order`. */
   private def densityAt(order: Int): (Array[Long], Array[Long]) = {
     require(order <= orderK, s"cannot upsample the order-$orderK density map to order $order")
-    CatalogLayout.collectHist(CatalogLayout.rebin(densityMap(), orderK - order))
+    val (pix, cnt) = CatalogLayout.readHist(spark, layout.pointMap)
+    CatalogLayout.rebin(pix, cnt, orderK - order)
   }
 
   /** Load the catalog, optionally column-pruned (ra/dec/id always kept — catalog.py validate_user_input_cols). */

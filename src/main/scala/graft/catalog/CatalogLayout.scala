@@ -1,11 +1,17 @@
 package graft.catalog
 
 import graft.functions.sphere
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.{HadoopOutputFile, HiddenFileFilter}
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /**
  * The on-disk format of the catalog at `location/catname`, owned here
@@ -194,38 +200,69 @@ object CatalogLayout {
 
   // ----------------------------------------------------------- histograms
 
-  private[catalog] def histFrame(spark: SparkSession, pix: Array[Long], cnt: Array[Long]): DataFrame = {
-    import spark.implicits._
-    pix.zip(cnt).toSeq.toDF("pix", "cnt")
+  /** A histogram artifact's parquet schema: what Spark writes for a
+   *  frame of two non-null longs, and reads back as that frame. */
+  private val HistSchema = MessageTypeParser.parseMessageType(
+    "message spark_schema { required int64 pix; required int64 cnt; }")
+
+  /**
+   * Overwrite a histogram artifact (pix-sorted arrays) with one
+   * `part-00000.parquet`, written on the driver: no Spark job. The file
+   * is written under a `_`-prefixed name, which every reader skips,
+   * then the old part files are deleted and it is renamed into place,
+   * and the session's cached listing of the path is dropped.
+   */
+  private[catalog] def writeHist(spark: SparkSession, path: String, pix: Array[Long], cnt: Array[Long]): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    val tmp = new Path(dir, "_part-00000.parquet.tmp")
+    val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(HistSchema).withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try {
+      val groups = new SimpleGroupFactory(HistSchema)
+      pix.indices.foreach(i => out.write(groups.newGroup().append("pix", pix(i)).append("cnt", cnt(i))))
+    } finally out.close()
+    fs.listStatus(dir, HiddenFileFilter.INSTANCE).foreach(st => fs.delete(st.getPath, true))
+    require(fs.rename(tmp, new Path(dir, "part-00000.parquet")), s"histogram rename failed in $path")
+    spark.catalog.refreshByPath(path)
   }
 
-  /** One-file overwrite of a histogram artifact; the session's cached
-   *  listing of the path is dropped (the overwrite deleted its file). */
-  private[catalog] def writeHist(hist: DataFrame, path: String): Unit = {
-    hist.coalesce(1).write.mode("overwrite").parquet(path)
-    hist.sparkSession.catalog.refreshByPath(path)
+  /** A histogram artifact as a table (`Catalog.densityMap()`); every
+   *  other histogram read is [[readHist]]. */
+  private[catalog] def loadHist(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+
+  /** Histogram artifacts read on the driver (no Spark job) into
+   *  pix-sorted arrays: the counts of every non-hidden part file of
+   *  every path are summed, so an artifact Spark wrote as several part
+   *  files reads the same. */
+  private[catalog] def readHist(spark: SparkSession, paths: String*): (Array[Long], Array[Long]) = {
+    val conf = spark.sessionState.newHadoopConf()
+    sumHist(paths.iterator.flatMap { path =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), new Path(path)).withConf(conf).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .map(g => (g.getLong("pix", 0), g.getLong("cnt", 0))).toVector
+      finally reader.close()
+    })
   }
 
-  private[catalog] def loadHist(spark: SparkSession, paths: String*): DataFrame = spark.read.parquet(paths: _*)
+  /** Collect a `(pix, cnt)` frame into pix-sorted arrays. */
+  private[catalog] def collectHist(hist: DataFrame): (Array[Long], Array[Long]) =
+    sumHist(hist.collect().iterator.map(r => (r.getLong(0), r.getLong(1))))
 
-  /** Collect a `(pix, cnt)` frame into pix-sorted arrays, summing the
-   *  counts of repeated pixels. */
-  private[catalog] def collectHist(hist: DataFrame): (Array[Long], Array[Long]) = {
+  /** `(pix, cnt)` pairs into pix-sorted arrays, summing the counts of
+   *  repeated pixels. */
+  private[catalog] def sumHist(pairs: Iterator[(Long, Long)]): (Array[Long], Array[Long]) = {
     val m = scala.collection.mutable.LongMap.empty[Long]
-    hist.collect().foreach(r => m(r.getLong(0)) = m.getOrElse(r.getLong(0), 0L) + r.getLong(1))
+    pairs.foreach { case (p, c) => m(p) = m.getOrElse(p, 0L) + c }
     val pix = m.keysIterator.toArray.sorted
     (pix, pix.map(m))
   }
 
-  /** Child-sum a `(pix, cnt)` frame `levels` orders coarser (0 merges
-   *  repeated pixels), in Spark. */
-  private[catalog] def rebin(hist: DataFrame, levels: Int): DataFrame =
-    hist.groupBy(shiftright(col("pix"), 2 * levels).as("pix")).agg(sum("cnt").as("cnt"))
-
-  private[catalog] def readHist(spark: SparkSession, path: String): (Array[Long], Array[Long]) = {
-    spark.catalog.refreshByPath(path)
-    collectHist(loadHist(spark, path))
-  }
+  /** Child-sum a histogram `levels` orders coarser. */
+  private[catalog] def rebin(pix: Array[Long], cnt: Array[Long], levels: Int): (Array[Long], Array[Long]) =
+    sumHist(pix.iterator.map(_ >> (2 * levels)).zip(cnt.iterator))
 
   // ----------------------------------------------------------- tree write
 
@@ -241,19 +278,22 @@ object CatalogLayout {
    * partitioned by the tile columns. The sort puts the hive columns
    * FIRST so FileFormatWriter's required ordering is already satisfied
    * (no writer-inserted, stability-unspecified sort) and each written
-   * file stays `_ID`-ascending. Continuing ranks costs a join on the
-   * pixel, so those rows are repartitioned by tile again.
+   * file stays `_ID`-ascending. Continuing ranks joins each row's
+   * order-14 pixel against the existing tree's first free rank BEFORE
+   * the repartition, so the ranked rows are not shuffled again.
    */
   private[catalog] def writeTree(rows: DataFrame, path: String, mode: String, ids: Option[SpatialIds]): Unit = {
-    val byTile = rows.repartition(col("Norder"), col("Npix"))
-    val withIds = ids.fold(byTile) { s =>
-      val ranked = withSpatialId(byTile, s.raCol, s.decCol, s.idCol)
-      s.rankBase.fold(ranked)(withRankOffsets(ranked, _).repartition(col("Norder"), col("Npix")))
-    }
+    val based = ids.flatMap(s => s.rankBase.map(withRankBase(rows, s, _))).getOrElse(rows)
+    val byTile = based.repartition(col("Norder"), col("Npix"))
+    val withIds = ids.fold(byTile)(s => withSpatialId(byTile, s.raCol, s.decCol, s.idCol))
     withIds.sortWithinPartitions((TileCols :+ "_ID").map(col): _*)
       .write.mode(mode).partitionBy(TileCols: _*)
       .parquet(path)
   }
+
+  /** The order-14 pixel of (ra, dec): the `_ID`'s high bits. */
+  private def pix14(raCol: String, decCol: String) =
+    sphere.hpix(col(raCol).cast("double"), col(decCol).cast("double"), 14)
 
   /**
    * The reference's order-14 spatial index `[pix@14 | rank]`
@@ -261,15 +301,15 @@ object CatalogLayout {
    * the repartition by partition pixel, every order-14 pixel's rows
    * are complete within one partition (orderK <= 14), so the
    * per-pixel rank is a partition-local running counter over rows
-   * sorted by (pix14, ra, dec, id). Rows come out sorted by `_ID`,
-   * so written files carry monotonic `_ID` (and clustered ra/dec) —
-   * parquet row-group min/max stats then prune stored-catalog cone
-   * searches at the ROW-GROUP level, not just the file level.
+   * sorted by (pix14, ra, dec, id), starting at the row's `__base`
+   * (the first free rank, from [[withRankBase]]) when present and at 0
+   * otherwise. Rows come out sorted by `_ID`, so written files carry
+   * monotonic `_ID` (and clustered ra/dec) — parquet row-group
+   * min/max stats then prune stored-catalog cone searches at the
+   * ROW-GROUP level, not just the file level.
    */
   private def withSpatialId(df: DataFrame, raCol: String, decCol: String, idCol: String): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField}
-    val order = 14
     // NOTE: the reference computes this as uint64 (dask_utils.py:167);
     // Spark has no unsigned long, so `_ID` is the same 64-bit pattern
     // REINTERPRETED as signed — pixels >= 2^31 (~1/3 of the sky, the
@@ -279,37 +319,34 @@ object CatalogLayout {
     // comparisons/sorts across the sign boundary must use
     // `_ID` unsigned (e.g. compare `_ID - Long.MinValue`, or
     // shiftrightunsigned to recover pix14). Asserted in CatalogSpec.
-    val shift = 64 - (4 + 2 * order)
-    val sorted = df
-      .withColumn("__pix14", sphere.hpix(col(raCol).cast("double"), col(decCol).cast("double"), order))
+    val shift = 64 - (4 + 2 * 14)
+    val sorted = (if (df.columns.contains("__pix14")) df else df.withColumn("__pix14", pix14(raCol, decCol)))
       .sortWithinPartitions(col("__pix14"), col(raCol), col(decCol), col(idCol))
     val pixIdx = sorted.schema.fieldIndex("__pix14")
+    val baseIdx = Some(sorted.columns.indexOf("__base")).filter(_ >= 0)
     val schema = sorted.schema.add(StructField("_ID", LongType, nullable = false))
     sorted.mapPartitions { rows =>
       var cur = Long.MinValue
       var rank = -1L
       rows.map { r =>
         val p = r.getLong(pixIdx)
-        if (p != cur) { cur = p; rank = 0L } else rank += 1
+        if (p != cur) { cur = p; rank = baseIdx.filterNot(r.isNullAt).fold(0L)(r.getLong) } else rank += 1
         Row.fromSeq(r.toSeq :+ ((p << shift) + rank))
       }
-    }(org.apache.spark.sql.Encoders.row(schema)).drop("__pix14")
+    }(org.apache.spark.sql.Encoders.row(schema)).drop("__pix14", "__base")
   }
 
-  /** Per-order-14-pixel `_ID` rank continuation: joins each new row's
-   *  pix14 against the tree's current max rank so appended ranks
-   *  start where the existing ones stop. A standard shuffle join on
-   *  the pixel — the offsets frame is one row per occupied pix14,
-   *  never collected. */
-  private def withRankOffsets(ids: DataFrame, existingTree: DataFrame): DataFrame = {
+  /** Each row's order-14 pixel `__pix14` and its first free rank
+   *  `__base` in `existingTree` (null for a pixel the tree lacks), so
+   *  appended ranks start where the existing ones stop. A standard
+   *  join on the pixel: the offsets frame is one row per occupied
+   *  pix14, never collected. */
+  private def withRankBase(rows: DataFrame, s: SpatialIds, existingTree: DataFrame): DataFrame = {
     val base = existingTree
       .select(shiftrightunsigned(col("_ID"), 32).as("__pix14"),
         col("_ID").bitwiseAND(lit(0xffffffffL)).as("__rk"))
       .groupBy("__pix14").agg((max("__rk") + 1).as("__base"))
-    ids.withColumn("__pix14", shiftrightunsigned(col("_ID"), 32))
-      .join(base, Seq("__pix14"), "left")
-      .withColumn("_ID", col("_ID") + coalesce(col("__base"), lit(0L)))
-      .drop("__pix14", "__base")
+    rows.withColumn("__pix14", pix14(s.raCol, s.decCol)).join(base, Seq("__pix14"), "left")
   }
 
   /**
@@ -321,23 +358,16 @@ object CatalogLayout {
    * own summary writer, so the sidecar is exactly what a
    * pyarrow/parquet-mr consumer expects.
    *
-   * Graft itself never reads them (meta JSON + hive layout + footer
-   * stats carry the same information); they exist so a reference-side
-   * reader finds the files it expects. Cost per tree per write: one
-   * recursive listing + a pooled parallel footer read.
+   * Graft reads one of them back: [[resolve]] takes each tree's schema
+   * from its `_common_metadata`, so a handle resolves without a Spark
+   * job. Cost per tree per write: a `listStatus` walk + a pooled
+   * parallel footer read.
    */
   private def writeSummaryFiles(spark: SparkSession, dir: String): Unit = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) files += f
-    }
+    val files = dataFiles(root.getFileSystem(conf), root)
     if (files.nonEmpty) {
       val footers = org.apache.parquet.hadoop.ParquetFileReader
         .readAllFootersInParallel(conf, files.toList.asJava)
@@ -346,17 +376,30 @@ object CatalogLayout {
         org.apache.parquet.hadoop.ParquetOutputFormat.JobSummaryLevel.ALL)
     }
   }
+
+  /** The parquet data files under `dir`, by a plain `listStatus` walk.
+   *  A recursive `FileSystem.listFiles` builds a located status per
+   *  file, which reads the file's permission, owner and group: on the
+   *  local FS without Hadoop's native library, one `ls` subprocess per
+   *  file. */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory) dataFiles(fs, st.getPath)
+      else if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) Seq(st)
+      else Nil
+    }
 }
 
 /**
  * One resolved state of a catalog ([[CatalogLayout.resolve]]): the
- * meta, both trees' relations (listed, schema inferred) and the tiles
- * of both trees. Every read builds a fresh relation instance over the
- * shared file index, so it plans without listing; Spark's partition
- * pruning still restricts a scan to the tiles its filter names.
- * `metaStatus` is the key it was resolved under. The neighbor tree is
- * resolved on first use: searches and the left side of a cross-match
- * never read it.
+ * meta, both trees' relations (listed, schema read from each tree's
+ * `_common_metadata`) and the tiles of both trees. Every read builds
+ * a fresh relation instance over the shared file index, so it plans
+ * without listing; Spark's partition pruning still restricts a scan
+ * to the tiles its filter names. `metaStatus` is the key it was
+ * resolved under. The neighbor tree is resolved on first use:
+ * searches and the left side of a cross-match never read it.
  */
 private[catalog] final class CatalogSnapshot(val metaStatus: (Long, Long), val meta: CatalogMeta,
                                              catalogRel: LogicalRelation,
@@ -365,13 +408,14 @@ private[catalog] final class CatalogSnapshot(val metaStatus: (Long, Long), val m
   private lazy val neighborRel: Option[LogicalRelation] = resolveNeighbors()
 
   /** `(tree name, order, pix)` of every tile holding files, in both
-   *  trees, read from the file indexes: no filesystem call. */
+   *  trees, read from the file indexes' partition specs: no filesystem
+   *  call. */
   lazy val tiles: Seq[(String, Int, Long)] =
     (Seq("catalog" -> catalogRel) ++ neighborRel.map("neighbor" -> _)).flatMap { case (name, rel) =>
-      val index = rel.relation.asInstanceOf[HadoopFsRelation].location
+      val index = rel.relation.asInstanceOf[HadoopFsRelation].location.asInstanceOf[PartitioningAwareFileIndex]
       val schema = index.partitionSchema
       val (o, p) = (schema.fieldIndex("Norder"), schema.fieldIndex("Npix"))
-      index.listFiles(Nil, Nil).map { d =>
+      index.partitionSpec().partitions.map { d =>
         def num(i: Int) = d.values.get(i, schema(i).dataType).asInstanceOf[Number].longValue
         (name, num(o).toInt, num(p))
       }

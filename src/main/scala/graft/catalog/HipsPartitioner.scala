@@ -180,17 +180,16 @@ object HipsPartitioner {
 
     // persist the order-k density histogram as a small parquet — the
     // data product behind the reference's visualize_* views
-    // ({cat}_order10_hpmap.fits, lsd2_io.py:12,170) — straight from
-    // the already-collected pm.hist: ZERO extra scans at write time.
-    // Sparse (nonzero pixels only); readers treat missing pixels as 0.
-    // Written twice: point_map is the CURRENT density (appends update
-    // it); import_hist is the FROZEN import-time histogram from which
-    // [[append]] deterministically rebuilds the partition map (the
-    // map must never be recomputed from grown counts, or the layout
-    // would drift from the directories already on disk).
-    val hist = CatalogLayout.histFrame(spark, pm.histPix, pm.histCnt)
-    CatalogLayout.writeHist(hist, layout.pointMap)
-    CatalogLayout.writeHist(hist, layout.importHist)
+    // ({cat}_order10_hpmap.fits, lsd2_io.py:12,170) — written on the
+    // driver from the already-collected pm.hist: no scan and no Spark
+    // job. Sparse (nonzero pixels only); readers treat missing pixels
+    // as 0. Written twice: point_map is the CURRENT density (appends
+    // update it); import_hist is the FROZEN import-time histogram from
+    // which [[append]] deterministically rebuilds the partition map
+    // (the map must never be recomputed from grown counts, or the
+    // layout would drift from the directories already on disk).
+    CatalogLayout.writeHist(spark, layout.pointMap, pm.histPix, pm.histCnt)
+    CatalogLayout.writeHist(spark, layout.importHist, pm.histPix, pm.histCnt)
 
     layout.writeMeta(spark,
       CatalogMeta(layout.catname, raCol, decCol, idCol, threshold, pm.orderK, marginDeg, exactMargin).withMap(pm))
@@ -252,8 +251,9 @@ object HipsPartitioner {
 
     val (ihPix, ihCnt) = CatalogLayout.readHist(spark, layout.importHist)
     val frozen = partitionMapFromSparseHist(ihPix, ihCnt, meta.orderK, meta.pixThreshold)
-    val (mPix, mCnt) = CatalogLayout.collectHist(CatalogLayout.loadHist(spark, layout.pointMap)
-      .unionByName(Spatial.densityHistogram(df, raCol, decCol, meta.orderK)))
+    val (pPix, pCnt) = CatalogLayout.readHist(spark, layout.pointMap)
+    val (bPix, bCnt) = CatalogLayout.collectHist(Spatial.densityHistogram(df, raCol, decCol, meta.orderK))
+    val (mPix, mCnt) = CatalogLayout.sumHist((pPix ++ bPix).iterator.zip((pCnt ++ bCnt).iterator))
 
     def ids(existing: DataFrame) = Some(CatalogLayout.SpatialIds(raCol, decCol, idCol, Some(existing)))
     CatalogLayout.writeTree(withPartitionColumns(df, raCol, decCol, frozen), layout.catalogTree, "append",
@@ -268,7 +268,7 @@ object HipsPartitioner {
     layout.finishTrees(spark)
 
     val out = PartitionMap(meta.orderK, frozen.grid, mPix, mCnt)
-    CatalogLayout.writeHist(CatalogLayout.histFrame(spark, mPix, mCnt), layout.pointMap)
+    CatalogLayout.writeHist(spark, layout.pointMap, mPix, mCnt)
     layout.writeMeta(spark, meta.withMap(out))
     out
   }
@@ -458,7 +458,7 @@ object HipsPartitioner {
     val meta = layout.readMeta(spark)
     val (phPix, phCnt) = CatalogLayout.readHist(spark, layout.pointMap)
     val newMap = partitionMapFromSparseHist(phPix, phCnt, meta.orderK, meta.pixThreshold)
-    CatalogLayout.writeHist(CatalogLayout.histFrame(spark, phPix, phCnt), layout.importHist)
+    CatalogLayout.writeHist(spark, layout.importHist, phPix, phCnt)
     val out = PartitionMap(meta.orderK, newMap.grid, phPix, phCnt)
     layout.writeMeta(spark, meta.withMap(out))
     fsys.delete(new Path(layout.journal), false)
@@ -472,11 +472,13 @@ object HipsPartitioner {
    * failed import resumes from the last completed batch instead of
    * re-reading and re-parsing every source file:
    *
-   *  - per input batch, ONE parse pass writes (a) the rows to
-   *    `_import/stage/batch=N` and (b) the order-k pixel histogram to
-   *    `_import/hist/batch=N`; Spark's atomic job commit (`_SUCCESS`)
-   *    is the completion marker, so a re-run skips finished batches
-   *    (csv/FITS parsing is the expensive part at catalog scale).
+   *  - per input batch, ONE parse pass writes the rows to
+   *    `_import/stage/batch=N` (Spark's atomic job commit, `_SUCCESS`,
+   *    is the completion marker), then the order-k pixel histogram of
+   *    the staged rows goes to `_import/hist/batch=N`, written on the
+   *    driver with its own `_SUCCESS` last, so a re-run skips finished
+   *    batches (csv/FITS parsing is the expensive part at catalog
+   *    scale).
    *  - the partition map is rebuilt deterministically by summing the
    *    per-batch histograms (associative — identical to a direct
    *    full-scan histogram), then the final catalog/ + neighbor/ +
@@ -544,13 +546,15 @@ object HipsPartitioner {
       if (!done(stage)) readBatch(batches(i)).write.mode("overwrite").parquet(stage)
       // histogram from the STAGED bytes (not the source) so the map
       // always matches what phase 2 will actually read
-      if (!done(hist))
-        CatalogLayout.writeHist(
-          Spatial.densityHistogram(spark.read.parquet(stage), raCol, decCol, orderK), hist)
+      if (!done(hist)) {
+        val (p, c) = CatalogLayout.collectHist(
+          Spatial.densityHistogram(spark.read.parquet(stage), raCol, decCol, orderK))
+        CatalogLayout.writeHist(spark, hist, p, c)
+        CatalogLayout.writeString(spark, s"$hist/_SUCCESS", "")
+      }
     }
 
-    val (pix, cnt) = CatalogLayout.collectHist(
-      CatalogLayout.rebin(CatalogLayout.loadHist(spark, batches.indices.map(histDir): _*), 0))
+    val (pix, cnt) = CatalogLayout.readHist(spark, batches.indices.map(histDir): _*)
     val pm = partitionMapFromSparseHist(pix, cnt, orderK, threshold)
 
     val staged = spark.read.parquet(batches.indices.map(stageDir): _*)

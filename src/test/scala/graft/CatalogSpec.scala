@@ -1,6 +1,6 @@
 package graft
 
-import graft.catalog.{Catalog, CatalogLayout, HipsPartitioner}
+import graft.catalog.{Catalog, CatalogLayout, CatalogTestAccess, HipsPartitioner}
 import graft.functions.sphere
 import org.apache.spark.sql.functions._
 
@@ -555,6 +555,116 @@ class CatalogSpec extends SparkSpecBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
+  test("appended _IDs are pix14 << 32 | first free rank + rank in (pix14, ra, dec, id) order, at 1 and 4 shuffle partitions") {
+    import Ordering.Double.TotalOrdering
+    // (ra, dec, k, _ID) of every stored row, by file
+    def stored(tree: String): Map[String, Seq[(Double, Double, Long, Long)]] =
+      spark.read.parquet(tree).select(input_file_name(), col("cra"), col("cdec"), col("k"), col("_ID"))
+        .collect().toSeq.groupMap(_.getString(0))(r => (r.getDouble(1), r.getDouble(2), r.getLong(3), r.getLong(4)))
+    // the write task that wrote a file: the counter runs per task, and a
+    // neighbor-tree pixel's replicas can sit in tiles of several tasks
+    def task(file: String): Int = "part-(\\d+)".r.findFirstMatchIn(file).get.group(1).toInt
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    try for (parts <- Seq(1, 4)) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      // uncoalesced, so at 4 partitions the write really runs 4 tasks
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val out = java.nio.file.Files.createTempDirectory("graft_idpin").toString
+      val cat = Catalog.importFrom(li.filter(col("k") % 3 === 0), out, "pin", "cra", "cdec", "k",
+        orderK = 4, threshold = 500, marginDeg = 1.0)
+      // the second batch repeats imported rows: their ranks continue too
+      val batches = Seq(li.filter(col("k") % 3 === 1), li.filter(col("k") % 3 === 2).unionByName(li.limit(60)))
+      for ((batch, b) <- batches.zipWithIndex; trees = Seq("catalog", "neighbor").map(t => s"$out/pin/$t")) {
+        val before = trees.map(stored)
+        cat.append(batch)
+        for ((tree, old) <- trees.zip(before)) {
+          val firstFree = old.values.flatten.toSeq
+            .groupMapReduce(_._4 >>> 32)(r => (r._4 & 0xffffffffL) + 1)(math.max)
+          val added = stored(tree) -- old.keys
+          val expected = added.toSeq.flatMap { case (f, rs) =>
+            rs.map(r => (task(f), graft.healpix.Healpix.ang2pixNest(14, r._1, r._2), r))
+          }.groupMap(t => (t._1, t._2))(_._3).toSeq.flatMap { case ((_, pix), rs) =>
+            rs.sortBy(r => (r._1, r._2, r._3)).zipWithIndex.map { case (r, i) =>
+              (r._1, r._2, r._3, (pix << 32) + firstFree.getOrElse(pix, 0L) + i)
+            }
+          }
+          val actual = added.values.flatten.toSeq
+          assert(actual.nonEmpty && actual.size == expected.size, s"$tree, append $b at $parts partitions")
+          assert(actual.sorted == expected.sorted, s"$tree, append $b at $parts partitions: _IDs differ")
+        }
+      }
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("histogram artifacts: driver-side write, read and finishTrees start no Spark job; spark.read sees Spark's own table") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft_hist").toString
+    Catalog.importFrom(li.limit(800), out, "h", "cra", "cdec", "k", orderK = 4, threshold = 200, marginDeg = 1.0)
+    val layout = CatalogLayout(out, "h")
+    val (pix, cnt) = (Array(3L, 7L, 40L, 1L << 33), Array(5L, 1L, 2L, 9L))
+    var back: (Array[Long], Array[Long]) = null
+    assert(jobsDuring { CatalogTestAccess.writeHist(spark, layout.pointMap, pix, cnt) } == 0)
+    assert(jobsDuring { back = CatalogTestAccess.readHist(spark, layout.pointMap) } == 0)
+    assert(back._1.toSeq == pix.toSeq && back._2.toSeq == cnt.toSeq)
+    assert(jobsDuring { CatalogTestAccess.finishTrees(spark, out, "h") } == 0)
+    for (tree <- Seq("catalog", "neighbor")) {
+      val (files, rows, _) = summaryStats(s"$out/h/$tree")
+      assert(files == dataFiles(s"$out/h/$tree") && rows == spark.read.parquet(s"$out/h/$tree").count())
+    }
+
+    // the same table DataFrame.write makes, in one part file
+    def visible(dir: String) = new java.io.File(dir).list().filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
+    val bySpark = s"$out/by_spark"
+    pix.zip(cnt).toSeq.toDF("pix", "cnt").coalesce(1).write.parquet(bySpark)
+    val (driver, reference) = (spark.read.parquet(layout.pointMap), spark.read.parquet(bySpark))
+    assert(driver.schema == reference.schema)
+    assert(driver.collect().toSeq == reference.collect().toSeq)
+    assert(visible(layout.pointMap) == Seq("part-00000.parquet"))
+    // an overwrite replaces the part file, also one Spark wrote
+    CatalogTestAccess.writeHist(spark, bySpark, Array(11L), Array(4L))
+    assert(visible(bySpark) == Seq("part-00000.parquet"))
+    assert(spark.read.parquet(bySpark).as[(Long, Long)].collect().toSeq == Seq((11L, 4L)))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
+  test("histograms DataFrame.write left (several part files) still append, repartition and give the same densityMap()") {
+    val out = java.nio.file.Files.createTempDirectory("graft_legacy_hist").toString
+    val first = li.filter(col("k") % 8 === 1)
+    def open(name: String) =
+      Catalog.importFrom(first, out, name, "cra", "cdec", "k", orderK = 4, threshold = 200, marginDeg = 1.0)
+    val (fresh, legacy) = (open("fresh"), open("legacy"))
+    // rewrite the legacy catalog's artifacts the way DataFrame.write
+    // leaves them: point_map in three part files, import_hist in one
+    val layout = CatalogLayout(out, "legacy")
+    for ((path, parts) <- Seq(layout.pointMap -> 3, layout.importHist -> 1)) {
+      val rows = spark.read.parquet(path).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      spark.createDataFrame(rows).toDF("pix", "cnt").repartition(parts).write.mode("overwrite").parquet(path)
+      val written = new java.io.File(path).list().filter(_.startsWith("part-"))
+      assert(written.count(_.endsWith(".parquet")) == parts && written.forall(_ != "part-00000.parquet"))
+    }
+    def density(c: Catalog) = c.densityMap().collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    def rows(c: Catalog) = c.load().select(col("k"), col("_ID"), col("Norder").cast("int"), col("Npix").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).sorted.toSeq
+    assert(density(legacy) == density(fresh))
+    val rest = li.filter(col("k") % 8 =!= 1)
+    fresh.append(rest)
+    legacy.append(rest)
+    assert(density(legacy) == density(fresh) && nSources(legacy) == li.count())
+    assert(rows(legacy) == rows(fresh))
+    def tiles(c: Catalog) = rows(c).map(r => (r._3, r._4)).toSet
+    val appended = tiles(legacy)
+    val (freshRp, legacyRp) = (fresh.repartition(), legacy.repartition())
+    assert(tiles(legacyRp) != appended, "the 8x growth must split a tile")
+    assert(density(legacyRp) == density(freshRp))
+    assert(rows(legacyRp) == rows(freshRp))
+    // both artifacts now hold the one driver-written part file
+    for (path <- Seq(layout.pointMap, layout.importHist))
+      assert(new java.io.File(path).list().filter(_.endsWith(".parquet")).toSeq == Seq("part-00000.parquet"), path)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
   test("catalog repartition: over-threshold pixels re-split, _IDs preserved, layout + search + margin parity with a fresh import") {
     val out = java.nio.file.Files.createTempDirectory("graft_repart").toString
     // import 1/8th of the data, then append the rest — pixels grow
@@ -853,7 +963,8 @@ class CatalogSpec extends SparkSpecBase {
 
   test("spark.read reaches a catalog tree only in the snapshot resolution") {
     // every other read of a tree plans over a resolved snapshot. The
-    // exempt readers: the histogram artifacts (loadHist) and the
+    // exempt readers: the point map as a table (loadHist, for
+    // densityMap(); every other histogram read is driver-side) and the
     // resumable import's staged batches (writeResumable)
     val allowed = Map("CatalogLayout.scala" -> Set("resolve", "loadHist"),
       "HipsPartitioner.scala" -> Set("writeResumable"))
@@ -881,6 +992,19 @@ class CatalogSpec extends SparkSpecBase {
       try src.mkString.matches("(?s).*\\b(catalogTree|neighborTree)\\b.*") finally src.close()
     }
     assert(outside.isEmpty, outside.mkString("\n"))
+  }
+
+  test("graft/catalog builds no located file status (listFiles, LocatedFileStatus)") {
+    val dir = new java.io.File("src/main/scala/graft/catalog")
+    assert(dir.isDirectory, s"run from the project root: ${dir.getAbsolutePath}")
+    val hits = dir.listFiles().filter(_.getName.endsWith(".scala")).toSeq.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toList finally src.close()
+      lines.zipWithIndex.collect { case (l, i) if l.contains("listFiles(") || l.contains("LocatedFileStatus") =>
+        s"${f.getName}:${i + 1}: ${l.trim}" }
+    }
+    assert(hits.isEmpty, "a located status reads the file's permission, owner and group: on the local FS " +
+      "without Hadoop's native library that is one subprocess per file. Walk with listStatus:\n" + hits.mkString("\n"))
   }
 
   test("ingest path is UDF-free and stays inside WholeStageCodegen") {
